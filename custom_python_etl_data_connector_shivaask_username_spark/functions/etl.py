@@ -13,6 +13,7 @@ whole-stage codegen and scales with the cluster, not the driver.
 from __future__ import annotations
 
 import re
+from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,27 +53,29 @@ def _sanitize_type(dt: T.DataType) -> T.DataType:
 
 def sanitize_columns(df: DataFrame) -> DataFrame:
     """T2: recursively rename columns (and nested struct fields) to
-    document-store-safe snake_case. Pure metadata operation — zero cost at
-    any scale (a Project over casts of identical data)."""
-    out = df
+    document-store-safe snake_case, in the original column order. One
+    projection: a rename per column, plus a cast wherever nested fields
+    need renaming too — zero data cost at any scale."""
+    cols = []
     for field in df.schema.fields:
         new_type = _sanitize_type(field.dataType)
-        col = F.col(f"`{field.name}`")
+        col = F.col("`" + field.name.replace("`", "``") + "`")
         if new_type != field.dataType:
             col = col.cast(new_type)
-        out = out.withColumn(f"__tmp_{field.name}", col)
-    for field in df.schema.fields:
-        out = out.drop(field.name).withColumnRenamed(
-            f"__tmp_{field.name}", sanitize_name(field.name)
-        )
-    return out
+        cols.append(col.alias(sanitize_name(field.name)))
+    return df.select(*cols)
 
 
-def add_ingest_ts(df: DataFrame, col_name: str = "_ingested_at") -> DataFrame:
+def add_ingest_ts(
+    df: DataFrame, col_name: str = "_ingested_at", at: datetime | None = None
+) -> DataFrame:
     """T6: stamp ingestion time (reference README.md:29 'ingestion
-    timestamps to support audits or updates'). current_timestamp() is
-    query-constant in Spark, so one batch gets one stamp."""
-    return df.withColumn(col_name, F.current_timestamp())
+    timestamps to support audits or updates'). Without ``at``, the stamp
+    is current_timestamp(), which is query-constant in Spark: one batch
+    gets one stamp. Pass ``at`` to give several writes (a run's raw and
+    quarantine rows) the same stamp."""
+    stamp = F.lit(at) if at is not None else F.current_timestamp()
+    return df.withColumn(col_name, stamp)
 
 
 def type_normalize(df: DataFrame, casts: dict[str, str]) -> DataFrame:
@@ -101,8 +104,9 @@ def quarantine_split(
     """T10: route bad rows to an error sink instead of failing the load
     (reference README.md:32-34). Returns (ok, quarantined).
 
-    At scale: the caller should ``df.persist()`` before splitting if both
-    sides are consumed, so the source is scanned once.
+    Both sides are lazy filters over ``df``: when both are written, each
+    write recomputes ``df`` unless it is persisted, as
+    ``connector.run_connector`` does with its parsed extract.
     """
     return df.filter(valid), df.filter(~valid | valid.isNull())
 

@@ -9,7 +9,9 @@ Two execution shapes:
 
 - :func:`read_api` — sequential driver-side fetch, right for one API with
   cursor pagination (the next page isn't known until the previous returns)
-  or small result sets. Returns a typed DataFrame.
+  or small result sets. Each page becomes one Arrow string array as it
+  arrives; the extract reaches the JVM once, as an Arrow table, and is
+  parsed there. Returns a typed DataFrame.
 - :class:`RestDataSource` — PySpark 4 Python Data Source: page ranges are
   split into input partitions and fetched BY THE EXECUTORS in parallel.
   This is the 100 TB-relevant shape: per-partition rate limiting, no
@@ -29,6 +31,7 @@ import urllib.parse
 import urllib.request
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -217,25 +220,66 @@ def read_api(
 ) -> DataFrame:
     """S1 driver-side shape: fetch all pages, land as a typed DataFrame.
 
-    Records are round-tripped through JSON strings and parsed with the
-    PERMISSIVE reader so schema drift / invalid rows surface in
-    ``_corrupt_record`` instead of failing the load (README.md:32-34) —
-    see :func:`json_ingest`.
+    Each page is serialized to one Arrow string array as soon as it
+    arrives and its Python records are dropped, so the driver never holds
+    the whole extract as Python objects. :func:`json_ingest` hands the
+    pages to the JVM as one Arrow table and parses them there with the
+    PERMISSIVE reader, so schema drift / invalid rows surface in
+    ``_corrupt_record`` instead of failing the load (README.md:32-34).
+
+    The result is a JVM-side relation: actions on it never call back into
+    Python, but each one re-parses the JSON, so a caller that runs more
+    than one action should ``persist()`` it (``connector.run_connector``
+    does).
     """
-    rows = [
-        json.dumps(rec)
-        for _, records in iter_pages(cfg)
-        for rec in records
-    ]
-    return json_ingest(spark, rows, schema)
+    pages = pa.chunked_array(
+        [
+            pa.array([json.dumps(rec) for rec in records], pa.string())
+            for _, records in iter_pages(cfg)
+        ],
+        pa.string(),
+    )
+    return json_ingest(spark, pages, schema)
+
+
+def _text_frame(spark: SparkSession, lines: pa.ChunkedArray) -> DataFrame:
+    """``lines`` as a one-column (``value``) RDD-backed DataFrame with at
+    most one partition per core.
+
+    ``createDataFrame`` on an Arrow table makes one partition per record
+    batch, here one per page; coalescing keeps the task and output-file
+    counts at the core count. Below
+    ``spark.sql.execution.arrow.localRelationThreshold`` it would make a
+    ``LocalRelation`` instead, and the optimizer would fold the
+    ``from_json`` above it into the plan: every record parsed on the
+    driver, on one thread, while the query is planned. The threshold is
+    zeroed for this one call so the parse runs in tasks."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "0")
+    try:
+        df = spark.createDataFrame(pa.table({"value": lines}))
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    return df.coalesce(spark.sparkContext.defaultParallelism)
 
 
 def json_ingest(
     spark: SparkSession,
-    json_lines: list[str] | DataFrame,
+    json_lines: pa.ChunkedArray | list[str] | DataFrame,
     schema: T.StructType | str | None = None,
 ) -> DataFrame:
     """S5: PERMISSIVE JSON parse with corrupt-record routing.
+
+    ``json_lines`` is one JSON document per element: an Arrow string
+    array (what :func:`read_api` builds, one chunk per page), a list of
+    strings, or a DataFrame whose first column holds them. Driver-side
+    lines reach the JVM once, through ``createDataFrame`` on an Arrow
+    table — a JVM-side relation, no pickled Python RDD — and
+    ``from_json`` parses them there.
 
     With an explicit schema, malformed documents land whole in
     ``_corrupt_record`` (quarantine them with
@@ -247,10 +291,9 @@ def json_ingest(
             F.col(json_lines.columns[0]).cast("string").alias("value")
         )
     else:
-        text_df = spark.createDataFrame(
-            [(s,) for s in json_lines],
-            T.StructType([T.StructField("value", T.StringType())]),
-        )
+        if not isinstance(json_lines, pa.ChunkedArray):
+            json_lines = pa.chunked_array([json_lines], pa.string())
+        text_df = _text_frame(spark, json_lines)
     if schema is None:
         # inference path (exploration only — an extra full pass at scale)
         return spark.read.option("mode", "PERMISSIVE").json(

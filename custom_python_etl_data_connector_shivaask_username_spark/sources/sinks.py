@@ -15,6 +15,7 @@ this is the standard MERGE shape (new side broadcast when small).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,7 +57,10 @@ def upsert_parquet(
     Reads the existing table, anti-joins away rows being replaced, unions
     the incoming batch, and atomically overwrites. The anti-join
     broadcast-hints the (typically small) incoming batch so the big
-    existing side never shuffles.
+    existing side never shuffles. ``new_df`` feeds both the broadcast
+    keys and the union, so a batch that is costly to compute should be
+    persisted by the caller. A missing table is created from the batch;
+    any other failure to read the table raises and leaves it untouched.
 
     With ``version_col`` set (X19 CDC apply), the merge is
     **last-writer-wins by version** instead of by arrival: a standing
@@ -76,7 +80,11 @@ def upsert_parquet(
         new_df = add_ingest_ts(new_df)
     try:
         existing = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as ex:
+        # only a table that does not exist yet is created from the batch;
+        # any other read failure must not replace the standing rows
+        if ex.getCondition() != "PATH_NOT_FOUND":
+            raise
         new_df.write.mode("overwrite").parquet(path)
         return
     batch_keys = F.broadcast(new_df.select(*keys).distinct())

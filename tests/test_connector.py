@@ -164,6 +164,29 @@ def test_upsert_parquet(spark, tmp_path):
     assert not os.path.exists(path + "__staging")
 
 
+def test_upsert_parquet_unreadable_table_raises_and_keeps_rows(spark, tmp_path):
+    """Only a missing table is created from the batch. A table that
+    exists but cannot be read makes the upsert raise; it must never be
+    replaced by the batch alone."""
+    import os
+
+    path = str(tmp_path / "t_raw")
+    v1 = spark.createDataFrame([(1, "old"), (2, "old")], "id INT, payload STRING")
+    upsert_parquet(spark, v1, path, keys=["id"], stamp=False)
+    # a junk summary file: Parquet schema discovery reads it before any
+    # part file, so the table fails to open while its part files survive
+    junk = os.path.join(path, "_common_metadata")
+    with open(junk, "wb") as fh:
+        fh.write(b"not a parquet footer")
+    v2 = spark.createDataFrame([(3, "new")], "id INT, payload STRING")
+    with pytest.raises(Exception) as info:
+        upsert_parquet(spark, v2, path, keys=["id"], stamp=False)
+    assert "PATH_NOT_FOUND" not in str(info.value)
+    os.remove(junk)
+    rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert rows == [(1, "old"), (2, "old")]
+
+
 def test_upsert_parquet_version_aware_out_of_order(spark, tmp_path):
     """X19 contract: with version_col, batch ARRIVAL order is irrelevant —
     the table converges to arg_max(row, version) per key, so applying
@@ -269,7 +292,8 @@ def test_load_env_no_override(tmp_path, monkeypatch):
 def test_run_connector_end_to_end(stub, spark, tmp_path):
     """The spec's run pattern: extract (paginated REST) -> transform
     (sanitize + quarantine + stamp) -> load ({name}_raw), with an
-    auditable report. Second run with upsert keys replaces, not dupes."""
+    auditable report. Second run with upsert keys replaces, not dupes;
+    a third run appends, and its report counts only its own rows."""
     from custom_python_etl_data_connector_shivaask_username_spark.connector import run_connector
 
     base = str(tmp_path / "lake")
@@ -295,7 +319,64 @@ def test_run_connector_end_to_end(stub, spark, tmp_path):
         upsert_keys=["id"],
     )
     assert report2["mode"] == "upsert"
-    assert report2["loaded_rows"] == len(RECORDS)  # replaced, not doubled
+    assert report2["loaded_rows"] == len(RECORDS)
+    assert spark.read.parquet(report["path"]).count() == len(RECORDS)
+
+    # a second append reports the rows it landed, not the table's size
+    report3 = run_connector(spark, _cfg(stub), base, schema=SCHEMA)
+    assert report3["loaded_rows"] == report3["extracted"] == len(RECORDS)
+    assert spark.read.parquet(report["path"]).count() == 2 * len(RECORDS)
+
+
+def test_run_connector_lands_only_schema_columns(stub, spark, tmp_path):
+    """The landed table holds the sanitized schema fields and the ingest
+    stamp, in schema order; the parser's corrupt-record column does not
+    leak into it."""
+    from pyspark.sql import types as T
+
+    from custom_python_etl_data_connector_shivaask_username_spark.connector import run_connector
+    from custom_python_etl_data_connector_shivaask_username_spark.functions.etl import (
+        sanitize_name,
+    )
+
+    report = run_connector(spark, _cfg(stub), str(tmp_path), schema=SCHEMA)
+    want = [sanitize_name(f.name) for f in T.StructType.fromDDL(SCHEMA).fields]
+    assert spark.read.parquet(report["path"]).columns == want + ["_ingested_at"]
+
+
+def test_run_connector_one_pass(stub, spark, tmp_path):
+    """One append fetches each page once and starts at most three Spark
+    jobs (today two: the write, which parses the extract and fills its
+    cache, and one aggregate over the cache). Later steps read the parsed
+    extract, never the API or the JSON again."""
+    from custom_python_etl_data_connector_shivaask_username_spark.connector import run_connector
+
+    sc = spark.sparkContext
+    group = f"one-pass-{time.time_ns()}"
+    sc.setJobGroup(group, "run_connector one-pass pin")
+    try:
+        report = run_connector(spark, _cfg(stub), str(tmp_path), schema=SCHEMA)
+    finally:  # clear what setJobGroup set, so later jobs run outside the group
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert report["loaded_rows"] == len(RECORDS)
+    pages = -(-len(RECORDS) // 10)  # page_size 10; the short last page ends it
+    assert stub.state.request_count == pages
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_run_connector_empty_extract(stub, spark, tmp_path):
+    """A first page of [] lands an empty table and reports zeros."""
+    from custom_python_etl_data_connector_shivaask_username_spark.connector import run_connector
+
+    report = run_connector(
+        spark, _cfg(stub, endpoint="empty"), str(tmp_path), schema=SCHEMA
+    )
+    assert report["extracted"] == report["loaded_rows"] == 0
+    assert report["quarantined_rows"] == 0 and report["quarantine_path"] is None
+    landed = spark.read.parquet(report["path"])
+    assert landed.count() == 0
+    assert landed.columns == ["id", "name", "value", "tags", "_ingested_at"]
 
 
 def test_run_connector_quarantines_corrupt(stub, spark, tmp_path):
@@ -320,6 +401,12 @@ def test_run_connector_quarantines_corrupt(stub, spark, tmp_path):
     assert "_ingested_at" in q.columns
     # the quarantined payload is the full original record, auditable
     assert "item_1" in q.orderBy("raw").collect()[0]["raw"]
+    # one run, one stamp: raw and quarantine rows carry the same value
+    stamps = (
+        spark.read.parquet(report["path"]).select("_ingested_at")
+        .union(q.select("_ingested_at")).distinct().collect()
+    )
+    assert len(stamps) == 1 and stamps[0][0] is not None
 
 
 def test_mongodb_write_config_contract():

@@ -38,6 +38,20 @@ def test_sanitize_columns_nested(spark):
     assert row["user_id"] == 1 and row["payload"]["ref"] == "x"
 
 
+def test_sanitize_columns_keeps_order_and_nested_types(spark):
+    df = spark.createDataFrame(
+        [(1, "x", (2, [(3,)]))],
+        "zLast INT, `a.b` STRING, "
+        "`$meta` STRUCT<innerKey: INT, items: ARRAY<STRUCT<`deep.key`: INT>>>",
+    )
+    out = sanitize_columns(df)
+    assert out.columns == ["z_last", "a_b", "meta"]
+    assert out.schema["meta"].dataType.simpleString() == (
+        "struct<inner_key:int,items:array<struct<deep_key:int>>>"
+    )
+    assert out.collect()[0]["meta"]["items"][0]["deep_key"] == 3
+
+
 def test_add_ingest_ts(spark):
     df = spark.createDataFrame([Row(a=1), Row(a=2)])
     out = add_ingest_ts(df)
