@@ -94,7 +94,9 @@ def run_connector(
                 stamp=False,
             )
     finally:
-        raw.unpersist()
+        # blocking: the cached blocks are gone when the call returns, so
+        # no block removal runs on into the caller's next step
+        raw.unpersist(blocking=True)
     return {
         "connector": cfg.name,
         "extracted": n_ok + n_bad,
