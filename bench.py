@@ -326,26 +326,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     execm: dict[str, dict] = {}
-    from custom_python_etl_data_connector_shivaask_username_spark.plans import autotune as _autotune
-    from custom_python_etl_data_connector_shivaask_username_spark.tables import harvest_executed
-
     for name in names:
         fn = _resolve(name)
         warm = fn(spark, sf_dir)
         warm.collect()  # warm (plan + codegen + IO cache)
-        # X56 auto-harvest + X61 self-tuning (round 13), all OFF the
-        # timed path: the warm run's actual join cardinalities feed
-        # the session history, its optimized plan feeds the observed
-        # workload log, and the incremental autotune collects any
-        # statistic the mined workload prices that the session lacks
-        # — so the timed runs plan from measurements + workload-fitted
-        # statistics, the way a long-lived production session would.
-        harvest_executed(spark, warm, sf_dir)
-        try:
-            _autotune.observe(warm, sf_dir)
-            _autotune.autotune(spark, sf_dir)
-        except Exception:
-            pass  # tuning is advisory; the bench must never die on it
         mark = _stage_mark(spark)
         runs: list[float] = []
         for _ in range(5):  # best-of-5: steady-state time, not scheduler noise

@@ -1434,7 +1434,6 @@ def incremental_dedup(
     text_col: str = "text",
     thr_num: int = CLUSTER_THR_NUM,
     thr_den: int = CLUSTER_THR_DEN,
-    history_sf_dir: str | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — without ever
     re-pairing the corpus against itself.
@@ -1520,47 +1519,36 @@ def incremental_dedup(
         F.col(id_col).alias("cor_id"),
         F.size(cor_grams).alias("cor_n"),
     )
-    # Round 14 (VERDICT r13 ask #1 — self-tuning default-on): with a
-    # history scope, the gram probe join routes through plan_star_join
-    # (history="session") under honest gram-mass bounds — char-3-grams
-    # ≈ one per character, characters ≈ 3× parquet bytes — so a
-    # harvested execution's MEASURED probe cardinality serves the next
-    # planning (the registry query passes sf_dir; arbitrary-frame
-    # callers keep the hand-written join bit-compatibly).
+    # The gram probe join routes through plan_join_tree under honest
+    # gram-mass bounds — char-3-grams ≈ one per character, characters
+    # ≈ 3× parquet bytes.
     # ONE Catalyst-estimate read per base frame (round 14, plan-time
     # cut): stats_from_plan triggers a full optimization of the frame's
     # logical tree (~40 ms + tree size), so it runs on the two SIMPLE
     # filtered scans only; every derived bound below is arithmetic on
     # these two numbers — never on the anti-join/gram mega-trees.
-    from ..plans.stats import stats_from_plan
+    from ..plans.stats import plan_join_tree, stats_from_plan
 
     s_inc = stats_from_plan(increment)
     inc_bytes = int(s_inc["size_bytes"] or 1)
     # increment docs: rowCount when Catalyst has one, else bytes at a
     # ~300 B/doc fixture width — only feeds small-side broadcast hints
     n_inc = int(s_inc.get("row_count") or max(1, inc_bytes // 300))
-    if history_sf_dir is not None:
-        from ..tables import plan_star_join
 
-        def _gram_stats(src_bytes: int, width: int) -> dict:
-            n = max(1, 3 * src_bytes)
-            return {"row_count": n, "size_bytes": n * width, "columns": {}}
+    def _gram_stats(src_bytes: int, width: int) -> dict:
+        n = max(1, 3 * src_bytes)
+        return {"row_count": n, "size_bytes": n * width, "columns": {}}
 
-        cor_bytes = int(stats_from_plan(corpus)["size_bytes"] or 1)
-        gram_pairs, _order = plan_star_join(
-            corpus.sparkSession,
-            history_sf_dir,
-            [("inc_g", "gram", "cor_g", "gram")],
-            tables={"inc_g": inc_g, "cor_g": cor_g},
-            # widths: (inc_id long + 3-char gram) each side
-            stats={
-                "inc_g": _gram_stats(inc_bytes, 20),
-                "cor_g": _gram_stats(cor_bytes, 20),
-            },
-            history="session",
-        )
-    else:
-        gram_pairs = inc_g.join(cor_g, "gram")
+    cor_bytes = int(stats_from_plan(corpus)["size_bytes"] or 1)
+    gram_pairs, _order = plan_join_tree(
+        {"inc_g": inc_g, "cor_g": cor_g},
+        [("inc_g", "gram", "cor_g", "gram")],
+        # widths: (inc_id long + 3-char gram) each side
+        stats={
+            "inc_g": _gram_stats(inc_bytes, 20),
+            "cor_g": _gram_stats(cor_bytes, 20),
+        },
+    )
     near_c = (
         gram_pairs
         .groupBy("inc_id", "cor_id")
@@ -1589,8 +1577,6 @@ def incremental_dedup(
     # four stats_from_plan calls, the worst of which re-optimized the
     # whole near_c gram-pipeline tree on every planning (the 449 ms
     # plan-construction outlier in SCALE.md's round-13 table).
-    from ..plans.stats import plan_join_tree
-
     def _inc_bounded(width: int) -> dict:
         return {
             "row_count": n_inc,
@@ -1852,9 +1838,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # increments arrive as multi-file scans where spreading no-ops.
     corpus = docs.filter(F.col("doc_id") % INC_SPLIT_MOD != INC_SPLIT_MOD - 1)
     increment = docs.filter(F.col("doc_id") % INC_SPLIT_MOD == INC_SPLIT_MOD - 1)
-    return incremental_dedup(
-        corpus, increment, history_sf_dir=sf_dir
-    ).orderBy("doc_id")
+    return incremental_dedup(corpus, increment).orderBy("doc_id")
 
 
 # --- merged rows-only registry entry (seed-dependent surfaces) -------------

@@ -552,25 +552,12 @@ def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     production variants hash grams to 64-bit keys and prune the model to
     top-M grams with a backoff floor — same plan shape, smaller state.
     """
-    return lm_quality_scores(
-        load_table(spark, sf_dir, "documents"), history_sf_dir=sf_dir
-    )
+    return lm_quality_scores(load_table(spark, sf_dir, "documents"))
 
 
-def lm_quality_scores(
-    docs: DataFrame, history_sf_dir: str | None = None
-) -> DataFrame:
+def lm_quality_scores(docs: DataFrame) -> DataFrame:
     """Core of :func:`q_lm_quality` on an arbitrary (doc_id, text) frame
-    — separated so tests can plant token-soup documents.
-
-    ``history_sf_dir`` (round 14, VERDICT r13 ask #1): when set, the
-    probe fold routes through ``plan_star_join(history="session")``
-    keyed to that dir — after a runner harvests an execution
-    (`tables.harvest_executed`), the next planning serves the MEASURED
-    probe-join cardinality instead of the gram-mass bound, zero
-    probes. Unset (planted-frame tests), the fold takes the plain
-    `plan_join_tree` path with identical stats — byte-identical
-    plans on first construction either way."""
+    — separated so tests can plant token-soup documents."""
     words = F.filter(
         F.split(F.lower(F.col("text")), r"\s+"), lambda w: F.length(w) > 0
     )
@@ -646,19 +633,7 @@ def lm_quality_scores(
             "columns": {},
         },
     }
-    if history_sf_dir is not None:
-        from ..tables import plan_star_join
-
-        probe, _order = plan_star_join(
-            docs.sparkSession,
-            history_sf_dir,
-            edges,
-            tables=frames,
-            stats=probe_stats,
-            history="session",
-        )
-    else:
-        probe, _order = plan_join_tree(frames, edges, stats=probe_stats)
+    probe, _order = plan_join_tree(frames, edges, stats=probe_stats)
     scored = (
         probe
         .groupBy("doc_id")

@@ -69,7 +69,7 @@ def plan_revenue_star(spark: SparkSession, sf_dir: str):
     orders date predicate is DECLARED once (`filters=`), which applies
     both the frame filter and its `apply_filter_to_stats` metadata
     twin (X36 — never a scan of the filtered frame); the rest of the
-    statistics come from the session cache (X31/X38), and
+    statistics come from the session cache (X31), and
     `plan_join_tree` chooses order + broadcast hints. Returns
     ``(joined frame, planner-chosen order)`` so tests can pin the
     order alongside the executed plan."""
@@ -85,11 +85,6 @@ def plan_revenue_star(spark: SparkSession, sf_dir: str):
         tables={"lineitem": li},
         filters={"orders": ("o_orderdate", _dt.datetime(1995, 1, 1), None)},
         broadcast_threshold=REVENUE_STAR_BROADCAST_BUDGET,
-        # round 13 (X56 dogfooding): plan from the session's measured
-        # cardinalities when a prior execution was harvested
-        # (`tables.harvest_executed` — bench warm runs feed it); first
-        # planning falls through to the X31/X36 models unchanged
-        history="session",
     )
 
 
@@ -174,15 +169,16 @@ def q_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round 12 (verdict ask #1 — planner dogfooding): every join in
     # this query routes through the X31-55 planner instead of
     # hand-written join calls. The three customer-orders folds go
-    # through plan_star_join (sidecar stats attached; the planner
+    # through plan_star_join (cached table stats attached; the planner
     # contributes the stats-driven broadcast hint on the incoming
     # orders side — outer-family folds never reorder, the edge order
     # IS the semantics), and the counts⋈presence inner fold goes
     # through plan_join_tree with per-customer stats OVERLAID from the
-    # customer sidecar (both sides are per-customer by construction:
+    # customer table's stats (both sides are per-customer by construction:
     # groupBy(c_custkey) / semi∪anti partition — the documented
     # derived-frame pattern, no extra scan). Join shapes stay pinned
     # in tests/test_plans.py; the oracle row verifies the migration.
+    from ..plans.stats import plan_join_tree
     from ..tables import plan_star_join, table_stats_cached
 
     edge = [("customer", "c_custkey", "orders", "o_custkey")]
@@ -208,25 +204,16 @@ def q_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "columns": {"c_custkey": dict(cst["columns"]["c_custkey"])},
         }
 
-    # Round 14 (VERDICT r13 ask #1 — self-tuning default-on): the inner
-    # counts⋈presence fold routes through plan_star_join with
-    # history="session", the same dogfood mode as the revenue star.
-    # Frame + stats overrides keep the derived-side planning scan-free;
-    # once an execution is harvested (`tables.harvest_executed`, inner
-    # nodes only), the next planning of this fold serves the MEASURED
-    # cardinality with zero probes — the synthetic per-customer
-    # signatures are session-stable, so the X38 drift gate passes.
-    folded, _order = plan_star_join(
-        spark,
-        sf_dir,
+    # Frame + stats overrides keep the derived-side planning of the
+    # inner counts⋈presence fold scan-free.
+    folded, _order = plan_join_tree(
+        {"counts": counts, "presence": presence},
         [("counts", "c_custkey", "presence", "c_custkey")],
-        tables={"counts": counts, "presence": presence},
-        # key + name + count vs key + bool: sidecar-width derivations
+        # key + name + count vs key + bool: table-width derivations
         stats={
             "counts": per_customer_stats(48),
             "presence": per_customer_stats(16),
         },
-        history="session",
     )
     customer_branch = folded.select(
         F.lit("customer_orders").alias("branch"),

@@ -38,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -509,12 +510,33 @@ def _resolution_sidecar_path(store_path: str) -> str:
     return f"{store_path.rstrip('/')}/{RESOLUTION_SIDECAR}"
 
 
+#: how long a reader waits for a concurrent first writer to fill the
+#: grain sidecar it has just created
+RESOLUTION_WRITE_WAIT_S = 5.0
+
+
 def stored_resolution(spark: SparkSession, store_path: str) -> str | None:
     """The grain the store was aggregated at; None on a pre-round-11
     store that never recorded one (validation then skips — the old
-    caller-beware behavior, documented)."""
-    raw = fs_read_text(spark, _resolution_sidecar_path(store_path))
-    return None if raw is None else json.loads(raw)["resolution"]
+    caller-beware behavior, documented).
+
+    The first writer creates the sidecar exclusively and only then
+    writes its content, so a concurrent reader can find the file
+    empty: an empty or partly written sidecar is "being written" and
+    is read again until it parses, for up to
+    ``RESOLUTION_WRITE_WAIT_S``."""
+    path = _resolution_sidecar_path(store_path)
+    deadline = time.monotonic() + RESOLUTION_WRITE_WAIT_S
+    while True:
+        raw = fs_read_text(spark, path)
+        if raw is None:
+            return None
+        try:
+            return json.loads(raw)["resolution"]
+        except json.JSONDecodeError:
+            if time.monotonic() >= deadline:
+                raise
+            time.sleep(0.01)
 
 
 def record_resolution(

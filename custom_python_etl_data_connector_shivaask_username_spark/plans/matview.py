@@ -17,10 +17,9 @@ grain (`stored_resolution`; partials only merge coarser), and the
 requested measures must derive from the stored partials (count / sum /
 avg / min / max — the `_finalize` surface).
 
-Is-fresh (the X38 doctrine applied to view maintenance): the store's
-own visible row mass (Σ cnt over its partials — metadata-scale) must
-equal the raw table's statistics row count (X31, session-cached,
-sidecar-served on a real lake). The store is maintained FROM this
+Is-fresh: the store's own visible row mass (Σ cnt over its partials —
+metadata-scale) must equal the raw table's statistics row count (X31,
+session-cached). The store is maintained FROM this
 table's feed (refresh_rollup / the X30 sink), so a count mismatch means
 undelivered or torn data — route to raw. Count-equality is the same
 drift trigger re-ANALYZE uses; a production deployment would carry the

@@ -17,19 +17,12 @@ SIGMOD 1979 — the public cost-model lineage every optimizer cites):
   ``approx_count_distinct``), min/max, and null count; on-disk bytes
   come from the file index (metadata-only). Cost: one scan, mergeable
   partials, no shuffle beyond the final 1-row agg — safe to run on the
-  largest table in the lake (sample first if even one scan is too
-  much; the estimates degrade gracefully).
-- ``write_stats_sidecar`` / ``read_stats_sidecar`` — persist next to
-  the data as ``_table_stats.json`` (underscore-prefixed: invisible to
-  parquet readers; Hadoop-FS I/O so hdfs:///s3:// stores behave like
-  local paths).
+  largest table in the lake.
 - ``estimate_join_rows`` — the classic equi-join cardinality model
   |L ⋈ R| = |L|·|R| / max(ndv(L.k), ndv(R.k)), with a containment
   refinement from min/max when the key ranges barely overlap.
-- ``add_histograms`` / ``estimate_range_rows`` /
-  ``apply_filter_to_stats`` (X36) — deterministic equi-width
-  histograms (one bounded extra scan) and the metadata-only filter
-  modeling they enable: the stats a table WOULD have after a range or
+- ``apply_filter_to_stats`` (X36) — metadata-only filter modeling
+  from min/max and NDV: the stats a table WOULD have after a range or
   equality predicate, without scanning — so filtered tables enter
   join planning for free.
 - ``plan_join_tree`` — greedy left-deep join ordering over a join
@@ -48,17 +41,13 @@ silently cross-joining.
 
 from __future__ import annotations
 
-import json
 import math
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.layout import fs_read_text, fs_write_text
 from ..tables import bytes_conf
-
-STATS_SIDECAR = "_table_stats.json"
 
 #: fallback estimated row width when on-disk size is unknown
 _DEFAULT_ROW_BYTES = 64
@@ -77,9 +66,7 @@ def _is_stat_type(dt: str) -> bool:
 def _stat_cols(
     df: DataFrame, columns: list[str] | None
 ) -> list[tuple[str, str]]:
-    """(name, simple type) for every column stats are collected on —
-    the single definition all three ANALYZE paths (full, sampled,
-    incremental) share, so a new supported type lands everywhere."""
+    """(name, simple type) for every column stats are collected on."""
     return [
         (f.name, f.dataType.simpleString())
         for f in df.schema.fields
@@ -159,7 +146,7 @@ def stats_from_plan(df: DataFrame) -> dict[str, Any]:
     rows from bytes at the default width. No column stats (Catalyst
     keeps none without CBO ANALYZE) — callers with better knowledge
     (e.g. "this aggregate is per-customer") should overlay
-    ``columns``/``row_count`` from the base table's sidecar instead.
+    ``columns``/``row_count`` from the base table's stats instead.
 
     KNOWN BIAS, measured on this Spark (round 12): size-only
     estimation passes the CHILD's sizeInBytes through both Aggregate
@@ -171,7 +158,7 @@ def stats_from_plan(df: DataFrame) -> dict[str, Any]:
     could be mistakenly broadcast at exactly the scale where that
     kills the driver. Callers MUST overlay honest bounds for frames
     downstream of explode (see `lm_quality_scores` for the pattern:
-    gram mass bounded by base text bytes from the sidecar)."""
+    gram mass bounded by base text bytes from the scan size)."""
     js = df._jdf.queryExecution().optimizedPlan().stats()
     # py4j auto-converts scala.math.BigInt via its int view on some
     # call paths and hands back the object on others — str() is the
@@ -185,161 +172,30 @@ def stats_from_plan(df: DataFrame) -> dict[str, Any]:
     }
 
 
-def collect_table_stats_sampled(
-    df: DataFrame,
-    fraction: float,
-    columns: list[str] | None = None,
-    path: str | None = None,
-    seed: int = 42,
-) -> dict[str, Any]:
-    """Sample-based ANALYZE for tables where even ONE full scan is too
-    much (the 100 TB fact table): statistics from a Bernoulli row
-    sample, scaled back up.
-
-    - row count: ``sample_rows / fraction`` (unbiased).
-    - null counts: sample null fraction × estimated rows.
-    - min/max: the sample's — an UNDER-estimate of the true range
-      (extremes are rare); fine for join planning, wrong for bounds
-      checks, and flagged as ``"sampled": true`` in the dict.
-    - NDV: the GEE estimator (Charikar et al., "Towards Estimation
-      Error Guarantees for Distinct Values", PODS 2000):
-      ``sqrt(1/q)·f1 + Σ_{j≥2} f_j`` where ``f_j`` counts sample
-      values seen exactly j times. Since ``Σ_{j≥2} f_j`` is just
-      ``d_sample − f1``, each column needs only its sample
-      value-count frame — one small shuffle per column over the
-      cached sample, never over the table. GEE's ratio error is
-      bounded by ``sqrt(1/q)`` (the pinned guarantee); duplicates-
-      heavy columns come out near-exact, unique keys at worst
-      ``sqrt(q)``-fraction — both on the conservative side for the
-      planner's |L|·|R|/max(ndv) formula.
-
-    The full-scan pass stays the default (`collect_table_stats`);
-    this is the documented degrade path its docstring promises.
-    """
-    if not 0 < fraction <= 1:
-        raise ValueError("fraction must be in (0, 1]")
-    if fraction == 1.0:
-        return collect_table_stats(df, columns, path)
-    cols = _stat_cols(df, columns)
-    sample = df.sample(fraction=fraction, seed=seed)
-    sample.persist()
-    try:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for name, _ in cols:
-            aggs += [
-                F.min(name).alias(f"__min__{name}"),
-                F.max(name).alias(f"__max__{name}"),
-                F.count(name).alias(f"__nn__{name}"),
-            ]
-        row = sample.agg(*aggs).first().asDict()
-        m = row["__rows"]
-        est_rows = int(round(m / fraction))
-        stats: dict[str, Any] = {
-            "row_count": est_rows,
-            "size_bytes": _scan_bytes(df),
-            "columns": {},
-            "sampled": {
-                "fraction": fraction,
-                "sample_rows": m,
-                "seed": seed,
-                "ndv_method": "GEE",
-            },
-        }
-        scale = 1.0 / fraction
-        for name, dt in cols:
-            fof = (
-                sample.groupBy(name)
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .agg(
-                    F.count(F.lit(1)).alias("d"),
-                    F.sum(
-                        (F.col("__c") == 1).cast("long")
-                    ).alias("f1"),
-                    F.sum(
-                        F.col(name).isNull().cast("long") * F.col("__c")
-                    ).alias("nulls"),
-                )
-                .first()
-            )
-            d_sample = fof["d"] or 0
-            f1 = fof["f1"] or 0
-            # the null "value" is not a distinct key value
-            if (fof["nulls"] or 0) > 0:
-                d_sample -= 1
-                if fof["nulls"] == 1:
-                    f1 -= 1
-            ndv = (
-                math.sqrt(scale) * f1 + (d_sample - f1)
-                if d_sample > 0
-                else 0
-            )
-            nn = row[f"__nn__{name}"]
-            stats["columns"][name] = {
-                "type": dt,
-                "ndv": int(round(ndv)),
-                "min": row[f"__min__{name}"],
-                "max": row[f"__max__{name}"],
-                "null_count": int(round((m - nn) * scale)),
-            }
-        if path is not None:
-            stats["path"] = path
-        return stats
-    finally:
-        sample.unpersist()
-
-
-#: default equi-width histogram resolution (X36)
-HISTOGRAM_BUCKETS = 64
-
-#: types whose values map to a numeric bucketing axis
-_HIST_NUMERIC = (
+#: types whose values map to a numeric axis
+_AXIS_NUMERIC = (
     "tinyint", "smallint", "int", "bigint", "float", "double",
 )
 
 
 def _kind_of(dt: str) -> str | None:
     """Axis kind for a column type; None when the type has no
-    numeric bucketing axis (strings, booleans)."""
-    if dt in _HIST_NUMERIC or dt.startswith("decimal"):
+    numeric axis (strings, booleans)."""
+    if dt in _AXIS_NUMERIC or dt.startswith("decimal"):
         return "numeric"
     if dt in ("date", "timestamp", "timestamp_ntz"):
         return dt
     return None
 
 
-def _hist_axis(c: str, dt: str, session_tz: str):
-    """(expression, kind) mapping a column onto the numeric bucketing
-    axis — injective and order-preserving, so bucket counts transfer
-    back to the original domain. Axis units by kind: "numeric" =
-    the value; "date" = epoch days; "timestamp" = TRUE epoch micros
-    (tz-free — the driver twin `_axis_value` interprets collected
-    naive datetimes as driver-local, matching how PySpark renders
-    instants on collect); "timestamp_ntz" = wall-clock micros as if
-    the wall clock were UTC (the cast's session-tz offset is undone
-    with `from_utc_timestamp`, so the axis is tz-free too — exact
-    except inside a DST transition hour, where cast and un-cast read
-    the offset at slightly different instants)."""
-    col = F.col(c)
-    kind = _kind_of(dt)
-    if kind == "numeric":
-        return col.cast("double"), kind
-    if kind == "date":
-        return F.unix_date(col).cast("double"), kind
-    if kind == "timestamp":
-        return F.unix_micros(col).cast("double"), kind
-    if kind == "timestamp_ntz":
-        wall = F.from_utc_timestamp(col.cast("timestamp"), session_tz)
-        return F.unix_micros(wall).cast("double"), kind
-    return None, None
-
-
 def _axis_value(v: Any, kind: str) -> float | None:
     """A python-side value (a collected min/max or a user predicate
-    bound) mapped onto the same axis as `_hist_axis`. Naive
-    datetimes are driver-local for kind "timestamp" (that is what
-    `.first()` hands back for an instant) and plain wall clocks for
-    "timestamp_ntz"; ISO strings (a sidecar round-trip that skipped
-    `read_stats_sidecar`'s revival) parse too."""
+    bound) mapped onto a numeric axis: "numeric" = the value; "date" =
+    epoch days; "timestamp" = true epoch micros; "timestamp_ntz" =
+    wall-clock micros as if the wall clock were UTC. Naive datetimes
+    are driver-local for kind "timestamp" (that is what `.first()`
+    hands back for an instant) and plain wall clocks for
+    "timestamp_ntz"; ISO strings parse too."""
     import datetime as _dt
 
     if v is None:
@@ -379,143 +235,6 @@ def _axis_value(v: Any, kind: str) -> float | None:
     raise ValueError(f"no axis for kind {kind!r}")
 
 
-def add_histograms(
-    df: DataFrame,
-    stats: dict[str, Any],
-    columns: list[str] | None = None,
-    buckets: int = HISTOGRAM_BUCKETS,
-) -> dict[str, Any]:
-    """X36: equi-width histograms for filter-selectivity estimates.
-
-    ONE additional scan (bucket widths need pass-1's min/max first)
-    computes, for every numeric/date/timestamp column (or the
-    requested subset), ``buckets`` conditional counts — plain
-    map-side-combined partial sums, deterministic on any row order or
-    partitioning (unlike ``histogram_numeric``'s order-sensitive
-    streaming centroids, which is why this is equi-width). The result
-    lands inside the stats dict (and therefore the sidecar):
-    ``columns[c]["histogram"] = {lo, hi, counts, kind}``. Cost shape:
-    ``buckets × columns`` counters per task — metadata next to the
-    scan itself; pass the filter columns you actually plan over.
-    """
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    targets = []
-    for c, cstat in stats.get("columns", {}).items():
-        if columns is not None and c not in columns:
-            continue
-        axis, kind = _hist_axis(c, cstat.get("type", ""), tz)
-        if axis is None:
-            continue
-        lo = _axis_value(cstat.get("min"), kind)
-        hi = _axis_value(cstat.get("max"), kind)
-        if lo is None or hi is None or not hi > lo:
-            continue
-        width_probe = (hi - lo) / buckets
-        if not math.isfinite(width_probe) or width_probe <= 4 * max(
-            math.ulp(lo), math.ulp(hi)
-        ):
-            # degenerate range: an infinite span (±DBL_MAX sentinel
-            # junk makes hi-lo overflow) or a width at the float
-            # spacing of the endpoints makes bucket arithmetic
-            # meaningless — lo + i·width rounds back onto lo (or
-            # goes nan), floor division goes NULL or collapses, and
-            # counts silently zero. Leave the column on the min/max
-            # fallback.
-            continue
-        targets.append((c, axis, kind, lo, hi))
-    if not targets:
-        return stats
-    aggs = []
-    for c, axis, kind, lo, hi in targets:
-        width = (hi - lo) / buckets
-        # clamp BOTH edges: a value nudged outside [lo, hi] by float
-        # round-trip lands in an edge bucket instead of vanishing
-        b = F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(buckets - 1),
-                F.floor((axis - F.lit(lo)) / F.lit(width)),
-            ),
-        )
-        for i in range(buckets):
-            aggs.append(
-                F.sum(
-                    (axis.isNotNull() & (b == i)).cast("long")
-                ).alias(f"__h__{c}__{i}")
-            )
-    row = df.agg(*aggs).first()
-    out = {
-        **stats,
-        "columns": {k: dict(v) for k, v in stats["columns"].items()},
-    }
-    for c, _axis, kind, lo, hi in targets:
-        out["columns"][c] = {
-            **out["columns"][c],
-            "histogram": {
-                "lo": lo,
-                "hi": hi,
-                "kind": kind,
-                "counts": [row[f"__h__{c}__{i}"] for i in range(buckets)],
-            },
-        }
-    return out
-
-
-def add_equidepth_histograms(
-    df: DataFrame,
-    stats: dict[str, Any],
-    columns: list[str] | None = None,
-    buckets: int = HISTOGRAM_BUCKETS,
-    accuracy: int = 10_000,
-) -> dict[str, Any]:
-    """Equi-DEPTH histograms: bucket BOUNDS at the column's quantiles
-    (``percentile_approx``, one scan, mergeable sketch), each bucket
-    holding ~``non_null/buckets`` rows by construction. The right
-    variant when skew defeats equi-width (one hot value swallows the
-    range into a single bucket and every estimate inside it flattens);
-    resolution follows the data's density instead of its span.
-    Stored as ``columns[c]["histogram"] = {kind, bounds}`` — the same
-    slot the equi-width variant uses, and ``estimate_range_rows``
-    dispatches on shape."""
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-    targets = []
-    for c, cstat in stats.get("columns", {}).items():
-        if columns is not None and c not in columns:
-            continue
-        axis, kind = _hist_axis(c, cstat.get("type", ""), tz)
-        if axis is not None:
-            targets.append((c, axis, kind))
-    if not targets:
-        return stats
-    qs = [i / buckets for i in range(buckets + 1)]
-    aggs = [
-        F.percentile_approx(axis, qs, accuracy).alias(f"__q__{c}")
-        for c, axis, _ in targets
-    ]
-    row = df.agg(*aggs).first()
-    out = {
-        **stats,
-        "columns": {k: dict(v) for k, v in stats["columns"].items()},
-    }
-    for c, _axis, kind in targets:
-        bounds = row[f"__q__{c}"]
-        if bounds is None or bounds[0] is None:
-            continue  # all-null column: nothing to bound
-        nn = float(
-            (stats.get("row_count") or 0)
-            - out["columns"][c].get("null_count", 0)
-        )
-        out["columns"][c] = {
-            **out["columns"][c],
-            "histogram": {
-                "kind": kind,
-                "bounds": [float(b) for b in bounds],
-                "rows_per_bucket": nn / buckets,
-            },
-        }
-    return out
-
-
 def estimate_range_rows(
     stats: dict[str, Any],
     col: str,
@@ -523,224 +242,42 @@ def estimate_range_rows(
     hi: Any = None,
 ) -> float:
     """Estimated rows with ``lo <= col <= hi`` (either bound may be
-    None = unbounded) from the column's histogram — full buckets
-    count whole, edge buckets linearly interpolated. Falls back to
-    min/max range containment when no histogram was collected, and
-    to ``row_count`` when not even min/max exist."""
+    None = unbounded) from min/max range containment, or
+    ``row_count`` when no min/max were collected."""
     n = float(max(0, int(stats.get("row_count") or 0)))
     cstat = stats.get("columns", {}).get(col)
     if not cstat:
         return n
-    hist = cstat.get("histogram")
-    if not hist:
-        r = _range(stats, col)
-        if r is None:
-            return n
-        axk = _kind_of(cstat.get("type", "")) or "numeric"
-        qlo = r[0] if lo is None else max(_axis_value(lo, axk), r[0])
-        qhi = r[1] if hi is None else min(_axis_value(hi, axk), r[1])
-        span = r[1] - r[0]
-        if qhi < qlo:
-            return 0.0  # provably outside [min, max]
-        nn = n - cstat.get("null_count", 0)
-        if not math.isfinite(span):
-            # ±DBL_MAX-scale sentinels: the span overflows and any
-            # width fraction silently reads as 0 — no information,
-            # claim no reduction
-            return nn
-        if qhi == qlo and span > 0:
-            # zero-measure point INSIDE the range: model equality
-            # (rows-per-value), matching both histogram paths — a
-            # plain width fraction would claim 0 for a value the
-            # stats cannot rule out
-            ndv = cstat.get("ndv")
-            return nn / float(ndv) if ndv else nn
-        frac = 1.0 if span <= 0 else (qhi - qlo) / span
-        # containment monotonicity (round 12, hypothesis-found — the
-        # fallback twin of the round-10 equi-depth lift): a narrow
-        # range must never estimate BELOW the equality model of a
-        # value inside it, or est(A) ≤ est(B) breaks for A ⊆ B
-        # exactly at the point/range boundary. Lift only when an NDV
-        # was collected: without one the point model claims nn (the
-        # no-evidence convention), which is not a floor ranges
-        # should inherit.
-        ndv = cstat.get("ndv")
-        floor = nn / float(ndv) if ndv else 0.0
-        return max(nn * frac, floor)
-    kind = hist["kind"]
-    if "bounds" in hist:  # equi-depth: quantile bounds, uniform mass
-        bounds, rpb = hist["bounds"], hist["rows_per_bucket"]
-        qlo = bounds[0] if lo is None else _axis_value(lo, kind)
-        qhi = bounds[-1] if hi is None else _axis_value(hi, kind)
-        qlo, qhi = max(qlo, bounds[0]), min(qhi, bounds[-1])
-        if qhi < qlo:
-            return 0.0
-        est = 0.0
-        for i in range(len(bounds) - 1):
-            blo, bhi = bounds[i], bounds[i + 1]
-            if bhi < qlo or blo > qhi:
-                continue
-            span = bhi - blo
-            if span <= 0:
-                # zero-width bucket = a hot value; in range → whole
-                if qlo <= blo <= qhi:
-                    est += rpb
-                continue
-            overlap = min(qhi, bhi) - max(qlo, blo)
-            if overlap > 0:
-                est += rpb * min(1.0, overlap / span)
-
-        def point(x: float) -> float:
-            # rows-per-value for a value inside a continuous bucket —
-            # the equality model (a value the stats cannot rule out)
-            ndv = float(cstat.get("ndv") or n)
-            return rpb / max(1.0, ndv / (len(bounds) - 1))
-
-        # containment monotonicity (hypothesis-found, round 10): the
-        # uniform-mass model can assign a RANGE less than the equality
-        # model assigns a single value inside it (narrow range at a
-        # bucket edge vs the point fallback). Lifting the estimate to
-        # its endpoints' point-estimates restores est(A) ≤ est(B) for
-        # A ⊆ B: a point-estimate is bucket-constant, and any bucket
-        # B partially covers contains one of B's endpoints, while a
-        # fully-covered bucket contributes its whole rpb ≥ the point.
-        return max(est, point(qlo), point(qhi))
-    qlo = hist["lo"] if lo is None else _axis_value(lo, kind)
-    qhi = hist["hi"] if hi is None else _axis_value(hi, kind)
-    qlo, qhi = max(qlo, hist["lo"]), min(qhi, hist["hi"])
+    r = _range(stats, col)
+    if r is None:
+        return n
+    axk = _kind_of(cstat.get("type", "")) or "numeric"
+    qlo = r[0] if lo is None else max(_axis_value(lo, axk), r[0])
+    qhi = r[1] if hi is None else min(_axis_value(hi, axk), r[1])
+    span = r[1] - r[0]
     if qhi < qlo:
-        return 0.0
-    counts = hist["counts"]
-    width = (hist["hi"] - hist["lo"]) / len(counts)
-    if width <= 0:
-        return float(sum(counts))
-    est = 0.0
-    for i, cnt in enumerate(counts):
-        blo = hist["lo"] + i * width
-        # the LAST bucket's upper edge is the declared axis `hi`, not
-        # the nominal `blo + width`: `(hi - lo) / B` rounds, so the
-        # nominal top can land strictly BELOW `hi`, leaving a float
-        # sliver the build-time clamp folded into bucket B-1 — a
-        # query inside that sliver must still see the overlap
-        # (round 13, hypothesis-found: data [0, 0, 1.4e-45, -1],
-        # query [2.2e-313, 1.0] → nominal top 0.0 < hi = 1.4e-45)
-        # NB: `lo + (i+1)*width`, NOT `blo + width` — the two differ
-        # in the last ulp under accumulation, and the nominal
-        # geometry (build-time clamp, gap detection below) is defined
-        # on the former
-        bhi = (
-            hist["hi"]
-            if i == len(counts) - 1
-            else hist["lo"] + (i + 1) * width
-        )
-        overlap = min(qhi, bhi) - max(qlo, blo)
-        if overlap <= 0:
-            continue
-        est += cnt * min(1.0, overlap / width)
-    # a degenerate point range (lo == hi) has zero measure on a
-    # continuous axis; model it like equality instead of 0
-    def point(x: float, sliver_ok: bool = False) -> float:
-        i = min(len(counts) - 1, int((x - hist["lo"]) / width))
-        blo = hist["lo"] + i * width
-        bhi = hist["lo"] + (i + 1) * width
-        if not (blo <= x <= bhi):
-            # x sits in the rounding sliver ABOVE the last bucket's
-            # nominal top: that bucket's count there is exactly the
-            # values the clamp displaced. In the RANGE-lift path the
-            # interpolated overlap (already in `est`) is the honest
-            # price — pricing a sliver point at the whole bucket was
-            # the round-12 counterexample — so the lift contributes
-            # nothing. But a DEGENERATE point query (est == 0,
-            # qlo == qhi) carries no overlap at all, and x ≤ hi is an
-            # observed value (hi is the column max): hard-zeroing it
-            # rules out an existing value (round-13 advisor finding).
-            # There the bucket-B-1 equality estimate is the honest
-            # price: the sliver's mass IS in that bucket by clamp.
-            if not (sliver_ok and hist["lo"] <= x <= hist["hi"]):
-                return 0.0
-        ndv = float(stats.get("columns", {}).get(col, {}).get("ndv") or n)
-        return counts[i] / max(1.0, ndv / len(counts))
-
-    if est == 0.0 and qlo == qhi:
-        return point(qlo, sliver_ok=True)
-    # containment monotonicity (round 12 — the equi-width twin of the
-    # round-10 equi-depth lift): a narrow range never estimates below
-    # its endpoints' point models, restoring est(A) ≤ est(B) for
-    # A ⊆ B across the point/range boundary
-    return max(est, point(qlo), point(qhi))
-
-
-def hot_key_rows(stats: dict[str, Any], col: str) -> float:
-    """Estimated rows held by the single HOTTEST value of ``col``,
-    read from its equi-DEPTH histogram (X58, round 12 — the planner's
-    skew-dispatch evidence).
-
-    Quantile bounds pile up on a heavy value: a run of ``m`` equal
-    consecutive bounds is ``m-1`` zero-width buckets of
-    ``rows_per_bucket`` each, so the value's mass is at least
-    ``(m-1)·rpb`` (and at most that plus the two straddling partial
-    buckets — an under-estimate by construction, which is the safe
-    direction for a dispatch that pays dim duplication). Returns 0.0
-    when the column carries no equi-depth histogram or no zero-width
-    bucket: equi-WIDTH histograms cannot isolate a single value, and
-    no-evidence means no salting — the dispatch is strictly
-    evidence-driven, never heuristic on NDV alone.
-    """
-    cstat = stats.get("columns", {}).get(col) or {}
-    # a pre-computed scalar overrides the histogram read: the bushy
-    # combine surfaces subtree column stats with histograms STRIPPED
-    # (halo folds invalidate their shape), so the subtree builder
-    # forwards the base table's hot mass — scaled by the subtree's
-    # surviving fraction, the measured-edge doctrine — as `hot_rows`
-    if cstat.get("hot_rows") is not None:
-        return float(cstat["hot_rows"])
-    hist = cstat.get("histogram") or {}
-    bounds = hist.get("bounds")
-    if not bounds:
-        return 0.0
-    rpb = float(hist.get("rows_per_bucket") or 0.0)
-    best = run = 0
-    for i in range(len(bounds) - 1):
-        if bounds[i] == bounds[i + 1]:
-            run += 1
-            if run > best:
-                best = run
-        else:
-            run = 0
-    return best * rpb
-
-
-def add_hot_key_evidence(
-    df: DataFrame, stats: dict[str, Any], columns: list[str]
-) -> dict[str, Any]:
-    """Record each column's hottest-VALUE mass as the ``hot_rows``
-    scalar :func:`hot_key_rows` prefers (round 14 — heavy-hitter skew
-    evidence). Equi-depth histograms only expose a hot value through
-    zero-width buckets, which needs the value to swallow whole
-    quantile strides; the two-pass Misra-Gries + exact-verify
-    `heavy_hitters` operator measures the top value's EXACT count in
-    two bounded scans, so join keys too skewed for comfort but too
-    diffuse for zero-width buckets still earn dispatch evidence. The
-    count is exact, hence trivially a safe (non-over-estimating)
-    input for the salting economics. Returns a new stats dict; input
-    untouched."""
-    from ..operators.aggregates import heavy_hitters
-
-    out = {**stats, "columns": {**(stats.get("columns") or {})}}
-    for c in columns:
-        # summary_size explicit (round-15 advisor): the k=1 default
-        # (4*k = 4 counters) only certifies items with global count
-        # > n/5, while the skew dispatch fires on hot mass of a few
-        # multiples of n/shuffle_partitions — far below n/5. 256
-        # counters certify anything > n/257, so every dispatch-worthy
-        # key survives the Misra-Gries pass; the pass-2 count stays
-        # exact either way.
-        top = heavy_hitters(df, c, k=1, summary_size=256).collect()
-        if top and top[0]["count"] is not None:
-            cs = {**(out["columns"].get(c) or {})}
-            cs["hot_rows"] = float(top[0]["count"])
-            out["columns"][c] = cs
-    return out
+        return 0.0  # provably outside [min, max]
+    nn = n - cstat.get("null_count", 0)
+    if not math.isfinite(span):
+        # ±DBL_MAX-scale sentinels: the span overflows and any width
+        # fraction silently reads as 0 — no information, claim no
+        # reduction
+        return nn
+    ndv = cstat.get("ndv")
+    if qhi == qlo and span > 0:
+        # zero-measure point INSIDE the range: model equality
+        # (rows-per-value) — a plain width fraction would claim 0 for
+        # a value the stats cannot rule out
+        return nn / float(ndv) if ndv else nn
+    frac = 1.0 if span <= 0 else (qhi - qlo) / span
+    # containment monotonicity: a narrow range must never estimate
+    # BELOW the equality model of a value inside it, or est(A) ≤
+    # est(B) breaks for A ⊆ B at the point/range boundary. Lift only
+    # when an NDV was collected: without one the point model claims
+    # nn (the no-evidence convention), which is not a floor ranges
+    # should inherit.
+    floor = nn / float(ndv) if ndv else 0.0
+    return max(nn * frac, floor)
 
 
 def apply_filter_to_stats(
@@ -754,8 +291,8 @@ def apply_filter_to_stats(
     have after ``lo <= col <= hi`` (or ``col = eq``), without
     scanning anything — this is how a filtered table enters
     ``plan_join_tree`` planning at 100 TB (the alternative, collecting
-    stats on the filtered frame, is a scan). Row count scales by the
-    histogram (range) or 1/ndv (equality); every column's NDV is
+    stats on the filtered frame, is a scan). Row count scales by
+    min/max containment (range) or 1/ndv (equality); every column's NDV is
     capped at the new row count; the filtered column's min/max clamp
     to the predicate and its nulls drop to 0 (range/eq predicates
     reject NULL); ``size_bytes`` scales so broadcast decisions track
@@ -788,7 +325,6 @@ def apply_filter_to_stats(
     }
     for c, cs in stats.get("columns", {}).items():
         cs = dict(cs)
-        cs.pop("histogram", None)  # no longer valid post-filter
         if cs.get("ndv"):
             cs["ndv"] = max(1, min(int(cs["ndv"]), new_n))
         if c == col:
@@ -827,49 +363,6 @@ def apply_filter_to_stats(
     return out
 
 
-def write_stats_sidecar(
-    spark: SparkSession, path: str, stats: dict[str, Any]
-) -> None:
-    fs_write_text(
-        spark,
-        f"{path.rstrip('/')}/{STATS_SIDECAR}",
-        json.dumps(stats, default=str),
-    )
-
-
-def _revive_stats(stats: dict[str, Any]) -> dict[str, Any]:
-    """Undo the sidecar's `default=str` JSON coercion: date/timestamp
-    min/max come back as ISO strings (str() of a datetime IS ISO with
-    a space separator) and decimals as digit strings — parse them back
-    to the python types the collectors produce, so a sidecar-loaded
-    dict behaves identically in `add_histograms` / `_range`."""
-    import datetime as _dt
-
-    for cs in stats.get("columns", {}).values():
-        dt = cs.get("type", "")
-        for k in ("min", "max"):
-            v = cs.get(k)
-            if not isinstance(v, str):
-                continue
-            try:
-                if dt == "date":
-                    cs[k] = _dt.date.fromisoformat(v)
-                elif dt in ("timestamp", "timestamp_ntz"):
-                    cs[k] = _dt.datetime.fromisoformat(v)
-                elif dt.startswith("decimal"):
-                    cs[k] = float(v)
-            except ValueError:
-                pass  # leave the raw string; estimators skip it
-    return stats
-
-
-def read_stats_sidecar(
-    spark: SparkSession, path: str
-) -> dict[str, Any] | None:
-    raw = fs_read_text(spark, f"{path.rstrip('/')}/{STATS_SIDECAR}")
-    return None if raw is None else _revive_stats(json.loads(raw))
-
-
 def _ndv(stats: dict, col: str, default_rows: int) -> float:
     c = stats.get("columns", {}).get(col)
     if c and c.get("ndv"):
@@ -879,8 +372,8 @@ def _ndv(stats: dict, col: str, default_rows: int) -> float:
 
 def _range(stats: dict, col: str):
     """(lo, hi) of the column on its numeric axis — numerics directly,
-    date/timestamp via the same `_axis_value` mapping the histograms
-    use, so temporal join keys get the containment refinement too."""
+    date/timestamp via `_axis_value`, so temporal join keys get the
+    containment refinement too."""
     c = stats.get("columns", {}).get(col)
     if not c:
         return None
@@ -894,108 +387,7 @@ def _range(stats: dict, col: str):
         return None
     if lo is None or hi is None:
         return None
-    # `axis_range` (X60, round 12): a tighter AXIS-value support
-    # recorded by the range-conjunction stats twin — a filter on a
-    # grid-partnered column clamps this column to the cells with
-    # surviving joint mass (event-time filters shrinking a correlated
-    # join key is the canonical case). Intersected with min/max and
-    # ignored if inconsistent, so it can only TIGHTEN the containment
-    # refinement, never widen or invalidate it.
-    ar = c.get("axis_range")
-    if ar:
-        try:
-            alo, ahi = float(ar[0]), float(ar[1])
-        except (TypeError, ValueError):
-            return lo, hi
-        if max(lo, alo) <= min(hi, ahi):
-            lo, hi = max(lo, alo), min(hi, ahi)
     return lo, hi
-
-
-def _hist_segments(
-    stats: dict, col: str
-) -> list[tuple[float, float, float, float]] | None:
-    """The column's histogram as piecewise-uniform segments
-    ``(lo, hi, rows, dv)`` — rows in the segment and the distinct
-    values it is assumed to hold (1 for a zero-width hot-value
-    bucket). Works for both histogram shapes; None when the column
-    has no histogram."""
-    cstat = stats.get("columns", {}).get(col)
-    hist = (cstat or {}).get("histogram")
-    if not hist:
-        return None
-    n = float(max(0, int(stats.get("row_count") or 0)))
-    ndv = float(cstat.get("ndv") or n or 1.0)
-    segs: list[tuple[float, float, float, float]] = []
-    if "bounds" in hist:  # equi-depth
-        bounds, rpb = hist["bounds"], float(hist["rows_per_bucket"])
-        total_w = max(bounds[-1] - bounds[0], 1e-12)
-        for i in range(len(bounds) - 1):
-            blo, bhi = bounds[i], bounds[i + 1]
-            w = bhi - blo
-            dv = 1.0 if w <= 0 else max(1.0, ndv * w / total_w)
-            segs.append((blo, bhi, rpb, dv))
-    else:  # equi-width
-        counts = hist["counts"]
-        lo, hi = hist["lo"], hist["hi"]
-        width = (hi - lo) / len(counts)
-        if width <= 0:
-            return [(lo, hi, float(sum(counts)), 1.0)]
-        for i, cnt in enumerate(counts):
-            if cnt:
-                segs.append(
-                    (lo + i * width, lo + (i + 1) * width,
-                     float(cnt), max(1.0, ndv / len(counts)))
-                )
-    return segs or None
-
-
-def _hist_join_rows(
-    lsegs: list[tuple[float, float, float, float]],
-    rsegs: list[tuple[float, float, float, float]],
-) -> float:
-    """Bucket-aligned equi-join estimate: overlap each left segment
-    with each right segment (both piecewise-uniform), contributing
-    ``rows_l·rows_r / max(dv_l, dv_r)`` on the shared interval —
-    the textbook histogram join, which sees the hot keys uniform-NDV
-    Selinger averages away. Segment counts are tiny (≤ bucket
-    count), so the quadratic pairing is driver-side metadata work."""
-    # a point p belongs to [lo, hi) — or to a CLOSED [lo, hi] when no
-    # later segment starts at hi (the column max sits on the last
-    # bucket's upper bound)
-    llos = {s[0] for s in lsegs}
-    rlos = {s[0] for s in rsegs}
-
-    def _inside(p, lo, hi, los):
-        return lo <= p < hi or (p == hi and hi not in los)
-
-    est = 0.0
-    for llo, lhi, lrows, ldv in lsegs:
-        for rlo, rhi, rrows, rdv in rsegs:
-            lw, rw = lhi - llo, rhi - rlo
-            if lw <= 0 and rw <= 0:
-                # two point masses: join only when colocated
-                if llo == rlo:
-                    est += lrows * rrows  # dv 1 each: every pair matches
-                continue
-            if lw <= 0:  # left hot value inside a right bucket:
-                # every left row matches the right's rows-per-value
-                if _inside(llo, rlo, rhi, rlos):
-                    est += lrows * rrows / max(rdv, 1.0)
-                continue
-            if rw <= 0:
-                if _inside(rlo, llo, lhi, llos):
-                    est += rrows * lrows / max(ldv, 1.0)
-                continue
-            lo, hi = max(llo, rlo), min(lhi, rhi)
-            if hi <= lo:
-                continue
-            lfrac = (hi - lo) / lw
-            rfrac = (hi - lo) / rw
-            est += (lrows * lfrac) * (rrows * rfrac) / max(
-                ldv * lfrac, rdv * rfrac, 1.0
-            )
-    return est
 
 
 def _cols(spec) -> tuple[str, ...]:
@@ -1014,38 +406,24 @@ def _cols(spec) -> tuple[str, ...]:
 
 
 def _group_ndv(stats: dict, cols: tuple[str, ...], n: int) -> float:
-    """NDV of a key TUPLE: the X37 collected group NDV when present
-    (`stats["column_groups"]`, exact information about the
-    combination), else the max over the component columns' NDVs — the
-    provable lower bound (the true group NDV is ≥ every component's),
-    which is exactly where per-column Selinger OVERestimates a
-    composite join's selectivity."""
-    from .column_groups import group_key
-
-    if len(cols) == 1:
-        return _ndv(stats, cols[0], n)
-    g = (stats.get("column_groups") or {}).get(group_key(list(cols)))
-    if g and g.get("ndv"):
-        return max(1.0, min(float(g["ndv"]), float(n)))
+    """NDV of a key TUPLE: the max over the component columns' NDVs —
+    the provable lower bound (the true group NDV is ≥ every
+    component's), which is exactly where per-column Selinger
+    OVERestimates a composite join's selectivity."""
     return max(_ndv(stats, c, n) for c in cols)
 
 
 def estimate_join_rows(
     left_stats: dict, lcol, right_stats: dict, rcol
 ) -> float:
-    """Equi-join cardinality. When BOTH keys carry histograms the
-    estimate is bucket-aligned (`_hist_join_rows` — piecewise-uniform
-    segments joined interval-by-interval, so a skewed key's hot
-    values contribute their true quadratic mass). Otherwise the
-    Selinger formula |L|·|R| / max(ndv_l, ndv_r), scaled down by
-    key-range containment when min/max show the domains barely
-    overlap (a disjoint-range join estimates ~0 instead of
-    |L|·|R|/ndv).
+    """Equi-join cardinality: the Selinger formula
+    |L|·|R| / max(ndv_l, ndv_r), scaled down by key-range containment
+    when min/max show the domains barely overlap (a disjoint-range
+    join estimates ~0 instead of |L|·|R|/ndv).
 
     ``lcol``/``rcol`` may be TUPLES (composite key, round 11): the
-    NDV is then the X37 group NDV when collected, else the max
-    component NDV (`_group_ndv`); a provably disjoint range on ANY
-    component proves zero. Histograms stay single-column."""
+    NDV is then the max component NDV (`_group_ndv`); a provably
+    disjoint range on ANY component proves zero."""
     nl = max(0, int(left_stats.get("row_count") or 0))
     nr = max(0, int(right_stats.get("row_count") or 0))
     if nl == 0 or nr == 0:
@@ -1064,10 +442,6 @@ def estimate_join_rows(
             _group_ndv(left_stats, lcs, nl), _group_ndv(right_stats, rcs, nr)
         )
     lcol, rcol = lcs[0], rcs[0]  # 1-tuples normalize to the plain path
-    lsegs = _hist_segments(left_stats, lcol)
-    rsegs = _hist_segments(right_stats, rcol)
-    if lsegs and rsegs:
-        return _hist_join_rows(lsegs, rsegs)
     est = nl * nr / max(_ndv(left_stats, lcol, nl), _ndv(right_stats, rcol, nr))
     rl, rr = _range(left_stats, lcol), _range(right_stats, rcol)
     if rl and rr:
@@ -1126,34 +500,23 @@ def plan_join_tree(
     stats: dict[str, dict] | None = None,
     how: str = "inner",
     broadcast_threshold: int | None = None,
-    edge_rows: dict[tuple[str, str, str, str], float] | None = None,
     partitioned_on: dict[str, list[str]] | None = None,
-    probe: str | None = None,
-    skew: str | None = None,
-    skew_salts: int = 8,
-    history: dict | None = None,
-    history_digest: str = "",
-    fold_hook=None,
 ) -> tuple[DataFrame, list[str]]:
     """Greedy left-deep join ordering with stats-driven broadcast hints.
 
     ``edges`` are ``(left_table, left_col, right_table, right_col)``
     equi-join predicates; ``stats`` maps table name → the
     ``collect_table_stats`` dict (missing entries are collected on the
-    fly — pass sidecar stats to keep planning metadata-only). Returns
+    fly — pass cached stats to keep planning metadata-only). Returns
     the joined DataFrame and the chosen table order (for plan audits).
 
     Key specs may be column TUPLES (composite keys, round 11):
     ``("fact", ("a", "b"), "dim", ("a", "b"))`` joins on the
-    conjunction, estimates with the X37 group NDV when
-    `collect_column_group_stats` collected one (falling back to the
-    max component NDV — per-column Selinger badly OVERestimates
-    pair-key joins), and threads the tuple through the exchange-aware
-    partitioning keys (subset rule). Composite cross edges make the
-    bushy rung ineligible (guarded fall-through to the greedy); the
-    per-edge histogram model stays single-column, while X41 probes
-    handle tuples (group-NDV vs independence-product arbitration in
-    `estimate_join_rows_validated`, sampled AND-join probe).
+    conjunction, estimates with the max component NDV (per-column
+    Selinger badly OVERestimates pair-key joins), and threads the
+    tuple through the exchange-aware partitioning keys (subset rule).
+    Composite cross edges make the bushy rung ineligible (guarded
+    fall-through to the greedy).
 
     Order (``how="inner"`` only — reordering is an inner-join
     identity), three rungs. Rung 1, the broadcast chain (round 9):
@@ -1211,53 +574,9 @@ def plan_join_tree(
     not expose its bucketing; declaring a column that is NOT really
     the scan partitioning costs only a mis-ordering, never a wrong
     result (Catalyst inserts the real exchanges regardless).
-
-    ``skew="auto"`` (X58, round 12): when the greedy emits a
-    shuffle join (neither side broadcastable, no flip) on a
-    single-column key whose equi-depth histogram carries zero-width
-    hot buckets, and the hot value alone exceeds ``SKEW_HOT_FACTOR``×
-    its side's average post-shuffle partition, the join is emitted as
-    ``functions.skew.salted_shuffle_join`` — the hot side spread over
-    ``skew_salts`` reducers by a deterministic row hash, the other
-    side exploded — provided the explosion shuffles fewer extra rows
-    than the skewed side itself (``other_rows × skew_salts ≤
-    skewed_rows``). Results are identical to the unsalted join (pinned
-    in tests/test_bucketing_skew.py); graphs with no histogram-proven
-    hot key never salt. Inner-only, never in USING mode, and the
-    salted output claims NO reusable partitioning (it is partitioned
-    on the dropped (key, salt)). The bushy combine inherits the flag
-    AND the evidence: subtree stat surfacing strips histograms, so
-    the builder forwards each cross-edge column's hottest-value mass
-    as a survival-scaled ``hot_rows`` scalar, and the recursive
-    combine's shuffle joins — exactly where fact-fact skew lives —
-    dispatch on it like any base edge (pinned).
-
-    ``edge_rows`` (X41 wired in, round 9): MEASURED base-pair
-    cardinalities — from :func:`probe_join_rows` or
-    :func:`exact_join_rows_agg` — keyed by the exact edge tuple.
-    A present entry replaces the model estimate for that edge: models
-    can AGREE and both be wrong (cross-table key correlation, e.g.
-    coinciding hot keys, is invisible to per-table statistics by
-    construction), and at 100 TB a mis-ordered fact-fact join is the
-    single most expensive planning mistake. When the edge folds into
-    an existing intermediate, the measured cardinality is scaled by
-    the fraction of the owning side's base rows still alive in the
-    intermediate (independence, but anchored on a measurement).
     """
     if not edges:
         raise ValueError("plan_join_tree needs at least one join edge")
-    if probe not in (None, "auto"):
-        raise ValueError(f"probe must be None or 'auto', got {probe!r}")
-    if skew not in (None, "auto"):
-        raise ValueError(f"skew must be None or 'auto', got {skew!r}")
-    if skew == "auto" and how.replace("_", "").lower() != "inner":
-        raise ValueError(
-            f"skew='auto' supports inner joins only, got how={how!r}"
-        )
-    if probe == "auto" and how.replace("_", "").lower() != "inner":
-        raise ValueError(
-            f"probe='auto' supports inner joins only, got how={how!r}"
-        )
     unknown = {t for e in edges for t in (e[0], e[2])} - set(tables)
     if unknown:
         raise ValueError(f"edges reference unknown tables: {sorted(unknown)}")
@@ -1369,7 +688,7 @@ def plan_join_tree(
         if name not in stats:
             stats[name] = collect_table_stats(tables[name])
     # unknown cardinality resolves conservatively HUGE (round-9 review
-    # finding): a sidecar-partial entry with row_count=None must never
+    # finding): a partial entry with row_count=None must never
     # classify as broadcastable — rows derive from size_bytes at the
     # default width when available, else a 2^50 sentinel (with a
     # consistent size so width() stays sane). Everything downstream
@@ -1440,44 +759,20 @@ def plan_join_tree(
             order.append(rn)
         return cur, order
 
-    measured = {tuple(k): float(v) for k, v in (edge_rows or {}).items()}
-    bogus = set(measured) - {tuple(e) for e in edges}
-    if bogus:
-        raise ValueError(f"edge_rows for unknown edges: {sorted(bogus)}")
-
     scan_keys = {
         n: set(cols) for n, cols in (partitioned_on or {}).items()
     }
 
-    def fold_estimate(
-        e, owner, cur_col, incoming, inc_col, cur_rows, keep_hist=False
-    ):
+    def fold_estimate(e, owner, cur_col, incoming, inc_col, cur_rows):
         """Estimated rows after folding ``incoming`` into an
         intermediate of ``cur_rows`` rows whose ``cur_col`` attribute
         comes from ``owner`` — shared by the greedy's cand_est and the
-        chain/bushy subtree estimators. A measured base-pair
-        cardinality (X41) trumps the model, scaled by the owning
-        side's surviving fraction; otherwise the owner's key stats
-        are used with its histogram dropped and NDV capped at
-        cur_rows (a selective fold already paid that selectivity —
-        a full-table histogram would re-inflate it).
-
-        ``keep_hist`` (round 11) keeps the owner's histogram instead:
-        the OTHER defensible model of the same fold (skewed hot keys
-        contribute their quadratic mass; the chain is assumed to
-        preserve the base distribution's shape). The bushy rung runs
-        both models through the chain and treats a >10× gap as "the
-        statistics cannot settle this subtree" — the X41 probe
-        trigger. Composite (tuple) keys build the view over every
-        component plus the owner's X37 group entry when collected,
-        all NDVs capped at cur_rows."""
-        if tuple(e) in measured:
-            own_n = float(max(1, int(stats[owner]["row_count"] or 1)))
-            return measured[tuple(e)] * min(1.0, cur_rows / own_n)
+        chain/bushy subtree estimators. The owner's key stats are used
+        with NDV capped at cur_rows (a selective fold already paid that
+        selectivity). Composite (tuple) keys build the view over every
+        component, all NDVs capped at cur_rows."""
 
         def capped(cs):
-            if not keep_hist:
-                cs = {k: v for k, v in cs.items() if k != "histogram"}
             if cs.get("ndv"):
                 cs = {**cs, "ndv": max(1, min(int(cs["ndv"]), int(cur_rows) or 1))}
             return cs
@@ -1488,40 +783,17 @@ def plan_join_tree(
             if cs:
                 colmap[c] = capped(cs)
         cur_view = {"row_count": cur_rows, "columns": colmap}
-        if len(_cols(cur_col)) > 1:
-            from .column_groups import group_key
-
-            g = (stats[owner].get("column_groups") or {}).get(
-                group_key(list(_cols(cur_col)))
-            )
-            if g and g.get("ndv"):
-                cur_view["column_groups"] = {
-                    group_key(list(_cols(cur_col))): {
-                        **g,
-                        "ndv": max(
-                            1, min(int(g["ndv"]), int(cur_rows) or 1)
-                        ),
-                    }
-                }
         return estimate_join_rows(cur_view, cur_col, stats[incoming], inc_col)
 
-    def chain_fold(lead, fold_edges, lead_frame=None):
+    def chain_fold(lead, fold_edges):
         """Broadcast-chain fold: ``lead`` streams, every other table
         hash-attaches map-side via an explicit broadcast hint;
         redundant edges between already-joined tables become filters.
-        Returns (df, order, estimated_rows, hist_estimated_rows) — the
-        two estimates thread fold_estimate (histogram-stripped and
-        histogram-kept) through the same fold sequence; they diverge
-        only where a fold's key stats carry histograms that contradict
-        the uniform-NDV model. ``lead_frame`` substitutes the lead's
-        frame (the subtree probe folds the same chain over a SAMPLE of
-        the lead — attribute ids survive a unary sample node, so the
-        edge predicates still resolve)."""
-        cur = tables[lead] if lead_frame is None else lead_frame
+        Returns (df, order, estimated_rows)."""
+        cur = tables[lead]
         joined = {lead}
         order = [lead]
         est = float(max(0, stats[lead]["row_count"] or 0))
-        est_h = est
         remaining = list(fold_edges)
         while remaining:
             progressed = False
@@ -1530,9 +802,6 @@ def plan_join_tree(
                 if ln in joined and rn in joined:
                     cur = edge_filter(cur, ln, lc, rn, rc)
                 elif ln in joined:
-                    est_h = fold_estimate(
-                        e, ln, lc, rn, rc, est_h, keep_hist=True
-                    )
                     est = fold_estimate(e, ln, lc, rn, rc, est)
                     cur = cur.join(
                         F.broadcast(tables[rn]),
@@ -1541,9 +810,6 @@ def plan_join_tree(
                     joined.add(rn)
                     order.append(rn)
                 elif rn in joined:
-                    est_h = fold_estimate(
-                        e, rn, rc, ln, lc, est_h, keep_hist=True
-                    )
                     est = fold_estimate(e, rn, rc, ln, lc, est)
                     cur = cur.join(
                         F.broadcast(tables[ln]),
@@ -1560,7 +826,7 @@ def plan_join_tree(
                     "join graph is disconnected: cannot reach "
                     f"{sorted({t for e in remaining for t in (e[0], e[2])} - joined)}"
                 )
-        return cur, order, est, est_h
+        return cur, order, est
 
     # Broadcast-chain rung (round 9): if at most ONE table exceeds the
     # build budget, intermediate cardinality is the WRONG objective —
@@ -1577,7 +843,7 @@ def plan_join_tree(
     big = [n for n in sizes if not fits(sizes[n])]
     if len(big) <= 1 and broadcast_threshold > 0 and len(sizes) > 1:
         lead = big[0] if big else max(sizes, key=lambda n: sizes[n])
-        cur, order, _, _ = chain_fold(lead, edges)
+        cur, order, _ = chain_fold(lead, edges)
         return cur, order
 
     # Bushy rung (round 10): ≥2 big tables, each carrying its OWN halo
@@ -1645,76 +911,13 @@ def plan_join_tree(
             sub_stats: dict[str, dict] = {}
             sub_order: dict[str, list[str]] = {}
             sub_part: dict[str, list[str]] = {}
-            sub_members: dict[str, list[str]] = {}
-            sub_comp_edges: dict[str, list] = {}
             ambiguous = False
             for ms in comps:
                 cname = comp_of[ms[0]]
                 comp_edges = [
                     e for e in halo if e[0] in ms and e[2] in ms
                 ]
-                sub_members[cname] = list(ms)
-                sub_comp_edges[cname] = comp_edges
-                df, order, est, est_h = chain_fold(cname, comp_edges)
-                # Subtree-level probe dispatch (round 11, X41×X50): the
-                # combine's broadcast decision rides this chain
-                # estimate, and a mis-estimated subtree near the build
-                # budget mis-broadcasts — the single worst planning
-                # mistake at fact scale. When the two chain models
-                # (histogram-stripped vs histogram-kept folds)
-                # disagree >10×, the statistics demonstrably cannot
-                # settle the subtree; probe="auto" then measures it:
-                # the SAME chain folded over a Bernoulli sample of the
-                # lead (each output row descends from exactly one lead
-                # row through broadcast-attached halo dims, so
-                # count/fraction is unbiased). Agreeing chains stay
-                # completely scan-free — the probe is the insurance
-                # premium, paid only on subtrees the models dispute.
-                if probe == "auto" and comp_edges:
-                    ratio = max(est, 1.0) / max(est_h, 1.0)
-                    if (
-                        ratio > PROBE_DISAGREEMENT
-                        or ratio < 1.0 / PROBE_DISAGREEMENT
-                    ):
-                        # X56×X53 (round 14): a disputed subtree pays
-                        # its sampling scan ONCE per member-set shape —
-                        # the measured cardinality lands in the same
-                        # session history base edges use, keyed by the
-                        # chain signature + filter digest and gated on
-                        # EVERY member's stats signature, so the next
-                        # planning of the same subtree serves from
-                        # memory with zero probes.
-                        from .history import (
-                            fresh_subtree_rows,
-                            record_subtree_rows,
-                            subtree_history_key,
-                        )
-
-                        m_stats = {m: stats[m] for m in ms}
-                        hkey = subtree_history_key(
-                            cname, comp_edges, history_digest
-                        )
-                        remembered = (
-                            fresh_subtree_rows(history, hkey, m_stats)
-                            if history is not None
-                            else None
-                        )
-                        if remembered is not None:
-                            est = remembered
-                        else:
-                            s_df, _, _, _ = chain_fold(
-                                cname,
-                                comp_edges,
-                                lead_frame=tables[cname].sample(
-                                    fraction=SUBTREE_PROBE_FRACTION,
-                                    seed=42,
-                                ),
-                            )
-                            est = probe_subtree_rows(s_df)
-                            if history is not None:
-                                record_subtree_rows(
-                                    history, hkey, est, m_stats
-                                )
+                df, order, est = chain_fold(cname, comp_edges)
                 cols = list(df.columns)
                 width_sum = sum(width(m) for m in ms)
                 colstats: dict[str, Any] = {}
@@ -1737,34 +940,10 @@ def plan_join_tree(
                         colowner[tc] = tn
                         cs = stats[tn]["columns"].get(tc)
                         if cs:
-                            cs = {
-                                k: v
-                                for k, v in cs.items()
-                                if k != "histogram"
-                            }
+                            cs = dict(cs)
                             if cs.get("ndv"):
                                 cs["ndv"] = max(
                                     1, min(int(cs["ndv"]), int(est) or 1)
-                                )
-                            # X58 through the combine (round 12): the
-                            # stripped histogram takes the skew
-                            # evidence with it, so forward the base
-                            # table's hottest-value mass scaled by the
-                            # subtree's surviving fraction — the
-                            # combine's shuffle joins are exactly
-                            # where fact-fact skew lives
-                            hot = hot_key_rows(stats[tn], tc)
-                            if hot > 0:
-                                base_n = float(
-                                    max(
-                                        1,
-                                        int(
-                                            stats[tn]["row_count"] or 1
-                                        ),
-                                    )
-                                )
-                                cs["hot_rows"] = hot * min(
-                                    1.0, float(est) / base_n
                                 )
                             colstats[tc] = cs
                 sub_tables[cname] = df
@@ -1786,106 +965,19 @@ def plan_join_tree(
                     (comp_of[e[0]], e[1], comp_of[e[2]], e[3])
                     for e in cross
                 ]
-                # X41 measurements are BASE-pair cardinalities; the
-                # combine's tables are halo-SHRUNK subtrees, so each
-                # measured edge scales by both ends' surviving
-                # fractions (independence anchored on the measurement
-                # — the same doctrine cand_est applies one-sided; the
-                # recursion's own scaling then sees fraction 1 and
-                # cannot double-pay) (round-10 review finding)
-                sub_measured = {}
-                for e in cross:
-                    if tuple(e) not in measured:
-                        continue
-                    scale = 1.0
-                    for tn in (e[0], e[2]):
-                        base_n = float(
-                            max(1, int(stats[tn]["row_count"] or 1))
-                        )
-                        sub_n = float(
-                            sub_stats[comp_of[tn]]["row_count"]
-                        )
-                        scale *= min(1.0, sub_n / base_n)
-                    sub_measured[
-                        (comp_of[e[0]], e[1], comp_of[e[2]], e[3])
-                    ] = measured[tuple(e)] * scale
-                # X56 for the VIRTUAL cross edges (round 15, VERDICT
-                # r14 ask #2): a combine fold executed before lands in
-                # the history under a COMPONENT-CONTENT key (both
-                # subtrees' signatures + the cross columns + filter
-                # digest) — here it serves UNSCALED, because the
-                # recorded number already IS the halo-shrunk combine
-                # output (re-scaling an executed fold by surviving
-                # fractions was the round-14 latent double-shrink).
-                # Caller-measured base pairs above still outrank it by
-                # doctrine. Unserved edges register through fold_hook
-                # so harvest_executed records them under the same
-                # content key, gated on EVERY member's signature.
-                if history is not None:
-                    from .history import (
-                        cross_history_key,
-                        fresh_subtree_rows,
-                    )
-
-                    for e in cross:
-                        ve = (comp_of[e[0]], e[1], comp_of[e[2]], e[3])
-                        if ve in sub_measured:
-                            continue
-                        ca, cb = comp_of[e[0]], comp_of[e[2]]
-                        ckey = cross_history_key(
-                            ca,
-                            sub_comp_edges[ca],
-                            cb,
-                            sub_comp_edges[cb],
-                            e[1],
-                            e[3],
-                            history_digest,
-                        )
-                        m_stats = {
-                            m: stats[m]
-                            for m in sub_members[ca] + sub_members[cb]
-                        }
-                        remembered = fresh_subtree_rows(
-                            history, ckey, m_stats
-                        )
-                        if remembered is not None:
-                            sub_measured[ve] = remembered
-                        if fold_hook is not None:
-                            # served=True retires the base-key fold the
-                            # caller registered for this colset (there
-                            # is nothing left to harvest, and an
-                            # executed cross join landing on a stale
-                            # base fold would record the combine output
-                            # as a base pair — the double-shrink)
-                            fold_hook(
-                                frozenset(
-                                    [*_cols(e[1]), *_cols(e[3])]
-                                ),
-                                ckey,
-                                m_stats,
-                                remembered is not None,
-                            )
                 joined, rec_order = plan_join_tree(
                     sub_tables,
                     sub_edges,
                     stats=sub_stats,
                     broadcast_threshold=broadcast_threshold,
-                    edge_rows=sub_measured or None,
                     partitioned_on={
                         c: ks for c, ks in sub_part.items() if ks
                     }
                     or None,
-                    skew=skew,
-                    skew_salts=skew_salts,
                 )
                 return joined, [
                     t for c in rec_order for t in sub_order[c]
                 ]
-
-    def edge_est(e):
-        if tuple(e) in measured:
-            return measured[tuple(e)]
-        return estimate_join_rows(stats[e[0]], e[1], stats[e[2]], e[3])
 
     def edge_cost(e):
         # first-edge twin of cand_cost: output estimate + the rows
@@ -1896,7 +988,7 @@ def plan_join_tree(
         # fits(inc_bytes) early return; charging the big side anyway
         # over-costs a fact-dim first edge relative to a fact-fact one
         # (round-9 advisory)
-        cost = edge_est(e)
+        cost = estimate_join_rows(stats[e[0]], e[1], stats[e[2]], e[3])
         sides = [
             (name, key, float(max(0, stats[name]["row_count"] or 0)))
             for name, key in ((e[0], e[1]), (e[2], e[3]))
@@ -1962,8 +1054,7 @@ def plan_join_tree(
             # that OWNS the column (equi-joins preserve key-NDV upper
             # bounds) — looked up per-edge, never merged by bare
             # column name, so same-named columns across tables can't
-            # cross-contaminate the estimate; histogram dropped, NDV
-            # capped at cur_rows, X41 measurements trump the models —
+            # cross-contaminate the estimate; NDV capped at cur_rows —
             # all shared with the chain/bushy estimators via
             # fold_estimate (round 11: one body, tuple keys included)
             return fold_estimate(e, owner, cur_col, incoming, inc_col, cur_rows)
@@ -2024,78 +1115,13 @@ def plan_join_tree(
             )
             # broadcast fold: cur's partitioning is untouched
         elif not fits(cur_rows * cur_width):
-            # Skew dispatch (X58, round 12): before emitting the plain
-            # shuffle join, consult the per-key evidence the planner
-            # already carries — equi-depth histograms' zero-width hot
-            # buckets (`hot_key_rows`). AQE's skew split handles the
-            # sort-merge case at runtime, but a hot key's single
-            # reducer is still the straggler when the split can't
-            # apply; salting fixes it at PLAN time by spreading the hot
-            # side over (key, salt) reducers at the price of exploding
-            # the other side ×n_salts. Strictly evidence-driven gates:
-            # (a) the hot value alone exceeds SKEW_HOT_FACTOR× the
-            # average post-shuffle partition of its side (the AQE
-            # skewedPartitionFactor doctrine, plan-time), and (b) the
-            # other side's duplication shuffles fewer extra rows than
-            # the skewed side itself (explosion bounded by the cost it
-            # removes). Single-column keys only (the histogram model is
-            # per-column) and never in USING mode (the salt equality
-            # needs per-side attributes). The salted output is
-            # partitioned on (key, salt) — salt dropped — so NO
-            # partitioning survives for later edges (cur_keys cleared,
-            # not claimed: a bare-key claim would cost a later same-key
-            # edge a phantom free shuffle).
-            salted = False
-            if (
-                skew == "auto"
-                and not lineage_shared
-                and len(_cols(cur_col)) == 1
-            ):
-                from ..functions import skew as _skew_mod
-
-                parts = int(
-                    spark.conf.get("spark.sql.shuffle.partitions", "200")
-                )
-                own_n = float(max(1, int(stats[_owner]["row_count"] or 1)))
-                hot_cur = hot_key_rows(
-                    stats[_owner], _cols(cur_col)[0]
-                ) * min(1.0, cur_rows / own_n)
-                inc_rows = float(
-                    max(0, stats[incoming]["row_count"] or 0)
-                )
-                hot_inc = hot_key_rows(stats[incoming], _cols(inc_col)[0])
-                sides = sorted(
-                    (
-                        ("left", hot_cur, cur_rows, inc_rows),
-                        ("right", hot_inc, inc_rows, cur_rows),
-                    ),
-                    key=lambda s: s[1],
-                    reverse=True,
-                )
-                for salt_side, hot_rows, side_rows, other_rows in sides:
-                    if (
-                        hot_rows
-                        > SKEW_HOT_FACTOR * (side_rows / max(1, parts))
-                        and other_rows * skew_salts <= side_rows
-                    ):
-                        cur = _skew_mod.salted_shuffle_join(
-                            cur,
-                            tables[incoming],
-                            on=pred,
-                            salt_side=salt_side,
-                            n_salts=skew_salts,
-                        )
-                        cur_keys = set()
-                        salted = True
-                        break
-            if not salted:
-                cur = cur.join(tables[incoming], on=pred, how=how)
-                # shuffle join: the output is co-partitioned on BOTH key
-                # tuples — later same-key edges reuse the exchange
-                cur_keys = {
-                    (_owner, _cols(cur_col)),
-                    (incoming, _cols(inc_col)),
-                }
+            cur = cur.join(tables[incoming], on=pred, how=how)
+            # shuffle join: the output is co-partitioned on BOTH key
+            # tuples — later same-key edges reuse the exchange
+            cur_keys = {
+                (_owner, _cols(cur_col)),
+                (incoming, _cols(inc_col)),
+            }
         else:
             # build-side flip: the incoming table is too big to
             # broadcast but the accumulated intermediate FITS — hint
@@ -2120,237 +1146,3 @@ def plan_join_tree(
         order.append(incoming)
     return cur, order
 
-
-def table_stats_report(stats: dict[str, Any]) -> str:
-    """Human-readable one-table summary (for logs / notebooks)."""
-    lines = [
-        f"rows={stats.get('row_count')} bytes={stats.get('size_bytes')}"
-    ]
-    for name, c in sorted(stats.get("columns", {}).items()):
-        nc = c.get("null_count", 0)
-        n = max(1, int(stats.get("row_count") or 1))
-        lines.append(
-            f"  {name} {c.get('type')}: ndv~{c.get('ndv')} "
-            f"range=[{c.get('min')}, {c.get('max')}] "
-            f"nulls={nc} ({100.0 * nc / n:.1f}%)"
-        )
-    return "\n".join(lines)
-
-
-#: disagreement ratio between the histogram and Selinger estimates
-#: above which a sample probe is worth one cheap pass per side
-#: skew dispatch (X58): a key value is "hot" when its estimated rows
-#: exceed this multiple of its side's average post-shuffle partition —
-#: the plan-time twin of AQE's skewedPartitionFactor=5 doctrine
-SKEW_HOT_FACTOR = 4.0
-
-PROBE_DISAGREEMENT = 10.0
-
-
-#: Bernoulli fraction for the bushy rung's subtree probe — the same
-#: premium scale as probe_join_rows' per-edge default
-SUBTREE_PROBE_FRACTION = 0.01
-
-
-def probe_subtree_rows(
-    sampled_chain: DataFrame, fraction: float = SUBTREE_PROBE_FRACTION
-) -> float:
-    """X41 subtree probe (round 11): cardinality of a halo chain from
-    the SAME chain folded over a Bernoulli sample of its lead fact —
-    every chain output row descends from exactly one lead row (halo
-    dims attach via broadcast joins), so each survives the sampling
-    with probability ``fraction`` independently and count/fraction is
-    unbiased. Cost: a fraction-of-the-fact scan plus the same
-    broadcast attaches the real chain pays anyway. Same zero-count
-    caveat as :func:`probe_join_rows`: 0.0 means "≲ 1/fraction", which
-    for the broadcast decision this probe serves is exactly the safe
-    direction (a tiny subtree broadcasts)."""
-    return sampled_chain.count() / fraction
-
-
-def probe_join_rows(
-    left: DataFrame,
-    lcol: str,
-    right: DataFrame,
-    rcol: str,
-    fraction: float = 0.01,
-    seed: int = 42,
-) -> float:
-    """X41: MEASURED equi-join cardinality from a Bernoulli sample of
-    each side: ``|L ⋈ R| ≈ |sample_l ⋈ sample_r| / (q_l · q_r)`` —
-    unbiased, because every joined pair survives both samplings with
-    probability ``q²`` independently. One pass per side plus a join
-    over ``q·|L| × q·|R|`` rows; at q=1% that is 10⁻⁴ of the real
-    join's pair mass — the insurance premium, not the join.
-
-    Variance caveat (documented, not hidden): the estimator needs
-    E[sampled pairs] = |J|·q² ≫ 1 to be tight. A probe that catches
-    ZERO pairs says only |J| ≲ 1/q² — callers get 0.0 back and must
-    treat it as "small", not "empty". That failure mode is exactly
-    inverted from the model estimators' (models err on BIG skewed
-    joins, the probe errs on TINY ones), which is why
-    :func:`estimate_join_rows_validated` uses the probe only to
-    arbitrate when the models disagree by >10×.
-
-    Composite keys (round 11): ``lcol``/``rcol`` may be tuples — the
-    sample projects the key columns and the join ANDs the component
-    equalities, same estimator, same cost shape."""
-    if not 0 < fraction <= 1:
-        raise ValueError("fraction must be in (0, 1]")
-    lcs, rcs = _cols(lcol), _cols(rcol)
-    sl = left.select(*lcs).sample(fraction=fraction, seed=seed)
-    sr = right.select(*rcs).sample(fraction=fraction, seed=seed + 1)
-    cond = None
-    for a, b in zip(lcs, rcs):
-        term = sl[a] == sr[b]
-        cond = term if cond is None else cond & term
-    pairs = sl.join(sr, on=cond).count()
-    return pairs / (fraction * fraction)
-
-
-def estimate_join_rows_validated(
-    left_stats: dict,
-    lcol: str,
-    right_stats: dict,
-    rcol: str,
-    left: DataFrame | None = None,
-    right: DataFrame | None = None,
-    fraction: float = 0.01,
-    disagreement: float = PROBE_DISAGREEMENT,
-) -> tuple[float, str]:
-    """Cardinality with a measured tie-breaker: compute BOTH model
-    estimates — bucket-aligned histogram (when both keys carry one)
-    and uniform-NDV Selinger — and, when they disagree by more than
-    ``disagreement``× AND the frames are provided, arbitrate with one
-    :func:`probe_join_rows` sample probe. Returns ``(rows, source)``
-    with source ∈ {"histogram", "selinger", "probe"} (composite keys:
-    {"group", "independence", "probe"}) so plan audits can see which
-    model decided. Without frames (sidecar-only planning) the
-    histogram estimate wins ties — it strictly dominates Selinger's
-    information.
-
-    Composite (tuple) keys (round 11): the two models are the
-    group-NDV estimate (`_group_ndv` — X37 evidence when collected,
-    max-component lower bound otherwise) and the per-column
-    INDEPENDENCE product ``|L|·|R| / Π max(ndv_aᵢ, ndv_bᵢ)``. These
-    disagree structurally whenever key columns correlate — which is
-    exactly when per-table statistics cannot settle the join and one
-    sampled probe is the insurance premium. Without frames the
-    group-NDV estimate wins (it can only RAISE the selectivity toward
-    truth: gndv ≤ Π ndv always)."""
-    lcs, rcs = _cols(lcol), _cols(rcol)
-    nl = max(0, int(left_stats.get("row_count") or 0))
-    nr = max(0, int(right_stats.get("row_count") or 0))
-    if nl == 0 or nr == 0:
-        return 0.0, "selinger" if len(lcs) == 1 else "independence"
-    if len(lcs) > 1:
-        grp = estimate_join_rows(left_stats, lcs, right_stats, rcs)
-        if grp == 0.0:
-            # round 12 (advice): a disjoint component range PROVED the
-            # join empty (the only way grp can be 0 here — the nl/nr==0
-            # cases returned above). The independence product ignores
-            # ranges, so without this short-circuit the >10× model
-            # disagreement would fire a sampling probe for exactly the
-            # join the stats already settled — breaking the scan-free
-            # contract on the cheapest case.
-            return 0.0, "group"
-        denom = 1.0
-        for a, b in zip(lcs, rcs):
-            denom *= max(_ndv(left_stats, a, nl), _ndv(right_stats, b, nr))
-        indep = nl * nr / max(denom, 1.0)
-        ratio = max(grp, 1.0) / max(indep, 1.0)
-        if (
-            left is not None
-            and right is not None
-            and (ratio > disagreement or ratio < 1.0 / disagreement)
-        ):
-            probed = probe_join_rows(left, lcs, right, rcs, fraction)
-            if probed > 0:
-                return probed, "probe"
-            return min(grp, indep), (
-                "group" if grp <= indep else "independence"
-            )
-        return grp, "group"
-    lcol, rcol = lcs[0], rcs[0]  # 1-tuples normalize to the plain path
-    lsegs = _hist_segments(left_stats, lcol)
-    rsegs = _hist_segments(right_stats, rcol)
-    if not (lsegs and rsegs):
-        return estimate_join_rows(left_stats, lcol, right_stats, rcol), (
-            "selinger"
-        )
-
-    def _nohist(stats, col):
-        cs = stats.get("columns", {}).get(col)
-        if not cs or "histogram" not in cs:
-            return stats
-        return {
-            **stats,
-            "columns": {
-                **stats["columns"],
-                col: {k: v for k, v in cs.items() if k != "histogram"},
-            },
-        }
-
-    # compare against the CONTAINMENT-REFINED Selinger (the model
-    # estimate_join_rows actually uses without histograms) — the raw
-    # |L|·|R|/ndv would "disagree" on disjoint-domain joins the
-    # refinement already resolves, firing spurious probes on exactly
-    # the joins that are cheapest to model
-    sel = estimate_join_rows(
-        _nohist(left_stats, lcol), lcol, _nohist(right_stats, rcol), rcol
-    )
-    hist = _hist_join_rows(lsegs, rsegs)
-    ratio = max(hist, 1.0) / max(sel, 1.0)
-    if (
-        left is not None
-        and right is not None
-        and (ratio > disagreement or ratio < 1.0 / disagreement)
-    ):
-        probed = probe_join_rows(left, lcol, right, rcol, fraction)
-        if probed > 0:
-            return probed, "probe"
-        # zero sampled pairs: the join is ≲ 1/q² rows — both models
-        # overestimate; keep the smaller one
-        return min(hist, sel), "histogram" if hist <= sel else "selinger"
-    return hist, "histogram"
-
-
-def exact_join_rows_agg(
-    left: DataFrame, lcol: str, right: DataFrame, rcol: str
-) -> int:
-    """EXACT equi-join cardinality without materializing the join:
-    ``|L ⋈ R| = Σ_k count_L(k) · count_R(k)`` — two key-count
-    aggregations (map-side combined) joined on the key, then one
-    scalar sum. Cost: a shuffle of the two DISTINCT key sets with
-    their counts, never of the rows — at 20M×10M planted skew this
-    answers "45 trillion" in ~3 s where the join itself is
-    unrunnable. The top rung of the cardinality ladder: model
-    (:func:`estimate_join_rows`) → sampled probe
-    (:func:`probe_join_rows`) → this exact aggregate → (never) the
-    join. Use it when a decision is worth one key shuffle — e.g.
-    refusing to schedule a join whose output would exceed a budget."""
-    lc = (
-        left.select(F.col(lcol).alias("__k"))
-        .groupBy("__k")
-        .agg(F.count(F.lit(1)).alias("__cl"))
-    )
-    rc = (
-        right.select(F.col(rcol).alias("__k"))
-        .groupBy("__k")
-        .agg(F.count(F.lit(1)).alias("__cr"))
-    )
-    # decimal(38,0) arithmetic: a hot key with ~3e9 rows per side
-    # yields cl·cr ≈ 1e19 > Long.MAX — long math would wrap (ANSI
-    # off) or throw (ANSI on) at exactly the astronomical-output
-    # scale this function exists to measure
-    row = (
-        lc.join(rc, "__k")
-        .agg(
-            F.sum(
-                F.col("__cl").cast("decimal(38,0)")
-                * F.col("__cr").cast("decimal(38,0)")
-            ).alias("__j")
-        )
-        .first()
-    )
-    return int(row["__j"] or 0)

@@ -34,9 +34,9 @@ def query(
 
     ``plan_memo=True`` (round 15, VERDICT r14 ask #6) serves repeat
     constructions from `tables.memoized_plan` — keyed on the session's
-    (stats, history, planning-conf) state, so the dogfood loop's
-    re-plans after a harvest still construct fresh while identical
-    state returns the identical immutable frame in ~0. Opt-in and only
+    (stats, planning-conf) state, so a conf change or an invalidation
+    still constructs fresh while identical state returns the identical
+    immutable frame in ~0. Opt-in and only
     for SIDE-EFFECT-FREE constructions: a query that maintains state
     per call (q_rollup_incremental's store refreshes) must never be
     memoized, because skipping the work would change what the row

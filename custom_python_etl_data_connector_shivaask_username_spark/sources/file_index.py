@@ -468,8 +468,7 @@ def compaction_report(
     of files that are small, and ``ideal_files`` (total bytes at the
     target size) so callers can see the task-count inflation the
     layout is paying. Pure metadata math over an already-built index
-    — pair with `layout.compact_partitions` to act on it, and with
-    X38's freshness thresholds to decide how often to look."""
+    — pair with `layout.compact_partitions` to act on it."""
     files = [e for e in index.get("files", []) if e.get("bytes") is not None]
     total = sum(e["bytes"] for e in files)
     small = [e for e in files if e["bytes"] < target_file_bytes / 2]

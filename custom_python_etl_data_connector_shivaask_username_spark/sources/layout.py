@@ -272,20 +272,60 @@ def compact_partitions(
     _rebuild_index_after_swap(spark, path, pre_index)
 
 
-def atomic_swap(spark: SparkSession, staging: str, path: str) -> None:
-    """Replace ``path`` with ``staging`` via filesystem rename — the
-    metadata-only commit step shared by every staged rewrite (table
-    compaction, rollup-store compaction). On HDFS/local rename is
-    atomic; object stores need their own commit protocol."""
-    hconf = spark._jsc.hadoopConfiguration()
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path constructor) for ``path``'s store."""
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(staging), hconf
+        jvm.java.net.URI.create(path), spark._jsc.hadoopConfiguration()
     )
-    target = jvm.org.apache.hadoop.fs.Path(path)
-    fs.delete(target, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), target):
-        raise IOError(f"rename {staging} -> {path} failed")
+    return fs, jvm.org.apache.hadoop.fs.Path
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise IOError(f"rename {src} -> {dst} failed")
+
+
+def recover_swap(spark: SparkSession, path: str) -> None:
+    """Finish what an interrupted :func:`atomic_swap` left at ``path``.
+    A crash between its two renames leaves no table but an aside dir:
+    it is renamed back, so ``path`` reads its old contents (the
+    interrupted rewrite never committed). An aside dir next to a
+    table is the old copy of a committed swap and is deleted."""
+    fs, Path = _hadoop_fs(spark, path)
+    target = Path(path.rstrip("/"))
+    aside = Path(path.rstrip("/") + "__aside")
+    if fs.exists(aside):
+        if fs.exists(target):
+            fs.delete(aside, True)
+        else:
+            _rename(fs, aside, target)
+
+
+def atomic_swap(spark: SparkSession, staging: str, path: str) -> None:
+    """Replace ``path`` with ``staging`` via filesystem renames — the
+    metadata-only commit step shared by every staged rewrite (table
+    compaction, rollup-store compaction, the parquet upsert). The old
+    tree moves to ``{path}__aside``, staging moves into place, then the
+    aside dir is deleted: at every step the old or the new tree is
+    readable at ``path`` or in the aside dir. A failed second rename
+    moves the old tree back; a crash is finished by
+    :func:`recover_swap`. On HDFS/local rename is atomic; object stores
+    need their own commit protocol."""
+    recover_swap(spark, path)
+    fs, Path = _hadoop_fs(spark, path)
+    target = Path(path.rstrip("/"))
+    aside = Path(path.rstrip("/") + "__aside")
+    had_target = fs.exists(target)
+    if had_target:
+        _rename(fs, target, aside)
+    try:
+        _rename(fs, Path(staging), target)
+    except BaseException:
+        if had_target:
+            _rename(fs, aside, target)
+        raise
+    fs.delete(aside, True)
 
 
 def fs_write_text(spark: SparkSession, path: str, content: str) -> None:

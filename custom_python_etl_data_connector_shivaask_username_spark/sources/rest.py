@@ -23,6 +23,8 @@ Rate limiting + retry (S3) live in :class:`_Fetcher`, shared by both.
 
 from __future__ import annotations
 
+import datetime
+import email.utils
 import json
 import random
 import time
@@ -43,6 +45,27 @@ RETRYABLE_STATUS = {429, 500, 502, 503, 504}
 
 class ConnectorError(RuntimeError):
     """Non-retryable connector failure (bad auth, 4xx, exhausted retries)."""
+
+
+def _retry_after_sec(value: str | None) -> float | None:
+    """Seconds to wait from a ``Retry-After`` header: delta-seconds or
+    an HTTP-date (RFC 9110 §10.2.3), clamped at 0 for a date already
+    past. None when the header is absent or unparseable — the caller
+    then backs off exponentially."""
+    if not value:
+        return None
+    try:
+        return max(0.0, float(value))
+    except ValueError:
+        pass
+    try:
+        at = email.utils.parsedate_to_datetime(value)
+    except (TypeError, ValueError):
+        return None
+    if at.tzinfo is None:  # RFC 850 / asctime forms carry no zone: GMT
+        at = at.replace(tzinfo=datetime.timezone.utc)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    return max(0.0, (at - now).total_seconds())
 
 
 class _Fetcher:
@@ -91,14 +114,13 @@ class _Fetcher:
             except urllib.error.HTTPError as ex:
                 if ex.code in RETRYABLE_STATUS and attempt < self.cfg.max_retries:
                     last_err = ex
-                    retry_after = ex.headers.get("Retry-After")
-                    delay = (
-                        float(retry_after)
-                        if retry_after
-                        else self.cfg.backoff_base_sec
-                        * (2**attempt)
-                        * (1 + 0.1 * random.random())
-                    )
+                    delay = _retry_after_sec(ex.headers.get("Retry-After"))
+                    if delay is None:
+                        delay = (
+                            self.cfg.backoff_base_sec
+                            * (2**attempt)
+                            * (1 + 0.1 * random.random())
+                        )
                     time.sleep(delay)
                     continue
                 raise ConnectorError(

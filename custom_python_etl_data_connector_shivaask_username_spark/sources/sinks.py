@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.etl import add_ingest_ts
+from .layout import _hadoop_fs, atomic_swap, recover_swap
 
 RAW_SUFFIX = "_raw"
 
@@ -78,6 +79,7 @@ def upsert_parquet(
     """
     if stamp:
         new_df = add_ingest_ts(new_df)
+    recover_replace(spark, path)
     try:
         existing = spark.read.parquet(path)
     except AnalysisException as ex:
@@ -112,6 +114,15 @@ def upsert_parquet(
     atomic_replace_parquet(spark, merged, path)
 
 
+def recover_replace(spark: SparkSession, path: str) -> None:
+    """Finish what an interrupted :func:`atomic_replace_parquet` left:
+    an interrupted swap (`layout.recover_swap`) and a leftover staging
+    dir."""
+    recover_swap(spark, path)
+    fs, Path = _hadoop_fs(spark, path)
+    fs.delete(Path(path.rstrip("/") + "__staging"), True)
+
+
 def atomic_replace_parquet(
     spark: SparkSession, df: DataFrame, path: str
 ) -> None:
@@ -119,22 +130,17 @@ def atomic_replace_parquet(
     plan for ``df`` is READING ``path``.
 
     Parquet cannot overwrite in place while reading itself: write the
-    result ONCE to a staging dir, then swap directories with a
-    filesystem rename (metadata-only on HDFS/local — never a second
-    copy of the data, which at 100 TB would double every merge/compact).
-    Shared by :func:`upsert_parquet` and the ANN index lifecycle
+    result ONCE to a staging dir, then swap directories with
+    filesystem renames (`layout.atomic_swap`: metadata-only on
+    HDFS/local — never a second copy of the data, which at 100 TB
+    would double every merge/compact — and never a moment without
+    either the old or the new table on disk). Shared by
+    :func:`upsert_parquet` and the ANN index lifecycle
     (``llm_similarity.ivfpq_compact``)."""
+    recover_replace(spark, path)
     staging = path.rstrip("/") + "__staging"
     df.write.mode("overwrite").parquet(staging)
-    hconf = spark._jsc.hadoopConfiguration()
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(staging), hconf
-    )
-    target = jvm.org.apache.hadoop.fs.Path(path)
-    fs.delete(target, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), target):
-        raise IOError(f"rename {staging} -> {path} failed")
+    atomic_swap(spark, staging, path)
 
 
 def mongodb_write_config(

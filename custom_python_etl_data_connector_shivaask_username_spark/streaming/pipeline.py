@@ -109,7 +109,7 @@ def adaptive_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     (the memoized relation's file-index size, no scan). On a real
     cluster the session conf is the ops-set ceiling; locally this
     lands at the measured-optimal 8 for every fixture scale."""
-    from ..plans.freshness import _scan_bytes
+    from ..plans.stats import _scan_bytes
     from ..tables import bytes_conf, load_table
 
     try:

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,12 +92,8 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
     creation, so a cached plan would miss files added later). Fixture
     dirs are read-only; only writer-side tests ever need this.
 
-    Clears the DataFrame memo, the ANALYZE stats memo, and the X56
-    pending-fold registry (including sticky ambiguity marks — this is
-    the one sanctioned way to clear them). The session edge-cardinality
-    HISTORY is deliberately kept: its entries are signature-gated
-    against stats drift (`plans/history.fresh_edge_rows`), so a real
-    mutation invalidates them at serve time."""
+    Clears the DataFrame memo, the plan memo and the ANALYZE stats
+    memo."""
     for per_session in _TABLE_CACHE.values():
         if sf_dir is None:
             per_session.clear()
@@ -111,14 +108,9 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
                 del per_session[k]
     if sf_dir is None:
         _STATS_CACHE.clear()
-        _PENDING_FOLDS.clear()
-        for d in list(_PLANNING_EPOCH):
-            _PLANNING_EPOCH[d] += 1
     else:
         for k in [k for k in _STATS_CACHE if k[0] == sf_dir]:
             del _STATS_CACHE[k]
-        _PENDING_FOLDS.pop(sf_dir, None)
-        _PLANNING_EPOCH[sf_dir] = _PLANNING_EPOCH.get(sf_dir, 0) + 1
     # the matview navigator's store-location memo rides the same
     # lifecycle: a mutated dir may have grown/lost its rollup store
     from .plans import matview as _mv
@@ -156,7 +148,8 @@ def bytes_conf(spark: SparkSession, key: str, default: int) -> int:
     (round 8: a user-set "1gb" maxPartitionBytes used to silently fall
     back to the default, firing size heuristics below their
     thresholds). Negative values (e.g. autoBroadcastJoinThreshold=-1,
-    "disabled") pass through."""
+    "disabled") pass through. An unset key, an unparseable number or an
+    unknown unit suffix returns ``default``."""
     units = {
         "": 1, "b": 1,
         "k": 1024, "kb": 1024,
@@ -175,7 +168,7 @@ def bytes_conf(spark: SparkSession, key: str, default: int) -> int:
         )
         num = raw.rstrip("bkmgtp")
         return int(num) * units[raw[len(num):]]
-    except Exception:
+    except (SparkNoSuchElementException, ValueError, KeyError):
         return default
 
 
@@ -215,21 +208,17 @@ def spread_small_input(df: DataFrame, min_partitions: int | None = None) -> Data
     sc = spark.sparkContext
     target = min_partitions or sc.defaultParallelism
 
-    def _bytes_conf(key: str, default: int) -> int:
-        return bytes_conf(spark, key, default)
-
-    try:
-        mpb = _bytes_conf(
-            "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
-        )
-        ocb = max(
-            1,
-            _bytes_conf("spark.sql.files.openCostInBytes", 4 * 1024 * 1024),
-        )
-        if len(df.inputFiles()) >= target * (mpb // ocb + 2):
-            return df  # bin-packed scan still yields ≥ target partitions
-    except Exception:
-        pass  # non-scan frames: fall through to the exact probe
+    mpb = bytes_conf(
+        spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
+    )
+    ocb = max(
+        1,
+        bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024),
+    )
+    # a non-scan frame lists no input files and falls through to the
+    # exact probe
+    if len(df.inputFiles()) >= target * (mpb // ocb + 2):
+        return df  # bin-packed scan still yields ≥ target partitions
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -250,61 +239,30 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-# --- X31-X41 wired into the engine's own query path (round 9) -------------
+# --- X31-X36 wired into the engine's own query path (round 9) -------------
 
-#: per-session ANALYZE memo — fixture dirs are read-only, so stats that
-#: would live in a `_table_stats.json` sidecar on a writable lake are
+#: per-session ANALYZE memo — fixture dirs are read-only, so stats are
 #: collected once per (sf_dir, table) and reused by every
 #: planner-routed query in the session
 _STATS_CACHE: dict[tuple[str, str], dict] = {}
 
-#: X56 session history store (round 13, VERDICT r12 ask #4): one
-#: measured-cardinality memory per sf_dir, shared by every
-#: planner-routed query in the session. `plan_star_join(history=
-#: "session")` resolves here; fixture dirs are read-only so the
-#: session dict IS the persistence tier locally (on a writable lake,
-#: pass a sidecar path instead and it persists across sessions).
-_SESSION_HISTORY: dict[str, dict] = {}
-
-#: planner folds awaiting an executed-metrics harvest, keyed by
-#: sf_dir → {key-column frozenset: fold record}. Registered by
-#: plan_star_join when a session history is active (inner joins only
-#: — semi/anti/outer cardinalities are how-dependent and the history
-#: key is not); consumed by `harvest_executed`. A colset that two
-#: DIFFERENT history keys claim (same edge under different filter
-#: digests) is marked ambiguous and never harvested — a measurement
-#: that could poison a different predicate context is worse than no
-#: measurement.
-_PENDING_FOLDS: dict[str, dict[frozenset, dict]] = {}
-
 
 #: round 15 (VERDICT r14 ask #6): memoized CONSTRUCTED logical plans
 #: for the planner-routed queries, keyed per session and invalidated
-#: by the (stats, history, planning-conf) state version — a repeat
-#: construction with nothing new to plan from returns the identical
-#: immutable DataFrame in ~0 instead of re-paying per-op eager
-#: analysis over a ~30-op pipeline.
+#: by the (stats, planning-conf) state version — a repeat construction
+#: with nothing new to plan from returns the identical immutable
+#: DataFrame in ~0 instead of re-paying per-op eager analysis over a
+#: ~30-op pipeline.
 _PLAN_MEMO: dict[SparkSession, dict] = {}
-
-#: Monotonic per-dir planning epoch, bumped whenever a harvest consumes
-#: pending folds (and on explicit invalidation). Part of the memo's
-#: state version because the (stats, history, conf) tuple alone is NOT
-#: monotonic: a caller that harvests and then CLEARS the session
-#: history returns the tuple to a previously-stored value, and the
-#: memo would re-serve a frame whose one-shot pending folds were
-#: already consumed — its re-execution harvests zero edges and the
-#: self-tuning loop silently stops learning (caught by the round-15
-#: full-suite run of test_history_dogfood under cross-file ordering).
-_PLANNING_EPOCH: dict[str, int] = {}
 
 
 def _planning_state_version(spark: SparkSession, sf_dir: str) -> tuple:
     """Cheap fingerprint of everything a planner-routed construction
     reads: the session stats entries for this dir (by identity —
     every engine path REPLACES a table's stats dict, never mutates it
-    in place), the session history content (key → served rows), and
-    the two session confs the planning economics consult. Computing
-    it is pure driver work — no py4j beyond two conf reads."""
+    in place) and the two session confs the planning economics
+    consult. Computing it is pure driver work — no py4j beyond two
+    conf reads, which cannot miss: both keys carry Spark defaults."""
     stats_v = tuple(
         sorted(
             (k[1], id(v))
@@ -312,16 +270,11 @@ def _planning_state_version(spark: SparkSession, sf_dir: str) -> tuple:
             if k[0] == sf_dir
         )
     )
-    hist = _SESSION_HISTORY.get(sf_dir) or {}
-    hist_v = tuple(sorted((k, v.get("rows")) for k, v in hist.items()))
-    try:
-        confs = (
-            spark.conf.get("spark.sql.shuffle.partitions"),
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-        )
-    except Exception:
-        confs = ()
-    return (_PLANNING_EPOCH.get(sf_dir, 0), stats_v, hist_v, confs)
+    confs = (
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    )
+    return (stats_v, confs)
 
 
 def memoized_plan(
@@ -331,8 +284,8 @@ def memoized_plan(
     planning state is unchanged. The version is re-read AFTER a fresh
     construction (the construction itself warms stats entries), so the
     stored version describes the state the plan was actually built
-    from; any later harvest/autotune/invalidations miss the version
-    compare and re-construct — byte-equal when the state is equal,
+    from; any later conf change or invalidation misses the version
+    compare and re-constructs — byte-equal when the state is equal,
     fresh when it is not.
 
     Measurement integrity (round 15): every serve — including the one
@@ -356,10 +309,10 @@ def memoized_plan(
     call): the builder must be job-free, and every module-level
     constant it bakes into the plan (caps, thresholds, strata limits)
     must be immutable for the session — the version tuple fingerprints
-    planning STATE (epoch, stats, history, the two planning confs),
-    not module constants, so a runtime constant change serves a stale
-    plan until ``invalidate_table_cache``. Tests that monkeypatch such
-    a constant must invalidate the memo around the patch (see
+    planning STATE (stats, the two planning confs), not module
+    constants, so a runtime constant change serves a stale plan until
+    ``invalidate_table_cache``. Tests that monkeypatch such a constant
+    must invalidate the memo around the patch (see
     tests/test_llm_curation.py's mix-cap trip test)."""
     per_session = _PLAN_MEMO.setdefault(spark, {})
     key = (sf_dir, name)
@@ -371,127 +324,23 @@ def memoized_plan(
     return ent[1].alias(name)
 
 
-def session_history(sf_dir: str) -> dict:
-    """The session's X56 edge-cardinality history for ``sf_dir`` —
-    the dict `plan_star_join(history="session")` reads and
-    `harvest_executed` writes."""
-    return _SESSION_HISTORY.setdefault(sf_dir, {})
-
-
-def harvest_executed(spark: SparkSession, frame, sf_dir: str) -> int:
-    """Auto-harvest X56: record the ACTUAL join cardinalities of an
-    executed planner-routed frame into the session history, so the
-    next planning of the same edges runs from measurements instead of
-    models (the X41 rung, zero probes). Call after an action on
-    ``frame`` (collect/write — the contract
-    `plans.history.executed_join_rows` documents); best-effort and
-    never throws, because it rides runners' hot paths (bench warm
-    runs). Returns the number of edges recorded.
-
-    Mapping is by join-KEY column sets, not plan position: each
-    measured equi-join node's {left∪right key attribute names} is
-    looked up against the folds plan_star_join registered — unique in
-    a prefixed star schema — so aggregations or unions wrapped above
-    the planner output never misattribute a measurement. Joins whose
-    metric reads 0 are skipped (indistinguishable from not-executed
-    under AQE stage reuse). INNER nodes only (round 14): pending folds
-    are inner-only by registration, and a different query's
-    outer/semi/anti join over the same key columns (the left
-    customer⋈orders vs the revenue star's inner fold — both colset
-    {c_custkey, o_custkey}) carries a how-dependent cardinality that
-    must never land under an inner fold's key. A recorded fold is
-    POPPED: the measurement window is one planning→harvest cycle, so
-    a later frame that happens to share the colset cannot overwrite a
-    measurement with traffic the fold never described (the next
-    planning re-registers)."""
-    try:
-        from .plans.history import (
-            executed_equi_joins,
-            record_edge_rows,
-            record_subtree_rows,
-        )
-
-        pend = _PENDING_FOLDS.get(sf_dir) or {}
-        if not pend:
-            return 0
-        hist = session_history(sf_dir)
-        n = 0
-        for j in executed_equi_joins(frame):
-            fold = pend.get(j["keys"])
-            if (
-                fold is None
-                or fold.get("ambiguous")
-                or j["rows"] <= 0
-                or j.get("join_type") != "Inner"
-            ):
-                continue
-            if fold.get("member_stats") is not None:
-                # a bushy VIRTUAL cross fold (round 15): the content
-                # key + every member's signature — served unscaled by
-                # the combine, never mistaken for a base pair
-                record_subtree_rows(
-                    hist,
-                    fold["key"],
-                    j["rows"],
-                    fold["member_stats"],
-                    source="executed",
-                )
-            else:
-                record_edge_rows(
-                    hist,
-                    fold["key"],
-                    j["rows"],
-                    fold["left_stats"],
-                    fold["right_stats"],
-                    source="executed",
-                )
-            pend.pop(j["keys"], None)
-            n += 1
-        if n:
-            # folds were consumed: any memoized plan built against
-            # them is one-shot-spent — advance the epoch so the next
-            # identical-looking (stats, history, conf) state still
-            # re-constructs (see _PLANNING_EPOCH)
-            _PLANNING_EPOCH[sf_dir] = (
-                _PLANNING_EPOCH.get(sf_dir, 0) + 1
-            )
-        return n
-    except Exception:
-        return 0
-
-
 def table_stats_cached(
     spark: SparkSession, sf_dir: str, name: str
 ) -> dict:
-    """X31 table statistics for a fixture table, X38-freshness-checked
-    against any persisted sidecar and memoized per session.
-
-    Lookup order: (1) session memo; (2) `_table_stats.json` sidecar
-    next to the table (a writable lake's persisted ANALYZE), kept only
-    if the X38 staleness signals clear; (3) a fresh in-memory
-    `collect_table_stats` pass. Fixture dirs are read-only, so the
-    in-memory path never attempts to persist — on a writable store use
-    `plans.freshness.refresh_stats_if_stale`, which writes the sidecar
-    back."""
+    """X31 table statistics for a fixture table, memoized per session:
+    one in-memory `collect_table_stats` pass per (sf_dir, table).
+    Fixture dirs are read-only, so the stats cannot go stale inside a
+    session; a writer that mutates a table dir calls
+    :func:`invalidate_table_cache`."""
     key = (sf_dir, name)
     st = _STATS_CACHE.get(key)
-    if st is not None:
-        return st
-    from .plans.freshness import is_stale, stats_staleness
-    from .plans.stats import collect_table_stats, read_stats_sidecar
-
-    df = load_table(spark, sf_dir, name)
-    path = f"{sf_dir}/{name}.parquet"
-    st = read_stats_sidecar(spark, path)
-    if st is not None:
-        stale, _reasons = is_stale(
-            stats_staleness(spark, df, st, table_path=path)
-        )
-        if stale:
-            st = None
     if st is None:
-        st = collect_table_stats(df, path=path)
-    _STATS_CACHE[key] = st
+        from .plans.stats import collect_table_stats
+
+        st = collect_table_stats(
+            load_table(spark, sf_dir, name), path=f"{sf_dir}/{name}.parquet"
+        )
+        _STATS_CACHE[key] = st
     return st
 
 
@@ -501,95 +350,33 @@ def plan_star_join(
     edges: list[tuple[str, str, str, str]],
     tables: dict[str, DataFrame] | None = None,
     stats: dict[str, dict] | None = None,
-    filters: dict[str, tuple | list] | None = None,
+    filters: dict[str, tuple] | None = None,
     how: str = "inner",
     broadcast_threshold: int | None = None,
-    edge_rows: dict[tuple[str, str, str, str], float] | None = None,
     partitioned_on: dict[str, list[str]] | None = None,
-    probe: str | None = None,
-    history: str | dict | None = None,
-    skew: str | None = None,
-    skew_salts: int = 8,
 ):
     """The engine's own optimizer entry point: load the edge-referenced
-    fixture tables, attach cached/sidecar statistics (X31/X33/X38) and
-    route the join tree through `plans.stats.plan_join_tree` — the
-    stats-driven join order + broadcast decisions statistics-blind
-    Spark cannot make on path-based parquet.
+    fixture tables, attach cached statistics (X31) and route the join
+    tree through `plans.stats.plan_join_tree` — the stats-driven join
+    order + broadcast decisions statistics-blind Spark cannot make on
+    path-based parquet.
 
-    ``filters`` declares range/equality predicates per table name —
-    ``{"orders": ("o_orderdate", lo, hi)}`` (either bound None-able)
-    or ``{"region": ("r_name", ("=", "EUROPE"))}`` — and applies BOTH
-    sides of the contract at once: the frame filter AND its
-    `apply_filter_to_stats` metadata twin. Declaring them together
-    removes the drift foot-gun of filtering the frame but planning on
-    unfiltered statistics (or vice versa), and keeps filtered-table
-    planning scan-free. A table's value may also be a LIST of specs
-    (round 10): all frame filters AND together, ranges fold through
-    `apply_filter_to_stats` one by one, and ≥2 equality specs route
-    through `apply_eq_conjunction_to_stats` (X37) — so when the
-    statistics carry a matching column-group NDV, the planner stops
-    assuming independence on exactly the conjunctions workloads
-    correlate (X47 exists because they do). Round 12 (X60): RANGE
-    specs over distinct columns route through
-    `apply_range_conjunction_to_stats` when the statistics carry a
-    touching 2-D histogram (`collect_histogram_2d`) — joint mass off
-    the grid for covered pairs instead of multiplied marginals, and a
-    one-sided grid clamps its unfiltered partner's `axis_range` to
-    the surviving cells (a time filter shrinking a correlated join
-    key's containment refinement); without a grid the historical
-    one-at-a-time folds run bit-compatibly. ``tables`` overrides
-    individual frames (a `spread_small_input` fact, a non-declarative
-    transform); ``stats`` overrides statistics outright (both applied
-    AFTER ``filters`` — an explicit override wins). ``edge_rows``
-    passes X41 measured cardinalities straight through.
-
-    ``probe="auto"`` (round 10): the X41 measured rung fires ITSELF —
-    for each edge with no caller-supplied ``edge_rows`` entry, the
-    histogram and Selinger estimates are compared
-    (`estimate_join_rows_validated`) and one sample probe runs only
-    when they disagree by >10×; the probed cardinality then overrides
-    the models for that edge. When the models agree the path stays
-    completely scan-free — the probe is the insurance premium, paid
-    only on the joins per-table statistics demonstrably cannot
-    settle. Preconditions (round-10 advisory, loud instead of silent):
-    probing arbitrates histogram-vs-Selinger disagreement, so it fires
-    only on edges where BOTH key columns carry histograms (others keep
-    their model estimate), and it is inner-join-only — requesting it
-    with any other ``how`` raises rather than no-op'ing.
-
-    ``history`` (X56, round 12): a measured-cardinality memory — a
-    sidecar path (read/written through the Hadoop-FS helpers), a
-    caller-held dict, or the string ``"session"`` (round 13: the
-    per-sf_dir session store `session_history` that
-    `harvest_executed` feeds with actual executed-plan join
-    cardinalities — the planner-routed registry queries' dogfood
-    mode). Fresh entries (X38 drift check against the
-    recorded table signatures, filter-digest keyed) become that edge's
-    measured ``edge_rows`` BEFORE any model or probe runs — so a
-    mis-estimated edge pays its one probe scan the first time and
-    plans scan-free from memory afterwards, until either table drifts
-    past the staleness thresholds. New probe measurements are recorded
-    back (and persisted when ``history`` is a path). Returns
-    ``(joined DataFrame, planner-chosen order)``."""
+    ``filters`` declares one range or equality predicate per table
+    name — ``{"orders": ("o_orderdate", lo, hi)}`` (either bound
+    None-able) or ``{"region": ("r_name", ("=", "EUROPE"))}`` — and
+    applies BOTH sides of the contract at once: the frame filter AND
+    its `apply_filter_to_stats` metadata twin (X36). Declaring them
+    together removes the drift foot-gun of filtering the frame but
+    planning on unfiltered statistics (or vice versa), and keeps
+    filtered-table planning scan-free. ``tables`` overrides individual
+    frames (a `spread_small_input` fact, a non-declarative transform);
+    ``stats`` overrides statistics outright (both applied AFTER
+    ``filters`` — an explicit override wins). Returns ``(joined
+    DataFrame, planner-chosen order)``."""
     from pyspark.sql import functions as F
 
-    from .plans.column_groups import (
-        apply_eq_conjunction_to_stats,
-        apply_range_conjunction_to_stats,
-        hist2d_applicable,
-    )
     from .plans.stats import apply_filter_to_stats, plan_join_tree
 
-    if probe not in (None, "auto"):
-        raise ValueError(f"probe must be None or 'auto', got {probe!r}")
-    if probe == "auto" and how.replace("_", "").lower() != "inner":
-        # silent no-op would let a caller believe the join was probed
-        # (round-10 advisory): the X41 probe semantics are defined for
-        # inner equi-joins only
-        raise ValueError(
-            f"probe='auto' supports inner joins only, got how={how!r}"
-        )
     names = {t for e in edges for t in (e[0], e[2])}
     tbls = {
         n: load_table(spark, sf_dir, n)
@@ -613,293 +400,50 @@ def plan_star_join(
                 "apply the predicate inside the override, with a "
                 "matching stats override"
             )
-        specs = spec if isinstance(spec, list) else [spec]
+        if not isinstance(spec, tuple):
+            raise ValueError(f"filter spec for {n!r} must be a tuple")
+        col, *bounds = spec
 
-        def _lit(v, _n, _c):
+        def _lit(v, _n=n, _c=col):
             # literal cast to the COLUMN's type so the comparison stays
             # column-cast-free (a naive datetime against timestamp_ntz
             # would otherwise cast the column and kill pushdown)
             return F.lit(v).cast(tbls[_n].schema[_c].dataType)
 
+        if len(bounds) == 1 and isinstance(bounds[0], tuple):
+            op, v = bounds[0]
+            if op != "=":
+                raise ValueError(f"unsupported filter op {op!r} for {n!r}")
+            tbls[n] = tbls[n].filter(F.col(col) == _lit(v))
+            model = {"eq": v}
+        elif len(bounds) == 2:
+            lo, hi = bounds
+            f = tbls[n]
+            if lo is not None:
+                f = f.filter(F.col(col) >= _lit(lo))
+            if hi is not None:
+                f = f.filter(F.col(col) <= _lit(hi))
+            tbls[n] = f
+            model = {"lo": lo, "hi": hi}
+        else:
+            raise ValueError(
+                f"filter spec for {n!r} must be (col, lo, hi) or "
+                f"(col, ('=', value)); got {spec!r}"
+            )
         # an explicit stats override for the same table wins outright
-        # (sts deliberately lacks the entry then — round-9 review
-        # finding: this combination used to KeyError); the FRAME
-        # filters still apply either way. Equality specs accumulate
-        # into one conjunction so group-NDV statistics (X37) can
-        # correct the independence assumption.
-        eqs: dict[str, object] = {}
-        rng_specs: list[tuple[str, object, object]] = []
-        for one in specs:
-            col, *bounds = one
-            if len(bounds) == 1 and isinstance(bounds[0], tuple):
-                op, v = bounds[0]
-                if op != "=":
-                    raise ValueError(
-                        f"unsupported filter op {op!r} for {n!r}"
-                    )
-                tbls[n] = tbls[n].filter(F.col(col) == _lit(v, n, col))
-                if col in eqs:
-                    raise ValueError(
-                        f"duplicate equality spec for {n!r}.{col!r}"
-                    )
-                eqs[col] = v
-            elif len(bounds) == 2:
-                lo, hi = bounds
-                f = tbls[n]
-                if lo is not None:
-                    f = f.filter(F.col(col) >= _lit(lo, n, col))
-                if hi is not None:
-                    f = f.filter(F.col(col) <= _lit(hi, n, col))
-                tbls[n] = f
-                rng_specs.append((col, lo, hi))
-            else:
-                raise ValueError(
-                    f"filter spec for {n!r} must be (col, lo, hi) or "
-                    f"(col, ('=', value)); got {one!r}"
-                )
-        if rng_specs and n in sts:
-            # ranges over distinct columns touching a collected 2-D
-            # grid route through the X60 estimator — joint mass for
-            # covered pairs, axis_range partner clamps for one-sided
-            # grids (a time filter shrinking a correlated join key's
-            # effective domain); anything else keeps the historical
-            # one-at-a-time independence folds bit-compatibly (same
-            # order, same numbers)
-            cols = [c for c, _lo, _hi in rng_specs]
-            rngs = {c: (lo, hi) for c, lo, hi in rng_specs}
-            if len(set(cols)) == len(cols) and hist2d_applicable(
-                sts[n], rngs
-            ):
-                sts[n] = apply_range_conjunction_to_stats(sts[n], rngs)
-            else:
-                for col, lo, hi in rng_specs:
-                    sts[n] = apply_filter_to_stats(
-                        sts[n], col, lo=lo, hi=hi
-                    )
-        if eqs and n in sts:
-            if len(eqs) == 1:
-                ((col, v),) = eqs.items()
-                sts[n] = apply_filter_to_stats(sts[n], col, eq=v)
-            else:
-                sts[n] = apply_eq_conjunction_to_stats(sts[n], eqs)
+        # (sts deliberately lacks the entry then); the FRAME filter
+        # still applies either way
+        if n in sts:
+            sts[n] = apply_filter_to_stats(sts[n], col, **model)
     if tables:
         tbls.update(tables)
     if stats:
         sts.update(stats)
-    # X56 (round 12): remembered measurements outrank models — and
-    # satisfy the probe, so a mis-estimated edge pays its sampling
-    # scan ONCE and plans from history afterwards. Entries are served
-    # only while both sides' current stats sit inside the X38 drift
-    # thresholds of the recorded signatures (plans/history.py).
-    hist = None
-    hist_dirty = False
-    fdigest = ""
-    fold_hook = None
-    if history == "session":
-        # round 13: the dogfood mode — the per-sf_dir session store,
-        # populated by harvest_executed / the probe recorder and
-        # consumed by every subsequent planning in the session
-        history = session_history(sf_dir)
-    if history is not None:
-        from .plans.history import (
-            edge_history_key,
-            filters_digest,
-            fresh_edge_rows,
-            load_history,
-        )
-        from .plans.stats import _cols
-
-        fdigest = filters_digest(filters)
-        hist = (
-            history
-            if isinstance(history, dict)
-            else load_history(spark, history)
-        )
-        er = {tuple(k): v for k, v in (edge_rows or {}).items()}
-        for e in edges:
-            if tuple(e) in er:
-                continue  # a caller-measured value outranks history
-            ln, lc, rn, rc = e
-            remembered = fresh_edge_rows(
-                hist,
-                edge_history_key(ln, lc, rn, rc, fdigest),
-                sts.get(ln, {}),
-                sts.get(rn, {}),
-            )
-            if remembered is not None:
-                er[tuple(e)] = remembered
-        if how.replace("_", "").lower() == "inner":
-            # register each UNMEASURED fold for the executed-metrics
-            # harvest (inner only: semi/anti/outer cardinalities depend
-            # on `how`, which the history key deliberately omits).
-            # Edges a caller measurement or a fresh history entry
-            # already serves are NOT registered (round 14): there is
-            # nothing left to harvest for them, and a stale pending
-            # fold is exactly what lets a LATER query's same-colset
-            # edge (two queries joining on a `gram` column) trip the
-            # sticky ambiguity mark and lock both out of the dogfood
-            # loop for the whole session.
-            pend = _PENDING_FOLDS.setdefault(sf_dir, {})
-            for e in edges:
-                ln, lc, rn, rc = e
-                colset = frozenset([*_cols(lc), *_cols(rc)])
-                key = edge_history_key(ln, lc, rn, rc, fdigest)
-                prev = pend.get(colset)
-                if tuple(e) in er:
-                    # round-15 advisor (medium): a served edge skips
-                    # REGISTRATION (nothing to harvest for it) but must
-                    # still trip the sticky ambiguity mark when a
-                    # DIFFERENT query's fold is pending on the same
-                    # colset — otherwise harvest_executed on THIS
-                    # query's executed frame would record this query's
-                    # cardinality under the pending fold's filter
-                    # digest, exactly the history poisoning the mark
-                    # exists to prevent. Same-key re-plans (this query
-                    # served from its own history) leave the fold
-                    # untouched.
-                    if prev is not None and prev["key"] != key:
-                        prev["ambiguous"] = True
-                    continue
-                if prev is not None and (
-                    prev["key"] != key or prev.get("ambiguous")
-                ):
-                    # sticky for the session (round-13 advisor): once a
-                    # colset has seen two distinct history keys, it is
-                    # never harvested again — re-planning the FIRST
-                    # query must not resurrect it, or a later harvest
-                    # of the SECOND query's frame (same key columns)
-                    # would record its cardinality under the first
-                    # query's filter digest. Cleared only by
-                    # invalidate_table_cache's session reset.
-                    prev["ambiguous"] = True
-                    continue
-                pend[colset] = {
-                    "key": key,
-                    "left_stats": sts.get(ln),
-                    "right_stats": sts.get(rn),
-                    "ambiguous": False,
-                }
-            # round 15 (VERDICT r14 ask #2): when the bushy rung turns
-            # a cross edge into a VIRTUAL combine fold, its executed
-            # cardinality is the halo-shrunk combine output — recording
-            # it under the base-pair key would double-shrink on the
-            # next serve. The rung refines the registration through
-            # this hook: the colset's fold re-keys to the component-
-            # content cross key (with every member's signature), so the
-            # harvest records — and the next planning serves — the
-            # right quantity. A colset claimed by a DIFFERENT query's
-            # fold goes sticky-ambiguous instead, same as base edges.
-            base_keys = {
-                edge_history_key(*e, fdigest) for e in edges
-            }
-
-            def fold_hook(colset, ckey, member_stats, served, _pend=pend):
-                prev = _pend.get(colset)
-                if prev is not None and prev["key"] not in base_keys | {
-                    ckey
-                }:
-                    prev["ambiguous"] = True
-                    return
-                if served:
-                    # history already answers this virtual fold: retire
-                    # this planning's own base-key registration so the
-                    # harvest cannot record the combine output under a
-                    # base-pair key (a sticky-ambiguous mark survives —
-                    # popping it would un-poison the colset)
-                    if prev is not None and not prev.get("ambiguous"):
-                        _pend.pop(colset, None)
-                    return
-                _pend[colset] = {
-                    "key": ckey,
-                    "member_stats": member_stats,
-                    "ambiguous": bool(prev and prev.get("ambiguous")),
-                }
-
-        edge_rows = er or None
-    if probe == "auto" and how.replace("_", "").lower() == "inner":
-        from .plans.stats import estimate_join_rows_validated
-
-        er = {tuple(k): v for k, v in (edge_rows or {}).items()}
-        for e in edges:
-            if tuple(e) in er:
-                continue  # a caller/history value outranks the probe
-            ln, lc, rn, rc = e
-            rows, source = estimate_join_rows_validated(
-                sts[ln], lc, sts[rn], rc, left=tbls[ln], right=tbls[rn]
-            )
-            if source == "probe":
-                er[tuple(e)] = rows
-                if hist is not None:
-                    from .plans.history import (
-                        edge_history_key,
-                        record_edge_rows,
-                    )
-
-                    record_edge_rows(
-                        hist,
-                        edge_history_key(ln, lc, rn, rc, fdigest),
-                        rows,
-                        sts.get(ln),
-                        sts.get(rn),
-                        source="probe",
-                    )
-                    hist_dirty = True
-        edge_rows = er or None
-    if hist_dirty and isinstance(history, str):
-        from .plans.history import save_history
-
-        save_history(spark, history, hist)
-    if skew is None and how.replace("_", "").lower() == "inner":
-        # round 14 (the X58×X61 closure): auto-enable the skew
-        # dispatch whenever any edge-key column carries dispatch
-        # evidence — an equi-depth histogram (zero-width hot buckets)
-        # or a heavy-hitter `hot_rows` scalar (`add_hot_key_evidence`,
-        # which autotune collects for mined join keys) — i.e. exactly
-        # when the evidence the dispatch consults exists. Strictly
-        # free on uniform data: `hot_key_rows` reads 0 without
-        # zero-width buckets, and a uniform key's exact top count
-        # never clears the SKEW_HOT_FACTOR×partition gate. Callers can
-        # still pass skew="auto" explicitly for stats-override folds.
-        from .plans.stats import _cols as _cs
-
-        def _has_skew_evidence(st: dict, cols) -> bool:
-            return any(
-                (
-                    (st.get("columns", {}).get(c) or {}).get("histogram")
-                    or {}
-                ).get("bounds")
-                or (st.get("columns", {}).get(c) or {}).get("hot_rows")
-                is not None
-                for c in cols
-            )
-
-        if any(
-            _has_skew_evidence(sts.get(ln, {}), _cs(lc))
-            or _has_skew_evidence(sts.get(rn, {}), _cs(rc))
-            for ln, lc, rn, rc in edges
-        ):
-            skew = "auto"
     return plan_join_tree(
         tbls,
         edges,
         stats=sts,
         how=how,
         broadcast_threshold=broadcast_threshold,
-        edge_rows=edge_rows,
         partitioned_on=partitioned_on,
-        # round 11: the bushy rung dispatches its own subtree probes
-        # under the same flag (X41×X50 — see plan_join_tree)
-        probe=probe,
-        # round 12 (X58): histogram-evidenced hot keys on a planned
-        # shuffle join dispatch the salted form — see plan_join_tree
-        skew=skew,
-        skew_salts=skew_salts,
-        # round 14 (X56×X53): disputed bushy subtrees consult/record
-        # the same session history base edges use — probe once per
-        # member-set shape, plan from memory afterwards
-        history=hist,
-        history_digest=fdigest,
-        # round 15: virtual cross edges re-key their pending folds to
-        # component content through this hook (None without history)
-        fold_hook=fold_hook,
     )

@@ -23,6 +23,7 @@ class StubState:
     def __init__(self):
         self.request_count = 0
         self.fail_on = {}  # request_index -> status code
+        self.retry_after: str | None = "0.05"  # header sent with a 429
         self.seen_headers: list[dict] = []
         self.lock = threading.Lock()
 
@@ -35,8 +36,8 @@ def make_handler(state: StubState):
         def _send(self, code: int, body: str):
             data = body.encode()
             self.send_response(code)
-            if code == 429:
-                self.send_header("Retry-After", "0.05")
+            if code == 429 and state.retry_after is not None:
+                self.send_header("Retry-After", state.retry_after)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))
             self.end_headers()

@@ -1,5 +1,5 @@
 """Scale-strategy pins: bucketed co-located joins (shuffle paid once at
-write time, zero exchanges per join) and deterministic skew salting."""
+write time, zero exchanges per join)."""
 
 from __future__ import annotations
 
@@ -7,12 +7,8 @@ import os
 
 import pytest
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_shivaask_username_spark.functions.skew import (
-    salted_join,
-)
 from custom_python_etl_data_connector_shivaask_username_spark.plans.inspect import (
     count_exchanges,
     formatted_plan,
@@ -83,49 +79,6 @@ def test_bucketed_agg_on_bucket_key_has_zero_exchanges(spark, bucketed_tables):
     assert count_exchanges(agg) == 0
 
 
-def _skewed_frames(spark):
-    # one hot key (0) carrying 80% of the fact
-    fact = spark.createDataFrame(
-        [Row(row_id=i, k=0 if i % 5 != 0 else i % 7, v=float(i)) for i in range(500)]
-    )
-    dim = spark.createDataFrame(
-        [Row(k=i, name=f"dim{i}") for i in range(7)]
-    )
-    return fact, dim
-
-
-def test_salted_join_matches_plain_join(spark):
-    fact, dim = _skewed_frames(spark)
-    plain = fact.join(dim, "k").select("row_id", "name")
-    salted = salted_join(fact, dim, on="k", row_id="row_id").select(
-        "row_id", "name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
-def test_salted_join_is_deterministic(spark):
-    fact, dim = _skewed_frames(spark)
-    a = salted_join(fact, dim, on="k", row_id="row_id").collect()
-    b = salted_join(fact, dim, on="k", row_id="row_id").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_salt_spreads_hot_key(spark):
-    fact, dim = _skewed_frames(spark)
-    from custom_python_etl_data_connector_shivaask_username_spark.functions.skew import (
-        SALT_COL,
-    )
-
-    salted = fact.withColumn(
-        SALT_COL, F.pmod(F.xxhash64("row_id"), F.lit(8)).cast("int")
-    )
-    hot = salted.filter(F.col("k") == 0)
-    n_salts_used = hot.select(SALT_COL).distinct().count()
-    assert n_salts_used >= 6  # hot key really fans out across reducers
-
-
 def test_planner_exploits_declared_bucketing(spark, bucketed_tables, sf_dir):
     """Round 9: `plan_join_tree(partitioned_on=...)` treats a declared
     bucket key as a free shuffle side, so edges between co-bucketed
@@ -182,400 +135,3 @@ def test_planner_exploits_declared_bucketing(spark, bucketed_tables, sf_dir):
         assert declared.count() == want and plain.count() == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-# ---------------------------------------------------------------------------
-# X58 (round 12): planner skew dispatch — histogram-evidenced hot keys
-# on a planned shuffle join emit the salted form automatically.
-# ---------------------------------------------------------------------------
-
-
-def _planted_skew_frames(spark, fact_rows=4000, hot_frac=0.5, dim_rows=300):
-    """fact.fk: one hot value (0) carrying ``hot_frac`` of the rows,
-    the rest uniform over a wide range; dim.dk: unique ints."""
-    hot_n = int(fact_rows * hot_frac)
-    fact = spark.createDataFrame(
-        [
-            Row(
-                row_id=i,
-                fk=0 if i < hot_n else 1 + (i * 37) % 1000,
-                v=float(i),
-            )
-            for i in range(fact_rows)
-        ]
-    )
-    dim = spark.createDataFrame(
-        [Row(dk=i, name=f"dim{i}") for i in range(dim_rows)]
-    )
-    return fact, dim
-
-
-def _skew_stats(tables):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_equidepth_histograms,
-        collect_table_stats,
-    )
-
-    key = {"fact": ["fk"], "dim": ["dk"]}
-    return {
-        n: add_equidepth_histograms(df, collect_table_stats(df), key[n])
-        for n, df in tables.items()
-    }
-
-
-def _salt_spy(monkeypatch):
-    """Count (and delegate) planner dispatches to salted_shuffle_join."""
-    from custom_python_etl_data_connector_shivaask_username_spark.functions import (
-        skew as skew_mod,
-    )
-
-    calls = []
-    real = skew_mod.salted_shuffle_join
-
-    def spy(*a, **kw):
-        calls.append(kw.get("salt_side") or a[3])
-        return real(*a, **kw)
-
-    monkeypatch.setattr(skew_mod, "salted_shuffle_join", spy)
-    return calls
-
-
-def test_hot_key_rows_reads_zero_width_buckets(spark):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        hot_key_rows,
-    )
-
-    fact, dim = _planted_skew_frames(spark)
-    stats = _skew_stats({"fact": fact, "dim": dim})
-    est = hot_key_rows(stats["fact"], "fk")
-    assert 0.75 * 2000 <= est <= 1.25 * 2000, est
-    # unique-key dim: no zero-width bucket, no evidence, zero
-    assert hot_key_rows(stats["dim"], "dk") == 0.0
-    # no histogram at all: zero (evidence-driven, never NDV-heuristic)
-    assert hot_key_rows({"columns": {"fk": {"ndv": 2}}}, "fk") == 0.0
-
-
-@pytest.fixture()
-def high_parts(spark):
-    """The dispatch trigger compares the hot value against the average
-    post-shuffle partition — at the test session's 4 partitions no key
-    can exceed 4x the average, so raise the conf for these pins."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "64")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def test_planner_auto_salts_planted_skew(spark, monkeypatch, high_parts):
-    """Planted hot key + shuffle-forced join: skew='auto' emits exactly
-    one salted join, on the FACT (incoming) side, and the results are
-    row-for-row the unsalted plan's."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        plan_join_tree,
-    )
-
-    fact, dim = _planted_skew_frames(spark)
-    tables = {"fact": fact, "dim": dim}
-    stats = _skew_stats(tables)
-    edges = [("fact", "fk", "dim", "dk")]
-    calls = _salt_spy(monkeypatch)
-    salted, _ = plan_join_tree(
-        tables, edges, stats=stats, broadcast_threshold=1, skew="auto"
-    )
-    assert calls == ["right"], calls
-    plain, _ = plan_join_tree(
-        tables, edges, stats=stats, broadcast_threshold=1
-    )
-    assert salted.columns == plain.columns
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
-def test_planner_never_salts_without_evidence(spark, monkeypatch, high_parts):
-    """Uniform keys: equi-depth bounds are all distinct, hot_key_rows
-    is 0 on both sides, and the spy sees ZERO salting."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        plan_join_tree,
-    )
-
-    fact, dim = _planted_skew_frames(spark, hot_frac=0.0)
-    tables = {"fact": fact, "dim": dim}
-    stats = _skew_stats(tables)
-    calls = _salt_spy(monkeypatch)
-    out, _ = plan_join_tree(
-        tables,
-        [("fact", "fk", "dim", "dk")],
-        stats=stats,
-        broadcast_threshold=1,
-        skew="auto",
-    )
-    assert calls == []
-    assert out.count() > 0
-
-
-def test_planner_no_salt_when_explosion_dominates(
-    spark, monkeypatch, high_parts
-):
-    """Gate (b): exploding the other side x n_salts must shuffle fewer
-    extra rows than the skewed side itself — a small skewed fact next
-    to a comparatively large dim stays unsalted."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        plan_join_tree,
-    )
-
-    fact, dim = _planted_skew_frames(spark, fact_rows=1000, dim_rows=300)
-    tables = {"fact": fact, "dim": dim}
-    stats = _skew_stats(tables)
-    calls = _salt_spy(monkeypatch)
-    out, _ = plan_join_tree(
-        tables,
-        [("fact", "fk", "dim", "dk")],
-        stats=stats,
-        broadcast_threshold=1,
-        skew="auto",
-    )
-    assert calls == []
-    assert out.count() > 0
-
-
-def test_skew_auto_rejects_non_inner(spark):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        plan_join_tree,
-    )
-
-    fact, dim = _planted_skew_frames(spark, fact_rows=10, dim_rows=5)
-    with pytest.raises(ValueError, match="inner joins only"):
-        plan_join_tree(
-            {"fact": fact, "dim": dim},
-            [("fact", "fk", "dim", "dk")],
-            how="left",
-            skew="auto",
-        )
-
-
-def test_salted_shuffle_join_requires_hashable_salt_source(spark):
-    from custom_python_etl_data_connector_shivaask_username_spark.functions.skew import (
-        salted_shuffle_join,
-    )
-
-    left = spark.createDataFrame(
-        [Row(m={"a": 1})]
-    )  # MapType only: nothing to hash
-    right = spark.createDataFrame([Row(k=1)])
-    with pytest.raises(ValueError, match="hashable"):
-        salted_shuffle_join(
-            left, right, on=F.lit(True), salt_side="left"
-        )
-
-
-def test_bushy_combine_salts_skewed_cross_edge(spark, monkeypatch, high_parts):
-    """X58 through the bushy combine (round 12): subtree stat
-    surfacing strips histograms, so the builder forwards each
-    cross-edge column's hottest-value mass as a survival-scaled
-    ``hot_rows`` scalar — and the recursive combine's shuffle join
-    (exactly where fact-fact skew lives) salts on it. Planted: two
-    halo'd facts meeting on a key where one fact is 50%-hot; the
-    combine emits exactly one salted join on the hot (incoming) side,
-    results row-for-row the unsalted plan's. The uniform twin never
-    salts."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_equidepth_histograms,
-        collect_table_stats,
-        plan_join_tree,
-    )
-
-    def mk_tables(hot):
-        f1 = spark.createDataFrame(
-            [
-                Row(
-                    rid=i,
-                    k=0 if (hot and i < 5000) else 1 + (i * 37) % 1000,
-                    d1=i % 5,
-                )
-                for i in range(10_000)
-            ]
-        )
-        f2 = spark.createDataFrame(
-            [Row(k2=i % 1000, d2=i % 5, v=float(i)) for i in range(1_000)]
-        )
-        dim1 = spark.createDataFrame(
-            [Row(d1k=i, n1=f"a{i}") for i in range(5)]
-        )
-        dim2 = spark.createDataFrame(
-            [Row(d2k=i, n2=f"b{i}") for i in range(5)]
-        )
-        tables = {"f1": f1, "f2": f2, "dim1": dim1, "dim2": dim2}
-        stats = {n: collect_table_stats(df) for n, df in tables.items()}
-        stats["f1"] = add_equidepth_histograms(f1, stats["f1"], ["k"])
-        stats["f2"] = add_equidepth_histograms(f2, stats["f2"], ["k2"])
-        return tables, stats
-
-    edges = [
-        ("f1", "k", "f2", "k2"),
-        ("f1", "d1", "dim1", "d1k"),
-        ("f2", "d2", "dim2", "d2k"),
-    ]
-
-    tables, stats = mk_tables(hot=True)
-    calls = _salt_spy(monkeypatch)
-    salted, order = plan_join_tree(
-        tables, edges, stats=stats, broadcast_threshold=1000, skew="auto"
-    )
-    assert calls == ["right"], calls
-    # the bushy rung really ran: each fact folds its own halo first
-    assert set(order[:2]) in ({"f1", "dim1"}, {"f2", "dim2"}), order
-    plain, _ = plan_join_tree(
-        tables, edges, stats=stats, broadcast_threshold=1000
-    )
-    assert salted.columns == plain.columns
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-    tables_u, stats_u = mk_tables(hot=False)
-    calls = _salt_spy(monkeypatch)
-    out, _ = plan_join_tree(
-        tables_u, edges, stats=stats_u, broadcast_threshold=1000, skew="auto"
-    )
-    assert calls == []
-    assert out.count() > 0
-
-
-def test_bushy_three_fact_graph_salts_only_the_hot_cross_edge(
-    spark, monkeypatch, high_parts
-):
-    """X58 × X50, deepened (round 13, VERDICT r12 ask #6): a THREE-fact
-    bushy graph with two big-big cross edges — one planted 50%-hot, one
-    uniform. The combine's recursion must salt exactly ONCE, on the hot
-    edge's hot (incoming) side, leave the uniform cross edge a plain
-    shuffle join, and the salted plan's rows must equal the unsalted
-    plan's row for row. The uniform twin (all keys uniform) never
-    salts. The round-12 pin covered the minimal 2-subtree/1-cross-edge
-    shape; this one exercises the multi-edge combine where a wrong
-    dispatch could salt the wrong edge or cascade."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_equidepth_histograms,
-        collect_table_stats,
-        plan_join_tree,
-    )
-
-    def mk_tables(hot):
-        # the hot fact is 20x the uniform facts: the explosion gate
-        # (other_rows x n_salts <= skewed side's rows) must clear for
-        # the f2-f3 intermediate (~1k rows x 8 salts vs 20k)
-        f1 = spark.createDataFrame(
-            [
-                Row(
-                    rid=i,
-                    k=0 if (hot and i < 10_000) else 1 + (i * 37) % 1000,
-                    d1=i % 5,
-                )
-                for i in range(20_000)
-            ]
-        )
-        f2 = spark.createDataFrame(
-            [
-                Row(k2=i % 1000, j2=(i * 13) % 997, d2=i % 5)
-                for i in range(1_000)
-            ]
-        )
-        f3 = spark.createDataFrame(
-            [
-                Row(j3=(i * 7) % 997, d3=i % 5, v=float(i))
-                for i in range(1_000)
-            ]
-        )
-        dims = {
-            f"dim{n}": spark.createDataFrame(
-                [Row(**{f"d{n}k": i, f"n{n}": f"x{i}"}) for i in range(5)]
-            )
-            for n in (1, 2, 3)
-        }
-        tables = {"f1": f1, "f2": f2, "f3": f3, **dims}
-        stats = {n: collect_table_stats(df) for n, df in tables.items()}
-        stats["f1"] = add_equidepth_histograms(f1, stats["f1"], ["k"])
-        stats["f2"] = add_equidepth_histograms(
-            f2, stats["f2"], ["k2", "j2"]
-        )
-        stats["f3"] = add_equidepth_histograms(f3, stats["f3"], ["j3"])
-        return tables, stats
-
-    edges = [
-        ("f1", "k", "f2", "k2"),  # planted-hot cross edge
-        ("f2", "j2", "f3", "j3"),  # uniform cross edge
-        ("f1", "d1", "dim1", "d1k"),
-        ("f2", "d2", "dim2", "d2k"),
-        ("f3", "d3", "dim3", "d3k"),
-    ]
-
-    tables, stats = mk_tables(hot=True)
-    calls = _salt_spy(monkeypatch)
-    salted, order = plan_join_tree(
-        tables, edges, stats=stats, broadcast_threshold=1000, skew="auto"
-    )
-    assert calls == ["right"], calls  # exactly once, on the hot side
-    # the bushy rung really ran: some fact folds its own halo first
-    assert set(order[:2]) in (
-        {"f1", "dim1"},
-        {"f2", "dim2"},
-        {"f3", "dim3"},
-    ), order
-    plain, _ = plan_join_tree(
-        tables, edges, stats=stats, broadcast_threshold=1000
-    )
-    assert salted.columns == plain.columns
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-    tables_u, stats_u = mk_tables(hot=False)
-    calls = _salt_spy(monkeypatch)
-    out, _ = plan_join_tree(
-        tables_u, edges, stats=stats_u, broadcast_threshold=1000,
-        skew="auto",
-    )
-    assert calls == []
-    assert out.count() > 0
-
-
-def test_plan_star_join_auto_enables_skew_on_histogram_evidence(
-    spark, monkeypatch, high_parts, sf_dir
-):
-    """Round 14 (the X58×X61 closure): plan_star_join defaults the skew
-    dispatch ON exactly when an edge-key column carries an equi-depth
-    histogram — the evidence autotune/ANALYZE collect when the workload
-    prices the column — so planner-routed queries salt planted skew
-    WITHOUT opting in, and histogram-free folds stay on the plain path
-    with zero dispatches."""
-    from custom_python_etl_data_connector_shivaask_username_spark import tables as T
-
-    fact, dim = _planted_skew_frames(spark)
-    frames = {"fact": fact, "dim": dim}
-    stats = _skew_stats(frames)
-    edges = [("fact", "fk", "dim", "dk")]
-    calls = _salt_spy(monkeypatch)
-    out, _ = T.plan_star_join(
-        spark, sf_dir, edges, tables=frames, stats=stats,
-        broadcast_threshold=1,
-    )
-    assert calls == ["right"], calls
-    # histogram-free stats: the auto-enable never triggers
-    bare = {
-        n: {
-            **s,
-            "columns": {
-                c: {k: v for k, v in cs.items() if k != "histogram"}
-                for c, cs in s["columns"].items()
-            },
-        }
-        for n, s in stats.items()
-    }
-    out2, _ = T.plan_star_join(
-        spark, sf_dir, edges, tables=frames, stats=bare,
-        broadcast_threshold=1,
-    )
-    assert calls == ["right"], "no evidence, no dispatch"
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, out2.collect())
-    ), "salted and plain answers must be identical"

@@ -96,6 +96,30 @@ def test_retry_on_429_and_500(stub):
     assert stub.state.request_count == 5
 
 
+def test_retry_after_http_date_and_unparseable(stub):
+    """``Retry-After`` may be an HTTP-date: a past date retries at once,
+    a date about a second ahead waits for it, and an unparseable value falls
+    back to the exponential backoff instead of raising."""
+    from email.utils import format_datetime
+    import datetime as dt
+
+    now = dt.datetime.now(dt.timezone.utc)
+    for value, lo, hi in (
+        ("Wed, 21 Oct 2015 07:28:00 GMT", 0.0, 0.5),
+        (format_datetime(now + dt.timedelta(seconds=1.6), usegmt=True), 0.4, 1.9),
+        ("soon", 0.0, 0.5),
+    ):
+        stub.state.request_count = 0
+        stub.state.fail_on = {1: 429}
+        stub.state.retry_after = value
+        t0 = time.monotonic()
+        pages = list(iter_pages(_cfg(stub, endpoint="empty", pagination="none")))
+        took = time.monotonic() - t0
+        assert pages == [(1, [])]
+        assert stub.state.request_count == 2
+        assert lo <= took <= hi, (value, took)
+
+
 def test_retries_exhausted_raises(stub):
     stub.state.fail_on = {i: 503 for i in range(1, 10)}
     with pytest.raises(ConnectorError, match="HTTP 503"):
@@ -185,6 +209,53 @@ def test_upsert_parquet_unreadable_table_raises_and_keeps_rows(spark, tmp_path):
     os.remove(junk)
     rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert rows == [(1, "old"), (2, "old")]
+
+
+def test_atomic_replace_survives_a_failed_or_interrupted_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A swap that fails after the staging write leaves the old table
+    readable, and the next upsert lands; a crash between the two
+    renames (table moved aside, staging not yet in place) is recovered
+    by the next upsert, which merges into the old rows."""
+    import os
+
+    from custom_python_etl_data_connector_shivaask_username_spark.sources import (
+        layout,
+    )
+
+    def rows(p):
+        return sorted(tuple(r) for r in spark.read.parquet(p).collect())
+
+    path = str(tmp_path / "t_raw")
+    v1 = spark.createDataFrame([(1, "old"), (2, "old")], "id INT, payload STRING")
+    upsert_parquet(spark, v1, path, keys=["id"], stamp=False)
+
+    real_rename = layout._rename
+
+    def failing_rename(fs, src, dst):
+        if str(src).endswith("__staging"):
+            raise IOError("injected: staging rename failed")
+        real_rename(fs, src, dst)
+
+    monkeypatch.setattr(layout, "_rename", failing_rename)
+    v2 = spark.createDataFrame([(2, "new"), (3, "new")], "id INT, payload STRING")
+    with pytest.raises(IOError, match="injected"):
+        upsert_parquet(spark, v2, path, keys=["id"], stamp=False)
+    assert rows(path) == [(1, "old"), (2, "old")]
+    assert not os.path.exists(path + "__aside")
+
+    monkeypatch.setattr(layout, "_rename", real_rename)
+    upsert_parquet(spark, v2, path, keys=["id"], stamp=False)
+    assert rows(path) == [(1, "old"), (2, "new"), (3, "new")]
+
+    # a crash right after the table moved aside: no table at `path`
+    os.rename(path, path + "__aside")
+    v3 = spark.createDataFrame([(4, "new")], "id INT, payload STRING")
+    upsert_parquet(spark, v3, path, keys=["id"], stamp=False)
+    assert rows(path) == [(1, "old"), (2, "new"), (3, "new"), (4, "new")]
+    for leftover in ("__aside", "__staging"):
+        assert not os.path.exists(path + leftover)
 
 
 def test_upsert_parquet_version_aware_out_of_order(spark, tmp_path):

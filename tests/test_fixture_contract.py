@@ -121,3 +121,27 @@ def test_spread_small_input_not_fooled_by_many_tiny_files(spark, tmp_path):
     assert spread.rdd.getNumPartitions() >= target
     if scan_parts < target:  # bin-packing collapsed the raw scan
         assert spread.rdd.getNumPartitions() > scan_parts
+    # a non-scan frame lists no input files: the exact probe decides
+    narrow = spark.range(10).coalesce(1)
+    assert narrow.inputFiles() == []
+    assert spread_small_input(narrow).rdd.getNumPartitions() == target
+
+
+def test_bytes_conf_parses_units_and_falls_back(spark):
+    """Both suffix forms parse; an unset key, an unparseable number and
+    an unknown unit suffix each return the default."""
+    from custom_python_etl_data_connector_shivaask_username_spark.tables import (
+        bytes_conf,
+    )
+
+    key = "spark.test.bytesConf"
+    try:
+        for raw, want in (
+            ("1gb", 1 << 30), ("128m", 128 << 20), ("-1", -1),
+            ("12xb", 7), ("12bk", 7),
+        ):
+            spark.conf.set(key, raw)
+            assert bytes_conf(spark, key, 7) == want, raw
+    finally:
+        spark.conf.unset(key)
+    assert bytes_conf(spark, key, 7) == 7

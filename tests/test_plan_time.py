@@ -47,7 +47,7 @@ PLANNER_ROUTED = [
     # re-optimized the near_c gram mega-tree every planning) are now
     # increment-bounded derivations from ONE base estimate; round 15
     # (VERDICT r14 ask #6): repeat constructions with unchanged
-    # (stats, history, conf) state serve from the plan memo in ~0,
+    # (stats, conf) state serve from the plan memo in ~0,
     # so the budget tightens 1.40 -> 0.80 (memo-miss territory fails)
     ("q_incremental_dedup", 0.80),
     ("q_lm_quality", 0.70),
@@ -100,20 +100,17 @@ def _memo_core(spark, sf_dir, name):
 
 
 def test_plan_memo_serves_same_plan_and_tracks_state(spark, sf_dir):
-    """Round 15 (VERDICT r14 ask #6): with unchanged (stats, history,
-    conf) state a repeat construction serves the IDENTICAL memoized
-    logical plan — but wrapped in a FRESH Dataset per call (see
+    """Round 15 (VERDICT r14 ask #6): with unchanged (stats, conf)
+    state a repeat construction serves the IDENTICAL memoized logical
+    plan — but wrapped in a FRESH Dataset per call (see
     ``memoized_plan``'s measurement-integrity note: handing out the
     same Dataset object would let re-collects skip materialized
-    shuffle stages). The dogfood loop's state changes (an executed
-    harvest growing the history) miss the version compare and
-    re-construct — with byte-equal answers."""
+    shuffle stages). A planning-conf change misses the version compare
+    and re-constructs — with byte-equal answers."""
     from custom_python_etl_data_connector_shivaask_username_spark import tables
 
     name = "q_revenue_by_nation"
     fn = registry.QUERIES[name]
-    tables.session_history(sf_dir).clear()
-    tables._PENDING_FOLDS.pop(sf_dir, None)
     tables.invalidate_table_cache(sf_dir)
 
     a = fn(spark, sf_dir)
@@ -127,24 +124,27 @@ def test_plan_memo_serves_same_plan_and_tracks_state(spark, sf_dir):
         "Dataset itself would re-collect with skipped stages"
     )
     rows_a = sorted(map(str, a.collect()))
-    # the dogfood harvest grows the history: state version moves
-    assert tables.harvest_executed(spark, a, sf_dir) >= 1
-    fn(spark, sf_dir)
-    core_c = _memo_core(spark, sf_dir, name)
-    assert core_c is not core_a, "a harvested history must re-construct"
-    c = fn(spark, sf_dir)
-    assert _memo_core(spark, sf_dir, name) is core_c, (
-        "stable state memoizes again"
-    )
-    assert sorted(map(str, c.collect())) == rows_a, (
-        "state-driven re-planning must be answer-preserving"
-    )
+    # a planning-conf change moves the state version
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(tables.bytes_conf(spark, key, 0) + 1))
+    try:
+        fn(spark, sf_dir)
+        core_c = _memo_core(spark, sf_dir, name)
+        assert core_c is not core_a, "a conf change must re-construct"
+        c = fn(spark, sf_dir)
+        assert _memo_core(spark, sf_dir, name) is core_c, (
+            "stable state memoizes again"
+        )
+        assert sorted(map(str, c.collect())) == rows_a, (
+            "state-driven re-planning must be answer-preserving"
+        )
+    finally:
+        spark.conf.set(key, prev)
     # invalidation drops the memo with the rest of the session state
     tables.invalidate_table_cache(sf_dir)
     fn(spark, sf_dir)
     assert _memo_core(spark, sf_dir, name) is not core_c
-    tables.session_history(sf_dir).clear()
-    tables._PENDING_FOLDS.pop(sf_dir, None)
 
 
 def _shuffle_write_since(spark, mark: int) -> int:
@@ -262,7 +262,7 @@ def test_memoized_serve_reexecutes(spark, sf_dir, name):
     base = _shuffle_write_since(spark, mark0)
     base_in = _input_bytes_since(spark, mark0)
     mark = _max_stage_id(spark)
-    again = fn(spark, sf_dir)  # memo hit (state unchanged: no harvest)
+    again = fn(spark, sf_dir)  # memo hit (state unchanged)
     again.collect()
     if base > 0:
         assert _shuffle_write_since(spark, mark) > 0, (
@@ -279,40 +279,6 @@ def test_memoized_serve_reexecutes(spark, sf_dir, name):
             f"{name}: memo-served run read less input than run 1 — "
             "the zero-exchange plan did not re-execute its scan"
         )
-    # isolation: this test constructs without harvesting, so its memo
-    # entry still references un-consumed pending folds; drop it so a
-    # later test that resets _PENDING_FOLDS directly (the epoch pin's
-    # hostile simulation) cannot be served this spent frame
-    from custom_python_etl_data_connector_shivaask_username_spark import tables
-
-    tables._PLAN_MEMO.get(spark, {}).pop((sf_dir, name), None)
-
-
-def test_plan_memo_epoch_survives_history_clear(spark, sf_dir):
-    """Round-15 regression (full-suite ordering flake): the version
-    tuple (stats, history, conf) is NOT monotonic — build + harvest +
-    ``session_history().clear()`` returns it to a previously-stored
-    value, and without the planning epoch the memo re-serves a frame
-    whose one-shot pending folds were already consumed, so the next
-    harvest records ZERO edges and the self-tuning loop silently goes
-    dark. Pin: the clear-and-rebuild cycle must harvest ≥1 edge every
-    time."""
-    from custom_python_etl_data_connector_shivaask_username_spark import tables
-
-    name = "q_customer_order_counts"
-    fn = registry.QUERIES[name]
-    for cycle in range(2):
-        tables.session_history(sf_dir).clear()
-        tables._PENDING_FOLDS.pop(sf_dir, None)
-        df = fn(spark, sf_dir)
-        df.collect()
-        assert tables.harvest_executed(spark, df, sf_dir) >= 1, (
-            f"cycle {cycle}: a fresh construction after a history "
-            "clear must register measurable folds (memo must not "
-            "serve the spent frame)"
-        )
-    tables.session_history(sf_dir).clear()
-    tables._PENDING_FOLDS.pop(sf_dir, None)
 
 
 def test_load_table_memoized_and_invalidatable(spark, sf_dir):

@@ -238,7 +238,7 @@ def test_planner_routed_queries_exchange_neutral(spark, sf_dir):
     The migration must be exchange-NEUTRAL-or-better: the planner
     reproduces the hand-written plans' shuffle counts (measured on the
     round-11 tree: 5 / 10 / 8). Round 14: q_incremental_dedup's gram
-    probe join now routes through plan_star_join under honest
+    probe join now routes through plan_join_tree under honest
     gram-mass bounds, and the plan-time broadcast hint on the
     increment side removes one exchange (10 → 9); at production scale
     the same bound exceeds the budget and the fold stays the

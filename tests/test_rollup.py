@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import glob
 import os
+import time
 
 import pytest
 
@@ -842,6 +843,46 @@ def test_record_resolution_first_write_is_create_exclusive(spark, tmp_path):
     finally:
         R.stored_resolution = orig
     assert R.stored_resolution(spark, store) == "hour"
+
+
+def test_stored_resolution_waits_out_a_concurrent_first_write(
+    spark, tmp_path, monkeypatch
+):
+    """The first writer creates the grain sidecar before it writes the
+    content, so a concurrent reader can find it empty: the read must
+    wait for the content, not fail to parse it. The writer starts
+    filling the file (after ~50 ms) only once a read has seen it
+    empty, so the race is hit on every run."""
+    import threading
+
+    import custom_python_etl_data_connector_shivaask_username_spark.operators.rollup as R
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    side = R._resolution_sidecar_path(store)
+    open(side, "w").close()  # created, not yet written
+
+    def fill():
+        time.sleep(0.05)
+        with open(side, "w") as fh:
+            fh.write('{"resolution": "hour"}')
+
+    writer = threading.Thread(target=fill)
+    real_read = R.fs_read_text
+
+    def read_then_fill(sp, path):
+        raw = real_read(sp, path)
+        if not writer.is_alive() and not writer.ident:
+            assert raw == "", "the first read must see the empty sidecar"
+            writer.start()
+        return raw
+
+    monkeypatch.setattr(R, "fs_read_text", read_then_fill)
+    try:
+        assert R.stored_resolution(spark, store) == "hour"
+    finally:
+        if writer.ident:
+            writer.join()
 
 
 def test_quantile_snapshot_audit_and_read_share_one_keep_set(
