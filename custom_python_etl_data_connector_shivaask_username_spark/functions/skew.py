@@ -112,7 +112,7 @@ def salted_join(
     ``row_id`` must be a row-unique fact column (event_id, orderkey …):
     its hash assigns each fact row a stable salt, so rows of one hot key
     land on ``n_salts`` different (key, salt) reducers while results stay
-    identical to the unsalted join (verified in tests/test_skew.py).
+    identical to the unsalted join (verified in tests/test_bucketing_skew.py).
     """
     rid = F.col(row_id) if isinstance(row_id, str) else row_id
     salted_fact = fact.withColumn(

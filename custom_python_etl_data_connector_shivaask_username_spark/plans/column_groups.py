@@ -395,9 +395,9 @@ def hist2d_applicable(
     """True when any collected grid touches a range-filtered column —
     either a covered pair (joint mass replaces the independence
     product) or a one-sided partner (the unfiltered column's
-    `axis_range` clamps to the surviving cells). The plan_star_join
-    dispatch predicate: without a touching grid the historical
-    one-at-a-time folds run bit-compatibly."""
+    `axis_range` clamps to the surviving cells). Without a touching
+    grid the conjunction is priced as independent single-column
+    filters."""
     for g in stats.get("column_groups", {}).values():
         h = g.get("hist2d")
         if h and ({h["x"]["col"], h["y"]["col"]} & set(rngs)):

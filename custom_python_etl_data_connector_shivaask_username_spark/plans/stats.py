@@ -17,12 +17,19 @@ SIGMOD 1979 — the public cost-model lineage every optimizer cites):
   ``approx_count_distinct``), min/max, and null count; on-disk bytes
   come from the file index (metadata-only). Cost: one scan, mergeable
   partials, no shuffle beyond the final 1-row agg — safe to run on the
-  largest table in the lake.
+  largest table in the lake (sample first if even one scan is too
+  much; the estimates degrade gracefully).
+- ``write_stats_sidecar`` / ``read_stats_sidecar`` — persist next to
+  the data as ``_table_stats.json`` (underscore-prefixed: invisible to
+  parquet readers; Hadoop-FS I/O so hdfs:///s3:// stores behave like
+  local paths).
 - ``estimate_join_rows`` — the classic equi-join cardinality model
   |L ⋈ R| = |L|·|R| / max(ndv(L.k), ndv(R.k)), with a containment
   refinement from min/max when the key ranges barely overlap.
-- ``apply_filter_to_stats`` (X36) — metadata-only filter modeling
-  from min/max and NDV: the stats a table WOULD have after a range or
+- ``add_histograms`` / ``estimate_range_rows`` /
+  ``apply_filter_to_stats`` (X36) — deterministic equi-width
+  histograms (one bounded extra scan) and the metadata-only filter
+  modeling they enable: the stats a table WOULD have after a range or
   equality predicate, without scanning — so filtered tables enter
   join planning for free.
 - ``plan_join_tree`` — greedy left-deep join ordering over a join
@@ -41,13 +48,17 @@ silently cross-joining.
 
 from __future__ import annotations
 
+import json
 import math
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.layout import fs_read_text, fs_write_text
 from ..tables import bytes_conf
+
+STATS_SIDECAR = "_table_stats.json"
 
 #: fallback estimated row width when on-disk size is unknown
 _DEFAULT_ROW_BYTES = 64
@@ -66,7 +77,9 @@ def _is_stat_type(dt: str) -> bool:
 def _stat_cols(
     df: DataFrame, columns: list[str] | None
 ) -> list[tuple[str, str]]:
-    """(name, simple type) for every column stats are collected on."""
+    """(name, simple type) for every column stats are collected on —
+    the single definition all three ANALYZE paths (full, sampled,
+    incremental) share, so a new supported type lands everywhere."""
     return [
         (f.name, f.dataType.simpleString())
         for f in df.schema.fields
@@ -146,7 +159,7 @@ def stats_from_plan(df: DataFrame) -> dict[str, Any]:
     rows from bytes at the default width. No column stats (Catalyst
     keeps none without CBO ANALYZE) — callers with better knowledge
     (e.g. "this aggregate is per-customer") should overlay
-    ``columns``/``row_count`` from the base table's stats instead.
+    ``columns``/``row_count`` from the base table's sidecar instead.
 
     KNOWN BIAS, measured on this Spark (round 12): size-only
     estimation passes the CHILD's sizeInBytes through both Aggregate
@@ -158,7 +171,7 @@ def stats_from_plan(df: DataFrame) -> dict[str, Any]:
     could be mistakenly broadcast at exactly the scale where that
     kills the driver. Callers MUST overlay honest bounds for frames
     downstream of explode (see `lm_quality_scores` for the pattern:
-    gram mass bounded by base text bytes from the scan size)."""
+    gram mass bounded by base text bytes from the sidecar)."""
     js = df._jdf.queryExecution().optimizedPlan().stats()
     # py4j auto-converts scala.math.BigInt via its int view on some
     # call paths and hands back the object on others — str() is the
@@ -172,30 +185,161 @@ def stats_from_plan(df: DataFrame) -> dict[str, Any]:
     }
 
 
-#: types whose values map to a numeric axis
-_AXIS_NUMERIC = (
+def collect_table_stats_sampled(
+    df: DataFrame,
+    fraction: float,
+    columns: list[str] | None = None,
+    path: str | None = None,
+    seed: int = 42,
+) -> dict[str, Any]:
+    """Sample-based ANALYZE for tables where even ONE full scan is too
+    much (the 100 TB fact table): statistics from a Bernoulli row
+    sample, scaled back up.
+
+    - row count: ``sample_rows / fraction`` (unbiased).
+    - null counts: sample null fraction × estimated rows.
+    - min/max: the sample's — an UNDER-estimate of the true range
+      (extremes are rare); fine for join planning, wrong for bounds
+      checks, and flagged as ``"sampled": true`` in the dict.
+    - NDV: the GEE estimator (Charikar et al., "Towards Estimation
+      Error Guarantees for Distinct Values", PODS 2000):
+      ``sqrt(1/q)·f1 + Σ_{j≥2} f_j`` where ``f_j`` counts sample
+      values seen exactly j times. Since ``Σ_{j≥2} f_j`` is just
+      ``d_sample − f1``, each column needs only its sample
+      value-count frame — one small shuffle per column over the
+      cached sample, never over the table. GEE's ratio error is
+      bounded by ``sqrt(1/q)`` (the pinned guarantee); duplicates-
+      heavy columns come out near-exact, unique keys at worst
+      ``sqrt(q)``-fraction — both on the conservative side for the
+      planner's |L|·|R|/max(ndv) formula.
+
+    The full-scan pass stays the default (`collect_table_stats`);
+    this is the documented degrade path its docstring promises.
+    """
+    if not 0 < fraction <= 1:
+        raise ValueError("fraction must be in (0, 1]")
+    if fraction == 1.0:
+        return collect_table_stats(df, columns, path)
+    cols = _stat_cols(df, columns)
+    sample = df.sample(fraction=fraction, seed=seed)
+    sample.persist()
+    try:
+        aggs = [F.count(F.lit(1)).alias("__rows")]
+        for name, _ in cols:
+            aggs += [
+                F.min(name).alias(f"__min__{name}"),
+                F.max(name).alias(f"__max__{name}"),
+                F.count(name).alias(f"__nn__{name}"),
+            ]
+        row = sample.agg(*aggs).first().asDict()
+        m = row["__rows"]
+        est_rows = int(round(m / fraction))
+        stats: dict[str, Any] = {
+            "row_count": est_rows,
+            "size_bytes": _scan_bytes(df),
+            "columns": {},
+            "sampled": {
+                "fraction": fraction,
+                "sample_rows": m,
+                "seed": seed,
+                "ndv_method": "GEE",
+            },
+        }
+        scale = 1.0 / fraction
+        for name, dt in cols:
+            fof = (
+                sample.groupBy(name)
+                .agg(F.count(F.lit(1)).alias("__c"))
+                .agg(
+                    F.count(F.lit(1)).alias("d"),
+                    F.sum(
+                        (F.col("__c") == 1).cast("long")
+                    ).alias("f1"),
+                    F.sum(
+                        F.col(name).isNull().cast("long") * F.col("__c")
+                    ).alias("nulls"),
+                )
+                .first()
+            )
+            d_sample = fof["d"] or 0
+            f1 = fof["f1"] or 0
+            # the null "value" is not a distinct key value
+            if (fof["nulls"] or 0) > 0:
+                d_sample -= 1
+                if fof["nulls"] == 1:
+                    f1 -= 1
+            ndv = (
+                math.sqrt(scale) * f1 + (d_sample - f1)
+                if d_sample > 0
+                else 0
+            )
+            nn = row[f"__nn__{name}"]
+            stats["columns"][name] = {
+                "type": dt,
+                "ndv": int(round(ndv)),
+                "min": row[f"__min__{name}"],
+                "max": row[f"__max__{name}"],
+                "null_count": int(round((m - nn) * scale)),
+            }
+        if path is not None:
+            stats["path"] = path
+        return stats
+    finally:
+        sample.unpersist()
+
+
+#: default equi-width histogram resolution (X36)
+HISTOGRAM_BUCKETS = 64
+
+#: types whose values map to a numeric bucketing axis
+_HIST_NUMERIC = (
     "tinyint", "smallint", "int", "bigint", "float", "double",
 )
 
 
 def _kind_of(dt: str) -> str | None:
     """Axis kind for a column type; None when the type has no
-    numeric axis (strings, booleans)."""
-    if dt in _AXIS_NUMERIC or dt.startswith("decimal"):
+    numeric bucketing axis (strings, booleans)."""
+    if dt in _HIST_NUMERIC or dt.startswith("decimal"):
         return "numeric"
     if dt in ("date", "timestamp", "timestamp_ntz"):
         return dt
     return None
 
 
+def _hist_axis(c: str, dt: str, session_tz: str):
+    """(expression, kind) mapping a column onto the numeric bucketing
+    axis — injective and order-preserving, so bucket counts transfer
+    back to the original domain. Axis units by kind: "numeric" =
+    the value; "date" = epoch days; "timestamp" = TRUE epoch micros
+    (tz-free — the driver twin `_axis_value` interprets collected
+    naive datetimes as driver-local, matching how PySpark renders
+    instants on collect); "timestamp_ntz" = wall-clock micros as if
+    the wall clock were UTC (the cast's session-tz offset is undone
+    with `from_utc_timestamp`, so the axis is tz-free too — exact
+    except inside a DST transition hour, where cast and un-cast read
+    the offset at slightly different instants)."""
+    col = F.col(c)
+    kind = _kind_of(dt)
+    if kind == "numeric":
+        return col.cast("double"), kind
+    if kind == "date":
+        return F.unix_date(col).cast("double"), kind
+    if kind == "timestamp":
+        return F.unix_micros(col).cast("double"), kind
+    if kind == "timestamp_ntz":
+        wall = F.from_utc_timestamp(col.cast("timestamp"), session_tz)
+        return F.unix_micros(wall).cast("double"), kind
+    return None, None
+
+
 def _axis_value(v: Any, kind: str) -> float | None:
     """A python-side value (a collected min/max or a user predicate
-    bound) mapped onto a numeric axis: "numeric" = the value; "date" =
-    epoch days; "timestamp" = true epoch micros; "timestamp_ntz" =
-    wall-clock micros as if the wall clock were UTC. Naive datetimes
-    are driver-local for kind "timestamp" (that is what `.first()`
-    hands back for an instant) and plain wall clocks for
-    "timestamp_ntz"; ISO strings parse too."""
+    bound) mapped onto the same axis as `_hist_axis`. Naive
+    datetimes are driver-local for kind "timestamp" (that is what
+    `.first()` hands back for an instant) and plain wall clocks for
+    "timestamp_ntz"; ISO strings (a sidecar round-trip that skipped
+    `read_stats_sidecar`'s revival) parse too."""
     import datetime as _dt
 
     if v is None:
@@ -235,6 +379,143 @@ def _axis_value(v: Any, kind: str) -> float | None:
     raise ValueError(f"no axis for kind {kind!r}")
 
 
+def add_histograms(
+    df: DataFrame,
+    stats: dict[str, Any],
+    columns: list[str] | None = None,
+    buckets: int = HISTOGRAM_BUCKETS,
+) -> dict[str, Any]:
+    """X36: equi-width histograms for filter-selectivity estimates.
+
+    ONE additional scan (bucket widths need pass-1's min/max first)
+    computes, for every numeric/date/timestamp column (or the
+    requested subset), ``buckets`` conditional counts — plain
+    map-side-combined partial sums, deterministic on any row order or
+    partitioning (unlike ``histogram_numeric``'s order-sensitive
+    streaming centroids, which is why this is equi-width). The result
+    lands inside the stats dict (and therefore the sidecar):
+    ``columns[c]["histogram"] = {lo, hi, counts, kind}``. Cost shape:
+    ``buckets × columns`` counters per task — metadata next to the
+    scan itself; pass the filter columns you actually plan over.
+    """
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    targets = []
+    for c, cstat in stats.get("columns", {}).items():
+        if columns is not None and c not in columns:
+            continue
+        axis, kind = _hist_axis(c, cstat.get("type", ""), tz)
+        if axis is None:
+            continue
+        lo = _axis_value(cstat.get("min"), kind)
+        hi = _axis_value(cstat.get("max"), kind)
+        if lo is None or hi is None or not hi > lo:
+            continue
+        width_probe = (hi - lo) / buckets
+        if not math.isfinite(width_probe) or width_probe <= 4 * max(
+            math.ulp(lo), math.ulp(hi)
+        ):
+            # degenerate range: an infinite span (±DBL_MAX sentinel
+            # junk makes hi-lo overflow) or a width at the float
+            # spacing of the endpoints makes bucket arithmetic
+            # meaningless — lo + i·width rounds back onto lo (or
+            # goes nan), floor division goes NULL or collapses, and
+            # counts silently zero. Leave the column on the min/max
+            # fallback.
+            continue
+        targets.append((c, axis, kind, lo, hi))
+    if not targets:
+        return stats
+    aggs = []
+    for c, axis, kind, lo, hi in targets:
+        width = (hi - lo) / buckets
+        # clamp BOTH edges: a value nudged outside [lo, hi] by float
+        # round-trip lands in an edge bucket instead of vanishing
+        b = F.greatest(
+            F.lit(0),
+            F.least(
+                F.lit(buckets - 1),
+                F.floor((axis - F.lit(lo)) / F.lit(width)),
+            ),
+        )
+        for i in range(buckets):
+            aggs.append(
+                F.sum(
+                    (axis.isNotNull() & (b == i)).cast("long")
+                ).alias(f"__h__{c}__{i}")
+            )
+    row = df.agg(*aggs).first()
+    out = {
+        **stats,
+        "columns": {k: dict(v) for k, v in stats["columns"].items()},
+    }
+    for c, _axis, kind, lo, hi in targets:
+        out["columns"][c] = {
+            **out["columns"][c],
+            "histogram": {
+                "lo": lo,
+                "hi": hi,
+                "kind": kind,
+                "counts": [row[f"__h__{c}__{i}"] for i in range(buckets)],
+            },
+        }
+    return out
+
+
+def add_equidepth_histograms(
+    df: DataFrame,
+    stats: dict[str, Any],
+    columns: list[str] | None = None,
+    buckets: int = HISTOGRAM_BUCKETS,
+    accuracy: int = 10_000,
+) -> dict[str, Any]:
+    """Equi-DEPTH histograms: bucket BOUNDS at the column's quantiles
+    (``percentile_approx``, one scan, mergeable sketch), each bucket
+    holding ~``non_null/buckets`` rows by construction. The right
+    variant when skew defeats equi-width (one hot value swallows the
+    range into a single bucket and every estimate inside it flattens);
+    resolution follows the data's density instead of its span.
+    Stored as ``columns[c]["histogram"] = {kind, bounds}`` — the same
+    slot the equi-width variant uses, and ``estimate_range_rows``
+    dispatches on shape."""
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    targets = []
+    for c, cstat in stats.get("columns", {}).items():
+        if columns is not None and c not in columns:
+            continue
+        axis, kind = _hist_axis(c, cstat.get("type", ""), tz)
+        if axis is not None:
+            targets.append((c, axis, kind))
+    if not targets:
+        return stats
+    qs = [i / buckets for i in range(buckets + 1)]
+    aggs = [
+        F.percentile_approx(axis, qs, accuracy).alias(f"__q__{c}")
+        for c, axis, _ in targets
+    ]
+    row = df.agg(*aggs).first()
+    out = {
+        **stats,
+        "columns": {k: dict(v) for k, v in stats["columns"].items()},
+    }
+    for c, _axis, kind in targets:
+        bounds = row[f"__q__{c}"]
+        if bounds is None or bounds[0] is None:
+            continue  # all-null column: nothing to bound
+        nn = float(
+            (stats.get("row_count") or 0)
+            - out["columns"][c].get("null_count", 0)
+        )
+        out["columns"][c] = {
+            **out["columns"][c],
+            "histogram": {
+                "kind": kind,
+                "bounds": [float(b) for b in bounds],
+                "rows_per_bucket": nn / buckets,
+            },
+        }
+    return out
+
+
 def estimate_range_rows(
     stats: dict[str, Any],
     col: str,
@@ -242,42 +523,151 @@ def estimate_range_rows(
     hi: Any = None,
 ) -> float:
     """Estimated rows with ``lo <= col <= hi`` (either bound may be
-    None = unbounded) from min/max range containment, or
-    ``row_count`` when no min/max were collected."""
+    None = unbounded) from the column's histogram — full buckets
+    count whole, edge buckets linearly interpolated. Falls back to
+    min/max range containment when no histogram was collected, and
+    to ``row_count`` when not even min/max exist."""
     n = float(max(0, int(stats.get("row_count") or 0)))
     cstat = stats.get("columns", {}).get(col)
     if not cstat:
         return n
-    r = _range(stats, col)
-    if r is None:
-        return n
-    axk = _kind_of(cstat.get("type", "")) or "numeric"
-    qlo = r[0] if lo is None else max(_axis_value(lo, axk), r[0])
-    qhi = r[1] if hi is None else min(_axis_value(hi, axk), r[1])
-    span = r[1] - r[0]
+    hist = cstat.get("histogram")
+    if not hist:
+        r = _range(stats, col)
+        if r is None:
+            return n
+        axk = _kind_of(cstat.get("type", "")) or "numeric"
+        qlo = r[0] if lo is None else max(_axis_value(lo, axk), r[0])
+        qhi = r[1] if hi is None else min(_axis_value(hi, axk), r[1])
+        span = r[1] - r[0]
+        if qhi < qlo:
+            return 0.0  # provably outside [min, max]
+        nn = n - cstat.get("null_count", 0)
+        if not math.isfinite(span):
+            # ±DBL_MAX-scale sentinels: the span overflows and any
+            # width fraction silently reads as 0 — no information,
+            # claim no reduction
+            return nn
+        if qhi == qlo and span > 0:
+            # zero-measure point INSIDE the range: model equality
+            # (rows-per-value), matching both histogram paths — a
+            # plain width fraction would claim 0 for a value the
+            # stats cannot rule out
+            ndv = cstat.get("ndv")
+            return nn / float(ndv) if ndv else nn
+        frac = 1.0 if span <= 0 else (qhi - qlo) / span
+        # containment monotonicity (round 12, hypothesis-found — the
+        # fallback twin of the round-10 equi-depth lift): a narrow
+        # range must never estimate BELOW the equality model of a
+        # value inside it, or est(A) ≤ est(B) breaks for A ⊆ B
+        # exactly at the point/range boundary. Lift only when an NDV
+        # was collected: without one the point model claims nn (the
+        # no-evidence convention), which is not a floor ranges
+        # should inherit.
+        ndv = cstat.get("ndv")
+        floor = nn / float(ndv) if ndv else 0.0
+        return max(nn * frac, floor)
+    kind = hist["kind"]
+    if "bounds" in hist:  # equi-depth: quantile bounds, uniform mass
+        bounds, rpb = hist["bounds"], hist["rows_per_bucket"]
+        qlo = bounds[0] if lo is None else _axis_value(lo, kind)
+        qhi = bounds[-1] if hi is None else _axis_value(hi, kind)
+        qlo, qhi = max(qlo, bounds[0]), min(qhi, bounds[-1])
+        if qhi < qlo:
+            return 0.0
+        est = 0.0
+        for i in range(len(bounds) - 1):
+            blo, bhi = bounds[i], bounds[i + 1]
+            if bhi < qlo or blo > qhi:
+                continue
+            span = bhi - blo
+            if span <= 0:
+                # zero-width bucket = a hot value; in range → whole
+                if qlo <= blo <= qhi:
+                    est += rpb
+                continue
+            overlap = min(qhi, bhi) - max(qlo, blo)
+            if overlap > 0:
+                est += rpb * min(1.0, overlap / span)
+
+        def point(x: float) -> float:
+            # rows-per-value for a value inside a continuous bucket —
+            # the equality model (a value the stats cannot rule out)
+            ndv = float(cstat.get("ndv") or n)
+            return rpb / max(1.0, ndv / (len(bounds) - 1))
+
+        # containment monotonicity (hypothesis-found, round 10): the
+        # uniform-mass model can assign a RANGE less than the equality
+        # model assigns a single value inside it (narrow range at a
+        # bucket edge vs the point fallback). Lifting the estimate to
+        # its endpoints' point-estimates restores est(A) ≤ est(B) for
+        # A ⊆ B: a point-estimate is bucket-constant, and any bucket
+        # B partially covers contains one of B's endpoints, while a
+        # fully-covered bucket contributes its whole rpb ≥ the point.
+        return max(est, point(qlo), point(qhi))
+    qlo = hist["lo"] if lo is None else _axis_value(lo, kind)
+    qhi = hist["hi"] if hi is None else _axis_value(hi, kind)
+    qlo, qhi = max(qlo, hist["lo"]), min(qhi, hist["hi"])
     if qhi < qlo:
-        return 0.0  # provably outside [min, max]
-    nn = n - cstat.get("null_count", 0)
-    if not math.isfinite(span):
-        # ±DBL_MAX-scale sentinels: the span overflows and any width
-        # fraction silently reads as 0 — no information, claim no
-        # reduction
-        return nn
-    ndv = cstat.get("ndv")
-    if qhi == qlo and span > 0:
-        # zero-measure point INSIDE the range: model equality
-        # (rows-per-value) — a plain width fraction would claim 0 for
-        # a value the stats cannot rule out
-        return nn / float(ndv) if ndv else nn
-    frac = 1.0 if span <= 0 else (qhi - qlo) / span
-    # containment monotonicity: a narrow range must never estimate
-    # BELOW the equality model of a value inside it, or est(A) ≤
-    # est(B) breaks for A ⊆ B at the point/range boundary. Lift only
-    # when an NDV was collected: without one the point model claims
-    # nn (the no-evidence convention), which is not a floor ranges
-    # should inherit.
-    floor = nn / float(ndv) if ndv else 0.0
-    return max(nn * frac, floor)
+        return 0.0
+    counts = hist["counts"]
+    width = (hist["hi"] - hist["lo"]) / len(counts)
+    if width <= 0:
+        return float(sum(counts))
+    est = 0.0
+    for i, cnt in enumerate(counts):
+        blo = hist["lo"] + i * width
+        # the LAST bucket's upper edge is the declared axis `hi`, not
+        # the nominal `blo + width`: `(hi - lo) / B` rounds, so the
+        # nominal top can land strictly BELOW `hi`, leaving a float
+        # sliver the build-time clamp folded into bucket B-1 — a
+        # query inside that sliver must still see the overlap
+        # (round 13, hypothesis-found: data [0, 0, 1.4e-45, -1],
+        # query [2.2e-313, 1.0] → nominal top 0.0 < hi = 1.4e-45)
+        # NB: `lo + (i+1)*width`, NOT `blo + width` — the two differ
+        # in the last ulp under accumulation, and the nominal
+        # geometry (build-time clamp, gap detection below) is defined
+        # on the former
+        bhi = (
+            hist["hi"]
+            if i == len(counts) - 1
+            else hist["lo"] + (i + 1) * width
+        )
+        overlap = min(qhi, bhi) - max(qlo, blo)
+        if overlap <= 0:
+            continue
+        est += cnt * min(1.0, overlap / width)
+    # a degenerate point range (lo == hi) has zero measure on a
+    # continuous axis; model it like equality instead of 0
+    def point(x: float, sliver_ok: bool = False) -> float:
+        i = min(len(counts) - 1, int((x - hist["lo"]) / width))
+        blo = hist["lo"] + i * width
+        bhi = hist["lo"] + (i + 1) * width
+        if not (blo <= x <= bhi):
+            # x sits in the rounding sliver ABOVE the last bucket's
+            # nominal top: that bucket's count there is exactly the
+            # values the clamp displaced. In the RANGE-lift path the
+            # interpolated overlap (already in `est`) is the honest
+            # price — pricing a sliver point at the whole bucket was
+            # the round-12 counterexample — so the lift contributes
+            # nothing. But a DEGENERATE point query (est == 0,
+            # qlo == qhi) carries no overlap at all, and x ≤ hi is an
+            # observed value (hi is the column max): hard-zeroing it
+            # rules out an existing value (round-13 advisor finding).
+            # There the bucket-B-1 equality estimate is the honest
+            # price: the sliver's mass IS in that bucket by clamp.
+            if not (sliver_ok and hist["lo"] <= x <= hist["hi"]):
+                return 0.0
+        ndv = float(stats.get("columns", {}).get(col, {}).get("ndv") or n)
+        return counts[i] / max(1.0, ndv / len(counts))
+
+    if est == 0.0 and qlo == qhi:
+        return point(qlo, sliver_ok=True)
+    # containment monotonicity (round 12 — the equi-width twin of the
+    # round-10 equi-depth lift): a narrow range never estimates below
+    # its endpoints' point models, restoring est(A) ≤ est(B) for
+    # A ⊆ B across the point/range boundary
+    return max(est, point(qlo), point(qhi))
 
 
 def apply_filter_to_stats(
@@ -291,8 +681,8 @@ def apply_filter_to_stats(
     have after ``lo <= col <= hi`` (or ``col = eq``), without
     scanning anything — this is how a filtered table enters
     ``plan_join_tree`` planning at 100 TB (the alternative, collecting
-    stats on the filtered frame, is a scan). Row count scales by
-    min/max containment (range) or 1/ndv (equality); every column's NDV is
+    stats on the filtered frame, is a scan). Row count scales by the
+    histogram (range) or 1/ndv (equality); every column's NDV is
     capped at the new row count; the filtered column's min/max clamp
     to the predicate and its nulls drop to 0 (range/eq predicates
     reject NULL); ``size_bytes`` scales so broadcast decisions track
@@ -325,6 +715,7 @@ def apply_filter_to_stats(
     }
     for c, cs in stats.get("columns", {}).items():
         cs = dict(cs)
+        cs.pop("histogram", None)  # no longer valid post-filter
         if cs.get("ndv"):
             cs["ndv"] = max(1, min(int(cs["ndv"]), new_n))
         if c == col:
@@ -363,6 +754,49 @@ def apply_filter_to_stats(
     return out
 
 
+def write_stats_sidecar(
+    spark: SparkSession, path: str, stats: dict[str, Any]
+) -> None:
+    fs_write_text(
+        spark,
+        f"{path.rstrip('/')}/{STATS_SIDECAR}",
+        json.dumps(stats, default=str),
+    )
+
+
+def _revive_stats(stats: dict[str, Any]) -> dict[str, Any]:
+    """Undo the sidecar's `default=str` JSON coercion: date/timestamp
+    min/max come back as ISO strings (str() of a datetime IS ISO with
+    a space separator) and decimals as digit strings — parse them back
+    to the python types the collectors produce, so a sidecar-loaded
+    dict behaves identically in `add_histograms` / `_range`."""
+    import datetime as _dt
+
+    for cs in stats.get("columns", {}).values():
+        dt = cs.get("type", "")
+        for k in ("min", "max"):
+            v = cs.get(k)
+            if not isinstance(v, str):
+                continue
+            try:
+                if dt == "date":
+                    cs[k] = _dt.date.fromisoformat(v)
+                elif dt in ("timestamp", "timestamp_ntz"):
+                    cs[k] = _dt.datetime.fromisoformat(v)
+                elif dt.startswith("decimal"):
+                    cs[k] = float(v)
+            except ValueError:
+                pass  # leave the raw string; estimators skip it
+    return stats
+
+
+def read_stats_sidecar(
+    spark: SparkSession, path: str
+) -> dict[str, Any] | None:
+    raw = fs_read_text(spark, f"{path.rstrip('/')}/{STATS_SIDECAR}")
+    return None if raw is None else _revive_stats(json.loads(raw))
+
+
 def _ndv(stats: dict, col: str, default_rows: int) -> float:
     c = stats.get("columns", {}).get(col)
     if c and c.get("ndv"):
@@ -372,8 +806,8 @@ def _ndv(stats: dict, col: str, default_rows: int) -> float:
 
 def _range(stats: dict, col: str):
     """(lo, hi) of the column on its numeric axis — numerics directly,
-    date/timestamp via `_axis_value`, so temporal join keys get the
-    containment refinement too."""
+    date/timestamp via the same `_axis_value` mapping the histograms
+    use, so temporal join keys get the containment refinement too."""
     c = stats.get("columns", {}).get(col)
     if not c:
         return None
@@ -387,7 +821,108 @@ def _range(stats: dict, col: str):
         return None
     if lo is None or hi is None:
         return None
+    # `axis_range` (X60, round 12): a tighter AXIS-value support
+    # recorded by the range-conjunction stats twin — a filter on a
+    # grid-partnered column clamps this column to the cells with
+    # surviving joint mass (event-time filters shrinking a correlated
+    # join key is the canonical case). Intersected with min/max and
+    # ignored if inconsistent, so it can only TIGHTEN the containment
+    # refinement, never widen or invalidate it.
+    ar = c.get("axis_range")
+    if ar:
+        try:
+            alo, ahi = float(ar[0]), float(ar[1])
+        except (TypeError, ValueError):
+            return lo, hi
+        if max(lo, alo) <= min(hi, ahi):
+            lo, hi = max(lo, alo), min(hi, ahi)
     return lo, hi
+
+
+def _hist_segments(
+    stats: dict, col: str
+) -> list[tuple[float, float, float, float]] | None:
+    """The column's histogram as piecewise-uniform segments
+    ``(lo, hi, rows, dv)`` — rows in the segment and the distinct
+    values it is assumed to hold (1 for a zero-width hot-value
+    bucket). Works for both histogram shapes; None when the column
+    has no histogram."""
+    cstat = stats.get("columns", {}).get(col)
+    hist = (cstat or {}).get("histogram")
+    if not hist:
+        return None
+    n = float(max(0, int(stats.get("row_count") or 0)))
+    ndv = float(cstat.get("ndv") or n or 1.0)
+    segs: list[tuple[float, float, float, float]] = []
+    if "bounds" in hist:  # equi-depth
+        bounds, rpb = hist["bounds"], float(hist["rows_per_bucket"])
+        total_w = max(bounds[-1] - bounds[0], 1e-12)
+        for i in range(len(bounds) - 1):
+            blo, bhi = bounds[i], bounds[i + 1]
+            w = bhi - blo
+            dv = 1.0 if w <= 0 else max(1.0, ndv * w / total_w)
+            segs.append((blo, bhi, rpb, dv))
+    else:  # equi-width
+        counts = hist["counts"]
+        lo, hi = hist["lo"], hist["hi"]
+        width = (hi - lo) / len(counts)
+        if width <= 0:
+            return [(lo, hi, float(sum(counts)), 1.0)]
+        for i, cnt in enumerate(counts):
+            if cnt:
+                segs.append(
+                    (lo + i * width, lo + (i + 1) * width,
+                     float(cnt), max(1.0, ndv / len(counts)))
+                )
+    return segs or None
+
+
+def _hist_join_rows(
+    lsegs: list[tuple[float, float, float, float]],
+    rsegs: list[tuple[float, float, float, float]],
+) -> float:
+    """Bucket-aligned equi-join estimate: overlap each left segment
+    with each right segment (both piecewise-uniform), contributing
+    ``rows_l·rows_r / max(dv_l, dv_r)`` on the shared interval —
+    the textbook histogram join, which sees the hot keys uniform-NDV
+    Selinger averages away. Segment counts are tiny (≤ bucket
+    count), so the quadratic pairing is driver-side metadata work."""
+    # a point p belongs to [lo, hi) — or to a CLOSED [lo, hi] when no
+    # later segment starts at hi (the column max sits on the last
+    # bucket's upper bound)
+    llos = {s[0] for s in lsegs}
+    rlos = {s[0] for s in rsegs}
+
+    def _inside(p, lo, hi, los):
+        return lo <= p < hi or (p == hi and hi not in los)
+
+    est = 0.0
+    for llo, lhi, lrows, ldv in lsegs:
+        for rlo, rhi, rrows, rdv in rsegs:
+            lw, rw = lhi - llo, rhi - rlo
+            if lw <= 0 and rw <= 0:
+                # two point masses: join only when colocated
+                if llo == rlo:
+                    est += lrows * rrows  # dv 1 each: every pair matches
+                continue
+            if lw <= 0:  # left hot value inside a right bucket:
+                # every left row matches the right's rows-per-value
+                if _inside(llo, rlo, rhi, rlos):
+                    est += lrows * rrows / max(rdv, 1.0)
+                continue
+            if rw <= 0:
+                if _inside(rlo, llo, lhi, llos):
+                    est += rrows * lrows / max(ldv, 1.0)
+                continue
+            lo, hi = max(llo, rlo), min(lhi, rhi)
+            if hi <= lo:
+                continue
+            lfrac = (hi - lo) / lw
+            rfrac = (hi - lo) / rw
+            est += (lrows * lfrac) * (rrows * rfrac) / max(
+                ldv * lfrac, rdv * rfrac, 1.0
+            )
+    return est
 
 
 def _cols(spec) -> tuple[str, ...]:
@@ -406,24 +941,38 @@ def _cols(spec) -> tuple[str, ...]:
 
 
 def _group_ndv(stats: dict, cols: tuple[str, ...], n: int) -> float:
-    """NDV of a key TUPLE: the max over the component columns' NDVs —
-    the provable lower bound (the true group NDV is ≥ every
-    component's), which is exactly where per-column Selinger
-    OVERestimates a composite join's selectivity."""
+    """NDV of a key TUPLE: the X37 collected group NDV when present
+    (`stats["column_groups"]`, exact information about the
+    combination), else the max over the component columns' NDVs — the
+    provable lower bound (the true group NDV is ≥ every component's),
+    which is exactly where per-column Selinger OVERestimates a
+    composite join's selectivity."""
+    from .column_groups import group_key
+
+    if len(cols) == 1:
+        return _ndv(stats, cols[0], n)
+    g = (stats.get("column_groups") or {}).get(group_key(list(cols)))
+    if g and g.get("ndv"):
+        return max(1.0, min(float(g["ndv"]), float(n)))
     return max(_ndv(stats, c, n) for c in cols)
 
 
 def estimate_join_rows(
     left_stats: dict, lcol, right_stats: dict, rcol
 ) -> float:
-    """Equi-join cardinality: the Selinger formula
-    |L|·|R| / max(ndv_l, ndv_r), scaled down by key-range containment
-    when min/max show the domains barely overlap (a disjoint-range
-    join estimates ~0 instead of |L|·|R|/ndv).
+    """Equi-join cardinality. When BOTH keys carry histograms the
+    estimate is bucket-aligned (`_hist_join_rows` — piecewise-uniform
+    segments joined interval-by-interval, so a skewed key's hot
+    values contribute their true quadratic mass). Otherwise the
+    Selinger formula |L|·|R| / max(ndv_l, ndv_r), scaled down by
+    key-range containment when min/max show the domains barely
+    overlap (a disjoint-range join estimates ~0 instead of
+    |L|·|R|/ndv).
 
     ``lcol``/``rcol`` may be TUPLES (composite key, round 11): the
-    NDV is then the max component NDV (`_group_ndv`); a provably
-    disjoint range on ANY component proves zero."""
+    NDV is then the X37 group NDV when collected, else the max
+    component NDV (`_group_ndv`); a provably disjoint range on ANY
+    component proves zero. Histograms stay single-column."""
     nl = max(0, int(left_stats.get("row_count") or 0))
     nr = max(0, int(right_stats.get("row_count") or 0))
     if nl == 0 or nr == 0:
@@ -442,6 +991,10 @@ def estimate_join_rows(
             _group_ndv(left_stats, lcs, nl), _group_ndv(right_stats, rcs, nr)
         )
     lcol, rcol = lcs[0], rcs[0]  # 1-tuples normalize to the plain path
+    lsegs = _hist_segments(left_stats, lcol)
+    rsegs = _hist_segments(right_stats, rcol)
+    if lsegs and rsegs:
+        return _hist_join_rows(lsegs, rsegs)
     est = nl * nr / max(_ndv(left_stats, lcol, nl), _ndv(right_stats, rcol, nr))
     rl, rr = _range(left_stats, lcol), _range(right_stats, rcol)
     if rl and rr:
@@ -769,10 +1322,12 @@ def plan_join_tree(
         comes from ``owner`` — shared by the greedy's cand_est and the
         chain/bushy subtree estimators. The owner's key stats are used
         with NDV capped at cur_rows (a selective fold already paid that
-        selectivity). Composite (tuple) keys build the view over every
+        selectivity — a full-table histogram would re-inflate it, so
+        it is dropped). Composite (tuple) keys build the view over every
         component, all NDVs capped at cur_rows."""
 
         def capped(cs):
+            cs = {k: v for k, v in cs.items() if k != "histogram"}
             if cs.get("ndv"):
                 cs = {**cs, "ndv": max(1, min(int(cs["ndv"]), int(cur_rows) or 1))}
             return cs
@@ -940,7 +1495,11 @@ def plan_join_tree(
                         colowner[tc] = tn
                         cs = stats[tn]["columns"].get(tc)
                         if cs:
-                            cs = dict(cs)
+                            cs = {
+                                k: v
+                                for k, v in cs.items()
+                                if k != "histogram"
+                            }
                             if cs.get("ndv"):
                                 cs["ndv"] = max(
                                     1, min(int(cs["ndv"]), int(est) or 1)

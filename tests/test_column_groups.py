@@ -342,77 +342,6 @@ def test_point_range_falls_back_to_1d_model(corr_ranges):
     assert est > 0.0
 
 
-def test_plan_star_join_routes_range_conjunctions_through_hist2d(
-    spark, monkeypatch
-):
-    """Wiring pin: with a 2-D grid in the pre-filter statistics, two
-    range specs on one table dispatch the X60 joint estimator exactly
-    once; without the grid, the historical one-at-a-time folds run and
-    the joint estimator is never called. Results identical either way
-    (the filters themselves are frame predicates)."""
-    from custom_python_etl_data_connector_shivaask_username_spark import tables as tables_mod
-    from custom_python_etl_data_connector_shivaask_username_spark.plans import (
-        column_groups as cg,
-    )
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
-        collect_histogram_2d,
-    )
-    from custom_python_etl_data_connector_shivaask_username_spark.tables import (
-        load_table,
-        plan_star_join,
-    )
-
-    sf = SF_DIR if "SF_DIR" in globals() else os.environ.get(
-        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
-    )
-    orders = load_table(spark, sf, "orders")
-    base = collect_table_stats(orders)
-    with_grid = collect_histogram_2d(
-        orders, base, [["o_totalprice", "o_orderkey"]]
-    )
-
-    calls = []
-    real = cg.apply_range_conjunction_to_stats
-
-    def spy(st, rngs):
-        calls.append(sorted(rngs))
-        return real(st, rngs)
-
-    monkeypatch.setattr(cg, "apply_range_conjunction_to_stats", spy)
-
-    filters = {
-        "orders": [
-            ("o_totalprice", 0.0, 100_000.0),
-            ("o_orderkey", None, 3_000),
-        ]
-    }
-    edges = [("orders", "o_custkey", "customer", "c_custkey")]
-
-    monkeypatch.setattr(
-        tables_mod,
-        "table_stats_cached",
-        lambda _s, _d, n, **kw: dict(with_grid)
-        if n == "orders"
-        else collect_table_stats(load_table(spark, sf, n)),
-    )
-    df_joint, _ = plan_star_join(spark, sf, edges, filters=filters)
-    assert calls == [["o_orderkey", "o_totalprice"]]
-
-    calls.clear()
-    monkeypatch.setattr(
-        tables_mod,
-        "table_stats_cached",
-        lambda _s, _d, n, **kw: dict(base)
-        if n == "orders"
-        else collect_table_stats(load_table(spark, sf, n)),
-    )
-    df_legacy, _ = plan_star_join(spark, sf, edges, filters=filters)
-    assert calls == []
-    assert sorted(map(tuple, df_joint.collect())) == sorted(
-        map(tuple, df_legacy.collect())
-    )
-
-
 def test_suggest_histogram_pairs_mines_range_workload(spark, corr_ranges):
     """X60 miner: Filter nodes range-bounding >=2 columns vote their
     pairs; single-column ranges and disjunctions never vote (the X47
@@ -517,48 +446,3 @@ def test_one_sided_grid_clamps_join_key_containment(spark):
     assert _range(st, "k") == (0.0, 100.0)
     st["columns"]["k"]["axis_range"] = [50.0, 400.0]
     assert _range(st, "k") == (50.0, 100.0)
-
-
-def test_plan_star_join_dispatches_one_sided_grid(spark, monkeypatch):
-    """A SINGLE range spec with a one-sided partner grid also routes
-    through the X60 twin (the partner clamp is the benefit); without
-    any touching grid the legacy fold runs."""
-    from custom_python_etl_data_connector_shivaask_username_spark import tables as tables_mod
-    from custom_python_etl_data_connector_shivaask_username_spark.plans import (
-        column_groups as cg,
-    )
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
-        collect_histogram_2d,
-    )
-    from custom_python_etl_data_connector_shivaask_username_spark.tables import (
-        load_table,
-        plan_star_join,
-    )
-
-    sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    orders = load_table(spark, sf, "orders")
-    base = collect_table_stats(orders)
-    with_grid = collect_histogram_2d(
-        orders, base, [["o_totalprice", "o_orderkey"]]
-    )
-
-    calls = []
-    real = cg.apply_range_conjunction_to_stats
-
-    def spy(st, rngs):
-        calls.append(sorted(rngs))
-        return real(st, rngs)
-
-    monkeypatch.setattr(cg, "apply_range_conjunction_to_stats", spy)
-    monkeypatch.setattr(
-        tables_mod,
-        "table_stats_cached",
-        lambda _s, _d, n, **kw: dict(with_grid)
-        if n == "orders"
-        else collect_table_stats(load_table(spark, sf, n)),
-    )
-    filters = {"orders": [("o_totalprice", 0.0, 100_000.0)]}
-    edges = [("orders", "o_custkey", "customer", "c_custkey")]
-    df, _ = plan_star_join(spark, sf, edges, filters=filters)
-    assert calls == [["o_totalprice"]]
-    assert df.count() > 0
