@@ -50,6 +50,7 @@ from ..sources.layout import (
     fs_read_text,
     fs_write_text,
     overwrite_partitions,
+    recover_swap,
 )
 from ..sources.rollup_store import FOLDED_SIDECAR
 from ..tables import load_table
@@ -954,6 +955,7 @@ def compact_rollup(spark: SparkSession, store_path: str) -> None:
     keep appending fresh batch ids beside the compacted base, while
     redeliveries of folded ids are skipped via the watermark sidecar
     (pinned: replay-after-compaction does not double-count)."""
+    recover_swap(spark, store_path)
     parts = spark.read.parquet(store_path)
     max_id = parts.agg(F.max("batch_id")).first()[0]
     watermark = max(

@@ -49,7 +49,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.layout import atomic_swap
+from ..sources.layout import atomic_swap, recover_swap
 from .stats import _scan_bytes, _stat_cols
 
 PARTIALS_DIR = "_stats_partials"
@@ -224,6 +224,7 @@ def compact_stats_partials(spark: SparkSession, table_path: str) -> None:
     pair with the same monotone-batch-id contract the rollup store
     documents (or re-append only NEW ids after compacting)."""
     pdir = _partials_path(table_path)
+    recover_swap(spark, pdir)
     parts = spark.read.option("mergeSchema", "true").parquet(pdir)
     folded, _ = _merge_partials(parts)
     staging = f"{pdir}__compacting"

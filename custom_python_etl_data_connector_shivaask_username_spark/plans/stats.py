@@ -1324,7 +1324,8 @@ def plan_join_tree(
         with NDV capped at cur_rows (a selective fold already paid that
         selectivity — a full-table histogram would re-inflate it, so
         it is dropped). Composite (tuple) keys build the view over every
-        component, all NDVs capped at cur_rows."""
+        component plus the owner's X37 group entry when collected, all
+        NDVs capped at cur_rows."""
 
         def capped(cs):
             cs = {k: v for k, v in cs.items() if k != "histogram"}
@@ -1338,6 +1339,21 @@ def plan_join_tree(
             if cs:
                 colmap[c] = capped(cs)
         cur_view = {"row_count": cur_rows, "columns": colmap}
+        if len(_cols(cur_col)) > 1:
+            from .column_groups import group_key
+
+            g = (stats[owner].get("column_groups") or {}).get(
+                group_key(list(_cols(cur_col)))
+            )
+            if g and g.get("ndv"):
+                cur_view["column_groups"] = {
+                    group_key(list(_cols(cur_col))): {
+                        **g,
+                        "ndv": max(
+                            1, min(int(g["ndv"]), int(cur_rows) or 1)
+                        ),
+                    }
+                }
         return estimate_join_rows(cur_view, cur_col, stats[incoming], inc_col)
 
     def chain_fold(lead, fold_edges):

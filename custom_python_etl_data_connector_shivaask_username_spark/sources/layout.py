@@ -233,6 +233,7 @@ def write_zordered(
     errors or destroys data mid-read (same discipline as
     ``compact_partitions`` / ``sinks.upsert_parquet``).
     """
+    recover_swap(df.sparkSession, path)
     z = zorder_value(df, cols, bits)
     arranged = df.withColumn("_z", z)
     arranged = (
@@ -262,6 +263,7 @@ def compact_partitions(
     staged write → filesystem rename swap. The shuffle moves each cell
     once; the swap is metadata-only.
     """
+    recover_swap(spark, path)
     merged = spark.read.parquet(path)
     staging = path.rstrip("/") + "__compacting"
     pre_index = _index_columns_if_present(spark, path)
@@ -288,34 +290,42 @@ def _rename(fs, src, dst) -> None:
 
 def recover_swap(spark: SparkSession, path: str) -> None:
     """Finish what an interrupted :func:`atomic_swap` left at ``path``.
-    A crash between its two renames leaves no table but an aside dir:
-    it is renamed back, so ``path`` reads its old contents (the
-    interrupted rewrite never committed). An aside dir next to a
-    table is the old copy of a committed swap and is deleted."""
+    Every staged rewrite and every append calls it once, before it
+    touches ``path``. A ``__trash`` dir is the old copy of a committed
+    swap and is deleted. An ``__aside`` dir with no table is a swap
+    that crashed between its two renames: it is renamed back, so
+    ``path`` reads its old contents. An ``__aside`` dir next to a table
+    is either a swap that crashed just after committing or a table
+    another writer created after such a crash; recovery cannot tell
+    which copy holds the rows, so it raises and deletes neither."""
     fs, Path = _hadoop_fs(spark, path)
-    target = Path(path.rstrip("/"))
-    aside = Path(path.rstrip("/") + "__aside")
+    base = path.rstrip("/")
+    target, aside = Path(base), Path(base + "__aside")
+    fs.delete(Path(base + "__trash"), True)
     if fs.exists(aside):
         if fs.exists(target):
-            fs.delete(aside, True)
-        else:
-            _rename(fs, aside, target)
+            raise IOError(
+                f"{base} and {base}__aside both exist: an interrupted "
+                "swap left its old copy next to a table; keep the copy "
+                "that holds the rows and remove the other"
+            )
+        _rename(fs, aside, target)
 
 
 def atomic_swap(spark: SparkSession, staging: str, path: str) -> None:
     """Replace ``path`` with ``staging`` via filesystem renames — the
     metadata-only commit step shared by every staged rewrite (table
     compaction, rollup-store compaction, the parquet upsert). The old
-    tree moves to ``{path}__aside``, staging moves into place, then the
-    aside dir is deleted: at every step the old or the new tree is
-    readable at ``path`` or in the aside dir. A failed second rename
-    moves the old tree back; a crash is finished by
-    :func:`recover_swap`. On HDFS/local rename is atomic; object stores
+    tree moves to ``{path}__aside``, staging moves into place (the
+    commit), then the aside dir is renamed to ``{path}__trash`` and
+    deleted: at every step the old or the new tree is readable at
+    ``path`` or in the aside dir. A failed second rename moves the old
+    tree back. The caller runs :func:`recover_swap` on ``path`` first,
+    before reading it. On HDFS/local rename is atomic; object stores
     need their own commit protocol."""
-    recover_swap(spark, path)
     fs, Path = _hadoop_fs(spark, path)
-    target = Path(path.rstrip("/"))
-    aside = Path(path.rstrip("/") + "__aside")
+    base = path.rstrip("/")
+    target, aside = Path(base), Path(base + "__aside")
     had_target = fs.exists(target)
     if had_target:
         _rename(fs, target, aside)
@@ -325,7 +335,10 @@ def atomic_swap(spark: SparkSession, staging: str, path: str) -> None:
         if had_target:
             _rename(fs, aside, target)
         raise
-    fs.delete(aside, True)
+    if had_target:
+        trash = Path(base + "__trash")
+        _rename(fs, aside, trash)
+        fs.delete(trash, True)
 
 
 def fs_write_text(spark: SparkSession, path: str, content: str) -> None:

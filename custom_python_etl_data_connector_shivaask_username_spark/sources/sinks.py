@@ -37,10 +37,13 @@ def write_raw(
     mode: str = "append",
     stamp: bool = True,
 ) -> str:
-    """S6: append the transformed batch to the connector's raw table."""
+    """S6: append the transformed batch to the connector's raw table.
+    An interrupted rewrite of the table is recovered first, so the
+    batch lands beside the old rows, not in a fresh table next to them."""
     if stamp:
         df = add_ingest_ts(df)
     path = raw_table_path(base_path, connector_name)
+    recover_replace(df.sparkSession, path)
     df.write.mode(mode).parquet(path)
     return path
 
@@ -111,16 +114,22 @@ def upsert_parquet(
             .drop("_rn", "_src")
         )
         merged = kept.unionByName(winners, allowMissingColumns=True)
-    atomic_replace_parquet(spark, merged, path)
+    _stage_and_swap(spark, merged, path)
 
 
 def recover_replace(spark: SparkSession, path: str) -> None:
     """Finish what an interrupted :func:`atomic_replace_parquet` left:
     an interrupted swap (`layout.recover_swap`) and a leftover staging
-    dir."""
+    dir. Run once per write, at its entry point."""
     recover_swap(spark, path)
     fs, Path = _hadoop_fs(spark, path)
     fs.delete(Path(path.rstrip("/") + "__staging"), True)
+
+
+def _stage_and_swap(spark: SparkSession, df: DataFrame, path: str) -> None:
+    staging = path.rstrip("/") + "__staging"
+    df.write.mode("overwrite").parquet(staging)
+    atomic_swap(spark, staging, path)
 
 
 def atomic_replace_parquet(
@@ -138,9 +147,7 @@ def atomic_replace_parquet(
     :func:`upsert_parquet` and the ANN index lifecycle
     (``llm_similarity.ivfpq_compact``)."""
     recover_replace(spark, path)
-    staging = path.rstrip("/") + "__staging"
-    df.write.mode("overwrite").parquet(staging)
-    atomic_swap(spark, staging, path)
+    _stage_and_swap(spark, df, path)
 
 
 def mongodb_write_config(

@@ -258,6 +258,50 @@ def test_atomic_replace_survives_a_failed_or_interrupted_swap(
         assert not os.path.exists(path + leftover)
 
 
+def test_append_after_an_interrupted_swap_keeps_the_old_rows(spark, tmp_path):
+    """A compaction that crashed between its two renames leaves the
+    table moved aside. The next append recovers it before writing, so
+    the following upsert merges into every old row. The old copy of a
+    committed swap (``__trash``) is deleted; an aside dir found next to
+    a table is refused, and both copies are kept."""
+    import os
+    import shutil
+
+    def rows(p):
+        return sorted(tuple(r) for r in spark.read.parquet(p).collect())
+
+    schema = "id INT, payload STRING"
+    base = str(tmp_path)
+    path = raw_table_path(base, "t")
+    write_raw(
+        spark.createDataFrame([(1, "old"), (2, "old")], schema), "t", base,
+        stamp=False,
+    )
+    os.rename(path, path + "__aside")  # crash mid-compaction
+    write_raw(spark.createDataFrame([(3, "new")], schema), "t", base, stamp=False)
+    upsert_parquet(
+        spark, spark.createDataFrame([(2, "upd")], schema), path, keys=["id"],
+        stamp=False,
+    )
+    want = [(1, "old"), (2, "upd"), (3, "new")]
+    assert rows(path) == want
+    for leftover in ("__aside", "__staging", "__trash"):
+        assert not os.path.exists(path + leftover)
+
+    shutil.copytree(path, path + "__trash")
+    write_raw(spark.createDataFrame([(4, "new")], schema), "t", base, stamp=False)
+    assert not os.path.exists(path + "__trash")
+    want.append((4, "new"))
+
+    shutil.copytree(path, path + "__aside")
+    with pytest.raises(IOError, match="__aside both exist"):
+        upsert_parquet(
+            spark, spark.createDataFrame([(1, "upd")], schema), path,
+            keys=["id"], stamp=False,
+        )
+    assert rows(path) == rows(path + "__aside") == want
+
+
 def test_upsert_parquet_version_aware_out_of_order(spark, tmp_path):
     """X19 contract: with version_col, batch ARRIVAL order is irrelevant —
     the table converges to arg_max(row, version) per key, so applying

@@ -42,7 +42,6 @@ def test_collect_stats_one_pass_correctness(spark, sf_dir):
     }
 
 
-
 def test_stats_sidecar_roundtrip(spark, sf_dir, tmp_path):
     path = str(tmp_path / "nation")
     nation = load_table(spark, sf_dir, "nation")
@@ -274,6 +273,8 @@ def test_plan_join_tree_rejects_disconnected_graph(spark, sf_dir):
         )
 
 
+# --- X33: sample-based ANALYZE (GEE NDV scale-up) -------------------------
+
 
 def test_sampled_stats_scaleup_and_gee_bounds(spark, sf_dir):
     from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
@@ -305,7 +306,6 @@ def test_sampled_stats_scaleup_and_gee_bounds(spark, sf_dir):
     assert stats["size_bytes"] and stats["size_bytes"] > 0
 
 
-
 def test_sampled_stats_determinism_and_edges(spark, sf_dir):
     from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
         collect_table_stats,
@@ -333,7 +333,6 @@ def test_sampled_stats_determinism_and_edges(spark, sf_dir):
     assert s["columns"]["maybe"]["ndv"] <= s["row_count"]
 
 
-
 def test_planner_order_stable_under_sampled_stats(spark, sf_dir):
     from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
         collect_table_stats_sampled,
@@ -359,6 +358,8 @@ def test_planner_order_stable_under_sampled_stats(spark, sf_dir):
     assert order_samp == order_full  # dims-first order survives sampling
     assert planned.count() == tables["customer"].count()
 
+
+# --- X36: histogram sidecars + filter-selectivity modeling ----------------
 
 
 def test_histogram_range_estimates_track_actuals(spark, sf_dir):
@@ -408,12 +409,6 @@ def test_histogram_range_estimates_track_actuals(spark, sf_dir):
     assert full == pytest.approx(
         stats["row_count"] - stats["columns"]["o_totalprice"]["null_count"]
     )
-
-
-# --- X33: sample-based ANALYZE (GEE NDV scale-up) -------------------------
-
-
-# --- X36: histogram sidecars + filter-selectivity modeling ----------------
 
 
 def test_apply_filter_to_stats_metadata_only_planning(spark, sf_dir):
@@ -545,7 +540,6 @@ def test_plan_join_tree_rejects_self_join_shared_plan(spark, sf_dir):
         assert joined.count() == nation.count()
 
 
-
 def test_equidepth_histogram_beats_equiwidth_on_skew(spark):
     """A hot value swallows the equi-width range into one bucket; the
     equi-depth variant keeps resolution where the mass is. Both stay
@@ -581,7 +575,6 @@ def test_equidepth_histogram_beats_equiwidth_on_skew(spark):
     assert estimate_range_rows(ed, "x") == pytest.approx(
         base["row_count"], rel=0.02
     )
-
 
 
 def test_equidepth_apply_filter_and_planner_compat(spark, sf_dir):
@@ -631,7 +624,6 @@ def test_plan_join_tree_left_join_preserves_user_order(spark):
         )
 
 
-
 def test_timestamp_histogram_tz_invariant(spark, sf_dir):
     """The timestamp bucketing axis is instant-based on BOTH sides
     (Spark unix_micros; driver .timestamp() on collect's driver-local
@@ -671,7 +663,6 @@ def test_timestamp_histogram_tz_invariant(spark, sf_dir):
         time.tzset()
 
 
-
 def test_ntz_histogram_session_tz_invariant(spark):
     """timestamp_ntz is a wall clock: its axis must not shift with
     the session timezone (the cast-to-timestamp offset is undone)."""
@@ -700,7 +691,6 @@ def test_ntz_histogram_session_tz_invariant(spark):
         assert abs(est - actual) <= 3, (est, actual)
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
-
 
 
 def test_sidecar_roundtrip_revives_temporal_stats(spark, sf_dir, tmp_path):
@@ -783,7 +773,6 @@ def test_plan_join_tree_same_named_columns_stay_per_table(spark):
     assert set(order) == {"fact", "dim_a", "dim_b"}
 
 
-
 def test_histogram_join_estimate_sees_matching_skew(spark):
     """Both join keys share a hot value: uniform-NDV Selinger averages
     the hot key away and underestimates by orders of magnitude; the
@@ -858,7 +847,6 @@ def test_non_inner_fold_skips_stats_scans_and_rejects_semi_chains(spark):
             [("A", "k", "B", "k"), ("B", "x", "C", "x")],
             how="leftsemi",
         )
-
 
 
 def test_histogram_skips_infinite_span_column(spark):
@@ -1372,13 +1360,19 @@ def test_plan_join_tree_flip_keeps_streamed_scan_partitioning(spark):
 
 def test_composite_key_edges_plan_on_group_ndv(spark):
     """Round-11 verdict ask #6: `plan_join_tree` edges accept column
-    TUPLES. The composite join's NDV is the max single-column NDV (the
-    provable lower bound), which overestimates this planted pair-key
-    join ~150x; the tuple edge and the two-single-edges encoding plan
-    the same order, with identical results. Also pins the tuple
-    threading through the exchange-aware partitioning keys (subset
-    rule: a partitioning on (a,b) satisfies an edge only if
-    {a,b} <= its columns)."""
+    TUPLES. The composite join's NDV comes from X37 group statistics
+    when collected (falling back to the max single-column NDV — the
+    provable lower bound), and only the tuple edge plans the star
+    correctly: per-column Selinger over (a, b) overestimates this
+    planted pair-key join ~150x, so both the fallback and the old
+    two-single-edges encoding defer the selective composite fold and
+    drag a 80x-larger intermediate through the remaining join. Results
+    are identical either way. Also pins the tuple threading through
+    the exchange-aware partitioning keys (subset rule: a partitioning
+    on (a,b) satisfies an edge only if {a,b} <= its columns)."""
+    from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
+        collect_column_group_stats,
+    )
     from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
         _part_satisfied,
         _scan_part_satisfied,
@@ -1404,16 +1398,26 @@ def test_composite_key_edges_plan_on_group_ndv(spark):
         collect_table_stats(B),
         collect_table_stats(C),
     )
+    sag = collect_column_group_stats(A, sa, [["a", "b"]])
+    sbg = collect_column_group_stats(B, sb, [["a", "b"]])
 
     truth = A.join(B, ["a", "b"]).count()
+    est_group = estimate_join_rows(sag, ("a", "b"), sbg, ("a", "b"))
     est_fallback = estimate_join_rows(sa, ("a", "b"), sb, ("a", "b"))
+    assert abs(est_group - truth) <= 0.2 * truth, (est_group, truth)
     assert est_fallback > 50 * truth  # the per-column overestimate
 
     tbl = {"A": A, "B": B, "C": C}
     edges_t = [("A", ("a", "b"), "B", ("a", "b")), ("A", "x", "C", "x")]
     th = 1024 * 1024  # B and C are too big to broadcast, A fits
-    # the overestimate defers the composite fold: B joins behind an
-    # 800k intermediate, in the tuple and the two-single-edges encoding
+    good, o_good = plan_join_tree(
+        tbl, edges_t, stats={"A": sag, "B": sbg, "C": sc},
+        broadcast_threshold=th,
+    )
+    # only the group-NDV estimate folds the selective composite join
+    # FIRST (10k intermediate into C) — the fallback and the legacy
+    # two-single-edges encoding both defer B behind an 800k intermediate
+    assert o_good == ["A", "B", "C"], o_good
     blind, o_blind = plan_join_tree(
         tbl, edges_t, stats={"A": sa, "B": sb, "C": sc},
         broadcast_threshold=th,
@@ -1426,7 +1430,7 @@ def test_composite_key_edges_plan_on_group_ndv(spark):
         broadcast_threshold=th,
     )
     assert o_legacy == ["A", "C", "B"], o_legacy
-    assert blind.count() == legacy.count() == 800_000
+    assert good.count() == blind.count() == legacy.count() == 800_000
 
     # arity mismatch is a loud error, not a silent zip truncation
     with pytest.raises(ValueError, match="arity"):
