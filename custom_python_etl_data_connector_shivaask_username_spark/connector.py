@@ -26,7 +26,8 @@ Pipeline, in spec order:
    Both writes read the persisted extract.
 
 Returns a load report: the counts of this run (extracted, loaded,
-quarantined) and the paths — the auditable unit the spec's "audits or
+quarantined), the paths, and whether ``cfg.max_pages`` cut the extract
+short (``truncated``) — the auditable unit the spec's "audits or
 updates" clause needs.
 """
 
@@ -55,7 +56,8 @@ def run_connector(
     upsert_keys: list[str] | None = None,
 ) -> dict[str, Any]:
     """One E→T→L cycle; see module docstring. Returns the load report."""
-    raw = read_api(spark, cfg, schema).persist()
+    extract: dict[str, Any] = {}
+    raw = read_api(spark, cfg, schema, report=extract).persist()
     try:
         corrupt = (
             F.col("_corrupt_record").isNotNull()
@@ -105,6 +107,7 @@ def run_connector(
         "path": path,
         "quarantine_path": quarantine_path,
         "mode": "upsert" if upsert_keys else "append",
+        "truncated": extract["truncated"],
     }
 
 

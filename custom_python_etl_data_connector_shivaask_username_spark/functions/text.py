@@ -37,19 +37,6 @@ def token_count(text: Column) -> Column:
     return F.size(bpe_ish_tokens(text))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    words = F.transform(whitespace_tokens(text), F.lower)
-    hits = F.size(
-        F.filter(
-            words,
-            lambda w: w.isin(*STOPWORDS[lang])
-            if lang != "zh"
-            else F.lit(False),
-        )
-    )
-    return hits.cast("double") / F.greatest(F.size(words), F.lit(1))
-
-
 def punct_ratio(text: Column) -> Column:
     stripped = F.regexp_replace(text, r"[^\w\s]", "")
     return (F.length(text) - F.length(stripped)).cast("double") / F.greatest(

@@ -220,8 +220,8 @@ def exact_percentiles_twopass(
     # landing in an overflow bucket — proof the claim was wrong —
     # falls back to the scan-derived geometry instead of collecting
     # the overflow bucket's unbounded distinct values in pass 2.
-    # ``bounds=(lo, hi)`` supplies a precomputed range (e.g. from a
-    # stats sidecar).
+    # ``bounds=(lo, hi)`` supplies a precomputed range (e.g. a
+    # collected min/max).
     LAST_TWOPASS_STATS.clear()
     lo_v = hi_v = None
     if bounds == "footer":

@@ -590,13 +590,6 @@ def minhash_signature(shingles: Column, num_hashes: int = NUM_HASHES) -> Column:
     )
 
 
-def band_signatures(sig: Column, bands: int = BANDS, rows: int = ROWS_PER_BAND) -> Column:
-    """Split the signature into bands; each band hashes to one bucket key."""
-    return F.array(
-        *[F.hash(F.slice(sig, i * rows + 1, rows)) for i in range(bands)]
-    )
-
-
 def minhash_signature_rows(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -1496,6 +1496,8 @@ def pq_train(
         .limit(k)
         .collect()
     )
+    if not seeds:
+        raise ValueError("pq_train: no training rows after sampling")
     # dim from the seeds already collected — the former standalone
     # ``first()`` probe was one whole extra Spark job per training call
     # (round 16; two calls per q_lsh_suite construction) for a value the

@@ -18,11 +18,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Post-AQE final plan (run the query first for adaptive results)."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries across the plan's parquet scans."""
     out = []
@@ -55,13 +50,4 @@ def count_exchanges(df: DataFrame) -> int:
     # tree-rendering lines ("+- Exchange (7)")
     return len(
         re.findall(r"^\(\d+\) Exchange\b", formatted_plan(df), re.MULTILINE)
-    )
-
-
-def assert_scan_pruned(df: DataFrame, table_cols: int, max_cols: int) -> None:
-    """Assert at least one scan reads ≤ max_cols of table_cols columns."""
-    slim = [s for s in scan_schemas(df) if s.count(":") <= max_cols]
-    assert slim, (
-        f"no scan pruned to <= {max_cols}/{table_cols} columns: "
-        f"{scan_schemas(df)}"
     )

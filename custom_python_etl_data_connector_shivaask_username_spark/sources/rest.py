@@ -12,8 +12,9 @@ Two execution shapes:
   or small result sets. Each page becomes one Arrow string array as it
   arrives; the extract reaches the JVM once, as an Arrow table, and is
   parsed there. Returns a typed DataFrame.
-- :class:`RestDataSource` — PySpark 4 Python Data Source: page ranges are
-  split into input partitions and fetched BY THE EXECUTORS in parallel.
+- :func:`register_rest_datasource` — the ``rest`` format, a PySpark 4
+  Python Data Source: page ranges are split into input partitions and
+  fetched BY THE EXECUTORS in parallel.
   This is the 100 TB-relevant shape: per-partition rate limiting, no
   driver bottleneck, and the page-range predicate is effectively pushdown
   into the API (partition pruning happens at plan time via ``pages``).
@@ -31,7 +32,7 @@ import time
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Iterator
+from collections.abc import Generator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -164,17 +165,20 @@ def iter_pages(
     fetcher: _Fetcher | None = None,
     start_page: int = 1,
     end_page: int | None = None,
-) -> Iterator[tuple[int, list[dict]]]:
+) -> Generator[tuple[int, list[dict]], None, bool]:
     """S2: follow page/cursor/next_url pagination until exhausted.
 
     Yields (page_number, records). ``start_page``/``end_page`` bound the
-    page-numbered mode so executors can own disjoint ranges.
+    page-numbered mode so executors can own disjoint ranges. Returns
+    (as the generator's value) True when the page cap, or ``end_page``,
+    stopped the read while the source still had pages: a full last
+    page, or a cursor / next URL still set.
     """
     fetcher = fetcher or _Fetcher(cfg)
     if cfg.pagination == "none":
         payload = fetcher.fetch_json(cfg.url, cfg.params)
         yield 1, fetcher.extract_records(payload)
-        return
+        return False
 
     if cfg.pagination == "page":
         page = start_page
@@ -187,12 +191,12 @@ def iter_pages(
                 fetcher.fetch_json(cfg.url, params)
             )
             if not records:
-                return
+                return False
             yield page, records
             if len(records) < cfg.page_size:
-                return
+                return False
             page += 1
-        return
+        return True
 
     if cfg.pagination == "cursor":
         cursor: str | None = None
@@ -211,8 +215,8 @@ def iter_pages(
                 else None
             )
             if not cursor:
-                return
-        return
+                return False
+        return True
 
     if cfg.pagination == "next_url":
         url: str | None = cfg.url
@@ -229,8 +233,8 @@ def iter_pages(
                 else None
             )
             if not url:
-                return
-        return
+                return False
+        return True
 
     raise ValueError(f"unknown pagination mode: {cfg.pagination}")
 
@@ -239,6 +243,7 @@ def read_api(
     spark: SparkSession,
     cfg: ConnectorConfig,
     schema: T.StructType | str | None = None,
+    report: dict | None = None,
 ) -> DataFrame:
     """S1 driver-side shape: fetch all pages, land as a typed DataFrame.
 
@@ -253,15 +258,22 @@ def read_api(
     Python, but each one re-parses the JSON, so a caller that runs more
     than one action should ``persist()`` it (``connector.run_connector``
     does).
+
+    When ``report`` is given, ``report["truncated"]`` records whether
+    ``cfg.max_pages`` cut the extract short (see :func:`iter_pages`).
     """
-    pages = pa.chunked_array(
-        [
-            pa.array([json.dumps(rec) for rec in records], pa.string())
-            for _, records in iter_pages(cfg)
-        ],
-        pa.string(),
-    )
-    return json_ingest(spark, pages, schema)
+    chunks = []
+    pages = iter_pages(cfg)
+    while True:
+        try:
+            _, records = next(pages)
+        except StopIteration as end:
+            truncated = end.value
+            break
+        chunks.append(pa.array([json.dumps(rec) for rec in records], pa.string()))
+    if report is not None:
+        report["truncated"] = truncated
+    return json_ingest(spark, pa.chunked_array(chunks, pa.string()), schema)
 
 
 def _text_frame(spark: SparkSession, lines: pa.ChunkedArray) -> DataFrame:
@@ -340,12 +352,6 @@ def json_ingest(
 
 
 # --- PySpark 4 Python Data Source: distributed page fetch --------------------
-
-
-class RestDataSource:
-    """S1 distributed shape — thin registration wrapper; see
-    :func:`register_rest_datasource` (import-gated: the Python Data Source
-    API needs pyspark>=4)."""
 
 
 def register_rest_datasource(spark: SparkSession) -> bool:

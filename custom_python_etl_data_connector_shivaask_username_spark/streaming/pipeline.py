@@ -108,13 +108,14 @@ def adaptive_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     [MIN_STATE_PARTITIONS, session shuffle partitions]. Metadata-only
     (the memoized relation's file-index size, no scan). On a real
     cluster the session conf is the ops-set ceiling; locally this
-    lands at the measured-optimal 8 for every fixture scale."""
+    lands at the measured-optimal 8 for every fixture scale. A feed
+    whose size is unknown (not a file scan) gets the floor; a feed
+    that fails to load raises."""
     from ..plans.stats import _scan_bytes
     from ..tables import bytes_conf, load_table
 
-    try:
-        bytes_ = _scan_bytes(load_table(spark, sf_dir, "events"))
-    except Exception:
+    bytes_ = _scan_bytes(load_table(spark, sf_dir, "events"))
+    if bytes_ is None:
         return MIN_STATE_PARTITIONS
     cap = max(
         1, bytes_conf(spark, "spark.sql.shuffle.partitions", 32)

@@ -229,16 +229,6 @@ def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFra
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register one temp view per table — the SQL entry point (E2).
-
-    View names match the DuckDB oracle's pre-registered views so the same
-    SQL text is meaningful against both engines.
-    """
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # --- X31-X36 wired into the engine's own query path (round 9) -------------
 
 #: per-session ANALYZE memo — fixture dirs are read-only, so stats are

@@ -1,5 +1,6 @@
 """Scale-strategy pins: bucketed co-located joins (shuffle paid once at
-write time, zero exchanges per join) and deterministic skew salting."""
+write time, zero exchanges per join) and the planner's use of declared
+bucketing."""
 
 from __future__ import annotations
 
@@ -7,12 +8,8 @@ import os
 
 import pytest
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_shivaask_username_spark.functions.skew import (
-    salted_join,
-)
 from custom_python_etl_data_connector_shivaask_username_spark.plans.inspect import (
     count_exchanges,
     formatted_plan,
@@ -81,64 +78,6 @@ def test_bucketed_agg_on_bucket_key_has_zero_exchanges(spark, bucketed_tables):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     assert count_exchanges(agg) == 0
-
-
-def _skewed_frames(spark):
-    # one hot key (0) carrying 80% of the fact
-    fact = spark.createDataFrame(
-        [Row(row_id=i, k=0 if i % 5 != 0 else i % 7, v=float(i)) for i in range(500)]
-    )
-    dim = spark.createDataFrame(
-        [Row(k=i, name=f"dim{i}") for i in range(7)]
-    )
-    return fact, dim
-
-
-def test_salted_join_matches_plain_join(spark):
-    fact, dim = _skewed_frames(spark)
-    plain = fact.join(dim, "k").select("row_id", "name")
-    salted = salted_join(fact, dim, on="k", row_id="row_id").select(
-        "row_id", "name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
-def test_salted_join_is_deterministic(spark):
-    fact, dim = _skewed_frames(spark)
-    a = salted_join(fact, dim, on="k", row_id="row_id").collect()
-    b = salted_join(fact, dim, on="k", row_id="row_id").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_salt_spreads_hot_key(spark):
-    fact, dim = _skewed_frames(spark)
-    from custom_python_etl_data_connector_shivaask_username_spark.functions.skew import (
-        SALT_COL,
-    )
-
-    salted = fact.withColumn(
-        SALT_COL, F.pmod(F.xxhash64("row_id"), F.lit(8)).cast("int")
-    )
-    hot = salted.filter(F.col("k") == 0)
-    n_salts_used = hot.select(SALT_COL).distinct().count()
-    assert n_salts_used >= 6  # hot key really fans out across reducers
-
-
-def test_salted_shuffle_join_requires_hashable_salt_source(spark):
-    from custom_python_etl_data_connector_shivaask_username_spark.functions.skew import (
-        salted_shuffle_join,
-    )
-
-    left = spark.createDataFrame(
-        [Row(m={"a": 1})]
-    )  # MapType only: nothing to hash
-    right = spark.createDataFrame([Row(k=1)])
-    with pytest.raises(ValueError, match="hashable"):
-        salted_shuffle_join(
-            left, right, on=F.lit(True), salt_side="left"
-        )
 
 
 def test_planner_exploits_declared_bucketing(spark, bucketed_tables, sf_dir):

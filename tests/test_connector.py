@@ -480,6 +480,43 @@ def test_run_connector_one_pass(stub, spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
+def _drain(pages):
+    """(records read, the generator's truncation flag)."""
+    n = 0
+    while True:
+        try:
+            n += len(next(pages)[1])
+        except StopIteration as end:
+            return n, end.value
+
+
+@pytest.mark.parametrize(
+    "mode, extra",
+    [
+        ("page", {}),
+        ("cursor", {"endpoint": "cursor-items"}),
+        ("next_url", {"endpoint": "linked-items", "params": {"limit": "10"}}),
+    ],
+)
+def test_iter_pages_reports_page_cap_truncation(stub, mode, extra):
+    """25 records in pages of 10: a cap of 2 pages stops with the source
+    still holding pages, a cap of 3 reads it to the end."""
+    assert _drain(iter_pages(_cfg(stub, pagination=mode, max_pages=2, **extra))) == (20, True)
+    assert _drain(iter_pages(_cfg(stub, pagination=mode, max_pages=3, **extra))) == (25, False)
+
+
+def test_run_connector_reports_page_cap_truncation(stub, spark, tmp_path):
+    """The load report says when `max_pages` cut the extract short, with
+    no request beyond the cap."""
+    from custom_python_etl_data_connector_shivaask_username_spark.connector import run_connector
+
+    cut = run_connector(spark, _cfg(stub, max_pages=2), str(tmp_path / "cut"), schema=SCHEMA)
+    assert cut["truncated"] is True and cut["extracted"] == 20
+    assert stub.state.request_count == 2
+    whole = run_connector(spark, _cfg(stub, max_pages=3), str(tmp_path / "whole"), schema=SCHEMA)
+    assert whole["truncated"] is False and whole["extracted"] == len(RECORDS)
+
+
 def test_run_connector_empty_extract(stub, spark, tmp_path):
     """A first page of [] lands an empty table and reports zeros."""
     from custom_python_etl_data_connector_shivaask_username_spark.connector import run_connector

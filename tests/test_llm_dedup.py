@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -330,7 +333,7 @@ def test_connected_components_fused_round_actions(spark):
     round) measured a stable 40 driver jobs on this graph vs 35 fused;
     the bound splits them with margin for planner drift. If this trips
     after an intentional CC change, re-derive both counts the same way
-    (statusStore jobsList before/after) and move the bound WITH the
+    (the jobs of one job group) and move the bound WITH the
     delta preserved — the contract is one action per round, not the
     literal 35."""
     from custom_python_etl_data_connector_shivaask_username_spark.operators.llm_dedup import (
@@ -343,16 +346,19 @@ def test_connected_components_fused_round_actions(spark):
     )
     connected_components(edges).collect()  # warm (JIT/broadcast reuse)
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    j0 = store.jobsList(None).size()
-    comp = {
-        r["id"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
+    group = f"cc-rounds-{time.time_ns()}"
+    sc.setJobGroup(group, "connected_components job-count pin")
+    try:
+        comp = {
+            r["id"]: r["component"]
+            for r in connected_components(edges).collect()
+        }
+    finally:  # clear what setJobGroup set, so later jobs run outside the group
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
     assert comp == {0: 0, 1: 0, 2: 0, 3: 0, 7: 7, 9: 7}
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    jobs = store.jobsList(None).size() - j0
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # every job start recorded
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= 37, (
         f"connected_components ran {jobs} jobs on the 4-edge path graph "
         "(fused form: 35; two-actions-per-round form: 40) — a per-round "
@@ -1172,6 +1178,18 @@ def test_pq_topk_plan_is_scan_plus_takeordered(spark):
     df = pq_topk(pq_encode(emb, books), books, qvec, k=5)
     assert has_node(df, "TakeOrderedAndProject")
     assert count_exchanges(df) == 0
+
+
+def test_pq_train_rejects_empty_training_set(spark):
+    """A sample that leaves no seed rows fails with a clear message,
+    not an IndexError on the first seed."""
+    from custom_python_etl_data_connector_shivaask_username_spark.operators.llm_similarity import (
+        pq_train,
+    )
+
+    empty = _blob_fixture(spark, n_noise=40, n_cluster=5).limit(0)
+    with pytest.raises(ValueError, match="no training rows"):
+        pq_train(empty, iters=1)
 
 
 def test_probe_minhash_index_giant_bucket_guard(spark):

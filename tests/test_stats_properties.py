@@ -1,75 +1,31 @@
 """Property tests (hypothesis) for the PURE driver-side planning
-math in `plans/stats.py` / `plans/column_groups.py` /
-`sources/file_index.py` — no SparkSession: the histograms, segments
-and indexes are constructed by hand with the exact bucketing
-arithmetic the distributed side uses, then the estimators' algebraic
-invariants are checked on random data:
+math in `plans/stats.py` / `sources/file_index.py` — no SparkSession:
+the stats dicts and indexes are constructed by hand, then the
+estimators' algebraic invariants are checked on random data:
 
-- equi-width range estimates are exact up to the two edge buckets;
-- estimates are monotone in range containment and bounded by the
-  non-null count; full range recovers it exactly;
-- histogram-join estimates conserve mass against the true join size
-  within segment resolution on identical singleton layouts;
+- min/max range estimates are monotone in range containment and
+  bounded by the non-null count; full range recovers it exactly;
 - file pruning NEVER drops a file that contains a matching value
   (the never-lose-rows contract as a property, not an example);
-- the temporal axis mappings are strictly order-preserving;
-- eq-conjunction estimates are bounded and monotone (adding a
-  predicate can only shrink the estimate).
+- the temporal axis mappings are strictly order-preserving.
 """
 
 from __future__ import annotations
 
-import math
+from hypothesis import given, settings, strategies as st
 
-from hypothesis import example, given, settings, strategies as st
-
-from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
-    estimate_eq_conjunction_rows,
-)
 from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
     _axis_value,
     estimate_range_rows,
-    _hist_join_rows,
 )
 from custom_python_etl_data_connector_shivaask_username_spark.sources.file_index import (
     prune_files,
 )
 
-BUCKETS = 16
-
-
-def _equiwidth_stats(data: list[float]) -> dict:
-    """Build the stats dict exactly as collect_table_stats +
-    add_histograms would for a non-null double column."""
-    lo, hi = min(data), max(data)
-    cstat = {
-        "type": "double",
-        "ndv": len(set(data)),
-        "min": lo,
-        "max": hi,
-        "null_count": 0,
-    }
-    w = (hi - lo) / BUCKETS
-    # mirror add_histograms' ulp-aware degenerate-range guard: no
-    # histogram when bucket arithmetic would collapse — the
-    # estimator falls back to min/max containment
-    if w > 4 * max(math.ulp(lo), math.ulp(hi)):
-        counts = [0] * BUCKETS
-        for v in data:
-            b = max(0, min(BUCKETS - 1, int(math.floor((v - lo) / w))))
-            counts[b] += 1
-        cstat["histogram"] = {
-            "lo": float(lo),
-            "hi": float(hi),
-            "kind": "numeric",
-            "counts": counts,
-        }
-    return {"row_count": len(data), "columns": {"x": cstat}}
-
 
 def _minmax_stats(data: list[float]) -> dict:
     """The stats dict collect_table_stats builds for a non-null double
-    column (min/max and NDV, no histogram)."""
+    column (min/max and NDV)."""
     cstat = {
         "type": "double",
         "ndv": len(set(data)),
@@ -89,97 +45,21 @@ values = st.lists(
 )
 
 
-@settings(max_examples=200, deadline=None)
-@given(values, st.floats(-1.1e6, 1.1e6), st.floats(-1.1e6, 1.1e6))
-@example(
-    data=[0.0, 0.0, 1.401298464324817e-45, -1.0],
-    a=1.0,
-    b=2.2250738585e-313,
-).via('discovered failure')
-@example(
-    data=[0.0, 0.0, 3.7835058536770095e-45, -1.5000000000000013],
-    a=1.0,
-    b=2.2250738585e-313,
-).via('discovered failure')
-@example(
-    data=[0.0, 0.0, 1.401298464324817e-45, -1.0],
-    a=1.401298464324817e-45,
-    b=1.401298464324817e-45,
-).via('advisor r13: point query at x == hi in the rounding sliver')
-def test_equiwidth_estimate_exact_up_to_edge_buckets(data, a, b):
-    lo, hi = (a, b) if a <= b else (b, a)
-    stats = _equiwidth_stats(data)
-    est = estimate_range_rows(stats, "x", lo, hi)
-    true = sum(1 for v in data if lo <= v <= hi)
-    h = stats["columns"]["x"].get("histogram")
-    if h is None:
-        return  # degenerate range: guard skipped the histogram
-    width = (h["hi"] - h["lo"]) / BUCKETS
-    # the estimator interpolates inside at most two partially-covered
-    # edge buckets; everything fully inside/outside is exact — up to
-    # values the build-time clamp placed outside their bucket's
-    # nominal float range (width rounding at the axis ends)
-    edge_mass = 0
-    for i, cnt in enumerate(h["counts"]):
-        blo, bhi = h["lo"] + i * width, h["lo"] + (i + 1) * width
-        partially = (blo < lo <= bhi) or (blo <= hi < bhi)
-        if partially:
-            edge_mass += cnt
-    clamp_slack = 0
-    for v in data:
-        i = max(0, min(BUCKETS - 1, int(math.floor((v - h["lo"]) / width))))
-        blo, bhi = h["lo"] + i * width, h["lo"] + (i + 1) * width
-        if not (blo <= v <= bhi):
-            clamp_slack += 1
-    # a query that degenerates to a point after clamping to the axis
-    # takes the rows-per-value fallback, whose error is bounded by
-    # the containing bucket's whole count
-    qlo, qhi = max(lo, h["lo"]), min(hi, h["hi"])
-    point_slack = 0
-    if qhi == qlo:  # disjoint (qhi < qlo) returns 0 before the fallback
-        i = int(max(0.0, min(BUCKETS - 1.0, (qlo - h["lo"]) / width)))
-        point_slack = h["counts"][i]
-    assert est >= -1e-9
-    assert abs(est - true) <= edge_mass + clamp_slack + point_slack + (
-        1e-6 * max(1, abs(true))
-    )
-
-
 @settings(max_examples=150, deadline=None)
 @given(values)
 def test_estimate_monotone_and_bounded(data):
     lo, hi = min(data), max(data)
     n = len(data)
-    # the histogram path and the min/max path the query path prices on
-    for stats in (_equiwidth_stats(data), _minmax_stats(data)):
-        full = estimate_range_rows(stats, "x")
-        assert abs(full - n) <= 1e-6 * n
-        mid = (lo + hi) / 2
-        inner = estimate_range_rows(stats, "x", lo + (mid - lo) / 2, mid)
-        outer = estimate_range_rows(stats, "x", lo, mid)
-        assert -1e-9 <= inner <= outer + 1e-9 <= n + 1e-9
-        # outside the observed domain: provably zero
-        assert estimate_range_rows(stats, "x", hi + 1, hi + 2) == 0.0
-        assert estimate_range_rows(stats, "x", lo - 2, lo - 1) == 0.0
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.integers(0, 50), min_size=1, max_size=200),
-    st.lists(st.integers(0, 50), min_size=1, max_size=200),
-)
-def test_hist_join_point_masses_exact(left, right):
-    """Singleton (zero-width) segments per distinct value make the
-    histogram join EXACT: the estimate must equal the true join
-    cardinality."""
-    from collections import Counter
-
-    cl, cr = Counter(left), Counter(right)
-    lsegs = [(float(v), float(v), float(c), 1.0) for v, c in cl.items()]
-    rsegs = [(float(v), float(v), float(c), 1.0) for v, c in cr.items()]
-    est = _hist_join_rows(lsegs, rsegs)
-    true = sum(cl[v] * cr[v] for v in cl if v in cr)
-    assert abs(est - true) <= 1e-6 * max(1, true)
+    stats = _minmax_stats(data)
+    full = estimate_range_rows(stats, "x")
+    assert abs(full - n) <= 1e-6 * n
+    mid = (lo + hi) / 2
+    inner = estimate_range_rows(stats, "x", lo + (mid - lo) / 2, mid)
+    outer = estimate_range_rows(stats, "x", lo, mid)
+    assert -1e-9 <= inner <= outer + 1e-9 <= n + 1e-9
+    # outside the observed domain: provably zero
+    assert estimate_range_rows(stats, "x", hi + 1, hi + 2) == 0.0
+    assert estimate_range_rows(stats, "x", lo - 2, lo - 1) == 0.0
 
 
 @settings(max_examples=150, deadline=None)
@@ -241,318 +121,3 @@ def test_axis_value_order_preserving(dts, kind):
     axis = [_axis_value(v, kind) for v in sorted(dts)]
     assert axis == sorted(axis)
     assert len(set(axis)) == len(axis)  # injective
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.integers(10, 10_000),
-    st.integers(1, 1000),
-    st.integers(1, 1000),
-    st.integers(1, 1000),
-)
-def test_eq_conjunction_bounded_and_monotone(n, ndv_a, ndv_b, ndv_g):
-    ndv_g = max(max(ndv_a, ndv_b), min(ndv_g, ndv_a * ndv_b))
-    stats = {
-        "row_count": n,
-        "columns": {
-            "a": {"type": "bigint", "ndv": ndv_a, "null_count": 0},
-            "b": {"type": "bigint", "ndv": ndv_b, "null_count": 0},
-        },
-        "column_groups": {
-            "a|b": {"columns": ["a", "b"], "ndv": ndv_g, "non_null": n}
-        },
-    }
-    one = estimate_eq_conjunction_rows(stats, {"a": 1})
-    both = estimate_eq_conjunction_rows(stats, {"a": 1, "b": 1})
-    assert -1e-9 <= both <= one + 1e-9 <= n + 1e-9
-    # group correction only raises vs independence, never above n
-    no_group = {k: v for k, v in stats.items() if k != "column_groups"}
-    indep = estimate_eq_conjunction_rows(no_group, {"a": 1, "b": 1})
-    assert both >= indep - 1e-9
-
-
-def _equidepth_stats(data: list[float], buckets: int = 8) -> dict:
-    """Equi-depth histogram built the way add_equidepth_histograms
-    stores it: quantile bounds + uniform mass per bucket."""
-    s = sorted(data)
-    n = len(s)
-    bounds = [float(s[min(n - 1, int(round(i * (n - 1) / buckets)))])
-              for i in range(buckets + 1)]
-    return {
-        "row_count": n,
-        "columns": {
-            "x": {
-                "type": "double",
-                "ndv": len(set(data)),
-                "min": min(data),
-                "max": max(data),
-                "null_count": 0,
-                "histogram": {
-                    "kind": "numeric",
-                    "bounds": bounds,
-                    "rows_per_bucket": n / buckets,
-                },
-            }
-        },
-    }
-
-
-@settings(max_examples=150, deadline=None)
-@given(
-    st.lists(
-        st.floats(-1e5, 1e5, allow_nan=False, allow_infinity=False),
-        min_size=8,
-        max_size=200,
-    ),
-    st.floats(-1.1e5, 1.1e5),
-    st.floats(-1.1e5, 1.1e5),
-)
-def test_equidepth_estimate_bounded_and_conservative(data, a, b):
-    """Equi-depth invariants: estimates live in [0, n], the full
-    range recovers ~n, containment is monotone, and a range
-    strictly outside the bounds estimates 0."""
-    lo, hi = (a, b) if a <= b else (b, a)
-    stats = _equidepth_stats(data)
-    n = len(data)
-    est = estimate_range_rows(stats, "x", lo, hi)
-    assert -1e-9 <= est <= n * (1 + 1e-9)
-    full = estimate_range_rows(stats, "x")
-    assert abs(full - n) <= 0.25 * n + 1  # quantile-grid resolution
-    # genuine containment monotonicity: widen by one inter-quantile
-    # step on each side, STILL inside the domain (widening to the
-    # full domain would clamp to exactly n and test nothing)
-    bounds = stats["columns"]["x"]["histogram"]["bounds"]
-    span = bounds[-1] - bounds[0]
-    if span > 0:
-        wlo = max(bounds[0], lo - span / 8)
-        whi = min(bounds[-1], hi + span / 8)
-        wider = estimate_range_rows(stats, "x", wlo, whi)
-        assert est <= wider + 1e-9
-    top = max(data)
-    assert estimate_range_rows(stats, "x", top + 1, top + 2) == 0.0
-
-
-# --- X60 (round 12): 2-D grid estimator invariants -------------------------
-
-
-def _grid_stats(pts: list[tuple[float, float]]) -> dict:
-    """Hand-build stats + hist2d exactly as collect_table_stats +
-    collect_histogram_2d would for two non-null double columns."""
-    xs = [p[0] for p in pts]
-    ys = [p[1] for p in pts]
-    n = len(pts)
-    stats = {
-        "row_count": n,
-        "columns": {
-            "x": {"type": "double", "ndv": len(set(xs)),
-                  "min": min(xs), "max": max(xs), "null_count": 0},
-            "y": {"type": "double", "ndv": len(set(ys)),
-                  "min": min(ys), "max": max(ys), "null_count": 0},
-        },
-    }
-    lx, hx = min(xs), max(xs)
-    ly, hy = min(ys), max(ys)
-    wx = (hx - lx) / BUCKETS
-    wy = (hy - ly) / BUCKETS
-    if wx <= 4 * max(math.ulp(lx), math.ulp(hx)) or wy <= 4 * max(
-        math.ulp(ly), math.ulp(hy)
-    ):
-        return stats  # degenerate axis: the collector skips the pair
-    counts = [0] * (BUCKETS * BUCKETS)
-    for x, y in pts:
-        i = max(0, min(BUCKETS - 1, int(math.floor((x - lx) / wx))))
-        j = max(0, min(BUCKETS - 1, int(math.floor((y - ly) / wy))))
-        counts[i * BUCKETS + j] += 1
-    stats["column_groups"] = {
-        "x|y": {
-            "columns": ["x", "y"],
-            "hist2d": {
-                "buckets": BUCKETS,
-                "x": {"col": "x", "kind": "numeric", "lo": lx, "hi": hx},
-                "y": {"col": "y", "kind": "numeric", "lo": ly, "hi": hy},
-                "counts": counts,
-            },
-        }
-    }
-    return stats
-
-
-_pts = st.lists(
-    st.tuples(
-        st.floats(min_value=-1e6, max_value=1e6,
-                  allow_nan=False, allow_infinity=False),
-        st.floats(min_value=-1e6, max_value=1e6,
-                  allow_nan=False, allow_infinity=False),
-    ),
-    min_size=4,
-    max_size=120,
-)
-
-_lo_frac = st.floats(min_value=0.0, max_value=0.5)
-_w_frac = st.floats(min_value=0.05, max_value=0.5)
-
-
-@settings(max_examples=120, deadline=None)
-@given(_pts, _lo_frac, _w_frac, _lo_frac, _w_frac,
-       _lo_frac, _w_frac, _lo_frac, _w_frac)
-def test_range_conjunction_bounded_and_monotone(
-    pts, a1, w1, c1, v1, a2, w2, c2, v2
-):
-    """Joint-grid range-conjunction estimates are (1) bounded by
-    [0, row_count], (2) bounded by every single-column estimate, and
-    (3) monotone under rectangle containment WITHIN the grid-priced
-    regime (positive-measure rectangles — a zero-measure axis falls
-    back to the 1-D equality convention, a different model by
-    documented design); (4) the full-domain rectangle recovers the
-    row count exactly when a grid exists."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
-        estimate_range_conjunction_rows,
-    )
-
-    stats = _grid_stats(pts)
-    n = stats["row_count"]
-    xs = stats["columns"]["x"]
-    ys = stats["columns"]["y"]
-
-    def rect(alo, ahi, blo, bhi):
-        return {"x": (alo, ahi), "y": (blo, bhi)}
-
-    def lerp(lo, hi, t):
-        return lo + (hi - lo) * t
-
-    # outer rectangle with positive width on both axes; inner strictly
-    # positive-width and contained within it
-    ox = [lerp(xs["min"], xs["max"], a1), lerp(xs["min"], xs["max"], a1 + w1)]
-    oy = [lerp(ys["min"], ys["max"], a2), lerp(ys["min"], ys["max"], a2 + w2)]
-    ix = [lerp(ox[0], ox[1], c1), lerp(ox[0], ox[1], c1 + v1)]
-    iy = [lerp(oy[0], oy[1], c2), lerp(oy[0], oy[1], c2 + v2)]
-
-    outer = estimate_range_conjunction_rows(stats, rect(*ox, *oy))
-    inner = estimate_range_conjunction_rows(stats, rect(*ix, *iy))
-    assert 0.0 <= outer <= n + 1e-6
-    assert inner <= outer + 1e-6 * max(1.0, outer)
-    for c, (lo, hi) in rect(*ox, *oy).items():
-        assert (
-            outer
-            <= estimate_range_rows(stats, c, lo, hi)
-            + 1e-6 * max(1.0, outer)
-        )
-    full = estimate_range_conjunction_rows(
-        stats,
-        rect(xs["min"], xs["max"], ys["min"], ys["max"]),
-    )
-    assert abs(full - n) <= 1e-6 * max(1.0, n)
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    st.floats(min_value=-1e6, max_value=1e6, allow_nan=False,
-              allow_infinity=False),
-    st.floats(min_value=-1e6, max_value=1e6, allow_nan=False,
-              allow_infinity=False),
-    st.floats(min_value=-2e6, max_value=2e6, allow_nan=False,
-              allow_infinity=False),
-    st.floats(min_value=-2e6, max_value=2e6, allow_nan=False,
-              allow_infinity=False),
-)
-def test_axis_range_only_tightens(mn, mx, alo, ahi):
-    """`axis_range` can never WIDEN a column's containment range:
-    the result is always a sub-interval of the min/max range, and an
-    inconsistent record (empty intersection) is ignored outright."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import _range
-
-    if mx < mn:
-        mn, mx = mx, mn
-    if ahi < alo:
-        alo, ahi = ahi, alo
-    st_dict = {
-        "row_count": 10,
-        "columns": {
-            "k": {
-                "type": "double", "min": mn, "max": mx,
-                "axis_range": [alo, ahi],
-            }
-        },
-    }
-    lo, hi = _range(st_dict, "k")
-    assert mn <= lo <= hi <= mx
-
-
-# --- round 13: the edge-bucket rounding gap, pinned deterministically -------
-
-
-def test_equiwidth_gap_sliver_not_priced_at_whole_bucket():
-    """Round-12 judge counterexample (VERDICT r12 §What's wrong #1):
-    `(hi-lo)/B` rounds the last bucket's nominal top BELOW the
-    declared axis `hi`, the build clamp folds the sliver's values
-    into bucket B-1, and the old containment lift then priced a
-    sliver query at the whole bucket (est 3 vs true 1). The fix
-    extends the last bucket's edge to the declared `hi` for
-    interpolation and makes the equality lift contribute nothing for
-    points OUTSIDE their bucket's nominal float range."""
-    data = [0.0, 0.0, 1.401298464324817e-45, -1.0]
-    stats = _equiwidth_stats(data)
-    h = stats["columns"]["x"]["histogram"]
-    # the premise: a real rounding gap between nominal top and hi
-    assert h["lo"] + BUCKETS * ((h["hi"] - h["lo"]) / BUCKETS) < h["hi"]
-    est = estimate_range_rows(stats, "x", 2.2250738585e-313, 1.0)
-    # true = 1 (only the subnormal); contract slack = 1 misplaced value
-    assert 0.0 <= est <= 2.0
-    # the sliver is still monotone under the full range and vs a
-    # range that genuinely covers the last bucket
-    covering = estimate_range_rows(stats, "x", -0.5, 1.0)
-    assert est <= covering + 1e-9
-    full = estimate_range_rows(stats, "x")
-    assert abs(full - len(data)) <= 1e-6 * len(data)
-
-
-def test_equiwidth_sliver_point_at_max_never_zero():
-    """Round-13 advisor finding: the sliver guard must not hard-zero a
-    DEGENERATE point query at x == hist['hi'] — hi is the observed
-    column max, a value guaranteed to hold >=1 row (possibly a whole
-    bucket of clamp-displaced values). The guard's 'overlap already in
-    est' rationale only holds for ranges; a zero-measure point query
-    has no overlap to lean on, so it falls back to bucket B-1's
-    equality estimate. The RANGE-lift path keeps the 0 contribution
-    (see test_equiwidth_gap_sliver_not_priced_at_whole_bucket)."""
-    data = [0.0, 0.0, 1.401298464324817e-45, -1.0]
-    stats = _equiwidth_stats(data)
-    h = stats["columns"]["x"]["histogram"]
-    # the premise: hi sits in the rounding sliver above the nominal top
-    assert h["lo"] + BUCKETS * ((h["hi"] - h["lo"]) / BUCKETS) < h["hi"]
-    est = estimate_range_rows(stats, "x", h["hi"], h["hi"])
-    assert est > 0.0
-    # bounded by the clamped bucket's whole count (the point_slack
-    # contract of the exactness property)
-    assert est <= h["counts"][-1] + 1e-9
-    # and the round-12 pin still holds: the range path is unchanged
-    rng = estimate_range_rows(stats, "x", 2.2250738585e-313, 1.0)
-    assert 0.0 <= rng <= 2.0
-
-
-def test_hist2d_gap_sliver_consistent_with_1d():
-    """2-D twin: _axis_overlaps must not hard-zero a rectangle whose
-    x-range lives in the rounding gap while the 1-D model prices it —
-    and the joint estimate stays bounded by every single-column
-    estimate and by the row count."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
-        estimate_range_conjunction_rows,
-    )
-
-    pts = [(0.0, 0.0), (0.0, 1.0), (1.401298464324817e-45, 2.0),
-           (-1.0, 3.0)]
-    stats = _grid_stats(pts)
-    assert "column_groups" in stats  # premise: grid collected
-    rngs = {"x": (2.2250738585e-313, 1.0), "y": (0.0, 3.0)}
-    joint = estimate_range_conjunction_rows(stats, rngs)
-    n = stats["row_count"]
-    assert 0.0 <= joint <= n
-    for c, (lo, hi) in rngs.items():
-        assert joint <= estimate_range_rows(stats, c, lo, hi) + 1e-9
-    # full-domain rectangle still recovers the row count exactly
-    xs, ys = stats["columns"]["x"], stats["columns"]["y"]
-    full = estimate_range_conjunction_rows(
-        stats,
-        {"x": (xs["min"], xs["max"]), "y": (ys["min"], ys["max"])},
-    )
-    assert abs(full - n) <= 1e-6 * n

@@ -9,6 +9,7 @@ import os
 import time
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_shivaask_username_spark.streaming.pipeline import (
@@ -469,8 +470,10 @@ def test_stream_upsert_tied_versions_replay_stable(spark, tmp_path):
 
 def test_adaptive_state_partitions_sizing(spark, sf_dir):
     """Round 14: bounded replays size state partitions to the feed
-    (ceil(bytes/32MB)) clamped to [floor, session conf]; a missing dir
-    takes the safe floor."""
+    (ceil(bytes/32MB)) clamped to [floor, session conf]; a missing feed
+    is an error, not a silent fallback to the floor."""
+    from pyspark.errors import AnalysisException
+
     from custom_python_etl_data_connector_shivaask_username_spark.streaming.pipeline import (
         MIN_STATE_PARTITIONS,
         adaptive_state_partitions,
@@ -479,10 +482,23 @@ def test_adaptive_state_partitions_sizing(spark, sf_dir):
     n = adaptive_state_partitions(spark, sf_dir)
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert MIN_STATE_PARTITIONS <= n <= max(cap, MIN_STATE_PARTITIONS)
-    assert (
+    with pytest.raises(AnalysisException):
         adaptive_state_partitions(spark, "/nonexistent/dir")
-        == MIN_STATE_PARTITIONS
+
+
+def test_adaptive_state_partitions_unknown_size_takes_floor(
+    spark, sf_dir, monkeypatch
+):
+    """A feed whose scan size is unknown (`_scan_bytes` → None) sizes
+    to the floor instead of failing on ``int(None)``."""
+    from custom_python_etl_data_connector_shivaask_username_spark.plans import stats
+    from custom_python_etl_data_connector_shivaask_username_spark.streaming.pipeline import (
+        MIN_STATE_PARTITIONS,
+        adaptive_state_partitions,
     )
+
+    monkeypatch.setattr(stats, "_scan_bytes", lambda df: None)
+    assert adaptive_state_partitions(spark, sf_dir) == MIN_STATE_PARTITIONS
 
 
 def test_run_stream_restores_shuffle_conf(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""X31 pins: one-pass ANALYZE stats correctness, sidecar roundtrip,
+"""X31 pins: one-pass ANALYZE stats correctness,
 Selinger join-cardinality estimates, and the greedy join-order planner
 (result equivalence, dims-before-fact order, stats-driven broadcast
 hints, no invented cartesians)."""
@@ -16,8 +16,6 @@ from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import
     collect_table_stats,
     estimate_join_rows,
     plan_join_tree,
-    read_stats_sidecar,
-    write_stats_sidecar,
 )
 from custom_python_etl_data_connector_shivaask_username_spark.tables import load_table
 
@@ -40,20 +38,6 @@ def test_collect_stats_one_pass_correctness(spark, sf_dir):
         for f in nation.schema.fields
         if not f.dataType.simpleString().startswith(("array", "map", "struct"))
     }
-
-
-def test_stats_sidecar_roundtrip(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "nation")
-    nation = load_table(spark, sf_dir, "nation")
-    nation.write.parquet(path)
-    stats = collect_table_stats(spark.read.parquet(path), path=path)
-    write_stats_sidecar(spark, path, stats)
-    back = read_stats_sidecar(spark, path)
-    assert back["row_count"] == stats["row_count"]
-    assert back["columns"]["n_name"]["ndv"] == stats["columns"]["n_name"]["ndv"]
-    # underscore-prefixed sidecar is invisible to the parquet reader
-    assert spark.read.parquet(path).count() == stats["row_count"]
-    assert read_stats_sidecar(spark, str(tmp_path / "missing")) is None
 
 
 def test_estimate_join_rows_fk_and_disjoint(spark, sf_dir):
@@ -273,142 +257,7 @@ def test_plan_join_tree_rejects_disconnected_graph(spark, sf_dir):
         )
 
 
-# --- X33: sample-based ANALYZE (GEE NDV scale-up) -------------------------
-
-
-def test_sampled_stats_scaleup_and_gee_bounds(spark, sf_dir):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        collect_table_stats_sampled,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    n = orders.count()
-    q = 0.2
-    stats = collect_table_stats_sampled(orders, fraction=q, seed=7)
-    assert stats["sampled"]["ndv_method"] == "GEE"
-    assert stats["sampled"]["sample_rows"] < n
-    # row count unbiased: binomial 4-sigma band
-    sigma = (n * q * (1 - q)) ** 0.5 / q
-    assert abs(stats["row_count"] - n) <= 4 * sigma
-    # unique key: GEE's ratio-error guarantee is sqrt(1/q)
-    import math
-
-    true_ndv = n  # o_orderkey is unique
-    est = stats["columns"]["o_orderkey"]["ndv"]
-    ratio = math.sqrt(1 / q)
-    assert true_ndv / ratio <= est <= true_ndv * ratio
-    # duplicates-heavy column: f1~0 so GEE is near-exact
-    true_status = (
-        orders.select("o_orderstatus").distinct().count()
-    )
-    assert stats["columns"]["o_orderstatus"]["ndv"] == true_status
-    # full-table bytes still come from the file index (metadata-only)
-    assert stats["size_bytes"] and stats["size_bytes"] > 0
-
-
-def test_sampled_stats_determinism_and_edges(spark, sf_dir):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        collect_table_stats,
-        collect_table_stats_sampled,
-    )
-
-    nation = load_table(spark, sf_dir, "nation")
-    a = collect_table_stats_sampled(nation, 0.5, seed=3)
-    b = collect_table_stats_sampled(nation, 0.5, seed=3)
-    assert a == b  # same seed, same dict
-    full = collect_table_stats_sampled(nation, 1.0)
-    assert "sampled" not in full  # degenerates to the full scan
-    assert full["row_count"] == nation.count()
-    with pytest.raises(ValueError, match="fraction"):
-        collect_table_stats_sampled(nation, 0.0)
-    # null accounting: a column with planted nulls scales its count
-    # and the null group never inflates NDV
-    withnulls = nation.withColumn(
-        "maybe",
-        F.when(F.col("n_nationkey") % 2 == 0, F.col("n_name")),
-    )
-    s = collect_table_stats_sampled(withnulls, 0.6, seed=11)
-    m = s["sampled"]["sample_rows"]
-    assert 0 < s["columns"]["maybe"]["null_count"] <= s["row_count"]
-    assert s["columns"]["maybe"]["ndv"] <= s["row_count"]
-
-
-def test_planner_order_stable_under_sampled_stats(spark, sf_dir):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        collect_table_stats_sampled,
-        plan_join_tree,
-    )
-
-    tables = {
-        "customer": load_table(spark, sf_dir, "customer"),
-        "nation": load_table(spark, sf_dir, "nation"),
-        "region": load_table(spark, sf_dir, "region"),
-    }
-    edges = [
-        ("customer", "c_nationkey", "nation", "n_nationkey"),
-        ("nation", "n_regionkey", "region", "r_regionkey"),
-    ]
-    full_stats = {k: collect_table_stats(v) for k, v in tables.items()}
-    samp_stats = {
-        k: collect_table_stats_sampled(v, 0.3, seed=5)
-        for k, v in tables.items()
-    }
-    _, order_full = plan_join_tree(tables, edges, stats=full_stats)
-    planned, order_samp = plan_join_tree(tables, edges, stats=samp_stats)
-    assert order_samp == order_full  # dims-first order survives sampling
-    assert planned.count() == tables["customer"].count()
-
-
-# --- X36: histogram sidecars + filter-selectivity modeling ----------------
-
-
-def test_histogram_range_estimates_track_actuals(spark, sf_dir):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_histograms,
-        estimate_range_rows,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    stats = add_histograms(
-        orders,
-        collect_table_stats(orders),
-        columns=["o_totalprice", "o_orderdate"],
-    )
-    h = stats["columns"]["o_totalprice"]["histogram"]
-    assert len(h["counts"]) == 64
-    assert sum(h["counts"]) == stats["row_count"]
-    lo, hi = h["lo"], h["hi"]
-    for qlo, qhi in [
-        (lo + 0.25 * (hi - lo), lo + 0.5 * (hi - lo)),
-        (None, lo + 0.1 * (hi - lo)),
-        (lo + 0.9 * (hi - lo), None),
-    ]:
-        est = estimate_range_rows(stats, "o_totalprice", qlo, qhi)
-        cond = F.lit(True)
-        if qlo is not None:
-            cond &= F.col("o_totalprice") >= qlo
-        if qhi is not None:
-            cond &= F.col("o_totalprice") <= qhi
-        actual = orders.filter(cond).count()
-        band = max(0.02 * stats["row_count"], 0.25 * actual)
-        assert abs(est - actual) <= band, (qlo, qhi, est, actual)
-    # date axis: a one-year slice of o_orderdate
-    import datetime as dt
-
-    est = estimate_range_rows(
-        stats, "o_orderdate", dt.date(1995, 1, 1), dt.date(1995, 12, 31)
-    )
-    actual = orders.filter(
-        (F.col("o_orderdate") >= "1995-01-01")
-        & (F.col("o_orderdate") <= "1995-12-31")
-    ).count()
-    assert abs(est - actual) <= max(0.02 * stats["row_count"], 0.25 * actual)
-    # disjoint range estimates 0; unbounded both sides = all non-null
-    assert estimate_range_rows(stats, "o_totalprice", hi + 1, hi + 2) == 0
-    full = estimate_range_rows(stats, "o_totalprice")
-    assert full == pytest.approx(
-        stats["row_count"] - stats["columns"]["o_totalprice"]["null_count"]
-    )
+# --- X36: filter-selectivity modeling -------------------------------------
 
 
 def test_apply_filter_to_stats_metadata_only_planning(spark, sf_dir):
@@ -540,61 +389,6 @@ def test_plan_join_tree_rejects_self_join_shared_plan(spark, sf_dir):
         assert joined.count() == nation.count()
 
 
-def test_equidepth_histogram_beats_equiwidth_on_skew(spark):
-    """A hot value swallows the equi-width range into one bucket; the
-    equi-depth variant keeps resolution where the mass is. Both stay
-    estimators — the pin is that equi-depth's error on a tail
-    predicate over the skewed column is far smaller."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_equidepth_histograms,
-        add_histograms,
-        estimate_range_rows,
-    )
-
-    # 90% of rows are 0; the rest spread over [1, 1_000_000]
-    df = spark.range(0, 20_000).select(
-        F.when(F.col("id") % 10 != 0, F.lit(0.0))
-        .otherwise((F.col("id") % 997) * 1003.0)
-        .alias("x")
-    )
-    base = collect_table_stats(df)
-    ew = add_histograms(df, base, columns=["x"])
-    ed = add_equidepth_histograms(df, base, columns=["x"])
-    assert ed["columns"]["x"]["histogram"]["kind"] == "numeric"
-    lo, hi = 1.0, 200_000.0
-    actual = df.filter((F.col("x") >= lo) & (F.col("x") <= hi)).count()
-    err_ew = abs(estimate_range_rows(ew, "x", lo, hi) - actual)
-    err_ed = abs(estimate_range_rows(ed, "x", lo, hi) - actual)
-    assert err_ed < err_ew / 3, (err_ed, err_ew, actual)
-    assert err_ed <= 0.05 * base["row_count"]
-    # the hot value itself: a zero-width bucket counts whole
-    est_hot = estimate_range_rows(ed, "x", -0.5, 0.5)
-    actual_hot = df.filter(F.col("x") == 0.0).count()
-    assert abs(est_hot - actual_hot) <= 0.05 * base["row_count"]
-    # full range equals the non-null count for both variants
-    assert estimate_range_rows(ed, "x") == pytest.approx(
-        base["row_count"], rel=0.02
-    )
-
-
-def test_equidepth_apply_filter_and_planner_compat(spark, sf_dir):
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_equidepth_histograms,
-        apply_filter_to_stats,
-    )
-
-    cust = load_table(spark, sf_dir, "customer")
-    stats = add_equidepth_histograms(
-        cust, collect_table_stats(cust), columns=["c_acctbal"]
-    )
-    h = stats["columns"]["c_acctbal"]["histogram"]
-    mid = h["bounds"][len(h["bounds"]) // 2]  # the median
-    f = apply_filter_to_stats(stats, "c_acctbal", lo=mid)
-    actual = cust.filter(F.col("c_acctbal") >= mid).count()
-    assert abs(f["row_count"] - actual) <= max(5, 0.15 * actual)
-    assert "histogram" not in f["columns"]["c_acctbal"]
-
-
 # --- round-8 review pins: the five stats defects the code review found ---
 
 
@@ -622,116 +416,6 @@ def test_plan_join_tree_left_join_preserves_user_order(spark):
             [("C", "k2", "B", "k"), ("A", "k", "B", "k")],
             how="left",
         )
-
-
-def test_timestamp_histogram_tz_invariant(spark, sf_dir):
-    """The timestamp bucketing axis is instant-based on BOTH sides
-    (Spark unix_micros; driver .timestamp() on collect's driver-local
-    naive datetimes), so histograms survive a driver timezone that is
-    not UTC — the old naive-as-UTC driver mapping shifted every bucket
-    by the UTC offset and dropped rows to negative indices."""
-    import os
-    import time
-
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_histograms,
-        estimate_range_rows,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("ts")
-    old_tz = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"
-    time.tzset()
-    try:
-        stats = add_histograms(ev, collect_table_stats(ev), columns=["ts"])
-        h = stats["columns"]["ts"]["histogram"]
-        nn = stats["row_count"] - stats["columns"]["ts"]["null_count"]
-        # no rows fall off the axis, and the mass is spread (the old
-        # bug piled the 5h overflow into the clamped top bucket)
-        assert sum(h["counts"]) == nn
-        assert max(h["counts"]) < 0.30 * nn
-        lo, hi = stats["columns"]["ts"]["min"], stats["columns"]["ts"]["max"]
-        mid = lo + (hi - lo) / 2
-        est = estimate_range_rows(stats, "ts", lo, mid)
-        actual = ev.filter(F.col("ts") <= mid).count()
-        assert abs(est - actual) <= max(10, 0.10 * nn), (est, actual)
-    finally:
-        if old_tz is None:
-            del os.environ["TZ"]
-        else:
-            os.environ["TZ"] = old_tz
-        time.tzset()
-
-
-def test_ntz_histogram_session_tz_invariant(spark):
-    """timestamp_ntz is a wall clock: its axis must not shift with
-    the session timezone (the cast-to-timestamp offset is undone)."""
-    from datetime import datetime
-
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_histograms,
-        estimate_range_rows,
-    )
-
-    df = spark.createDataFrame(
-        [(datetime(2024, 1, 1 + d, h),) for d in range(4) for h in range(16)],
-        "w timestamp_ntz",
-    )
-    old = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        stats = add_histograms(df, collect_table_stats(df), columns=["w"])
-        h = stats["columns"]["w"]["histogram"]
-        assert sum(h["counts"]) == 64
-        assert max(h["counts"]) <= 3  # ~uniform, nothing piled up
-        est = estimate_range_rows(
-            stats, "w", datetime(2024, 1, 1), datetime(2024, 1, 2)
-        )
-        actual = df.filter(F.col("w") <= F.lit(datetime(2024, 1, 2))).count()
-        assert abs(est - actual) <= 3, (est, actual)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
-
-
-def test_sidecar_roundtrip_revives_temporal_stats(spark, sf_dir, tmp_path):
-    """date/timestamp min/max JSON-serialize as strings; the reader
-    revives them so sidecar-loaded stats histogram and range-refine
-    exactly like fresh ones (add_histograms used to crash on the
-    string, and temporal keys silently lost containment)."""
-    import datetime as dt
-
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_histograms,
-        estimate_join_rows,
-    )
-
-    path = str(tmp_path / "orders")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    orders.write.parquet(path)
-    df = spark.read.parquet(path)
-    write_stats_sidecar(spark, path, collect_table_stats(df, path=path))
-    back = read_stats_sidecar(spark, path)
-    assert isinstance(back["columns"]["o_orderdate"]["min"], dt.date)
-    with_hist = add_histograms(df, back, columns=["o_orderdate"])
-    h = with_hist["columns"]["o_orderdate"]["histogram"]
-    assert sum(h["counts"]) == back["row_count"]
-    # containment refinement works on the revived temporal range:
-    # joining on a date key against a disjoint-range twin → ~0
-    shifted = {
-        **back,
-        "columns": {
-            **back["columns"],
-            "o_orderdate": {
-                **back["columns"]["o_orderdate"],
-                "min": dt.date(2050, 1, 1),
-                "max": dt.date(2051, 1, 1),
-            },
-        },
-    }
-    est = estimate_join_rows(back, "o_orderdate", shifted, "o_orderdate")
-    assert est == 0.0
 
 
 def test_apply_filter_unknown_ndv_is_conservative(spark, sf_dir):
@@ -773,42 +457,6 @@ def test_plan_join_tree_same_named_columns_stay_per_table(spark):
     assert set(order) == {"fact", "dim_a", "dim_b"}
 
 
-def test_histogram_join_estimate_sees_matching_skew(spark):
-    """Both join keys share a hot value: uniform-NDV Selinger averages
-    the hot key away and underestimates by orders of magnitude; the
-    bucket-aligned histogram join (zero-width equi-depth buckets as
-    colocated point masses) recovers the quadratic hot-key mass."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_equidepth_histograms,
-        estimate_join_rows,
-    )
-
-    left = spark.range(0, 20_000).select(
-        F.when(F.col("id") % 10 != 0, F.lit(500))
-        .otherwise(F.col("id") % 1000)
-        .alias("k")
-    )
-    right = spark.range(0, 10_000).select(
-        F.when(F.col("id") % 2 == 0, F.lit(500))
-        .otherwise(F.col("id") % 1000)
-        .alias("k")
-    )
-    actual = left.join(right, "k").count()
-    lbase, rbase = collect_table_stats(left), collect_table_stats(right)
-    selinger = estimate_join_rows(lbase, "k", rbase, "k")
-    assert selinger < actual / 50  # the averaging failure, planted
-    lh = add_equidepth_histograms(left, lbase, columns=["k"])
-    rh = add_equidepth_histograms(right, rbase, columns=["k"])
-    hist_est = estimate_join_rows(lh, "k", rh, "k")
-    assert abs(hist_est - actual) <= 0.25 * actual, (hist_est, actual)
-    # one-sided histograms fall back to Selinger (no crash, same value)
-    assert estimate_join_rows(lh, "k", rbase, "k") == selinger
-    # disjoint histogrammed domains estimate ~0
-    far = spark.range(0, 1000).select((F.col("id") + 10_000_000).alias("k"))
-    fh = add_equidepth_histograms(far, collect_table_stats(far), columns=["k"])
-    assert estimate_join_rows(lh, "k", fh, "k") == 0.0
-
-
 def test_non_inner_fold_skips_stats_scans_and_rejects_semi_chains(spark):
     """right/full folds take no stats-driven decision, so the planner
     must not ANALYZE-scan every table just to ignore the numbers; and
@@ -847,26 +495,6 @@ def test_non_inner_fold_skips_stats_scans_and_rejects_semi_chains(spark):
             [("A", "k", "B", "k"), ("B", "x", "C", "x")],
             how="leftsemi",
         )
-
-
-def test_histogram_skips_infinite_span_column(spark):
-    """±DBL_MAX-scale sentinel junk makes hi-lo overflow to inf; the
-    guard must leave the column on the min/max fallback instead of
-    writing a width=inf histogram whose bounded estimates collapse
-    to zero."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        add_histograms,
-        estimate_range_rows,
-    )
-
-    df = spark.createDataFrame(
-        [(-1.65e308,), (1.65e308,)] + [(float(i),) for i in range(100)],
-        "x double",
-    )
-    stats = add_histograms(df, collect_table_stats(df), columns=["x"])
-    assert "histogram" not in stats["columns"]["x"]
-    est = estimate_range_rows(stats, "x", 0.0, 99.0)
-    assert est > 0  # fallback, not a silent zero
 
 
 def test_range_estimate_survives_infinite_span_column(spark):
@@ -1009,7 +637,7 @@ def test_plan_join_tree_exchange_aware_chain_ordering(spark):
 
 
 def test_plan_join_tree_unknown_row_count_is_conservative(spark, sf_dir):
-    """Round-9 review finding: a sidecar-partial stats entry with
+    """Round-9 review finding: a partial stats entry with
     row_count=None must resolve as HUGE — never broadcastable (size
     derived from size_bytes when present), and never a TypeError in
     the shuffle-regime greedy."""
@@ -1358,21 +986,15 @@ def test_plan_join_tree_flip_keeps_streamed_scan_partitioning(spark):
     assert joined.count() == want
 
 
-def test_composite_key_edges_plan_on_group_ndv(spark):
+def test_composite_key_edges_plan_on_max_component_ndv(spark):
     """Round-11 verdict ask #6: `plan_join_tree` edges accept column
-    TUPLES. The composite join's NDV comes from X37 group statistics
-    when collected (falling back to the max single-column NDV — the
-    provable lower bound), and only the tuple edge plans the star
-    correctly: per-column Selinger over (a, b) overestimates this
-    planted pair-key join ~150x, so both the fallback and the old
-    two-single-edges encoding defer the selective composite fold and
-    drag a 80x-larger intermediate through the remaining join. Results
-    are identical either way. Also pins the tuple threading through
-    the exchange-aware partitioning keys (subset rule: a partitioning
-    on (a,b) satisfies an edge only if {a,b} <= its columns)."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.column_groups import (
-        collect_column_group_stats,
-    )
+    TUPLES. The composite join's NDV is the max single-column NDV — the
+    provable lower bound — so per-column Selinger over (a, b)
+    overestimates this planted pair-key join ~150x and the planner
+    defers the composite fold; results are identical either way. Also
+    pins the arity guard and the tuple threading through the
+    exchange-aware partitioning keys (subset rule: a partitioning on
+    (a,b) satisfies an edge only if {a,b} <= its columns)."""
     from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
         _part_satisfied,
         _scan_part_satisfied,
@@ -1398,39 +1020,25 @@ def test_composite_key_edges_plan_on_group_ndv(spark):
         collect_table_stats(B),
         collect_table_stats(C),
     )
-    sag = collect_column_group_stats(A, sa, [["a", "b"]])
-    sbg = collect_column_group_stats(B, sb, [["a", "b"]])
 
     truth = A.join(B, ["a", "b"]).count()
-    est_group = estimate_join_rows(sag, ("a", "b"), sbg, ("a", "b"))
-    est_fallback = estimate_join_rows(sa, ("a", "b"), sb, ("a", "b"))
-    assert abs(est_group - truth) <= 0.2 * truth, (est_group, truth)
-    assert est_fallback > 50 * truth  # the per-column overestimate
+    est = estimate_join_rows(sa, ("a", "b"), sb, ("a", "b"))
+    max_ndv = max(
+        s["columns"][c]["ndv"] for s in (sa, sb) for c in ("a", "b")
+    )
+    assert est == pytest.approx(10_000 * 30_000 / max_ndv)
+    assert est > 50 * truth  # the per-column overestimate
 
     tbl = {"A": A, "B": B, "C": C}
-    edges_t = [("A", ("a", "b"), "B", ("a", "b")), ("A", "x", "C", "x")]
     th = 1024 * 1024  # B and C are too big to broadcast, A fits
-    good, o_good = plan_join_tree(
-        tbl, edges_t, stats={"A": sag, "B": sbg, "C": sc},
-        broadcast_threshold=th,
-    )
-    # only the group-NDV estimate folds the selective composite join
-    # FIRST (10k intermediate into C) — the fallback and the legacy
-    # two-single-edges encoding both defer B behind an 800k intermediate
-    assert o_good == ["A", "B", "C"], o_good
-    blind, o_blind = plan_join_tree(
-        tbl, edges_t, stats={"A": sa, "B": sb, "C": sc},
-        broadcast_threshold=th,
-    )
-    assert o_blind == ["A", "C", "B"], o_blind
-    legacy, o_legacy = plan_join_tree(
+    planned, order = plan_join_tree(
         tbl,
-        [("A", "a", "B", "a"), ("A", "b", "B", "b"), ("A", "x", "C", "x")],
+        [("A", ("a", "b"), "B", ("a", "b")), ("A", "x", "C", "x")],
         stats={"A": sa, "B": sb, "C": sc},
         broadcast_threshold=th,
     )
-    assert o_legacy == ["A", "C", "B"], o_legacy
-    assert good.count() == blind.count() == legacy.count() == 800_000
+    assert order == ["A", "C", "B"], order
+    assert planned.count() == 800_000
 
     # arity mismatch is a loud error, not a silent zip truncation
     with pytest.raises(ValueError, match="arity"):
