@@ -986,15 +986,16 @@ def test_plan_join_tree_flip_keeps_streamed_scan_partitioning(spark):
     assert joined.count() == want
 
 
-def test_composite_key_edges_plan_on_max_component_ndv(spark):
+def test_composite_key_edges_plan_on_group_ndv(spark):
     """Round-11 verdict ask #6: `plan_join_tree` edges accept column
-    TUPLES. The composite join's NDV is the max single-column NDV — the
-    provable lower bound — so per-column Selinger over (a, b)
-    overestimates this planted pair-key join ~150x and the planner
-    defers the composite fold; results are identical either way. Also
-    pins the arity guard and the tuple threading through the
-    exchange-aware partitioning keys (subset rule: a partitioning on
-    (a,b) satisfies an edge only if {a,b} <= its columns)."""
+    TUPLES. The composite join's NDV (`_group_ndv`) is the max
+    single-column NDV — the provable lower bound — so per-column
+    Selinger over (a, b) overestimates this planted pair-key join
+    ~150x and the planner defers the composite fold; results are
+    identical either way. Also pins the arity guard and the tuple
+    threading through the exchange-aware partitioning keys (subset
+    rule: a partitioning on (a,b) satisfies an edge only if
+    {a,b} <= its columns)."""
     from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
         _part_satisfied,
         _scan_part_satisfied,
