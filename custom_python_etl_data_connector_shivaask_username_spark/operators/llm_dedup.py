@@ -1512,36 +1512,7 @@ def incremental_dedup(
         F.col(id_col).alias("cor_id"),
         F.size(cor_grams).alias("cor_n"),
     )
-    # The gram probe join routes through plan_join_tree under honest
-    # gram-mass bounds — char-3-grams ≈ one per character, characters
-    # ≈ 3× parquet bytes.
-    # ONE Catalyst-estimate read per base frame (round 14, plan-time
-    # cut): stats_from_plan triggers a full optimization of the frame's
-    # logical tree (~40 ms + tree size), so it runs on the two SIMPLE
-    # filtered scans only; every derived bound below is arithmetic on
-    # these two numbers — never on the anti-join/gram mega-trees.
-    from ..plans.stats import plan_join_tree, stats_from_plan
-
-    s_inc = stats_from_plan(increment)
-    inc_bytes = int(s_inc["size_bytes"] or 1)
-    # increment docs: rowCount when Catalyst has one, else bytes at a
-    # ~300 B/doc fixture width — only feeds small-side broadcast hints
-    n_inc = int(s_inc.get("row_count") or max(1, inc_bytes // 300))
-
-    def _gram_stats(src_bytes: int, width: int) -> dict:
-        n = max(1, 3 * src_bytes)
-        return {"row_count": n, "size_bytes": n * width, "columns": {}}
-
-    cor_bytes = int(stats_from_plan(corpus)["size_bytes"] or 1)
-    gram_pairs, _order = plan_join_tree(
-        {"inc_g": inc_g, "cor_g": cor_g},
-        [("inc_g", "gram", "cor_g", "gram")],
-        # widths: (inc_id long + 3-char gram) each side
-        stats={
-            "inc_g": _gram_stats(inc_bytes, 20),
-            "cor_g": _gram_stats(cor_bytes, 20),
-        },
-    )
+    gram_pairs = inc_g.join(cor_g, "gram")
     near_c = (
         gram_pairs
         .groupBy("inc_id", "cor_id")
@@ -1557,46 +1528,13 @@ def incremental_dedup(
         .withColumn("_near_c", F.lit(True))
     )
 
-    # Round 12 (verdict ask #1 — planner dogfooding): the disposition
-    # fold routes through plan_join_tree. All four frames share the
-    # increment's lineage, which is exactly the graph shape the X57
-    # USING mode exists for (explicit attribute predicates would
-    # resolve trivially-true); the planner folds the three left edges
-    # as written and contributes stats-driven broadcast hints on the
-    # flag frames. Round 14 (plan-time cut, VERDICT r13 ask #4): the
-    # stats are increment-bounded DERIVATIONS from the one base
-    # estimate above — every flag frame holds at most one 9-byte
-    # (id, bool) row per increment doc by construction — instead of
-    # four stats_from_plan calls, the worst of which re-optimized the
-    # whole near_c gram-pipeline tree on every planning (the 449 ms
-    # plan-construction outlier in SCALE.md's round-13 table).
-    def _inc_bounded(width: int) -> dict:
-        return {
-            "row_count": n_inc,
-            "size_bytes": n_inc * width,
-            "columns": {},
-        }
-
-    frames = {
-        "inc": inc_h.select("id"),
-        "exact_c": exact_c,
-        "exact_b": exact_b,
-        "near_c": near_c,
-    }
-    folded, _order = plan_join_tree(
-        frames,
-        [
-            ("inc", "id", "exact_c", "id"),
-            ("inc", "id", "exact_b", "id"),
-            ("inc", "id", "near_c", "id"),
-        ],
-        stats={
-            "inc": _inc_bounded(8),
-            "exact_c": _inc_bounded(9),
-            "exact_b": _inc_bounded(9),
-            "near_c": _inc_bounded(9),
-        },
-        how="left",
+    # every flag frame holds at most one (id, bool) row per increment
+    # doc: each hash-attaches to the increment ids as written
+    folded = (
+        inc_h.select("id")
+        .join(F.broadcast(exact_c), "id", "left")
+        .join(F.broadcast(exact_b), "id", "left")
+        .join(F.broadcast(near_c), "id", "left")
     )
     return folded.select(
         F.col("id").alias(id_col),

@@ -29,7 +29,7 @@ from ..functions.text import (
     whitespace_tokens,
 )
 from ..registry import query
-from ..tables import load_table, spread_small_input
+from ..tables import bytes_conf, load_table, spread_small_input
 from .scalars import STRING_ORACLE_COLS, string_feature_cols
 
 # --- TF-IDF (includes raw term frequencies) -----------------------------------
@@ -596,44 +596,25 @@ def lm_quality_scores(docs: DataFrame) -> DataFrame:
             .alias("logp_q"),
         )
     )
-    # Round 12 (verdict ask #1 — planner dogfooding): the corpus-side
-    # probe join routes through plan_join_tree. big and model_scored
-    # share lineage (the model IS an aggregate of big), so the X57
-    # USING mode folds them on the merged gram column — byte-identical
-    # to the old hand-written `big.join(model_scored, "gram")`. Stats
-    # are HONEST gram-mass bounds derived from the docs frame's scan
-    # size, NOT stats_from_plan on big itself: Catalyst passes the
-    # child's sizeInBytes straight through Generate, so the exploded
-    # gram frame claims corpus-scan size (measured 27.8 KB claimed vs
-    # ~700 KB real at sf0.01) and the gap grows with scale — the
-    # planner would broadcast an exploded corpus at exactly the scale
-    # where that kills the driver. Bound instead: gram rows ≈ text
-    # bytes (≈3× parquet bytes) / 6 B per word; model rows ≤ gram rows
-    # (distinct ≤ total). Under the broadcast budget the planner picks
-    # the model-side broadcast (one fewer corpus exchange); past it —
-    # where the model table is itself fact-sized — both sides exceed
-    # and the fold is the same gram-keyed shuffle join as before,
-    # which is the documented 100 TB shape.
-    from ..plans.stats import plan_join_tree, stats_from_plan
-
-    scan_bytes = stats_from_plan(docs)["size_bytes"] or 1
-    gram_rows = max(1, (3 * scan_bytes) // 6)
-    frames = {"big": big, "model_scored": model_scored}
-    edges = [("big", "gram", "model_scored", "gram")]
-    probe_stats = {
-        # widths: (doc_id long + gram) vs (gram + logp_q long)
-        "big": {
-            "row_count": gram_rows,
-            "size_bytes": gram_rows * 24,
-            "columns": {},
-        },
-        "model_scored": {
-            "row_count": gram_rows,
-            "size_bytes": gram_rows * 16,
-            "columns": {},
-        },
-    }
-    probe, _order = plan_join_tree(frames, edges, stats=probe_stats)
+    # Catalyst passes the docs scan size straight through Generate, so
+    # it sizes the exploded gram frame at the scan size (27.8 KB
+    # claimed vs ~700 KB real at sf0.01), a gap that grows with scale.
+    # The model side is therefore broadcast only while an honest
+    # gram-mass bound fits the broadcast budget: text bytes ≈ 3×
+    # parquet bytes at ~6 B per word, so model rows ≤ gram rows ≈ scan
+    # bytes / 2, at 16 B per (gram, logp_q) row. Past the budget the
+    # hint is dropped and Catalyst/AQE plan the probe.
+    budget = bytes_conf(
+        docs.sparkSession,
+        "spark.sql.autoBroadcastJoinThreshold",
+        10 * 1024 * 1024,
+    )
+    scan_bytes = int(
+        str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    if 0 < budget and 8 * scan_bytes <= budget:
+        model_scored = F.broadcast(model_scored)
+    probe = big.join(model_scored, "gram")
     scored = (
         probe
         .groupBy("doc_id")

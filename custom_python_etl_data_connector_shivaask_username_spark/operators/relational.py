@@ -46,63 +46,37 @@ ORDER BY r_name, n_name
 """
 
 
-#: the flagship star's join graph — also the planner pin's fixture
-REVENUE_STAR_EDGES = [
-    ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-    ("orders", "o_custkey", "customer", "c_custkey"),
-    ("customer", "c_nationkey", "nation", "n_nationkey"),
-    ("nation", "n_regionkey", "region", "r_regionkey"),
-]
-
-#: build-side budget for the planner-routed star (bytes). The greedy's
-#: width model sums FULL table widths, but Catalyst prunes the
-#: accumulated side down to the grouping keys + join keys before any
-#: broadcast — the estimate is a several-x upper bound, so the
-#: conservative 10 MB session default would refuse broadcasts that
-#: materialize at ~3 MB. 64 MB is the classic executor-memory-safe
-#: build budget; past it the planner correctly degrades to SMJ.
-REVENUE_STAR_BROADCAST_BUDGET = 64 * 1024 * 1024
-
-
-def plan_revenue_star(spark: SparkSession, sf_dir: str):
-    """The planner-routed join tree behind `q_revenue_by_nation`: the
-    orders date predicate is DECLARED once (`filters=`), which applies
-    both the frame filter and its `apply_filter_to_stats` metadata
-    twin (X36 — never a scan of the filtered frame); the rest of the
-    statistics come from the session cache (X31), and
-    `plan_join_tree` chooses order + broadcast hints. Returns
-    ``(joined frame, planner-chosen order)`` so tests can pin the
-    order alongside the executed plan."""
-    import datetime as _dt
-
-    from ..tables import plan_star_join
-
-    li = spread_small_input(load_table(spark, sf_dir, "lineitem"))
-    return plan_star_join(
-        spark,
-        sf_dir,
-        REVENUE_STAR_EDGES,
-        tables={"lineitem": li},
-        filters={"orders": ("o_orderdate", _dt.datetime(1995, 1, 1), None)},
-        broadcast_threshold=REVENUE_STAR_BROADCAST_BUDGET,
-    )
-
-
 @query("q_revenue_by_nation", oracle=_REVENUE_BY_NATION_ORACLE, plan_memo=True)
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1/J5, planner-routed (round 9): the join order and broadcast
-    hints come from `plan_join_tree` over cached X31 stats + the X36
-    filtered-orders model — not hand-written hints. At bench scale the
-    planner builds the dim side (region→nation→customer→orders, all
-    broadcast) and flips the build side so lineitem streams through
-    BroadcastHashJoins with zero fact-side exchange; past the build
-    budget it degrades to the bucketed-SMJ shape instead.
+    """J1/J5: the fact leads and every dimension hash-attaches through
+    an explicit ``broadcast()``, so lineitem streams through four fused
+    BroadcastHashJoins with zero fact-side exchange.
 
-    The fact side goes through ``spread_small_input``: with every dim
-    broadcast, the joins + partial agg all fuse into the lineitem scan
-    stage. Exact-decimal revenue keeps results row-order-independent.
+    The orders date literal is cast to the column's type, so the
+    comparison stays column-cast-free and is pushed into the orders
+    scan (a naive datetime against ``timestamp_ntz`` would otherwise
+    cast the column). The fact side goes through
+    ``spread_small_input``: with every dim broadcast, the joins +
+    partial agg all fuse into the lineitem scan stage. Exact-decimal
+    revenue keeps results row-order-independent.
     """
-    joined, _order = plan_revenue_star(spark, sf_dir)
+    import datetime as _dt
+
+    li = spread_small_input(load_table(spark, sf_dir, "lineitem"))
+    orders = load_table(spark, sf_dir, "orders")
+    since = F.lit(_dt.datetime(1995, 1, 1)).cast(
+        orders.schema["o_orderdate"].dataType
+    )
+    orders = orders.filter(F.col("o_orderdate") >= since)
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    joined = (
+        li.join(F.broadcast(orders), li["l_orderkey"] == orders["o_orderkey"])
+        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
+        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
+        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
+    )
     return (
         joined.groupBy("r_name", "n_name")
         .agg(
@@ -166,55 +140,22 @@ def q_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned join shapes (semi+anti+left-outer and full-outer — the union
     is plan-transparent, asserted in tests/test_plans.py).
     """
-    # Round 12 (verdict ask #1 — planner dogfooding): every join in
-    # this query routes through the X31-55 planner instead of
-    # hand-written join calls. The three customer-orders folds go
-    # through plan_star_join (cached table stats attached; the planner
-    # contributes the stats-driven broadcast hint on the incoming
-    # orders side — outer-family folds never reorder, the edge order
-    # IS the semantics), and the counts⋈presence inner fold goes
-    # through plan_join_tree with per-customer stats OVERLAID from the
-    # customer table's stats (both sides are per-customer by construction:
-    # groupBy(c_custkey) / semi∪anti partition — the documented
-    # derived-frame pattern, no extra scan). Join shapes stay pinned
-    # in tests/test_plans.py; the oracle row verifies the migration.
-    from ..plans.stats import plan_join_tree
-    from ..tables import plan_star_join, table_stats_cached
-
-    edge = [("customer", "c_custkey", "orders", "o_custkey")]
-    left_joined, _ = plan_star_join(spark, sf_dir, edge, how="left")
-    counts = left_joined.groupBy("c_custkey", "c_name").agg(
-        F.count("o_orderkey").alias("order_count")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    on = cust["c_custkey"] == orders["o_custkey"]
+    counts = (
+        cust.join(orders, on, "left")
+        .groupBy("c_custkey", "c_name")
+        .agg(F.count("o_orderkey").alias("order_count"))
     )
-    semi, _ = plan_star_join(spark, sf_dir, edge, how="left_semi")
-    with_orders = semi.select("c_custkey", F.lit(True).alias("has_orders"))
-    anti, _ = plan_star_join(spark, sf_dir, edge, how="left_anti")
-    without_orders = anti.select(
+    with_orders = cust.join(orders, on, "left_semi").select(
+        "c_custkey", F.lit(True).alias("has_orders")
+    )
+    without_orders = cust.join(orders, on, "left_anti").select(
         "c_custkey", F.lit(False).alias("has_orders")
     )
     presence = with_orders.unionByName(without_orders)
-
-    cst = table_stats_cached(spark, sf_dir, "customer")
-    n_cust = int(cst.get("row_count") or 1)
-
-    def per_customer_stats(bytes_per_row: int) -> dict:
-        return {
-            "row_count": n_cust,
-            "size_bytes": n_cust * bytes_per_row,
-            "columns": {"c_custkey": dict(cst["columns"]["c_custkey"])},
-        }
-
-    # Frame + stats overrides keep the derived-side planning of the
-    # inner counts⋈presence fold scan-free.
-    folded, _order = plan_join_tree(
-        {"counts": counts, "presence": presence},
-        [("counts", "c_custkey", "presence", "c_custkey")],
-        # key + name + count vs key + bool: table-width derivations
-        stats={
-            "counts": per_customer_stats(48),
-            "presence": per_customer_stats(16),
-        },
-    )
+    folded = counts.join(F.broadcast(presence), "c_custkey")
     customer_branch = folded.select(
         F.lit("customer_orders").alias("branch"),
         counts["c_custkey"].alias("key"),
@@ -254,19 +195,9 @@ def nation_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_nationkey").alias("k"))
         .distinct()
     )
-    # Round 12 (planner dogfooding): the full outer routes through
-    # plan_join_tree's syntactic fold. The planner takes NO decision
-    # on a full join (neither side can legally broadcast) — routing it
-    # pins that the fold path preserves full-outer semantics untouched,
-    # and keeps BOTH k columns (explicit-predicate mode: c and s are
-    # lineage-distinct reads), which the per-side presence flags need.
-    from ..plans.stats import plan_join_tree
-
-    folded, _order = plan_join_tree(
-        {"cust_keys": c, "supp_keys": s},
-        [("cust_keys", "k", "supp_keys", "k")],
-        how="full",
-    )
+    # explicit predicate, not USING: both k columns survive the full
+    # outer, and the per-side presence flags need them
+    folded = c.join(s, c["k"] == s["k"], "full")
     return folded.select(
         F.coalesce(c["k"], s["k"]).alias("nationkey"),
         c["k"].isNotNull().alias("has_customer"),

@@ -18,18 +18,18 @@ requested measures must derive from the stored partials (count / sum /
 avg / min / max — the `_finalize` surface).
 
 Is-fresh: the store's own visible row mass (Σ cnt over its partials —
-metadata-scale) must equal the raw table's statistics row count (X31,
-session-cached). The store is maintained FROM this
-table's feed (refresh_rollup / the X30 sink), so a count mismatch means
-undelivered or torn data — route to raw. Count-equality is the same
-drift trigger re-ANALYZE uses; a production deployment would carry the
+metadata-scale) must equal the raw table's row count (a parquet
+``count()``, answered from row-group footers). The store is maintained
+FROM this table's feed (refresh_rollup / the X30 sink), so a count
+mismatch means undelivered or torn data — route to raw. A production
+deployment would carry the
 refresh watermark in the store (it does: `_folded_watermark` +
 committed epochs gate what Σ cnt even sees under ``snapshot=True``).
 
 Scale shape: the served path reads cells × days of partial rows
 (KB–MB at 100 TB of raw events) with the day partition pruned by any
 time range; the freshness probe is one aggregate over those same
-partials plus a metadata stats lookup. The raw fallback is exactly the
+partials plus a footer-only row count. The raw fallback is exactly the
 aggregation the caller would have written — nothing is ever worse than
 not having the navigator.
 """
@@ -62,8 +62,8 @@ def route_event_rollup(
 
     Staleness caveat (round-13 advisor): the freshness probe and the
     raw fallback both read the events table through the session memos
-    (`load_table`'s parquet file listing and `table_stats_cached`'s
-    row count), which freeze at first touch. On a LIVE-FED events dir
+    (`load_table`'s parquet file listing), which freezes at first
+    touch. On a LIVE-FED events dir
     that grows mid-session — the exact scenario a maintained store
     targets — pass ``refresh=True``, or call
     ``tables.invalidate_table_cache(sf_dir)`` after each feed:
@@ -130,7 +130,7 @@ def route_event_quantiles(
     """The navigator's QUANTILE route (round 14 — the r13 close's
     candidate (c)): percentile asks served from the store's X51
     quantile partials when the store CAN answer (grain coarser-or-equal
-    AND full qhist coverage) and IS fresh (the same Σcnt == raw-stats
+    AND full qhist coverage) and IS fresh (the same Σcnt == raw-count
     gate as :func:`route_event_rollup`), else computed from the raw
     events — by building the SAME quantized-histogram partials in
     memory and rendering them through the SAME code path, so the two
@@ -254,7 +254,7 @@ def route_event_exact_percentiles(
     both routes are exact, and the store merely deletes a full scan.
 
     Can-answer: qhist coverage "all" at ANY stored grain (the per-type
-    fold collapses time). Is-fresh: the same Σcnt == raw-stats gate —
+    fold collapses time). Is-fresh: the same Σcnt == raw-count gate —
     per-bucket counts must describe exactly the rows the raw table
     holds, or ranks would shift; a disagreement that slips past the
     gate raises in the rank resolution and falls back here. Returns
@@ -321,26 +321,21 @@ def _store_fresh(
     snapshot: bool,
     keep: set[int] | None = None,
 ) -> bool:
-    """Σ cnt over the store's visible partials == the raw table's X31
-    row count. Metadata-scale on the store side; session-cached
-    statistics on the raw side — no raw scan. ``keep`` is the caller's
+    """Σ cnt over the store's visible partials == the raw table's row
+    count. Metadata-scale on the store side; on the raw side a
+    ``count()`` over the memoized listing, which parquet answers from
+    row-group footers — no data pages. ``keep`` is the caller's
     pre-computed visibility set, shared with the serving read."""
     try:
         from ..operators.rollup import _snapshot_parts
-        from ..tables import table_stats_cached
+        from ..tables import load_table
 
         parts = _snapshot_parts(spark, store_path, snapshot, keep=keep)
         [(store_rows,)] = parts.agg(
             F.sum("cnt").alias("n")
         ).collect()
-        raw_rows = table_stats_cached(spark, sf_dir, "events").get(
-            "row_count"
-        )
-        return (
-            store_rows is not None
-            and raw_rows is not None
-            and int(store_rows) == int(raw_rows)
-        )
+        raw_rows = load_table(spark, sf_dir, "events").count()
+        return store_rows is not None and int(store_rows) == raw_rows
     except Exception:
         return False  # unreadable store: the raw path always works
 

@@ -34,7 +34,7 @@ def query(
 
     ``plan_memo=True`` (round 15, VERDICT r14 ask #6) serves repeat
     constructions from `tables.memoized_plan` — keyed on the session's
-    (stats, planning-conf) state, so a conf change or an invalidation
+    planning-conf state, so a conf change or an invalidation
     still constructs fresh while identical state returns the identical
     immutable frame in ~0. Opt-in and only
     for SIDE-EFFECT-FREE constructions: a query that maintains state

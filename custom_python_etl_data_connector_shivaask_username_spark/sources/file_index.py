@@ -72,10 +72,9 @@ def _col_kind(t) -> str | None:
 
 def _to_axis(v: Any, kind: str):
     """A footer-stat value (or caller bound) on the kind's numeric/
-    string axis. Temporal kinds share `plans.stats._axis_value`'s
-    conventions: instants on true epoch micros (tz-aware datetimes
-    exact, naive = driver-local, matching Spark collect), wall
-    clocks as-if-UTC micros, dates as epoch days."""
+    string axis. Temporal kinds: instants on true epoch micros
+    (tz-aware datetimes exact, naive = driver-local, matching Spark
+    collect), wall clocks as-if-UTC micros, dates as epoch days."""
     import datetime as _dt
 
     if v is None:
@@ -84,8 +83,8 @@ def _to_axis(v: Any, kind: str):
         return v if isinstance(v, str) else str(v)
     if kind == "numeric":
         return float(v)
-    # ISO-string bounds for temporal kinds parse like the stats-layer
-    # twin (`plans.stats._axis_value`): callers may pass '2024-06-01'
+    # ISO-string bounds for temporal kinds parse: callers may pass
+    # '2024-06-01'
     if isinstance(v, str):
         v = (
             _dt.date.fromisoformat(v)

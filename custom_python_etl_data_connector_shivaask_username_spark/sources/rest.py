@@ -5,21 +5,13 @@ paginated HTTP against a base URL + endpoint, auth via env-driven config,
 rate-limit aware, retrying on 429/5xx/connectivity errors with exponential
 backoff, landing JSON payloads.
 
-Two execution shapes:
+Extraction runs on the driver, in :func:`read_api`: sequential fetch,
+which cursor and ``next_url`` pagination need anyway (the next page
+isn't known until the previous returns). Each page becomes one Arrow
+string array as it arrives; the extract reaches the JVM once, as an
+Arrow table, and is parsed there. Returns a typed DataFrame.
 
-- :func:`read_api` — sequential driver-side fetch, right for one API with
-  cursor pagination (the next page isn't known until the previous returns)
-  or small result sets. Each page becomes one Arrow string array as it
-  arrives; the extract reaches the JVM once, as an Arrow table, and is
-  parsed there. Returns a typed DataFrame.
-- :func:`register_rest_datasource` — the ``rest`` format, a PySpark 4
-  Python Data Source: page ranges are split into input partitions and
-  fetched BY THE EXECUTORS in parallel.
-  This is the 100 TB-relevant shape: per-partition rate limiting, no
-  driver bottleneck, and the page-range predicate is effectively pushdown
-  into the API (partition pruning happens at plan time via ``pages``).
-
-Rate limiting + retry (S3) live in :class:`_Fetcher`, shared by both.
+Rate limiting + retry (S3) live in :class:`_Fetcher`.
 """
 
 from __future__ import annotations
@@ -71,8 +63,12 @@ def _retry_after_sec(value: str | None) -> float | None:
 
 class _Fetcher:
     """One HTTP page-fetcher with token-interval rate limiting and
-    exponential backoff. Instantiated per partition on executors (S3:
-    'per-partition token bucket'), or once on the driver."""
+    exponential backoff, once per driver-side read.
+
+    Every sleep between attempts is at most ``cfg.timeout_sec``: a
+    ``Retry-After`` asking for longer raises :class:`ConnectorError`
+    naming the delay, and the exponential backoff is clamped there, so
+    one request sleeps at most ``max_retries × timeout_sec`` in all."""
 
     def __init__(self, cfg: ConnectorConfig):
         self.cfg = cfg
@@ -87,6 +83,13 @@ class _Fetcher:
             if wait > 0:
                 time.sleep(wait)
         self._last_call = time.monotonic()
+
+    def _backoff(self, attempt: int) -> float:
+        """Jittered exponential backoff, clamped at the timeout."""
+        return min(
+            self.cfg.timeout_sec,
+            self.cfg.backoff_base_sec * (2**attempt) * (1 + 0.1 * random.random()),
+        )
 
     def fetch_json(self, url: str, params: dict | None = None) -> dict | list:
         """GET one URL with retry/backoff; returns the parsed payload."""
@@ -116,13 +119,15 @@ class _Fetcher:
                 if ex.code in RETRYABLE_STATUS and attempt < self.cfg.max_retries:
                     last_err = ex
                     delay = _retry_after_sec(ex.headers.get("Retry-After"))
-                    if delay is None:
-                        delay = (
-                            self.cfg.backoff_base_sec
-                            * (2**attempt)
-                            * (1 + 0.1 * random.random())
-                        )
-                    time.sleep(delay)
+                    if delay is not None and delay > self.cfg.timeout_sec:
+                        raise ConnectorError(
+                            f"HTTP {ex.code} from {url}: Retry-After asks "
+                            f"for {delay:.1f} s, longer than the "
+                            f"{self.cfg.timeout_sec:g} s timeout"
+                        ) from ex
+                    time.sleep(
+                        self._backoff(attempt) if delay is None else delay
+                    )
                     continue
                 raise ConnectorError(
                     f"HTTP {ex.code} from {url} after {attempt + 1} attempts"
@@ -131,11 +136,7 @@ class _Fetcher:
                 # connectivity errors (README.md:33)
                 if attempt < self.cfg.max_retries:
                     last_err = ex
-                    time.sleep(
-                        self.cfg.backoff_base_sec
-                        * (2**attempt)
-                        * (1 + 0.1 * random.random())
-                    )
+                    time.sleep(self._backoff(attempt))
                     continue
                 raise ConnectorError(
                     f"connectivity failure for {url}: {ex}"
@@ -163,16 +164,12 @@ class _Fetcher:
 def iter_pages(
     cfg: ConnectorConfig,
     fetcher: _Fetcher | None = None,
-    start_page: int = 1,
-    end_page: int | None = None,
 ) -> Generator[tuple[int, list[dict]], None, bool]:
     """S2: follow page/cursor/next_url pagination until exhausted.
 
-    Yields (page_number, records). ``start_page``/``end_page`` bound the
-    page-numbered mode so executors can own disjoint ranges. Returns
-    (as the generator's value) True when the page cap, or ``end_page``,
-    stopped the read while the source still had pages: a full last
-    page, or a cursor / next URL still set.
+    Yields (page_number, records). Returns (as the generator's value)
+    True when the page cap stopped the read while the source still had
+    pages: a full last page, or a cursor / next URL still set.
     """
     fetcher = fetcher or _Fetcher(cfg)
     if cfg.pagination == "none":
@@ -181,9 +178,7 @@ def iter_pages(
         return False
 
     if cfg.pagination == "page":
-        page = start_page
-        limit = end_page if end_page is not None else cfg.max_pages
-        while page <= limit:
+        for page in range(1, cfg.max_pages + 1):
             params = dict(cfg.params)
             params[cfg.page_param] = str(page)
             params[cfg.page_size_param] = str(cfg.page_size)
@@ -195,7 +190,6 @@ def iter_pages(
             yield page, records
             if len(records) < cfg.page_size:
                 return False
-            page += 1
         return True
 
     if cfg.pagination == "cursor":
@@ -349,92 +343,3 @@ def json_ingest(
         ).alias("r")
     )
     return parsed.select("r.*")
-
-
-# --- PySpark 4 Python Data Source: distributed page fetch --------------------
-
-
-def register_rest_datasource(spark: SparkSession) -> bool:
-    """Register the ``rest`` format. Returns False when the runtime lacks
-    the Python Data Source API (graceful degradation to read_api)."""
-    try:
-        from pyspark.sql.datasource import (
-            DataSource,
-            DataSourceReader,
-            InputPartition,
-        )
-    except ImportError:
-        return False
-
-    class _PageRange(InputPartition):
-        def __init__(self, start: int, end: int):
-            self.start = start
-            self.end = end
-
-    class _RestReader(DataSourceReader):
-        def __init__(self, options):
-            self.options = dict(options)
-
-        def _cfg(self) -> ConnectorConfig:
-            opts = self.options
-            kwargs = {}
-            for f in (
-                "name base_url endpoint pagination page_param page_size_param "
-                "cursor_field cursor_param next_url_field data_field "
-                "auth_token auth_header auth_scheme"
-            ).split():
-                if f in opts:
-                    kwargs[f] = opts[f]
-            for f, caster in (
-                ("page_size", int),
-                ("max_pages", int),
-                ("rate_limit_per_sec", float),
-                ("max_retries", int),
-                ("backoff_base_sec", float),
-                ("timeout_sec", float),
-            ):
-                if f in opts:
-                    kwargs[f] = caster(opts[f])
-            kwargs.setdefault("name", "rest")
-            return ConnectorConfig(**kwargs)
-
-        def partitions(self):
-            cfg = self._cfg()
-            n = int(self.options.get("num_partitions", "4"))
-            if cfg.pagination != "page":
-                # cursor/next_url are inherently sequential -> one partition
-                return [_PageRange(1, cfg.max_pages)]
-            per = max(1, cfg.max_pages // n)
-            out = []
-            for i in range(n):
-                start = i * per + 1
-                # clamp to the page cap: with n > max_pages the naive split
-                # would emit ranges past the cap and issue HTTP requests a
-                # driver-side read_api never would
-                end = cfg.max_pages if i == n - 1 else min((i + 1) * per, cfg.max_pages)
-                if start > cfg.max_pages:
-                    break
-                out.append(_PageRange(start, end))
-            return out
-
-        def read(self, partition):
-            cfg = self._cfg()
-            for _, records in iter_pages(
-                cfg, start_page=partition.start, end_page=partition.end
-            ):
-                for rec in records:
-                    yield (json.dumps(rec),)
-
-    class _RestDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "rest"
-
-        def schema(self):
-            return "value string"
-
-        def reader(self, schema):
-            return _RestReader(self.options)
-
-    spark.dataSource.register(_RestDataSource)
-    return True

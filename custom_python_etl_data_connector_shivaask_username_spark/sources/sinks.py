@@ -92,7 +92,9 @@ def upsert_parquet(
             raise
         new_df.write.mode("overwrite").parquet(path)
         return
-    batch_keys = F.broadcast(new_df.select(*keys).distinct())
+    # no distinct(): a repeated build key changes nothing in a semi or
+    # anti join, and deduplicating would cost a shuffle and a job
+    batch_keys = F.broadcast(new_df.select(*keys))
     kept = existing.join(batch_keys, on=keys, how="left_anti")
     if version_col is None:
         merged = kept.unionByName(new_df, allowMissingColumns=True)

@@ -111,8 +111,7 @@ def adaptive_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     lands at the measured-optimal 8 for every fixture scale. A feed
     whose size is unknown (not a file scan) gets the floor; a feed
     that fails to load raises."""
-    from ..plans.stats import _scan_bytes
-    from ..tables import bytes_conf, load_table
+    from ..tables import _scan_bytes, bytes_conf, load_table
 
     bytes_ = _scan_bytes(load_table(spark, sf_dir, "events"))
     if bytes_ is None:

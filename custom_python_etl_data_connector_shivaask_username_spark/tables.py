@@ -73,7 +73,7 @@ def normalize_events_ts(df: DataFrame, target: str = "timestamp_ntz") -> DataFra
 
 #: session-scoped DataFrame memo (round 13, VERDICT r12 ask #3):
 #: ``spark.read.parquet`` costs a ~150 ms JVM round-trip (footer +
-#: schema resolution), and plan-construction of a planner-routed query
+#: schema resolution), and plan-construction of a multi-join query
 #: touches up to 8 tables per call — the round-13 driver-side timer put
 #: plan time at 0.5–0.9 s/call, >70% of it in repeated reads of the
 #: same immutable fixture paths. Keyed by the owning SparkSession (weak:
@@ -92,8 +92,7 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
     creation, so a cached plan would miss files added later). Fixture
     dirs are read-only; only writer-side tests ever need this.
 
-    Clears the DataFrame memo, the plan memo and the ANALYZE stats
-    memo."""
+    Clears the DataFrame memo and the plan memo."""
     for per_session in _TABLE_CACHE.values():
         if sf_dir is None:
             per_session.clear()
@@ -106,11 +105,6 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
         else:
             for k in [k for k in per_session if k[0] == sf_dir]:
                 del per_session[k]
-    if sf_dir is None:
-        _STATS_CACHE.clear()
-    else:
-        for k in [k for k in _STATS_CACHE if k[0] == sf_dir]:
-            del _STATS_CACHE[k]
     # the matview navigator's store-location memo rides the same
     # lifecycle: a mutated dir may have grown/lost its rollup store
     from .plans import matview as _mv
@@ -172,6 +166,28 @@ def bytes_conf(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
+def _scan_bytes(df: DataFrame) -> int | None:
+    """Total on-disk bytes of the frame's file scan (metadata-only via
+    the Hadoop file index); None when the frame is not a file scan
+    (``inputFiles()`` is then empty) or a file vanished under it."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        files = df.inputFiles()
+        if not files:
+            return None
+        sc = df.sparkSession.sparkContext
+        jvm = sc._jvm
+        conf = sc._jsc.hadoopConfiguration()
+        size_bytes = 0
+        for f in files:
+            p = jvm.org.apache.hadoop.fs.Path(f)
+            size_bytes += p.getFileSystem(conf).getFileStatus(p).getLen()
+        return size_bytes
+    except Py4JJavaError:
+        return None
+
+
 def spread_small_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Fan a tiny input out across the cluster before expensive per-row
     work.
@@ -229,54 +245,22 @@ def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFra
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-# --- X31-X36 wired into the engine's own query path (round 9) -------------
-
-#: per-session ANALYZE memo — fixture dirs are read-only, so stats are
-#: collected once per (sf_dir, table) and reused by every
-#: planner-routed query in the session
-_STATS_CACHE: dict[tuple[str, str], dict] = {}
-
-
 #: round 15 (VERDICT r14 ask #6): memoized CONSTRUCTED logical plans
-#: for the planner-routed queries, keyed per session and invalidated
-#: by the (stats, planning-conf) state version — a repeat construction
-#: with nothing new to plan from returns the identical immutable
-#: DataFrame in ~0 instead of re-paying per-op eager analysis over a
-#: ~30-op pipeline.
+#: for the heaviest registry constructions, keyed per session and
+#: invalidated by the planning-conf state version — a repeat
+#: construction with nothing new to plan from returns the identical
+#: immutable DataFrame in ~0 instead of re-paying per-op eager
+#: analysis over a ~30-op pipeline.
 _PLAN_MEMO: dict[SparkSession, dict] = {}
-
-
-def _planning_state_version(spark: SparkSession, sf_dir: str) -> tuple:
-    """Cheap fingerprint of everything a planner-routed construction
-    reads: the session stats entries for this dir (by identity —
-    every engine path REPLACES a table's stats dict, never mutates it
-    in place) and the two session confs the planning economics
-    consult. Computing it is pure driver work — no py4j beyond two
-    conf reads, which cannot miss: both keys carry Spark defaults."""
-    stats_v = tuple(
-        sorted(
-            (k[1], id(v))
-            for k, v in _STATS_CACHE.items()
-            if k[0] == sf_dir
-        )
-    )
-    confs = (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-    )
-    return (stats_v, confs)
 
 
 def memoized_plan(
     spark: SparkSession, sf_dir: str, name: str, builder
 ) -> DataFrame:
     """Serve ``builder()``'s LOGICAL PLAN from the plan memo while the
-    planning state is unchanged. The version is re-read AFTER a fresh
-    construction (the construction itself warms stats entries), so the
-    stored version describes the state the plan was actually built
-    from; any later conf change or invalidation misses the version
-    compare and re-constructs — byte-equal when the state is equal,
-    fresh when it is not.
+    planning state is unchanged. Any later conf change or invalidation
+    misses the version compare and re-constructs — byte-equal when the
+    state is equal, fresh when it is not.
 
     Measurement integrity (round 15): every serve — including the one
     right after a fresh construction — returns a NEW Dataset wrapping
@@ -299,7 +283,7 @@ def memoized_plan(
     call): the builder must be job-free, and every module-level
     constant it bakes into the plan (caps, thresholds, strata limits)
     must be immutable for the session — the version tuple fingerprints
-    planning STATE (stats, the two planning confs), not module
+    planning STATE (the two planning confs), not module
     constants, so a runtime constant change serves a stale plan until
     ``invalidate_table_cache``. Tests that monkeypatch such a constant
     must invalidate the memo around the patch (see
@@ -307,133 +291,13 @@ def memoized_plan(
     per_session = _PLAN_MEMO.setdefault(spark, {})
     key = (sf_dir, name)
     ent = per_session.get(key)
-    if ent is None or ent[0] != _planning_state_version(spark, sf_dir):
-        df = builder()
-        ent = (_planning_state_version(spark, sf_dir), df)
+    # the two confs the plans' join decisions consult; the reads cannot
+    # miss, both keys carry Spark defaults
+    version = (
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    )
+    if ent is None or ent[0] != version:
+        ent = (version, builder())
         per_session[key] = ent
     return ent[1].alias(name)
-
-
-def table_stats_cached(
-    spark: SparkSession, sf_dir: str, name: str
-) -> dict:
-    """X31 table statistics for a fixture table, memoized per session:
-    one in-memory `collect_table_stats` pass per (sf_dir, table).
-    Fixture dirs are read-only, so the stats cannot go stale inside a
-    session; a writer that mutates a table dir calls
-    :func:`invalidate_table_cache`."""
-    key = (sf_dir, name)
-    st = _STATS_CACHE.get(key)
-    if st is None:
-        from .plans.stats import collect_table_stats
-
-        st = collect_table_stats(
-            load_table(spark, sf_dir, name), path=f"{sf_dir}/{name}.parquet"
-        )
-        _STATS_CACHE[key] = st
-    return st
-
-
-def plan_star_join(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: list[tuple[str, str, str, str]],
-    tables: dict[str, DataFrame] | None = None,
-    stats: dict[str, dict] | None = None,
-    filters: dict[str, tuple] | None = None,
-    how: str = "inner",
-    broadcast_threshold: int | None = None,
-    partitioned_on: dict[str, list[str]] | None = None,
-):
-    """The engine's own optimizer entry point: load the edge-referenced
-    fixture tables, attach cached statistics (X31) and route the join
-    tree through `plans.stats.plan_join_tree` — the stats-driven join
-    order + broadcast decisions statistics-blind Spark cannot make on
-    path-based parquet.
-
-    ``filters`` declares one range or equality predicate per table
-    name — ``{"orders": ("o_orderdate", lo, hi)}`` (either bound
-    None-able) or ``{"region": ("r_name", ("=", "EUROPE"))}`` — and
-    applies BOTH sides of the contract at once: the frame filter AND
-    its `apply_filter_to_stats` metadata twin (X36). Declaring them
-    together removes the drift foot-gun of filtering the frame but
-    planning on unfiltered statistics (or vice versa), and keeps
-    filtered-table planning scan-free. ``tables`` overrides individual
-    frames (a `spread_small_input` fact, a non-declarative transform);
-    ``stats`` overrides statistics outright (both applied AFTER
-    ``filters`` — an explicit override wins). Returns ``(joined
-    DataFrame, planner-chosen order)``."""
-    from pyspark.sql import functions as F
-
-    from .plans.stats import apply_filter_to_stats, plan_join_tree
-
-    names = {t for e in edges for t in (e[0], e[2])}
-    tbls = {
-        n: load_table(spark, sf_dir, n)
-        for n in names
-        if not (tables and n in tables)  # overridden frames: no re-read
-    }
-    sts = {
-        n: table_stats_cached(spark, sf_dir, n)
-        for n in names
-        if not (stats and n in stats)
-    }
-    for n, spec in (filters or {}).items():
-        if n not in names:
-            raise ValueError(f"filters for non-edge table {n!r}")
-        if tables and n in tables:
-            # a frame override would silently discard the declared
-            # frame filter while keeping the filtered stats — exactly
-            # the drift this parameter exists to prevent
-            raise ValueError(
-                f"table {n!r} appears in both filters and tables — "
-                "apply the predicate inside the override, with a "
-                "matching stats override"
-            )
-        if not isinstance(spec, tuple):
-            raise ValueError(f"filter spec for {n!r} must be a tuple")
-        col, *bounds = spec
-
-        def _lit(v, _n=n, _c=col):
-            # literal cast to the COLUMN's type so the comparison stays
-            # column-cast-free (a naive datetime against timestamp_ntz
-            # would otherwise cast the column and kill pushdown)
-            return F.lit(v).cast(tbls[_n].schema[_c].dataType)
-
-        if len(bounds) == 1 and isinstance(bounds[0], tuple):
-            op, v = bounds[0]
-            if op != "=":
-                raise ValueError(f"unsupported filter op {op!r} for {n!r}")
-            tbls[n] = tbls[n].filter(F.col(col) == _lit(v))
-            model = {"eq": v}
-        elif len(bounds) == 2:
-            lo, hi = bounds
-            f = tbls[n]
-            if lo is not None:
-                f = f.filter(F.col(col) >= _lit(lo))
-            if hi is not None:
-                f = f.filter(F.col(col) <= _lit(hi))
-            tbls[n] = f
-            model = {"lo": lo, "hi": hi}
-        else:
-            raise ValueError(
-                f"filter spec for {n!r} must be (col, lo, hi) or "
-                f"(col, ('=', value)); got {spec!r}"
-            )
-        # an explicit stats override for the same table wins outright
-        # (sts deliberately lacks the entry then); the FRAME filter
-        # still applies either way
-        if n in sts:
-            sts[n] = apply_filter_to_stats(sts[n], col, **model)
-    if tables:
-        tbls.update(tables)
-    if stats:
-        sts.update(stats)
-    return plan_join_tree(
-        tbls,
-        edges,
-        stats=sts,
-        how=how,
-        broadcast_threshold=broadcast_threshold,
-        partitioned_on=partitioned_on,
-    )

@@ -1,6 +1,5 @@
 """Scale-strategy pins: bucketed co-located joins (shuffle paid once at
-write time, zero exchanges per join) and the planner's use of declared
-bucketing."""
+write time, zero exchanges per join) and bucketed aggregation."""
 
 from __future__ import annotations
 
@@ -78,61 +77,3 @@ def test_bucketed_agg_on_bucket_key_has_zero_exchanges(spark, bucketed_tables):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     assert count_exchanges(agg) == 0
-
-
-def test_planner_exploits_declared_bucketing(spark, bucketed_tables, sf_dir):
-    """Round 9: `plan_join_tree(partitioned_on=...)` treats a declared
-    bucket key as a free shuffle side, so edges between co-bucketed
-    tables cost only their output estimate. On two co-bucketed facts
-    plus a big unbucketed dim, the DECLARED plan folds the bucketed
-    pair first and executes with one fewer exchange than the
-    undeclared plan (whose cardinality+shuffle cost orders the dim
-    edge first); results identical. The greedy stays myopic across
-    folds — the declaration biases toward exploiting the shuffle
-    already paid at write time, it does not re-plan globally."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        collect_table_stats,
-        plan_join_tree,
-    )
-
-    li_t, ord_t = bucketed_tables
-    li = spark.table(li_t)
-    orders = spark.table(ord_t)
-    # 5000 unique keys covering the o_custkey domain: its edge has a
-    # SMALLER output estimate than li-orders but big shuffle mass
-    cb = spark.range(0, 5000).select(F.col("id").alias("ck"))
-    tables = {"li": li, "orders": orders, "cb": cb}
-    edges = [
-        ("li", "l_orderkey", "orders", "o_orderkey"),
-        ("orders", "o_custkey", "cb", "ck"),
-    ]
-    stats = {k: collect_table_stats(v) for k, v in tables.items()}
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        declared, order_d = plan_join_tree(
-            tables,
-            edges,
-            stats=stats,
-            broadcast_threshold=-1,
-            partitioned_on={"li": ["l_orderkey"], "orders": ["o_orderkey"]},
-        )
-        plain, order_p = plan_join_tree(
-            tables, edges, stats=stats, broadcast_threshold=-1
-        )
-        # the declaration flips the first fold onto the bucketed pair
-        assert set(order_d[:2]) == {"li", "orders"}, order_d
-        assert set(order_p[:2]) == {"orders", "cb"}, order_p
-        # and the bucketed-pair-first plan pays one fewer exchange:
-        # li and orders scans are co-located (0) + cur reshuffle + cb
-        ex_d = count_exchanges(declared)
-        ex_p = count_exchanges(plain)
-        assert ex_d < ex_p, (ex_d, ex_p)
-        want = (
-            li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(cb, F.col("o_custkey") == F.col("ck"))
-            .count()
-        )
-        assert declared.count() == want and plain.count() == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -1,6 +1,6 @@
 """Connector I/O tests (S1-S7): pagination modes, auth headers, retry/
 backoff, rate limiting, PERMISSIVE ingest + quarantine, raw sink naming,
-upsert, and the distributed Python Data Source path."""
+upsert, and the run pattern's one-pass contract."""
 
 from __future__ import annotations
 
@@ -22,7 +22,6 @@ from custom_python_etl_data_connector_shivaask_username_spark.sources.rest impor
     iter_pages,
     json_ingest,
     read_api,
-    register_rest_datasource,
 )
 from custom_python_etl_data_connector_shivaask_username_spark.sources.sinks import (
     raw_table_path,
@@ -118,6 +117,20 @@ def test_retry_after_http_date_and_unparseable(stub):
         assert pages == [(1, [])]
         assert stub.state.request_count == 2
         assert lo <= took <= hi, (value, took)
+
+
+def test_retry_after_longer_than_timeout_raises(stub):
+    """A ``Retry-After`` longer than ``timeout_sec`` raises at once,
+    naming the delay, instead of sleeping it out: every sleep between
+    attempts is at most the timeout."""
+    stub.state.fail_on = {1: 429}
+    stub.state.retry_after = "5"
+    cfg = _cfg(stub, endpoint="empty", pagination="none", timeout_sec=1)
+    t0 = time.monotonic()
+    with pytest.raises(ConnectorError, match="Retry-After asks for 5.0 s"):
+        list(iter_pages(cfg))
+    assert time.monotonic() - t0 < 0.5
+    assert stub.state.request_count == 1
 
 
 def test_retries_exhausted_raises(stub):
@@ -340,42 +353,6 @@ def test_upsert_parquet_version_aware_out_of_order(spark, tmp_path):
     assert final2[2] == "v7" and final2[3] == "v1"
 
 
-def test_rest_datasource_partitions_clamped(stub, spark):
-    """num_partitions > max_pages must not fetch pages past the cap."""
-    if not register_rest_datasource(spark):
-        pytest.skip("Python Data Source API unavailable")
-    df = (
-        spark.read.format("rest")
-        .option("base_url", stub.base_url)
-        .option("endpoint", "items")
-        .option("page_size", "5")
-        .option("max_pages", "2")
-        .option("num_partitions", "8")
-        .load()
-    )
-    parsed = json_ingest(spark, df, schema=SCHEMA)
-    ids = sorted(r["id"] for r in parsed.collect() if r["id"] is not None)
-    # 2 pages x 5 records — never rows from pages 3+
-    assert ids == list(range(10))
-
-
-def test_rest_datasource_distributed(stub, spark):
-    if not register_rest_datasource(spark):
-        pytest.skip("Python Data Source API unavailable")
-    df = (
-        spark.read.format("rest")
-        .option("base_url", stub.base_url)
-        .option("endpoint", "items")
-        .option("page_size", "5")
-        .option("max_pages", "8")
-        .option("num_partitions", "4")
-        .load()
-    )
-    parsed = json_ingest(spark, df, schema=SCHEMA)
-    ids = sorted(r["id"] for r in parsed.collect() if r["id"] is not None)
-    assert ids == list(range(25))
-
-
 def test_connector_config_from_env(tmp_path, monkeypatch):
     env = tmp_path / ".env"
     env.write_text(
@@ -478,6 +455,77 @@ def test_run_connector_one_pass(stub, spark, tmp_path):
     pages = -(-len(RECORDS) // 10)  # page_size 10; the short last page ends it
     assert stub.state.request_count == pages
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_upsert_broadcasts_batch_keys_without_distinct(spark, tmp_path):
+    """The upsert's broadcast keys are the batch's key column as is: a
+    repeated key changes nothing in the anti join, so no distinct
+    stage runs (3 jobs for a materialized batch, 4 with the distinct).
+    Both copies of a repeated batch key still land, as before."""
+    path = str(tmp_path / "t_raw")
+    old = spark.range(5000).selectExpr("id", "'old' AS payload")
+    upsert_parquet(spark, old, path, keys=["id"], stamp=False)
+    batch = spark.createDataFrame(
+        [(2, "new-a"), (2, "new-b"), (7000, "new")], "id BIGINT, payload STRING"
+    ).persist()
+    try:
+        batch.count()
+        sc = spark.sparkContext
+        group = f"upsert-keys-{time.time_ns()}"
+        sc.setJobGroup(group, "upsert broadcast-keys pin")
+        try:
+            upsert_parquet(spark, batch, path, keys=["id"], stamp=False)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    finally:
+        batch.unpersist()
+    rows = spark.read.parquet(path)
+    assert rows.count() == 5000 - 1 + 3
+    assert sorted(
+        r["payload"] for r in rows.filter("id IN (2, 7000)").collect()
+    ) == ["new", "new-a", "new-b"]
+
+
+def test_run_connector_calls_the_layers_it_binds(stub, spark, tmp_path, monkeypatch):
+    """The connector bench times its layers by wrapping these names where
+    `run_connector` reads them (`connector.read_api`, ...,
+    `rest._Fetcher.fetch_json`). A wrapper on a name that is no longer
+    called would time nothing and fail silently, so pin the calls: one
+    `read_api` per run, one `fetch_json` per request the stub served,
+    and the transform and load steps of each mode."""
+    from custom_python_etl_data_connector_shivaask_username_spark import connector
+    from custom_python_etl_data_connector_shivaask_username_spark.sources import rest
+
+    calls: dict[str, int] = {}
+
+    def counting(owner, name):
+        fn = getattr(owner, name)
+
+        def wrapped(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, wrapped)
+
+    for name in ("read_api", "quarantine_split", "sanitize_columns", "write_raw", "upsert_parquet"):
+        counting(connector, name)
+    counting(rest._Fetcher, "fetch_json")
+
+    base = str(tmp_path / "lake")
+    connector.run_connector(spark, _cfg(stub), base, schema=SCHEMA)
+    assert calls == {
+        "read_api": 1, "quarantine_split": 1, "sanitize_columns": 1,
+        "write_raw": 1, "fetch_json": stub.state.request_count,
+    }
+    connector.run_connector(spark, _cfg(stub), base, schema=SCHEMA, upsert_keys=["id"])
+    assert calls == {
+        "read_api": 2, "quarantine_split": 2, "sanitize_columns": 2,
+        "write_raw": 1, "upsert_parquet": 1,
+        "fetch_json": stub.state.request_count,
+    }
 
 
 def _drain(pages):

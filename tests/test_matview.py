@@ -179,8 +179,8 @@ def test_rollup_incremental_served_from_store(spark, sf_dir, monkeypatch):
 
 def test_refresh_sees_live_fed_events(spark, sf_dir, tmp_path):
     """Round-13 advisor scenario: a live-fed events dir grows
-    mid-session. The session memos (load_table file listing +
-    table_stats_cached row count) freeze at first touch, so without
+    mid-session. The session memo (load_table's file listing, which
+    the raw row count also reads) freezes at first touch, so without
     `refresh=True` the raw path silently misses appended files; with
     it, the router re-lists and the counts double."""
     from pyspark.sql import functions as F

@@ -21,7 +21,7 @@ Two pins hold the regression closed:
 
 1. STRUCTURAL (deterministic): a repeat plan construction spawns ZERO
    Spark jobs — planning is scan-free once the session memos (table
-   stats, table DataFrames) are warm. A reintroduced per-call probe,
+   DataFrames, plan memo) are warm. A reintroduced per-call probe,
    stats collection, or sidecar scan fails this immediately.
 2. BUDGET (wall-clock, generous): min-of-5 repeat construction stays
    under per-query bounds ~3x the post-fix medians — loose enough for
@@ -43,11 +43,8 @@ from custom_python_etl_data_connector_shivaask_username_spark import registry
 PLANNER_ROUTED = [
     ("q_revenue_by_nation", 0.55),
     ("q_customer_order_counts", 0.70),
-    # round 14: the four derived-frame stats_from_plan calls (the worst
-    # re-optimized the near_c gram mega-tree every planning) are now
-    # increment-bounded derivations from ONE base estimate; round 15
-    # (VERDICT r14 ask #6): repeat constructions with unchanged
-    # (stats, conf) state serve from the plan memo in ~0,
+    # round 15 (VERDICT r14 ask #6): repeat constructions with
+    # unchanged conf state serve from the plan memo in ~0,
     # so the budget tightens 1.40 -> 0.80 (memo-miss territory fails)
     ("q_incremental_dedup", 0.80),
     ("q_lm_quality", 0.70),
@@ -73,7 +70,7 @@ def test_repeat_plan_construction_scan_free_and_bounded(
     spark, sf_dir, name, budget
 ):
     fn = registry.QUERIES[name]
-    fn(spark, sf_dir)  # first call: session memos warm up (stats, reads)
+    fn(spark, sf_dir)  # first call: session memos warm up
     before = _last_job_id(spark)
     runs = []
     for _ in range(5):
@@ -100,7 +97,7 @@ def _memo_core(spark, sf_dir, name):
 
 
 def test_plan_memo_serves_same_plan_and_tracks_state(spark, sf_dir):
-    """Round 15 (VERDICT r14 ask #6): with unchanged (stats, conf)
+    """Round 15 (VERDICT r14 ask #6): with unchanged conf
     state a repeat construction serves the IDENTICAL memoized logical
     plan — but wrapped in a FRESH Dataset per call (see
     ``memoized_plan``'s measurement-integrity note: handing out the

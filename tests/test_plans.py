@@ -40,34 +40,12 @@ def test_star_join_broadcasts_all_dims(spark, sf_dir):
     plan = formatted_plan(df)
     assert plan.count("BroadcastHashJoin") >= 4
     assert "SortMergeJoin" not in plan
+    # the broadcasts come from the written hints, not AQE luck: every
+    # one of the 4 joins carries an explicit broadcast strategy
+    opt = str(df._jdf.queryExecution().optimizedPlan())
+    assert opt.count("strategy=broadcast") >= 4
     # orderdate filter pushed into the orders scan
     assert any("o_orderdate" in p for p in pushed_filters(df))
-
-
-def test_star_join_order_and_hints_are_planner_chosen(spark, sf_dir):
-    """Round 9: q_revenue_by_nation's join tree comes from
-    plan_join_tree over cached X31 stats + the X36 filtered-orders
-    model — pin the planner's chosen order (smallest-dim-led,
-    lineitem last so the fact streams) and that the broadcast hints
-    survive into the optimized plan as ResolvedHint-driven BHJs."""
-    from custom_python_etl_data_connector_shivaask_username_spark.operators.relational import (
-        plan_revenue_star,
-    )
-
-    joined, order = plan_revenue_star(spark, sf_dir)
-    assert order[0] == "lineitem", (
-        "the fact must lead (it streams through the fused BHJ chain)"
-    )
-    assert set(order) == {
-        "lineitem", "orders", "customer", "nation", "region"
-    }
-    # the planner's hints live in the LOGICAL plan (not AQE luck):
-    # every one of the 4 joins carries an explicit broadcast strategy
-    opt = str(joined._jdf.queryExecution().optimizedPlan())
-    assert opt.count("strategy=broadcast") >= 4
-    phys = formatted_plan(joined)
-    assert phys.count("BroadcastHashJoin") >= 4
-    assert "SortMergeJoin" not in phys
 
 
 def test_top_k_never_fully_sorts(spark, sf_dir):
@@ -229,65 +207,59 @@ def test_incremental_dedup_plan_shapes(spark, sf_dir):
 
 
 def test_planner_routed_queries_exchange_neutral(spark, sf_dir):
-    """Round-12 migration pins (verdict ask #1): three more registry
-    queries route their joins through plan_star_join/plan_join_tree —
+    """Exchange-count pins for the multi-join registry queries:
     q_customer_order_counts (left/semi/anti folds + the counts⋈presence
     inner fold + the full-outer nation branch), q_incremental_dedup
-    (the shared-lineage disposition fold, X57 USING mode), and
-    q_lm_quality (the corpus probe join with honest gram-mass stats).
-    The migration must be exchange-NEUTRAL-or-better: the planner
-    reproduces the hand-written plans' shuffle counts (measured on the
-    round-11 tree: 5 / 10 / 8). Round 14: q_incremental_dedup's gram
-    probe join now routes through plan_join_tree under honest
-    gram-mass bounds, and the plan-time broadcast hint on the
-    increment side removes one exchange (10 → 9); at production scale
-    the same bound exceeds the budget and the fold stays the
-    documented gram-keyed shuffle join."""
+    (the gram probe and the disposition fold) and q_lm_quality (the
+    corpus probe join, model side broadcast under the gram-mass bound).
+    A plan change may only match or tighten these counts."""
     assert count_exchanges(QUERIES["q_customer_order_counts"](spark, sf_dir)) == 5
     assert count_exchanges(QUERIES["q_incremental_dedup"](spark, sf_dir)) == 9
     assert count_exchanges(QUERIES["q_lm_quality"](spark, sf_dir)) == 8
 
 
-def test_lm_probe_join_scale_adaptive(spark, sf_dir):
-    """The planner's probe-join decision flips with the claimed scale:
-    under the broadcast budget the model side broadcasts (one fewer
-    corpus exchange — the round-12 fixture plan), past it both sides
-    exceed and the fold is the gram-keyed shuffle join the 100 TB
-    doctrine documents. Pinned by planning the SAME two-frame graph
-    with small vs fact-sized stats."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans.stats import (
-        plan_join_tree,
+def test_lm_probe_join_scale_adaptive(spark):
+    """The probe join's one size decision flips with the broadcast
+    budget: while the gram-mass bound on the model side (8× the docs
+    scan estimate) fits, the model side carries a broadcast hint; past
+    it the hint is dropped and Catalyst/AQE plan the probe. The vocab
+    scalar's own broadcast hint is always there. Answers are equal.
+
+    The rule's premise is pinned too, so a Spark upgrade that changes
+    it gets noticed: size-only estimation passes the child's
+    sizeInBytes through Generate, so an exploded frame claims its
+    input's size and Catalyst alone would under-size the gram side."""
+    from custom_python_etl_data_connector_shivaask_username_spark.operators.llm_text import (
+        lm_quality_scores,
     )
     from pyspark.sql import functions as F
 
-    big = spark.range(1000).select(
+    docs = spark.range(1000).select(
         F.col("id").alias("doc_id"),
-        F.concat(F.lit("g"), (F.col("id") % 50).cast("string")).alias("gram"),
+        F.concat_ws(
+            " ", F.lit("w"), (F.col("id") % 50).cast("string"), F.lit("x y")
+        ).alias("text"),
     )
-    model = big.groupBy("gram").count()
 
-    def planned(rows):
-        st = {
-            "big": {"row_count": rows, "size_bytes": rows * 24, "columns": {}},
-            "model_scored": {"row_count": rows, "size_bytes": rows * 16, "columns": {}},
-        }
-        df, _ = plan_join_tree(
-            {"big": big, "model_scored": model},
-            [("big", "gram", "model_scored", "gram")],
-            stats=st,
-            broadcast_threshold=10 * 1024 * 1024,
-        )
-        return formatted_plan(df)
+    def size(df):
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(str(stats.sizeInBytes()))
 
-    # Catalyst's own size estimate would auto-broadcast these tiny
-    # REAL frames and mask the planner's (lack of) hint — pin with the
-    # session threshold off and the planner's budget passed explicitly
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        small = planned(10_000)           # ~240 KB: model broadcasts
-        assert "BroadcastHashJoin" in small
-        huge = planned(10_000_000_000)    # ~240 GB/side: no broadcast
-        assert "SortMergeJoin" in huge and "BroadcastHashJoin" not in huge
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    exploded = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    child = docs.select("doc_id", F.split("text", " ").alias("ws"))
+    assert size(exploded) <= size(child)
+
+    def planned(budget):
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", budget)
+        try:
+            df = lm_quality_scores(docs)
+            opt = str(df._jdf.queryExecution().optimizedPlan())
+            return opt.count("strategy=broadcast"), sorted(map(tuple, df.collect()))
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    fits, rows_fit = planned(str(10 * 1024 * 1024))
+    over, rows_over = planned("1024")
+    assert (fits, over) == (2, 1)
+    assert rows_fit == rows_over

@@ -491,13 +491,13 @@ def test_adaptive_state_partitions_unknown_size_takes_floor(
 ):
     """A feed whose scan size is unknown (`_scan_bytes` → None) sizes
     to the floor instead of failing on ``int(None)``."""
-    from custom_python_etl_data_connector_shivaask_username_spark.plans import stats
+    from custom_python_etl_data_connector_shivaask_username_spark import tables
     from custom_python_etl_data_connector_shivaask_username_spark.streaming.pipeline import (
         MIN_STATE_PARTITIONS,
         adaptive_state_partitions,
     )
 
-    monkeypatch.setattr(stats, "_scan_bytes", lambda df: None)
+    monkeypatch.setattr(tables, "_scan_bytes", lambda df: None)
     assert adaptive_state_partitions(spark, sf_dir) == MIN_STATE_PARTITIONS
 
 
