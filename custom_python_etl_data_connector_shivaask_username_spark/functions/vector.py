@@ -39,12 +39,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def normalize(a: Column | str) -> Column:
-    """Unit-normalize; zero vectors map to NULL elements (0/0)."""
-    n = norm(a)
-    return F.transform(as_double(a), lambda x: x / n)
-
-
 def lit_vector(values) -> Column:
     """A literal query vector (e.g. collected driver-side) as ONE
     array literal — a single Literal node instead of a CreateArray of

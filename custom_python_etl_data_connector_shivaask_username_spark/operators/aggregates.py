@@ -1,15 +1,15 @@
-"""Aggregation depth (SURVEY.md §2.4 A1-A10) — six registry queries.
+"""Aggregation depth (SURVEY.md §2.4 A1-A10) — four registry queries.
 
 Component map (every §2.4 operator has a green-row home):
 - A1 hash group-by, A2 exact count distinct, A8 conditional agg,
   exact-moment stats, and A4 exact percentiles → ``q_event_type_stats``
   (one grouped pass; percentiles folded in round 6 — same table, same
   ``event_type`` key, frees a registry slot under the 50-row cap for
-  ``q_lm_quality``; the standalone builder ``q_value_percentiles``
-  remains for tests/composition).
+  ``q_lm_quality``).
 - A3 approx count distinct + A4 approx percentiles + A10 seeded sample
-  → ``q_approx_sketches`` (rows-only by design: HLL/KLL/RNG internals
-  are engine-specific; statistical behavior pinned in unit tests).
+  → the ``q_approx_sketches`` builder, served as ``q_lsh_suite``'s
+  ``sketch`` branch (rows-only by design: HLL/KLL/RNG internals are
+  engine-specific; statistical behavior pinned in unit tests).
 - A5 rollup/cube/grouping sets → ``q_cube_region_nation`` (CUBE emits
   all four grouping sets; ROLLUP is the subset where GROUPING(n) ≥
   GROUPING(r), demonstrated by the gid column).
@@ -566,8 +566,8 @@ LAST_QHIST_STATS: dict = {}
 def _qhist_rep_py(k: int) -> float:
     """Pure-python twin of rollup's ``_qhist_rep``: the bucket
     representative, monotone in the true value — the driver's sort key
-    for value-ordering qhist buckets (mirrors `_qhist_sort_surrogate`
-    without numpy; ordering only, never an answer)."""
+    for value-ordering qhist buckets (ordering only, never an
+    answer)."""
     from .rollup import QHIST_K, QHIST_ZERO_KEY
 
     if k == QHIST_ZERO_KEY:
@@ -732,48 +732,6 @@ def exact_percentiles_qhist(
         rows.append((g, float(q), float(p)))
     rows.sort(key=lambda r: (r[0] is not None, str(r[0]), r[1]))
     return spark.createDataFrame(rows, out_schema)
-
-
-# --- A4: exact percentiles ------------------------------------------------
-
-_VALUE_PERCENTILES_ORACLE = """
-SELECT
-  event_type,
-  ROUND(quantile_cont(value, 0.5), 6) AS p50,
-  ROUND(quantile_cont(value, 0.95), 6) AS p95,
-  ROUND(quantile_cont(value, 0.99), 6) AS p99
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
-def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: exact interpolated percentiles (both engines sort + lerp).
-
-    Driver-visible as the ``p50/p95/p99`` columns of
-    ``q_event_type_stats`` since round 6 (same grouped pass; this
-    standalone builder stays for unit tests and composition —
-    ``_VALUE_PERCENTILES_ORACLE`` above remains its DuckDB twin).
-    Exact `percentile` (not approx) keeps this builder a trusted
-    fixture-scale reference; the production-scale exact path is
-    ``exact_percentiles_twopass`` (bounded agg buffers — pinned equal
-    to this builtin in tests/test_aggregates.py), and the sketch path
-    is ``q_approx_sketches``.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    pct = F.expr("percentile(value, array(0.5D, 0.95D, 0.99D))")
-    return (
-        ev.groupBy("event_type")
-        .agg(pct.alias("p"))
-        .select(
-            "event_type",
-            F.round(F.col("p")[0], 6).alias("p50"),
-            F.round(F.col("p")[1], 6).alias("p95"),
-            F.round(F.col("p")[2], 6).alias("p99"),
-        )
-        .orderBy("event_type")
-    )
 
 
 # --- A3 + A4-approx + A10: sketch/sample suite (rows-only) ----------------

@@ -590,43 +590,11 @@ def minhash_signature(shingles: Column, num_hashes: int = NUM_HASHES) -> Column:
     )
 
 
-def minhash_signature_rows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
-    """The row-wise (scale-path) MinHash: explode shingles to rows, hash
-    each shingle string ONCE, then take the k seeded minimums as a
-    grouped aggregation.
-
-    Why not the array-HOF form (:func:`minhash_signature`) in the hot
-    path: referencing the shingle array from k nested lambda expressions
-    defeats both projection-collapse safeguards and codegen
-    subexpression elimination — the shingle build re-executes per hash
-    function (measured 5-30x blowup). Row-wise, every expression is a
-    flat column op: one string hash per (doc, shingle) row, k integer
-    hashes, and a map-side-combined min-agg whose shuffle payload is
-    exactly k longs per doc at any corpus size. Same values as the HOF
-    form (pinned by tests/test_llm_dedup.py::test_minhash_forms_agree).
-    """
-    rows = spread_small_input(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("shingle"),
-    ).select("id", F.xxhash64("shingle").alias("h"))
-    return rows.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64("h", F.lit(j))).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signature_agg(
     shingles: Column, num_hashes: int = NUM_HASHES
 ) -> Column:
-    """Map-only MinHash: ONE ``F.aggregate`` traversal carrying an
+    """Map-only MinHash — the engine's one hot-path kernel
+    (:func:`band_triples`): ONE ``F.aggregate`` traversal carrying an
     array(k) of running minimums; each shingle is string-hashed once and
     the k seeded integer re-hashes fold into the accumulator via
     ``zip_with``/``least``.
@@ -635,11 +603,16 @@ def minhash_signature_agg(
     base hash array appears exactly once (as the aggregate input), so
     Catalyst's projection collapse cannot duplicate the shingle build —
     the failure mode that makes :func:`minhash_signature`'s k-reference
-    form 5-30x slower. Unlike :func:`minhash_signature_rows` it needs NO
-    shuffle at all (no explode, no groupBy): the signature is computed
-    where the document row lives, which at 100 TB removes a full
-    corpus-sized exchange from the dedup pipeline. Values are pinned
-    identical to both other forms (tests/test_llm_dedup.py).
+    form 5-30x slower. It needs NO shuffle (no explode, no groupBy): the
+    signature is computed where the document row lives, so the dedup
+    pipeline carries no corpus-sized exchange for it. Values are pinned
+    identical to :func:`minhash_signature`, the reference
+    (tests/test_llm_dedup.py::test_minhash_forms_agree).
+
+    Measured against the explode + grouped-min rendering it replaced
+    (``local[4]``, 7 alternating runs, medians, through
+    :func:`band_triples`): 0.40 s vs 0.64 s at sf0.01, 1.73 s vs 1.84 s
+    at sf0.1, with equal signatures on every doc.
     """
     base = F.transform(shingles, lambda s: F.xxhash64(s))
     seeds = F.array(*[F.lit(j) for j in range(num_hashes)])
@@ -655,152 +628,6 @@ def minhash_signature_agg(
     )
 
 
-# --- Arrow (fourth) minhash form: cross-engine xxhash64 parity ---------------
-
-#: XXH64 primes — the same constants Spark's XxHash64 expression uses
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def _np_xxh64_long(x, seed: int):
-    """Vectorized XXH64 of int64 inputs (Spark's 8-byte-long path),
-    bit-equal to ``F.xxhash64(longCol)`` at the given seed — pinned
-    against the JVM in tests. All arithmetic is uint64 wraparound."""
-    import numpy as np
-
-    P1, P2, P4, P5 = (
-        np.uint64(_XXH_P1), np.uint64(_XXH_P2),
-        np.uint64(_XXH_P4), np.uint64(_XXH_P5),
-    )
-
-    def rotl(v, r):
-        r = np.uint64(r)
-        return (v << r) | (v >> (np.uint64(64) - r))
-
-    u = np.asarray(x, dtype=np.int64).view(np.uint64)
-    h = np.uint64(seed & 0xFFFFFFFFFFFFFFFF) + P5 + np.uint64(8)
-    h = h ^ (rotl(u * P2, 31) * P1)
-    h = rotl(h, 27) * P1 + P4
-    return _np_xxh64_fmix(h)
-
-
-def _np_xxh64_int(i: int, seed_arr):
-    """XXH64 of ONE int32 value under an ARRAY of seeds — the shape the
-    seeded re-hash needs (``F.xxhash64(h, lit(j))`` folds as
-    hashInt(j, hashLong(h, 42)): the per-shingle hash becomes the seed
-    of the 4-byte literal hash)."""
-    import numpy as np
-
-    P1, P2, P3, P5 = (
-        np.uint64(_XXH_P1), np.uint64(_XXH_P2),
-        np.uint64(_XXH_P3), np.uint64(_XXH_P5),
-    )
-
-    def rotl(v, r):
-        r = np.uint64(r)
-        return (v << r) | (v >> (np.uint64(64) - r))
-
-    h = seed_arr + P5 + np.uint64(4)
-    h = h ^ (np.uint64(i & 0xFFFFFFFF) * P1)
-    h = rotl(h, 23) * P2 + P3
-    return _np_xxh64_fmix(h)
-
-
-def _np_xxh64_fmix(h):
-    import numpy as np
-
-    P2, P3 = np.uint64(_XXH_P2), np.uint64(_XXH_P3)
-    h = h ^ (h >> np.uint64(33))
-    h = h * P2
-    h = h ^ (h >> np.uint64(29))
-    h = h * P3
-    h = h ^ (h >> np.uint64(32))
-    return h
-
-
-def minhash_signature_pandas(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
-    """The ARROW rendering of the k-minhash family (round-11 verdict
-    ask #5): shingles are string-hashed ONCE on the JVM (exactly the
-    other forms' base pass — string XXH64 over UTF-8 bytes stays where
-    it is already codegen'd), then one `mapInPandas` kernel computes
-    the k seeded integer re-hashes and row-minimums as vectorized
-    numpy uint64 arithmetic over the concatenated hash arrays.
-
-    Bit-equality with the JVM forms is by CONSTRUCTION, not accident —
-    the kernel replays Spark's own XxHash64 fold (`F.xxhash64(h, j)` =
-    hashInt(j, hashLong(h, 42))) with the same primes, rotations and
-    wraparound in uint64 (the qhist-key cross-engine discipline:
-    integer ops the engines cannot disagree on), pinned value-equal to
-    all three JVM forms in tests/test_llm_dedup.py. Zero-shingle docs
-    keep the aggregate identity (all max-long), like the agg form.
-
-    Scale shape: map-only (no explode, no shuffle — the same contract
-    as :func:`minhash_signature_agg`); per batch the kernel does
-    k vectorized passes over total-shingle-count longs.
-
-    Measured honestly (round 11, sf0.1 fixture): the JVM agg form is
-    FASTER here (0.32 s vs 0.65 s — the Arrow hop pays string-array
-    serialization that the integer-only re-hash savings don't cover at
-    k=32), so :func:`band_triples` deliberately stays on the agg form;
-    this rendering exists as the pinned cross-engine reference (e.g. a
-    non-JVM writer producing signatures a Spark reader must agree
-    with), not as the hot path."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    base = (
-        spread_small_input(docs)
-        .filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.transform(
-                word_shingles(F.col(text_col), shingle_n),
-                lambda s: F.xxhash64(s),
-            ).alias("hs"),
-        )
-    )
-    out_schema = StructType(
-        [base.schema["id"], StructField("sig", ArrayType(LongType()))]
-    )
-    max_long = (1 << 63) - 1
-
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            lens = pdf["hs"].map(len).to_numpy(dtype=np.int64)
-            flat = (
-                np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["hs"]])
-                if lens.sum()
-                else np.empty(0, dtype=np.int64)
-            )
-            seeds = _np_xxh64_long(flat, 42)  # hashLong(h, 42) once
-            starts = np.zeros(n, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            nonempty = lens > 0
-            sig = np.full((n, num_hashes), max_long, dtype=np.int64)
-            for j in range(num_hashes):
-                y = _np_xxh64_int(j, seeds).view(np.int64)
-                if len(y):
-                    mins = np.minimum.reduceat(y, starts[nonempty])
-                    sig[nonempty, j] = mins
-            yield pd.DataFrame({"id": pdf["id"], "sig": list(sig)})
-
-    return base.mapInPandas(gen, out_schema)
-
-
 def band_triples(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -810,10 +637,11 @@ def band_triples(
     """Map-only LSH banding: each doc to ``BANDS`` fixed-width
     ``(id, band_id, bucket)`` rows — the only thing that ever shuffles
     (or persists, see :func:`build_minhash_index`) in the MinHash
-    family. Signature via :func:`minhash_signature_agg` (single
-    traversal, no shuffle); band hashes built from ONE reference to the
-    signature so projection collapse cannot re-execute the aggregate
-    per band."""
+    family. Signature via :func:`minhash_signature_agg`, the one
+    serving kernel (single traversal, no shuffle); ``spread_small_input``
+    first, so a small corpus still runs as several tasks. Band hashes
+    are built from ONE reference to the signature so projection
+    collapse cannot re-execute the aggregate per band."""
     rows_per_band = F.lit(ROWS_PER_BAND)
     sig = spread_small_input(docs).filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
@@ -839,7 +667,8 @@ def near_dup_pairs(
     Jaccard ≥ threshold. Returns (id_a, id_b, jaccard_sim).
 
     Scale shape — ids shuffle, payloads don't:
-    1. map-only MinHash (see :func:`minhash_signature_agg`), then band
+    1. map-only MinHash (:func:`minhash_signature_agg`, the one
+       serving kernel, via :func:`band_triples`), then band
        hashes explode to (band_id, bucket, id) triples — three
        fixed-width columns. The band array is built from a SINGLE
        reference to the signature (``transform`` over band indices), so

@@ -591,7 +591,6 @@ def rollup_quantiles(
     qs: list[float],
     resolution: str = "hour",
     snapshot: bool = False,
-    impl: str = "exploded",
     keep: set[int] | None = None,
 ) -> DataFrame:
     """Approximate percentiles per (window, event_type) served from the
@@ -603,36 +602,20 @@ def rollup_quantiles(
     lower quantile's bucket representative: relative error
     ≤ 2^(1/(2·QHIST_K)) − 1 (≈2.2%), pinned in tests.
 
-    ``impl`` (round-11 verdict ask #4 — the serving constant). Three
-    renderings, ALL pinned row-identical; the default is the one that
-    MEASURED fastest at the sf1.0 16-batch store (SCALE.md round-11):
+    One rendering (:func:`_quantiles_from_parts`): explode the stored
+    histograms, re-merge per key, then a window cumsum picks each q's
+    first bucket — all codegen'd columnar work. SCALE.md round 11
+    measured it at 1.91 s on the sf1.0 16-batch store (1.33 s
+    compacted); an in-row ``map_zip_with`` fold (2.75 s) and a
+    per-cell Arrow kernel (14.7 s) were both slower and are gone.
 
-    - ``"exploded"`` (default): explode → per-key re-merge shuffle →
-      window cumsum — the round-10 formulation. Measured 1.91 s
-      (16-batch) / 1.33 s (compacted): every step is codegen'd
-      columnar work, which beats both alternatives' cleverness.
-    - ``"cellfold"``: one aggregation folds each cell's qhist maps via
-      ``aggregate``/``map_zip_with``, cumsum as an in-row array fold.
-      Fewer exchanges on paper, but HOF map merges evaluate
-      interpreted — measured SLOWER (2.75 s / 1.94 s). Kept as the
-      shuffle-light rendering for exchange-constrained clusters.
-    - ``"arrow"``: per-cell numpy kernel. Measured 14.7 s — 10,800
-      tiny groups pay per-group Python/Arrow overhead that dwarfs the
-      compute; the inverse lesson of the L4 pair GEMM (Arrow wins on
-      FEW BIG blocks, loses on many small ones). Kept as the measured
-      evidence of that boundary.
-
-    Every impl's cost is metadata-scale and INDEPENDENT of how many
-    raw events the store absorbed: at 1M events the raw exact rescan
-    (0.87 s) still beats the store path's constant, and the crossover
-    is measured a few million events in — the SCALE.md round-11 row
+    The cost is metadata-scale and INDEPENDENT of how many raw events
+    the store absorbed: at 1M events the raw exact rescan (0.87 s)
+    still beats the store path's constant, and the crossover is
+    measured a few million events in — the SCALE.md round-11 row
     carries both points."""
     if not qs or not all(0.0 < q <= 1.0 for q in qs):
         raise ValueError(f"qs must be fractions in (0, 1], got {qs!r}")
-    if impl not in ("cellfold", "exploded", "arrow"):
-        raise ValueError(
-            f"impl must be 'cellfold', 'exploded' or 'arrow', got {impl!r}"
-        )
     _check_serving_resolution(spark, store_path, resolution)
     # ONE visibility computation shared by the audit and the read
     # (round-12 advice): an epoch committing between two independent
@@ -661,226 +644,17 @@ def rollup_quantiles(
             "those batches first"
         )
     parts = _snapshot_parts(spark, store_path, snapshot, keep=keep)
-    return _quantiles_from_parts(parts, qs, resolution, impl)
+    return _quantiles_from_parts(parts, qs, resolution)
 
 
 def _quantiles_from_parts(
-    parts: DataFrame, qs: list[float], resolution: str, impl: str
+    parts: DataFrame, qs: list[float], resolution: str
 ) -> DataFrame:
     """Render quantiles from a frame of X51 partials — shared by the
     store-serving path above and the matview raw fallback (round 14),
-    which builds the SAME partials from raw events so both routes are
-    bit-identical."""
-    if impl == "exploded":
-        return _rollup_quantiles_exploded(parts, qs, resolution)
-    if impl == "arrow":
-        return _rollup_quantiles_arrow(parts, qs, resolution)
-    # cell-local fold: merge each output cell's qhist maps by per-key
-    # addition (collect_list skips NULL maps — same reading as the
-    # exploded form, where a NULL/empty histogram contributes no rows)
-    merged = (
-        parts.select(
-            F.date_trunc(resolution, "bucket_start").alias("window_start"),
-            "event_type",
-            "qhist",
-        )
-        .groupBy("window_start", "event_type")
-        .agg(F.collect_list("qhist").alias("_hs"))
-        .select(
-            "window_start",
-            "event_type",
-            F.aggregate(
-                "_hs",
-                F.expr("cast(map() as map<bigint,bigint>)"),
-                lambda acc, m: F.map_zip_with(
-                    acc,
-                    m,
-                    lambda _k, a, b: F.coalesce(a, F.lit(0))
-                    + F.coalesce(b, F.lit(0)),
-                ),
-            ).alias("_m"),
-        )
-    )
-    # sorted (representative, count) entries; reps are monotone in the
-    # true value, so this IS value order — identical to the exploded
-    # form's window ORDER BY _v
-    ents = F.array_sort(
-        F.transform(
-            F.map_entries(F.col("_m")),
-            lambda e: F.struct(
-                _qhist_rep(e["key"]).alias("v"), e["value"].alias("c")
-            ),
-        )
-    )
-    # one pass builds (total, running-cumsum array) — the window
-    # cumsum collapsed into a per-row fold
-    zero = F.struct(
-        F.lit(0).cast("bigint").alias("t"),
-        F.expr("cast(array() as array<struct<v:double,t:bigint>>)").alias(
-            "o"
-        ),
-    )
-    folded = F.aggregate(
-        ents,
-        zero,
-        lambda acc, e: F.struct(
-            (acc["t"] + e["c"]).alias("t"),
-            F.array_append(
-                acc["o"],
-                F.struct(
-                    e["v"].alias("v"), (acc["t"] + e["c"]).alias("t")
-                ),
-            ).alias("o"),
-        ),
-    )
-    picked = (
-        merged.select(
-            "window_start", "event_type", folded.alias("_f")
-        )
-        .filter(F.col("_f.t") > 0)  # all-NULL cells: no rows, like exploded
-        .select(
-            "window_start",
-            "event_type",
-            F.col("_f.o").alias("_o"),
-            F.col("_f.t").alias("_tot"),
-            F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"),
-        )
-        .select(
-            "window_start",
-            "event_type",
-            "q",
-            # first entry whose cumulative count clears q·total — the
-            # same long-promoted-to-double comparison the exploded
-            # form's filter used, so picks are bit-identical
-            F.element_at(
-                F.filter(
-                    F.col("_o"),
-                    lambda e: e["t"] >= F.col("q") * F.col("_tot"),
-                ),
-                1,
-            )["v"].alias("value"),
-        )
-    )
-    return picked.orderBy("window_start", "event_type", "q")
-
-
-def _qhist_sort_surrogate(uk):
-    """Integer surrogate of the VALUE order for an array of histogram
-    keys: every negative-value (odd) key sorts below zero, every
-    positive-value (even) key above, and within a sign class key16
-    orders by magnitude — exact integer arithmetic, no rep computed.
-    key16 is NEGATIVE for |v| < 1 (octaves run -63..63,
-    key16 ∈ [-1008, 1023]), so the class offset must clear its WHOLE
-    span; the first rendering offset by ±1 only, interleaving
-    fractional positives below zero and through the negatives
-    (round-11 review finding: 1,330 inversions across the key domain —
-    wrong percentiles on any cell mixing sign classes with fractional
-    magnitudes). Pinned against the true rep order over the whole key
-    domain by a hypothesis property
-    (test_properties.py::test_qhist_arrow_sort_surrogate_matches_rep_order)
-    and end-to-end by the mixed-sign fractional store case in
-    test_quantile_partials_round_trip_and_error_band."""
-    import numpy as np
-
-    span = np.int64(4096)  # > 2·max|key16|
-    key16 = np.where(uk % 2 == 0, uk // 2, (uk - 1) // 2)
-    return np.where(
-        uk == QHIST_ZERO_KEY,
-        np.int64(0),
-        np.where(uk % 2 == 0, key16 + span, -key16 - span),
-    )
-
-
-def _rollup_quantiles_arrow(
-    parts: DataFrame, qs: list[float], resolution: str
-) -> DataFrame:
-    """``impl="arrow"`` serving kernel: one `applyInPandas` per output
-    cell merges the qhist maps in numpy (unique-key count addition),
-    orders buckets by an INTEGER surrogate of the value order (derived
-    exactly from the key's sign/offset encoding — no rep computed
-    kernel-side), cumsums in int64, and picks each q's first bucket
-    with ``cum >= q·total`` via searchsorted — the same
-    long-promoted-to-double comparison the JVM forms execute. The
-    kernel returns KEYS; the bucket representative is decoded JVM-side
-    by the same `_qhist_rep` expression as the other impls, so the
-    served values are bit-identical by construction (`F.pow` is
-    JVM-only — replicating it in numpy would reintroduce exactly the
-    transcendental-parity hazard the qhist key was redesigned to
-    remove)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    src = parts.select(
-        F.date_trunc(resolution, "bucket_start").alias("window_start"),
-        "event_type",
-        "qhist",
-    )
-    out_schema = StructType(
-        [
-            src.schema["window_start"],
-            src.schema["event_type"],
-            StructField("q", DoubleType()),
-            StructField("_qk", LongType()),
-        ]
-    )
-    qs_list = [float(q) for q in qs]
-
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-        import pandas as pd
-
-        pairs: list = []
-        for m in pdf["qhist"]:
-            if m is None:
-                continue
-            pairs.extend(m.items() if hasattr(m, "items") else m)
-        if not pairs:
-            return pd.DataFrame(
-                {"window_start": [], "event_type": [], "q": [], "_qk": []}
-            )
-        ks = np.fromiter((p[0] for p in pairs), dtype=np.int64)
-        vs = np.fromiter((p[1] for p in pairs), dtype=np.int64)
-        uk, inv = np.unique(ks, return_inverse=True)
-        cnt = np.zeros(len(uk), dtype=np.int64)
-        np.add.at(cnt, inv, vs)
-        order = np.argsort(_qhist_sort_surrogate(uk))
-        cum = np.cumsum(cnt[order])
-        tot = float(cum[-1])
-        picks = [
-            int(uk[order][np.searchsorted(cum, q * tot, side="left")])
-            for q in qs_list
-        ]
-        return pd.DataFrame(
-            {
-                "window_start": [pdf["window_start"].iloc[0]] * len(qs_list),
-                "event_type": [pdf["event_type"].iloc[0]] * len(qs_list),
-                "q": qs_list,
-                "_qk": picks,
-            }
-        )
-
-    return (
-        src.groupBy("window_start", "event_type")
-        .applyInPandas(fn, out_schema)
-        .select(
-            "window_start",
-            "event_type",
-            "q",
-            _qhist_rep(F.col("_qk")).alias("value"),
-        )
-        .orderBy("window_start", "event_type", "q")
-    )
-
-
-def _rollup_quantiles_exploded(
-    parts: DataFrame, qs: list[float], resolution: str
-) -> DataFrame:
-    """The round-10 serving formulation (see ``impl="exploded"``)."""
+    which builds the SAME partials from raw events, so both routes are
+    bit-identical by construction. Explode → per-key re-merge shuffle
+    → window cumsum; a NULL or empty histogram contributes no rows."""
     from pyspark.sql import Window
 
     ent = (

@@ -38,8 +38,14 @@ from __future__ import annotations
 
 import datetime as _dt
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: what a missing or unreadable store raises: Spark's path/schema
+#: analysis errors, or pyarrow's listing of an absent directory
+_STORE_UNREADABLE = (AnalysisException, FileNotFoundError)
 
 
 def route_event_rollup(
@@ -90,7 +96,7 @@ def route_event_rollup(
             # between probe and serve be counted by neither — served
             # rows the Σcnt == raw_rows audit never saw)
             keep = _visible_epochs(spark, store_path)
-    except Exception:
+    except (ValueError, *_STORE_UNREADABLE):
         route = "raw"  # finer than stored grain (or unreadable store)
     if route == "store" and not _store_fresh(
         spark, sf_dir, store_path, snapshot, keep
@@ -124,7 +130,6 @@ def route_event_quantiles(
     qs: list[float],
     resolution: str = "hour",
     snapshot: bool = False,
-    impl: str = "exploded",
     refresh: bool = False,
 ) -> tuple[DataFrame, str]:
     """The navigator's QUANTILE route (round 14 — the r13 close's
@@ -163,7 +168,7 @@ def route_event_quantiles(
             != "all"
         ):
             route = "raw"  # legacy/mixed qhist: serving would refuse
-    except Exception:
+    except (ValueError, *_STORE_UNREADABLE):
         route = "raw"  # finer than stored grain (or unreadable store)
     if route == "store" and not _store_fresh(
         spark, sf_dir, store_path, snapshot, keep
@@ -178,7 +183,6 @@ def route_event_quantiles(
             qs,
             resolution=resolution,
             snapshot=snapshot,
-            impl=impl,
             keep=keep,
         )
     else:
@@ -193,7 +197,6 @@ def route_event_quantiles(
             rollup_partials(events, resolution=resolution),
             qs,
             resolution,
-            impl,
         )
     return df, route
 
@@ -229,8 +232,8 @@ def event_store_path(spark: SparkSession, sf_dir: str) -> str | None:
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
         p = jvm.org.apache.hadoop.fs.Path(path)
         found = p.getFileSystem(hconf).exists(p)
-    except Exception:
-        found = False
+    except Py4JJavaError:
+        found = False  # no filesystem for the dir's scheme
     _EVENT_STORES[sf_dir] = path if found else None
     return _EVENT_STORES[sf_dir]
 
@@ -278,7 +281,7 @@ def route_event_exact_percentiles(
             != "all"
         ):
             route = "raw"
-    except Exception:
+    except _STORE_UNREADABLE:
         route = "raw"
     if route == "store" and not _store_fresh(
         spark, sf_dir, store_path, snapshot, keep
@@ -304,8 +307,10 @@ def route_event_exact_percentiles(
                 exact_percentiles_qhist(ev, "event_type", "value", qs, hist),
                 "store",
             )
-        except Exception:
-            route = "raw"  # torn store past the gate: raw always works
+        except (AssertionError, *_STORE_UNREADABLE):
+            # torn store past the gate (rank outside the histogram
+            # mass) or vanished files: raw always works
+            route = "raw"
     return (
         exact_percentiles_twopass(
             ev, "event_type", "value", qs, bucket_width=1.0, bounds="footer"
@@ -336,7 +341,7 @@ def _store_fresh(
         ).collect()
         raw_rows = load_table(spark, sf_dir, "events").count()
         return store_rows is not None and int(store_rows) == raw_rows
-    except Exception:
+    except _STORE_UNREADABLE:
         return False  # unreadable store: the raw path always works
 
 

@@ -45,11 +45,6 @@ MONITOR_DIR = "_monitor"
 #: per-epoch served percentiles (X51×X30, round 11), sibling of both
 QUANTILES_DIR = "_quantiles"
 
-#: X59 (round 12): folded-histogram state carried between epoch serves,
-#: so epoch N's report reads state(N−1) + epoch N's delta partition
-#: instead of re-listing and re-scanning the whole store
-QUANTILES_STATE_DIR = "_quantiles_state"
-
 
 def serve_quantiles_epoch(
     spark: SparkSession,
@@ -57,7 +52,6 @@ def serve_quantiles_epoch(
     epoch: int,
     qs=(0.5, 0.9, 0.99),
     resolution: str = "hour",
-    incremental: bool = False,
 ) -> dict:
     """Serve the X51 quantile partials as a per-epoch REPORT beside the
     commit log (round-11 verdict ask #3): after an epoch's cells land,
@@ -73,35 +67,12 @@ def serve_quantiles_epoch(
     content (pinned). Cost per epoch: one `rollup_quantiles` pass —
     cells × occupied-bucket rows, metadata-scale, independent of how
     many raw events the store has absorbed (the X51 contract; nothing
-    here is ∝ history).
-
-    ``incremental=True`` (X59, round 12): the per-epoch serve stops
-    re-listing and re-scanning the WHOLE store — the folded per-cell
-    histograms persist as ``_quantiles_state/<epoch>`` beside the
-    report, and the next serve folds in only the newly committed
-    epochs' delta partitions (a ``batch_id``-pruned read; histogram
-    merge is per-key integer addition, so the folded counts are
-    EXACTLY the counts a full re-read would merge, and the percentile
-    picks run through the same engine expressions —
-    report == full-read report, pinned epoch-by-epoch). Per-epoch cost
-    is then ∝ the DELTA, not ∝ accumulated batch count. Replays are
-    safe: a redelivered epoch re-folds from the prior state over the
-    replaced (identical) partitions and overwrites its own state +
-    report with identical content. Compaction moves the folded
-    watermark, which invalidates the state's epoch accounting — the
-    serve detects the watermark change and rebuilds the state from one
-    full snapshot read (audited, exactly the non-incremental path),
-    then resumes folding deltas."""
+    here is ∝ history)."""
     from ..operators.rollup import rollup_quantiles
 
-    if incremental:
-        rows = _serve_incremental(
-            spark, store_path, int(epoch), list(qs), resolution
-        )
-    else:
-        rows = rollup_quantiles(
-            spark, store_path, list(qs), resolution=resolution, snapshot=True
-        ).collect()
+    rows = rollup_quantiles(
+        spark, store_path, list(qs), resolution=resolution, snapshot=True
+    ).collect()
     report = {
         "epoch": int(epoch),
         "resolution": resolution,
@@ -122,162 +93,6 @@ def serve_quantiles_epoch(
         json.dumps(report),
     )
     return report
-
-
-def _state_file(store_path: str, epoch: int) -> str:
-    return f"{store_path.rstrip('/')}/{QUANTILES_STATE_DIR}/{int(epoch)}"
-
-
-def _latest_state(
-    spark: SparkSession, store_path: str, before: int
-) -> dict | None:
-    """The newest persisted fold state with epoch < ``before`` (a
-    replayed epoch must rebuild from a state that precedes it, never
-    from its own or a later one)."""
-    import pyarrow.fs as pafs
-
-    from ..sources.rollup_store import _fs_and_path
-
-    fs, store = _fs_and_path(store_path)
-    infos = fs.get_file_info(
-        pafs.FileSelector(
-            f"{store}/{QUANTILES_STATE_DIR}", allow_not_found=True
-        )
-    )
-    epochs = sorted(
-        (
-            int(os.path.basename(i.path))
-            for i in infos
-            if i.is_file
-            and os.path.basename(i.path).lstrip("-").isdigit()
-            and int(os.path.basename(i.path)) < before
-        ),
-        reverse=True,
-    )
-    for e in epochs:
-        raw = fs_read_text(spark, _state_file(store_path, e))
-        if raw is not None:
-            return json.loads(raw)
-    return None
-
-
-_NO_QHIST_MSG = (
-    "store {path!r} mixes pre-round-10 batches (no qhist) with current "
-    "ones: percentiles would silently exclude the legacy events — "
-    "re-land or re-aggregate those batches first"
-)
-
-
-def _serve_incremental(
-    spark: SparkSession,
-    store_path: str,
-    epoch: int,
-    qs: list[float],
-    resolution: str,
-) -> list:
-    """X59 fold-forward serve (see ``serve_quantiles_epoch``): state is
-    ``{"wm": folded watermark, "epochs": committed epochs folded,
-    "cells": {bucket_iso: {event_type: {qhist key: count}}}}``.
-    Equality with the full read is structural — per-key integer
-    addition over the same partial maps in either order — and the
-    percentile picks run through `_rollup_quantiles_exploded`'s own
-    expressions over a frame rebuilt from the folded cells, so served
-    values are computed by the same engine code either way."""
-    from datetime import datetime
-
-    from ..operators.rollup import (
-        _check_serving_resolution,
-        _folded_watermark,
-        _qhist_coverage,
-        _rollup_quantiles_exploded,
-        _snapshot_parts,
-        _visible_epochs,
-    )
-
-    if not qs or not all(0.0 < q <= 1.0 for q in qs):
-        raise ValueError(f"qs must be fractions in (0, 1], got {qs!r}")
-    _check_serving_resolution(spark, store_path, resolution)
-    visible = _visible_epochs(spark, store_path)
-    wm = _folded_watermark(spark, store_path)
-    state = _latest_state(spark, store_path, before=epoch)
-    if state is not None and state.get("wm") != wm:
-        # compaction folded some of the state's epochs into the base
-        # partition since the state was written — their delta
-        # partitions are gone, so fold-forward cannot reconcile;
-        # rebuild once from a full snapshot (loudly simple, and
-        # compaction is periodic maintenance, not the per-epoch path)
-        state = None
-
-    cells: dict[str, dict[str, dict[str, int]]]
-    if state is None:
-        keep = visible
-        coverage = _qhist_coverage(
-            spark, store_path, snapshot=True, keep=keep
-        )
-        if coverage == "none":
-            raise ValueError(
-                f"store {store_path!r} carries no quantile partials "
-                "(written before round 10?) — re-land or compact its "
-                "batches through the current writers to grow `qhist`"
-            )
-        if coverage == "mixed":
-            raise ValueError(_NO_QHIST_MSG.format(path=store_path))
-        parts = _snapshot_parts(spark, store_path, True, keep=keep)
-        rows = (
-            parts.select("bucket_start", "event_type", "qhist")
-            .filter(F.col("qhist").isNotNull())
-            .collect()
-        )
-        cells = {}
-        folded_epochs = sorted(e for e in visible if e != -1)
-    else:
-        cells = state["cells"]
-        folded_epochs = sorted(state["epochs"])
-        new_epochs = sorted(
-            e for e in visible if e != -1 and e not in set(folded_epochs)
-        )
-        rows = []
-        if new_epochs:
-            delta = spark.read.parquet(store_path).filter(
-                F.col("batch_id").isin([int(e) for e in new_epochs])
-            )
-            if "qhist" not in delta.columns:
-                raise ValueError(_NO_QHIST_MSG.format(path=store_path))
-            rows = delta.select(
-                "bucket_start", "event_type", "qhist"
-            ).collect()
-            if any(r["qhist"] is None for r in rows):
-                raise ValueError(_NO_QHIST_MSG.format(path=store_path))
-        folded_epochs = sorted(set(folded_epochs) | set(new_epochs))
-    for r in rows:
-        b = cells.setdefault(str(r["bucket_start"]), {})
-        t = b.setdefault(r["event_type"], {})
-        for k, v in (r["qhist"] or {}).items():
-            ks = str(int(k))
-            t[ks] = t.get(ks, 0) + int(v)
-
-    fs_write_text(
-        spark,
-        _state_file(store_path, epoch),
-        json.dumps(
-            {"epoch": epoch, "wm": wm, "epochs": folded_epochs, "cells": cells}
-        ),
-    )
-    flat = [
-        (
-            datetime.fromisoformat(b),
-            et,
-            {int(k): int(v) for k, v in hist.items()},
-        )
-        for b, types in cells.items()
-        for et, hist in types.items()
-    ]
-    frame = spark.createDataFrame(
-        flat,
-        "bucket_start timestamp, event_type string, "
-        "qhist map<bigint,bigint>",
-    )
-    return _rollup_quantiles_exploded(frame, qs, resolution).collect()
 
 
 def read_quantile_reports(

@@ -110,6 +110,32 @@ def test_missing_store_falls_back(spark, sf_dir, tmp_path):
     assert len(df.take(1)) == 1
 
 
+def test_unexpected_store_error_propagates(
+    spark, sf_dir, fresh_store, monkeypatch
+):
+    """Only a too-fine grain or a missing/unreadable store routes raw:
+    any other failure while probing the store is a bug, and it must
+    surface instead of being served silently from the raw table."""
+    import custom_python_etl_data_connector_shivaask_username_spark.operators.rollup as R
+    from custom_python_etl_data_connector_shivaask_username_spark.plans.matview import (
+        route_event_quantiles,
+    )
+
+    def broken(*a, **k):
+        raise RuntimeError("visibility probe failed")
+
+    monkeypatch.setattr(R, "_visible_epochs", broken)
+    with pytest.raises(RuntimeError, match="visibility probe"):
+        route_event_rollup(
+            spark, sf_dir, fresh_store, resolution="day", snapshot=True
+        )
+    with pytest.raises(RuntimeError, match="visibility probe"):
+        route_event_quantiles(
+            spark, sf_dir, fresh_store, [0.5], resolution="day",
+            snapshot=True,
+        )
+
+
 def test_snapshot_visibility_set_computed_once(
     spark, sf_dir, fresh_store, monkeypatch
 ):
@@ -268,7 +294,6 @@ def test_quantile_route_refuses_finer_grain_via_raw(spark, sf_dir, tmp_path):
         rollup_partials(load_table(spark, sf_dir, "events"), "hour"),
         [0.5],
         "hour",
-        "exploded",
     )
     assert _rows(df) == _rows(direct)
 

@@ -144,85 +144,52 @@ def test_plan_memo_serves_same_plan_and_tracks_state(spark, sf_dir):
     assert _memo_core(spark, sf_dir, name) is not core_c
 
 
-def _shuffle_write_since(spark, mark: int) -> int:
-    """Total shuffle-WRITE bytes of completed stages with id > mark
-    (the bench's AppStatusStore window, reduced to the one metric
-    stage-skipping zeroes out)."""
+def _stages_since(spark, mark: int) -> tuple[int, int, int]:
+    """One walk of the status store's stage list: ``(max stage id,
+    shuffle-write bytes, scan-input bytes)``, the byte totals over
+    stages with id > ``mark``. Shuffle write is the one metric
+    stage-skipping zeroes out; input bytes are the re-execution signal
+    for map-only plans, which have no shuffle write to observe."""
     try:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     except Exception:
         time.sleep(0.3)
     sc = spark.sparkContext
     gw = sc._gateway
-    store = sc._jsc.sc().statusStore()
-    seq = store.stageList(
+    seq = sc._jsc.sc().statusStore().stageList(
         None, False, False, gw.new_array(gw.jvm.double, 0), None
     )
-    total, it = 0, seq.iterator()
+    top, write, read, it = -1, 0, 0, seq.iterator()
     while it.hasNext():
         s = it.next()
+        top = max(top, s.stageId())
         if s.stageId() > mark:
-            total += s.shuffleWriteBytes()
-    return total
+            write += s.shuffleWriteBytes()
+            read += s.inputBytes()
+    return top, write, read
 
 
-def _input_bytes_since(spark, mark: int) -> int:
-    """Total scan-input bytes of completed stages with id > mark — the
-    re-execution signal for zero-exchange (map-only) plans, which have
-    no shuffle write to observe."""
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    except Exception:
-        time.sleep(0.3)
-    sc = spark.sparkContext
-    gw = sc._gateway
-    store = sc._jsc.sc().statusStore()
-    seq = store.stageList(
-        None, False, False, gw.new_array(gw.jvm.double, 0), None
-    )
-    total, it = 0, seq.iterator()
-    while it.hasNext():
-        s = it.next()
-        if s.stageId() > mark:
-            total += s.inputBytes()
-    return total
-
-
-def _max_stage_id(spark) -> int:
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    except Exception:
-        time.sleep(0.3)
-    sc = spark.sparkContext
-    gw = sc._gateway
-    store = sc._jsc.sc().statusStore()
-    seq = store.stageList(
-        None, False, False, gw.new_array(gw.jvm.double, 0), None
-    )
-    mark, it = -1, seq.iterator()
-    while it.hasNext():
-        mark = max(mark, it.next().stageId())
-    return mark
-
-
-#: every plan_memo=True registry row (round 16, VERDICT r15 ask #5):
-#: the result-caching ban must be pinned on each memoized query, not
-#: just the one that caught the round-15 bug — all seven share
-#: tables.memoized_plan today, but the pin is the contract that keeps
-#: a future per-query special case from regressing into result caching
-MEMOIZED_QUERIES = [
-    "q_revenue_by_nation",
-    "q_customer_order_counts",
-    "q_lm_quality",
-    "q_incremental_dedup",
-    "q_dedup_exact_documents",
-    "q_curation_mix",
-    "q_pack_sequences",
+#: every plan_memo=True registry row (round 16, VERDICT r15 ask #5)
+#: and how its re-execution shows: "shuffle" queries must write
+#: shuffle bytes on every run; "map" queries have no exchange, so their
+#: signal is scan input. The result-caching ban must be pinned on each
+#: memoized query, not just the one that caught the round-15 bug — all
+#: share tables.memoized_plan today, but the pin is the contract that
+#: keeps a future per-query special case from regressing into result
+#: caching
+MEMOIZED_QUERIES = {
+    "q_revenue_by_nation": "shuffle",
+    "q_customer_order_counts": "shuffle",
+    "q_lm_quality": "shuffle",
+    "q_incremental_dedup": "shuffle",
+    "q_dedup_exact_documents": "shuffle",
+    "q_curation_mix": "shuffle",
+    "q_pack_sequences": "shuffle",
     # round 16: benched standalone (rides the q_lsh_suite registry row)
-    "q_near_dup_pairs_minhash",
+    "q_near_dup_pairs_minhash": "shuffle",
     # round 16: job-free 0.5-0.7 s pure-map construction, new bench row
-    "q_doc_profile",
-]
+    "q_doc_profile": "map",
+}
 
 
 def _resolve_query(name):
@@ -237,7 +204,7 @@ def _resolve_query(name):
     return getattr(llm_dedup, name)
 
 
-@pytest.mark.parametrize("name", MEMOIZED_QUERIES)
+@pytest.mark.parametrize("name", list(MEMOIZED_QUERIES))
 def test_memoized_serve_reexecutes(spark, sf_dir, name):
     """Measurement-integrity pin (round 15; parameterized over every
     plan_memo=True query in round 16): a memo-served query must
@@ -248,31 +215,34 @@ def test_memoized_serve_reexecutes(spark, sf_dir, name):
     files, report ~0 shuffle write, and any timing of it would be
     result-cache gaming, not query speed.
 
-    Zero-exchange queries (q_doc_profile's map-only pass) have no
-    shuffle dependencies a stored Dataset could reuse, so their
+    Zero-exchange ("map") queries (q_doc_profile's map-only pass) have
+    no shuffle dependencies a stored Dataset could reuse, so their
     re-execution signal is input: the memo-served run must READ at
     least run 1's input bytes from the scan again."""
     fn = _resolve_query(name)
     first = fn(spark, sf_dir)
-    mark0 = _max_stage_id(spark)
+    mark0, _, _ = _stages_since(spark, -1)
     first.collect()  # materializes run 1's shuffles
-    base = _shuffle_write_since(spark, mark0)
-    base_in = _input_bytes_since(spark, mark0)
-    mark = _max_stage_id(spark)
+    mark, base, base_in = _stages_since(spark, mark0)
     again = fn(spark, sf_dir)  # memo hit (state unchanged)
     again.collect()
-    if base > 0:
-        assert _shuffle_write_since(spark, mark) > 0, (
+    _, write, read = _stages_since(spark, mark)
+    if MEMOIZED_QUERIES[name] == "shuffle":
+        assert base > 0, (
+            f"{name}: run 1 wrote no shuffle bytes — declared "
+            "'shuffle', so the pin would observe nothing"
+        )
+        assert write > 0, (
             f"{name}: memo-served run wrote no shuffle bytes — it "
             "reused the prior run's materialized stages (result "
             "caching, not planning)"
         )
     else:
         assert base_in > 0, (
-            f"{name}: run 1 neither shuffled nor read input — the pin "
-            "has nothing to observe; was the scan cached?"
+            f"{name}: run 1 read no input — the pin has nothing to "
+            "observe; was the scan cached?"
         )
-        assert _input_bytes_since(spark, mark) >= base_in, (
+        assert read >= base_in, (
             f"{name}: memo-served run read less input than run 1 — "
             "the zero-exchange plan did not re-execute its scan"
         )

@@ -288,48 +288,3 @@ def test_rollup_merge_law_any_batch_split(spark, tmp_path_factory, vals, split):
         )
     )
     assert got == direct
-
-
-@given(
-    st.lists(
-        st.one_of(
-            # even = positive-value keys, odd = negative, zero sentinel;
-            # key16 spans 16·(-63) .. 16·63+15 (octaves -63..63)
-            st.integers(-1008, 1023).map(lambda k: 2 * k),
-            st.integers(-1008, 1023).map(lambda k: 2 * k + 1),
-            st.just(1 << 60),
-        ),
-        min_size=1,
-        max_size=200,
-        unique=True,
-    )
-)
-@settings(max_examples=300, deadline=None)
-def test_qhist_arrow_sort_surrogate_matches_rep_order(keys):
-    """Round-11 review finding, pinned over the WHOLE key domain: the
-    arrow serving impl's integer sort surrogate must order histogram
-    keys exactly as their signed geometric representatives do —
-    including the fractional-magnitude regime (|v| < 1, key16 < 0)
-    where the first rendering interleaved sign classes."""
-    import numpy as np
-
-    from custom_python_etl_data_connector_shivaask_username_spark.operators.rollup import (
-        QHIST_K,
-        QHIST_ZERO_KEY,
-    )
-
-    def rep(k: int) -> float:
-        if k == QHIST_ZERO_KEY:
-            return 0.0
-        if k % 2 == 0:
-            return 2.0 ** ((k // 2 + 0.5) / QHIST_K)
-        return -(2.0 ** (((k - 1) // 2 + 0.5) / QHIST_K))
-
-    from custom_python_etl_data_connector_shivaask_username_spark.operators.rollup import (
-        _qhist_sort_surrogate,
-    )
-
-    uk = np.array(sorted(keys), dtype=np.int64)
-    by_surrogate = [int(k) for k in uk[np.argsort(_qhist_sort_surrogate(uk))]]
-    by_rep = sorted((int(k) for k in uk), key=rep)
-    assert by_surrogate == by_rep

@@ -507,25 +507,25 @@ def test_quantile_partials_round_trip_and_error_band(spark, tmp_path):
     )
     assert got_one == got_split  # merge-invariance: the partials are real
     assert got_one, "expected quantile rows"
-    # round 11 (verdict ask #4): all three serving impls — exploded
-    # (default, measured fastest), the cell-local aggregate/map_zip_with
-    # fold, and the per-cell numpy kernel — return IDENTICAL rows, on
-    # single- and multi-batch stores
-    for store in (one, split):
-        for impl in ("cellfold", "arrow"):
-            assert sorted(
-                map(
-                    tuple,
-                    rollup_quantiles(
-                        spark, store, qs, impl=impl
-                    ).collect(),
-                )
-            ) == got_one, impl
-    # round-11 review finding: the arrow impl's first integer sort
-    # surrogate interleaved FRACTIONAL magnitudes (|v| < 1, where
-    # key16 goes negative) across the sign classes — wrong percentiles
-    # on exactly the mixed-sign fractional cells this store plants
-    # (values in [-2, 2) at 0.01 grain, zero included)
+
+    def assert_in_band(served, events):
+        exact = {
+            (r["w"], r["event_type"], q): r["v"]
+            for q in qs
+            for r in events.groupBy(
+                F.date_trunc("hour", "ts").alias("w"), "event_type"
+            )
+            .agg(F.expr(f"percentile(value, {q})").alias("v"))
+            .collect()
+        }
+        for w, t, q, v in served:
+            e = exact[(w, t, q)]
+            assert abs(v - e) / max(abs(e), 1.0) <= 0.03, (w, t, q, v, e)
+
+    assert_in_band(got_one, ev)
+    # mixed-sign fractional cells (values in [-1.5, 0.5) at 0.005
+    # grain, zero included): |v| < 1 is where the key's octave goes
+    # negative, so the value order must still cross the sign classes
     frac = str(tmp_path / "frac")
     evf = spark.range(0, 20_000).select(
         F.col("id").alias("event_id"),
@@ -540,35 +540,11 @@ def test_quantile_partials_round_trip_and_error_band(spark, tmp_path):
         ((F.col("id") % 400).cast("double") / 200.0 - 1.5).alias("value"),
     )
     refresh_rollup(evf, frac, batch_id=0)
-    frac_base = sorted(
-        map(
-            tuple,
-            rollup_quantiles(spark, frac, qs, impl="exploded").collect(),
-        )
-    )
-    assert any(v < 0 for *_k, v in frac_base) and any(
-        0 < v < 1 for *_k, v in frac_base
+    frac_got = rollup_quantiles(spark, frac, qs).collect()
+    assert any(r["value"] < 0 for r in frac_got) and any(
+        0 < r["value"] < 1 for r in frac_got
     ), "fixture must exercise fractional mixed-sign percentiles"
-    for impl in ("cellfold", "arrow"):
-        assert sorted(
-            map(
-                tuple,
-                rollup_quantiles(spark, frac, qs, impl=impl).collect(),
-            )
-        ) == frac_base, impl
-
-    exact = {
-        (r["w"], r["event_type"], q): r["v"]
-        for q in qs
-        for r in ev.groupBy(
-            F.date_trunc("hour", "ts").alias("w"), "event_type"
-        )
-        .agg(F.expr(f"percentile(value, {q})").alias("v"))
-        .collect()
-    }
-    for w, t, q, v in got_one:
-        e = exact[(w, t, q)]
-        assert abs(v - e) / max(abs(e), 1.0) <= 0.03, (w, t, q, v, e)
+    assert_in_band([tuple(r) for r in frac_got], evf)
 
     # the cascade: day-resolution quantiles from the same stored
     # partials equal quantiles of a store built at day grain directly

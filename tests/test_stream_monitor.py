@@ -230,103 +230,6 @@ def test_quantile_reports_land_per_epoch_and_match_batch(spark, tmp_path):
     assert read_quantile_reports(spark, store) == reports
 
 
-def test_incremental_quantile_reports_equal_full_reads(spark, tmp_path):
-    """X59 (round 12): ``serve_quantiles_epoch(incremental=True)``
-    folds the previous epoch's persisted state with only the newly
-    committed delta partitions instead of re-reading the store. Pins:
-    epoch-by-epoch equality with the full-read serve on a twin store;
-    after the bootstrap the incremental serve never touches the
-    snapshot reader (spy); a re-served epoch overwrites its state and
-    report identically; compaction moves the folded watermark, the
-    serve detects it, rebuilds from one audited full read, and stays
-    equal to the full twin."""
-    from custom_python_etl_data_connector_shivaask_username_spark.operators import (
-        rollup as rollup_mod,
-    )
-    from custom_python_etl_data_connector_shivaask_username_spark.operators.rollup import (
-        compact_rollup,
-    )
-    from custom_python_etl_data_connector_shivaask_username_spark.streaming.monitor import (
-        QUANTILES_STATE_DIR,
-        serve_quantiles_epoch,
-    )
-
-    qs = [0.5, 0.9]
-    full_store = str(tmp_path / "full")
-    inc_store = str(tmp_path / "inc")
-    slices = [
-        _slice_df(spark, 4_000, 0.0),
-        _slice_df(spark, 4_000, 300.0),
-        _slice_df(spark, 4_000, 700.0),
-    ]
-
-    real_snapshot = rollup_mod._snapshot_parts
-    calls = []
-
-    def spy(*a, **kw):
-        calls.append(1)
-        return real_snapshot(*a, **kw)
-
-    rollup_mod._snapshot_parts = spy
-    try:
-        reports = []
-        for i, df in enumerate(slices):
-            refresh_rollup(df, full_store, batch_id=i)
-            want = serve_quantiles_epoch(spark, full_store, i, qs=qs)
-            refresh_rollup(df, inc_store, batch_id=i)
-            calls.clear()
-            got = serve_quantiles_epoch(
-                spark, inc_store, i, qs=qs, incremental=True
-            )
-            assert got == want, i
-            # bootstrap (epoch 0) reads the snapshot once; every later
-            # epoch folds ONLY the delta — zero snapshot reads
-            assert len(calls) == (1 if i == 0 else 0), (i, calls)
-            reports.append(got)
-
-        state_dir = os.path.join(inc_store, QUANTILES_STATE_DIR)
-        assert sorted(
-            f for f in os.listdir(state_dir) if not f.startswith(".")
-        ) == ["0", "1", "2"]
-
-        # replay: re-serving epoch 2 folds nothing new and overwrites
-        # its own state + report with identical content
-        calls.clear()
-        again = serve_quantiles_epoch(
-            spark, inc_store, 2, qs=qs, incremental=True
-        )
-        assert again == reports[2]
-        assert calls == []
-
-        # compaction invalidates the fold accounting: the next serve
-        # detects the watermark move, rebuilds from one audited full
-        # read, and still equals the full twin
-        compact_rollup(spark, full_store)
-        compact_rollup(spark, inc_store)
-        refresh_rollup(slices[0], full_store, batch_id=3)
-        refresh_rollup(slices[0], inc_store, batch_id=3)
-        want3 = serve_quantiles_epoch(spark, full_store, 3, qs=qs)
-        calls.clear()
-        got3 = serve_quantiles_epoch(
-            spark, inc_store, 3, qs=qs, incremental=True
-        )
-        assert got3 == want3
-        assert len(calls) == 1  # the rebuild's one full snapshot read
-
-        # and the epoch after the rebuild folds deltas again
-        refresh_rollup(slices[1], full_store, batch_id=4)
-        refresh_rollup(slices[1], inc_store, batch_id=4)
-        want4 = serve_quantiles_epoch(spark, full_store, 4, qs=qs)
-        calls.clear()
-        got4 = serve_quantiles_epoch(
-            spark, inc_store, 4, qs=qs, incremental=True
-        )
-        assert got4 == want4
-        assert calls == []
-    finally:
-        rollup_mod._snapshot_parts = real_snapshot
-
-
 def test_rolling_reference_tracks_healthy_epochs(spark, tmp_path):
     """Round 14: the rolling reference rebuilds ref_shares from the
     persisted per-epoch bucket counts of HEALTHY epochs only — PSI
