@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -182,12 +183,13 @@ def might_contain_keys(bf: BloomFilter, df: DataFrame) -> DataFrame:
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's own size estimate for a frame (file scans: sum of
     file sizes propagated through projections) — metadata-only, no
-    job. ``None`` when Catalyst reports its unknown-size sentinel."""
+    job. ``None`` when Catalyst reports its unknown-size sentinel or
+    the JVM fails to estimate; a Python-side error raises."""
     try:
         v = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:
+    except Py4JJavaError:
         return None
     return None if v >= (1 << 62) else v
 

@@ -604,6 +604,12 @@ def _qhist_bounds_py(k: int) -> tuple[float, float]:
     return (-hi_m, -lo_m)
 
 
+class StaleStoreError(Exception):
+    """The rollup store's histogram counts disagree with the raw rows
+    :func:`exact_percentiles_qhist` reads (stale partials); the caller
+    serves the raw route instead."""
+
+
 def exact_percentiles_qhist(
     df: DataFrame,
     key: str,
@@ -619,8 +625,8 @@ def exact_percentiles_qhist(
     counts. ``hist`` is the folded metadata-scale collect —
     ``[(group, qhist_key, cnt), ...]`` with counts EXACT for the rows
     ``df`` holds (the matview navigator's Σcnt freshness gate is the
-    caller's contract; a count that disagrees raises here rather than
-    returning a wrong rank).
+    caller's contract; a count that disagrees raises
+    :class:`StaleStoreError` rather than returning a wrong rank).
 
     Pass 2 is the twopass operator's, re-keyed to the store's HDR
     geometry: membership by ``_qhist_key(value) == k`` — the
@@ -667,7 +673,7 @@ def exact_percentiles_qhist(
                         hit = True
                         break
                 if not hit:
-                    raise AssertionError(
+                    raise StaleStoreError(
                         f"rank {rank} outside histogram mass for {g!r} "
                         "— stale partials (caller must gate freshness)"
                     )
@@ -716,7 +722,7 @@ def exact_percentiles_qhist(
             if cum <= k_local < cum + c:
                 return v
             cum += c
-        raise AssertionError(
+        raise StaleStoreError(
             f"rank {k_local} not found in bucket ({g!r}, {k}) — store "
             "counts disagree with the raw rows (stale partials)"
         )

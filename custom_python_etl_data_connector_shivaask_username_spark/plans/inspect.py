@@ -8,7 +8,7 @@ so plan regressions fail tests instead of surfacing as 100 TB incidents.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -51,3 +51,12 @@ def count_exchanges(df: DataFrame) -> int:
     return len(
         re.findall(r"^\(\d+\) Exchange\b", formatted_plan(df), re.MULTILINE)
     )
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (driver
+    and, in local mode, executors). A class served from Spark's codegen
+    cache does not count, so the difference across a re-run says how
+    much of it recompiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -263,6 +263,7 @@ def route_event_exact_percentiles(
     gate raises in the rank resolution and falls back here. Returns
     ``(long frame (key, q, p), route)``."""
     from ..operators.aggregates import (
+        StaleStoreError,
         exact_percentiles_qhist,
         exact_percentiles_twopass,
     )
@@ -307,7 +308,7 @@ def route_event_exact_percentiles(
                 exact_percentiles_qhist(ev, "event_type", "value", qs, hist),
                 "store",
             )
-        except (AssertionError, *_STORE_UNREADABLE):
+        except (StaleStoreError, *_STORE_UNREADABLE):
             # torn store past the gate (rank outside the histogram
             # mass) or vanished files: raw always works
             route = "raw"

@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from .layout import fs_read_text, fs_write_text
@@ -433,16 +434,21 @@ def footer_column_bounds(
     frame is not a plain file scan, the column lacks footer stats
     (INT96, NaN-polluted doubles), or the file count exceeds
     ``max_files`` (the driver-side footer loop is for modest file
-    counts; bigger tables should keep a persisted X40 index)."""
+    counts; bigger tables should keep a persisted X40 index), or when
+    the JVM cannot list the files or a footer cannot be read (missing
+    or corrupt file). Any other error raises: a silent None here turns
+    a footer-only geometry into a full scan."""
+    import pyarrow as pa
+
     try:
         files = df.inputFiles()
-    except Exception:
+    except Py4JJavaError:
         return None
     if not files or len(files) > max_files:
         return None
     try:
         entries = _footer_stats(list(files), [col])
-    except Exception:
+    except (OSError, pa.ArrowException):
         return None
     lo, hi = None, None
     for e in entries:

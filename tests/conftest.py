@@ -22,3 +22,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jvm_error(spark) -> Exception:
+    """A real ``Py4JJavaError`` (a JVM ``ClassNotFoundException``), for
+    fault tests of handlers that catch only JVM-side failures."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        spark._jvm.java.lang.Class.forName("no.such.Class")
+    except Py4JJavaError as e:
+        return e
+    raise AssertionError("Class.forName did not raise")

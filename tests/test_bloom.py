@@ -7,6 +7,7 @@ are a measured cost, not a correctness question.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -132,6 +133,26 @@ def test_probe_minhash_index_bloom_equivalence_and_pruning(spark):
     full = index.count()
     survived = _prune(index, bf).count()
     assert survived < full * 0.25, (survived, full)
+
+
+def test_plan_size_bytes_falls_back_only_on_jvm_errors(spark, jvm_error):
+    """A JVM failure to estimate reads as "size unknown"; a Python-side
+    error raises instead of silently switching the dispatch."""
+    from custom_python_etl_data_connector_shivaask_username_spark.functions.bloom import (
+        plan_size_bytes,
+    )
+
+    class Frame:
+        def __init__(self, exc):
+            self.exc = exc
+
+        @property
+        def _jdf(self):
+            raise self.exc
+
+    assert plan_size_bytes(Frame(jvm_error)) is None
+    with pytest.raises(AttributeError, match="estimate bug"):
+        plan_size_bytes(Frame(AttributeError("estimate bug")))
 
 
 def test_should_bloom_prefilter_dispatches_on_broadcastability(spark, sf_dir):

@@ -225,6 +225,47 @@ def test_footer_bounds_feed_percentile_geometry(spark, sf_dir):
     assert wrong == base
 
 
+def test_footer_bounds_fall_back_only_on_read_errors(
+    spark, tmp_path, monkeypatch, jvm_error
+):
+    """The footer range is None only when the JVM cannot list the files
+    or a footer cannot be read (corrupt or missing file); any other
+    error raises instead of silently costing a full scan."""
+    import os
+    from urllib.parse import urlparse
+
+    import custom_python_etl_data_connector_shivaask_username_spark.sources.file_index as FI
+
+    path = str(tmp_path / "t")
+    spark.range(0, 100, numPartitions=2).write.parquet(path)
+    df = spark.read.parquet(path)  # the file listing is captured here
+    assert FI.footer_column_bounds(df, "id") == (0.0, 99.0)
+    victim = urlparse(sorted(df.inputFiles())[0]).path
+    with open(victim, "wb") as fh:
+        fh.write(b"not a parquet file")
+    assert FI.footer_column_bounds(df, "id") is None  # ArrowInvalid
+    os.remove(victim)
+    assert FI.footer_column_bounds(df, "id") is None  # FileNotFoundError
+
+    class Unlisted:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def inputFiles(self):
+            raise self.exc
+
+    assert FI.footer_column_bounds(Unlisted(jvm_error), "id") is None
+    with pytest.raises(TypeError, match="listing bug"):
+        FI.footer_column_bounds(Unlisted(TypeError("listing bug")), "id")
+
+    def broken(*a, **k):
+        raise KeyError("footer bug")
+
+    monkeypatch.setattr(FI, "_footer_stats", broken)
+    with pytest.raises(KeyError, match="footer bug"):
+        FI.footer_column_bounds(spark.read.parquet(path), "id")
+
+
 def test_nested_struct_leaf_name_collision_safe(spark, tmp_path):
     """A nested struct field sharing a top-level column's leaf name
     (s.id vs id) must neither crash the index build nor overwrite the

@@ -368,6 +368,45 @@ def test_exact_percentile_route_stale_store_falls_back(
     assert _rows(served) == _rows(direct)
 
 
+def test_exact_percentile_route_catches_only_stale_store(
+    spark, sf_dir, fresh_store, tmp_path, monkeypatch
+):
+    """A store whose counts slipped past the freshness gate raises
+    StaleStoreError in the rank resolution and routes raw (the raw
+    answer is pinned above); a genuine AssertionError under the store
+    serve is a bug and propagates."""
+    import custom_python_etl_data_connector_shivaask_username_spark.operators.aggregates as A
+    import custom_python_etl_data_connector_shivaask_username_spark.plans.matview as M
+
+    qs = (0.5, 0.99)
+    # every event counted twice: Σcnt is 2n, so the gate must be
+    # forced open to reach the rank resolution
+    doubled = str(tmp_path / "doubled")
+    ev = load_table(spark, sf_dir, "events")
+    refresh_rollup(ev.union(ev), doubled, batch_id=0, resolution="hour")
+    monkeypatch.setattr(M, "_store_fresh", lambda *a, **k: True)
+    raised: list[type] = []
+    orig = A.exact_percentiles_qhist
+
+    def spy(*a, **k):
+        try:
+            return orig(*a, **k)
+        except Exception as e:
+            raised.append(type(e))
+            raise
+
+    monkeypatch.setattr(A, "exact_percentiles_qhist", spy)
+    _, route = M.route_event_exact_percentiles(spark, sf_dir, doubled, qs)
+    assert (route, raised) == ("raw", [A.StaleStoreError])
+
+    def broken(*a, **k):
+        raise AssertionError("invariant broken under the store serve")
+
+    monkeypatch.setattr(A, "exact_percentiles_qhist", broken)
+    with pytest.raises(AssertionError, match="invariant broken"):
+        M.route_event_exact_percentiles(spark, sf_dir, fresh_store, qs)
+
+
 def test_q_event_type_stats_routes_percentiles_through_store(
     spark, sf_dir, tmp_path, monkeypatch
 ):
